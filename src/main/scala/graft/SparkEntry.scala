@@ -5,7 +5,7 @@ import graft.extract.Extractor
 import graft.ops.{Dedup, Multimodal, Similarity, TextStats}
 import graft.spark.Pipeline
 import graft.testgen.Synth
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -38,7 +38,7 @@ object SparkEntry {
     * doc_id/50). The HTML payload encode is NOT applied here — the pipeline
     * queries fuse it after the range exchange (guide §2.3: the exchange then
     * carries the raw text, and the RangePartitioner's sampling pass doesn't
-    * re-run the encode), via [[encodeHtmlTurn]]. */
+    * re-run the encode), via [[encodeHtml]]. */
   private def docsAsTurns(s: SparkSession, dir: String): org.apache.spark.sql.Dataset[Turn] = {
     import s.implicits._
     t(s, dir, "documents")
@@ -53,8 +53,10 @@ object SparkEntry {
   }
 
   /** Per-row payload encode for the pipeline queries, fused post-exchange. */
-  private val encodeHtmlTurn: Turn => Turn =
-    tn => tn.copy(text = Synth.encodeHtml(tn.text))
+  private val encodeHtml: Column => Column = {
+    val f = udf((text: String) => Synth.encodeHtml(text))
+    c => f(c)
+  }
 
   /** Scale-adaptive fan-out for CPU-bound per-row stages over small compressed
     * scans (r7, guide §2.2/§6): text compresses 10-60× in parquet, so
@@ -73,7 +75,7 @@ object SparkEntry {
   /** The e2e extraction over the docs-as-turns fixture: raw rows cross the one
     * range exchange, encode+extract run fused in the post-exchange map stage. */
   private def extractDocTurns(s: SparkSession, dir: String) =
-    Pipeline.extractTurnsEncoding(docsAsTurns(s, dir), encodeHtmlTurn)
+    Pipeline.extractTurns(docsAsTurns(s, dir), payload = encodeHtml)
 
   /** Flagship: the full extraction pipeline on sf0.001 transcripts. */
   def entry(spark: SparkSession): DataFrame =

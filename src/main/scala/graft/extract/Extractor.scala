@@ -143,8 +143,10 @@ object Extractor {
       }
     } catch {
       case scala.util.control.NonFatal(_) =>
-        // quarantine path: never fail the row (SURVEY.md §2.1 S6)
-        Result(payload, Seq(Span(0, payload.length, "error")), TurnMetrics(0, payload.length, 1))
+        // quarantine path: never fail the row (SURVEY.md §2.1 S6); a null
+        // payload lands here too and quarantines as the empty turn
+        val p = if (payload == null) "" else payload
+        Result(p, Seq(Span(0, p.length, "error")), TurnMetrics(0, p.length, 1))
     }
 
   def extractTurn(t: Turn): ExtractedTurn = {

@@ -9,37 +9,13 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *
   *   spark.sql.extensions=graft.functions.GraftExtensions
   *
-  * Registers: extract_text, minhash_signature, simhash64, shingle_hashes,
-  * winnow_fingerprint. (`TextHashes.register(spark)` is the programmatic
-  * equivalent for an already-built session.)
+  * Registers every entry of `TextHashes.sqlFunctions` (`TextHashes.register(spark)`
+  * is the programmatic equivalent for an already-built session).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    def info(name: String, usage: String) =
-      new ExpressionInfo(classOf[GraftExtensions].getName, name, usage, "", "")
-    ext.injectFunction((FunctionIdentifier("extract_text"),
-      info("extract_text", "extract_text(payload) - main-content extraction"),
-      es => ExtractText(es.head)))
-    ext.injectFunction((FunctionIdentifier("extract_spans"),
-      info("extract_spans", "extract_spans(payload) - char-offset spans"),
-      es => ExtractSpans(es.head)))
-    ext.injectFunction((FunctionIdentifier("minhash_signature"),
-      info("minhash_signature", "minhash_signature(text) - 64-slot MinHash"),
-      es => MinHashSignature(es.head, 3, 64)))
-    ext.injectFunction((FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(text) - 64-bit SimHash"),
-      es => SimHash64(es.head)))
-    ext.injectFunction((FunctionIdentifier("shingle_hashes"),
-      info("shingle_hashes", "shingle_hashes(text) - distinct 3-shingle hashes"),
-      es => ShingleHashes(es.head, 3)))
-    ext.injectFunction((FunctionIdentifier("winnow_fingerprint"),
-      info("winnow_fingerprint", "winnow_fingerprint(text) - rolling-hash fingerprint"),
-      es => WinnowFingerprint(es.head, 16)))
-    ext.injectFunction((FunctionIdentifier("token_gram_hashes"),
-      info("token_gram_hashes", "token_gram_hashes(text) - positional 50-token-gram hashes"),
-      es => TokenGramHashes(es.head, 50)))
-    ext.injectFunction((FunctionIdentifier("drop_token_spans"),
-      info("drop_token_spans", "drop_token_spans(text, starts, ends) - clip token ranges"),
-      es => DropTokenSpans(es(0), es(1), es(2))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    TextHashes.sqlFunctions.foreach { case (name, usage, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""), builder))
+    }
 }

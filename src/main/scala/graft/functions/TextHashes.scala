@@ -929,21 +929,34 @@ object TextHashes {
     column(ChunkWordsExpr(expression(c), size, stride))
   def top_bigram_share(c: Column): Column = column(TopBigramShare(expression(c)))
 
-  /** Register as SQL functions: minhash_signature(text), simhash64(text), … */
+  def extract_turn(c: Column): Column = column(ExtractTurn(expression(c)))
+
+  /** The SQL surface as (name, usage, builder) — [[register]] and
+    * [[GraftExtensions]] both install exactly this list. */
+  val sqlFunctions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("extract_turn", "extract_turn(payload) - struct<extracted_text, spans, metrics>",
+      es => ExtractTurn(es.head)),
+    ("extract_text", "extract_text(payload) - extract_turn(payload).extracted_text",
+      es => ExtractTurn.field(es.head, "extracted_text")),
+    ("extract_spans", "extract_spans(payload) - extract_turn(payload).spans",
+      es => ExtractTurn.field(es.head, "spans")),
+    ("minhash_signature", "minhash_signature(text) - 64-slot MinHash",
+      es => MinHashSignature(es.head, 3, 64)),
+    ("simhash64", "simhash64(text) - 64-bit SimHash", es => SimHash64(es.head)),
+    ("shingle_hashes", "shingle_hashes(text) - distinct 3-shingle hashes",
+      es => ShingleHashes(es.head, 3)),
+    ("winnow_fingerprint", "winnow_fingerprint(text) - rolling-hash fingerprint",
+      es => WinnowFingerprint(es.head, 16)),
+    ("token_gram_hashes", "token_gram_hashes(text) - positional 50-token-gram hashes",
+      es => TokenGramHashes(es.head, 50)),
+    ("drop_token_spans", "drop_token_spans(text, starts, ends) - clip token ranges",
+      es => DropTokenSpans(es(0), es(1), es(2))))
+
+  /** Register [[sqlFunctions]] on an already-built session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("simhash64", es => SimHash64(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_signature",
-      es => MinHashSignature(es.head, 3, 64), "scala_udf")
-    reg.createOrReplaceTempFunction("winnow_fingerprint",
-      es => WinnowFingerprint(es.head, 16), "scala_udf")
-    reg.createOrReplaceTempFunction("shingle_hashes",
-      es => ShingleHashes(es.head, 3), "scala_udf")
-    reg.createOrReplaceTempFunction("token_gram_hashes",
-      es => TokenGramHashes(es.head, 50), "scala_udf")
-    reg.createOrReplaceTempFunction("drop_token_spans",
-      es => DropTokenSpans(es(0), es(1), es(2)), "scala_udf")
-    reg.createOrReplaceTempFunction("extract_text", es => ExtractText(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("extract_spans", es => ExtractSpans(es.head), "scala_udf")
+    sqlFunctions.foreach { case (name, _, builder) =>
+      reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
   }
 }

@@ -1,8 +1,10 @@
 package graft.spark
 
 import graft.core.{ExtractedTurn, Turn}
-import graft.extract.Extractor
-import org.apache.spark.sql.{Dataset, SparkSession}
+import graft.functions.TextHashes.extract_turn
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.GraftBridge.{toColumn => column, toExpression => expression}
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.functions._
 
 /** The production extraction job, Spark-first:
@@ -13,7 +15,8 @@ import org.apache.spark.sql.functions._
   *                                                  // turn_idx ranges, no salt needed
   *                                                  // for this stateless map stage
   *     → sortWithinPartitions(conv_id, turn_idx)    // stable turn ordering
-  *     → mapPartitions(Extractor.extractTurn)       // the hot per-row state machines
+  *     → select(extract_turn(text).*)              // one Catalyst expression around
+  *                                                  // the hot per-row state machines
   *     → sink (idempotent MERGE-keyed on (conv_id, turn_idx) in Iceberg; parquet
   *       append + manifest in this sandbox)
   *
@@ -22,7 +25,9 @@ import org.apache.spark.sql.functions._
   * requirement is *ordering* of the output, which range partitioning + within-
   * partition sort provides without a global sort barrier. At 100 TB the plan is:
   * one shuffle (the range exchange), then a single pipelined map stage; AQE
-  * coalesces small partitions and splits skewed ones.
+  * coalesces small partitions and splits skewed ones. The extraction is a
+  * projection, so column pruning keeps `role`, `tool` and `ts` off the exchange
+  * and no object deserialize/serialize pair surrounds the kernel.
   */
 object Pipeline {
 
@@ -31,26 +36,35 @@ object Pipeline {
     spark.read.parquet(path).as[Turn]
   }
 
-  /** Core extraction: ordered, skew-safe, one shuffle. */
-  def extractTurns(ds: Dataset[Turn], numPartitions: Option[Int] = None): Dataset[ExtractedTurn] =
-    extractTurnsEncoding(ds, identity, numPartitions)
-
-  /** Extraction with a per-row payload step fused AFTER the range exchange
-    * (guide §2.3/§8: shuffle the lightweight rows, run payload expansion in
-    * the post-exchange map stage). Two effects versus mapping `encode` before
-    * [[extractTurns]]: the exchange carries the raw text instead of the
-    * (larger) encoded payload, and the RangePartitioner's sampling pass — a
-    * full extra evaluation of the child plan — samples cheap raw rows instead
-    * of re-running the encode. The row set is identical either way: `encode`
-    * is per-row and the sort keys (conv_id, turn_idx) don't depend on it. */
-  def extractTurnsEncoding(ds: Dataset[Turn], encode: Turn => Turn,
-      numPartitions: Option[Int] = None): Dataset[ExtractedTurn] = {
+  /** Core extraction: ordered, skew-safe, one shuffle. `payload` is a per-row
+    * step on `text` that runs AFTER the range exchange (guide §2.3/§8): the
+    * exchange carries the raw text instead of the expanded payload, and the
+    * RangePartitioner's sampling pass never evaluates it. */
+  def extractTurns(ds: Dataset[Turn], numPartitions: Option[Int] = None,
+      payload: Column => Column = identity): Dataset[ExtractedTurn] = {
     val spark = ds.sparkSession
     import spark.implicits._
     val parts = numPartitions.getOrElse(spark.sessionState.conf.numShufflePartitions)
-    ds.repartitionByRange(parts, col("conv_id"), col("turn_idx"))
-      .sortWithinPartitions(col("conv_id"), col("turn_idx"))
-      .mapPartitions(_.map(t => Extractor.extractTurn(encode(t))))
+    extract(ds.repartitionByRange(parts, col("conv_id"), col("turn_idx"))
+      .sortWithinPartitions(col("conv_id"), col("turn_idx")), payload = payload)
+      .as[ExtractedTurn]
+  }
+
+  private lazy val turnSchema = Encoders.product[Turn].schema
+
+  /** The extraction projection batch and streaming share: the `keep` columns,
+    * then `extract_turn(payload(text))` expanded to extracted_text, spans and
+    * metrics. The struct is computed in its own projection, which Catalyst
+    * does not collapse into the three field reads, so each row is extracted
+    * once. Kept columns take the nullability the `Turn` encoder gives them:
+    * a null `turn_idx` fails the job rather than writing a null key. */
+  def extract(turns: Dataset[_], keep: Seq[String] = Seq("conv_id", "turn_idx"),
+      payload: Column => Column = identity): DataFrame = {
+    val kept = keep.map { c =>
+      if (turnSchema(c).nullable) col(c) else column(AssertNotNull(expression(col(c)))).as(c)
+    }
+    turns.select(kept :+ extract_turn(payload(col("text"))).as("__turn"): _*)
+      .select(kept :+ col("__turn.*"): _*)
   }
 
   /** Ordering invariant check (BASELINE.json north_rule): row_number over

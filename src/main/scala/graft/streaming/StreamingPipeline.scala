@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.core.{ExtractedTurn, Turn}
-import graft.extract.Extractor
+import graft.spark.Pipeline
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -10,9 +10,9 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * and top-level for codegen). */
 final case class SessionState(turns: Long, chars: Long, firstTs: Long, lastTs: Long)
 
-/** Structured Streaming face of the extractor: the same per-row kernel behind
-  * `readStream → mapPartitions → writeStream`, for deployments that tail the
-  * transcript table instead of batch-snapshotting it.
+/** Structured Streaming face of the extractor: the batch path's
+  * `extract_turn` projection behind `readStream → select → writeStream`, for
+  * deployments that tail the transcript table instead of batch-snapshotting it.
   *
   * The batch pipeline's ordering contract (global (conv_id, turn_idx) order)
   * doesn't exist in a stream; instead the stream guarantees idempotent append
@@ -32,36 +32,23 @@ object StreamingPipeline {
       .as[Turn]
   }
 
-  /** Stateless per-turn extraction — identical kernel to the batch path, so
-    * batch and streaming outputs are bit-identical per turn. */
+  /** Stateless per-turn extraction — the batch path's projection, so batch
+    * and streaming outputs are bit-identical per turn. */
   def extractStream(turns: Dataset[Turn]): Dataset[ExtractedTurn] = {
     import turns.sparkSession.implicits._
-    turns.mapPartitions(_.map(Extractor.extractTurn))
+    Pipeline.extract(turns).as[ExtractedTurn]
   }
 
   /** Event-time windowed extraction metrics: turns/chars per 1-minute window
     * per role, tolerating 5 minutes of event-time lateness. */
   def windowedMetrics(turns: Dataset[Turn]): DataFrame =
-    extractStreamWithTs(turns)
+    Pipeline.extract(turns, keep = Seq("role", "ts"))
       .withWatermark("ts", "5 minutes")
       .groupBy(window(col("ts"), "1 minute"), col("role"))
       .agg(
         count(lit(1)).as("turns"),
         sum(length(col("extracted_text"))).as("chars"),
         sum(col("metrics.dropped_nodes")).as("dropped_nodes"))
-
-  /** Extraction that carries the event timestamp through (for watermarking). */
-  def extractStreamWithTs(turns: Dataset[Turn]): DataFrame = {
-    import turns.sparkSession.implicits._
-    turns.mapPartitions { it =>
-      it.map { t =>
-        val r = Extractor.extract(t.text)
-        (t.conv_id, t.turn_idx, t.role, r.text, r.metrics.dropped_nodes, t.ts)
-      }
-    }.toDF("conv_id", "turn_idx", "role", "extracted_text", "dropped", "ts")
-      .withColumn("metrics", struct(col("dropped").as("dropped_nodes")))
-      .drop("dropped")
-  }
 
   /** Session descriptor emitted when a conversation goes quiet. */
   final case class ConvSession(

@@ -31,6 +31,19 @@ class PipelineSpec extends AnyFunSuite {
     assert(out.count() == ds.count()) // no row lost, no row duplicated
   }
 
+  test("a null-text turn comes out as exactly one quarantined row") {
+    import spark.implicits._
+    val ts = new java.sql.Timestamp(0)
+    val ds = spark.createDataset(Seq(
+      Turn("c1", 0, "user", "hello", "", ts), Turn("c1", 1, "user", null, "", ts)))
+    val out = Pipeline.extractTurns(ds).collect().sortBy(_.turn_idx)
+    assert(out.length == 2)
+    assert(out(0).extracted_text == "hello")
+    assert(out(1).extracted_text == "")
+    assert(out(1).spans == Seq(graft.core.Span(0, 0, "error")))
+    assert(out(1).metrics.dropped_nodes == 1)
+  }
+
   test("stable ordering invariant (window row_number vs turn_idx)") {
     val (ds, _) = synthTurns(convs = 6, avg = 5, mega = 50)
     val out = Pipeline.extractTurns(ds)

@@ -47,8 +47,14 @@ class PlanSpec extends AnyFunSuite {
     val p = graft.spark.Pipeline.extractTurns(turns).queryExecution.executedPlan.toString
     val exchanges = "Exchange".r.findAllIn(p).length
     assert(exchanges == 1, s"expected 1 exchange, got $exchanges:\n$p")
-    assert(p.contains("rangepartitioning"), p)
-    assert(p.contains("MapPartitions"), p)
+    assert("rangepartitioning".r.findAllIn(p).length == 1, p)
+    Seq("DeserializeToObject", "SerializeFromObject", "MapPartitions").foreach { op =>
+      assert(!p.contains(op), s"$op in:\n$p")
+    }
+    // printed top-down: above the exchange means the post-shuffle map stage,
+    // so the RangePartitioner's sampling pass never runs the kernel
+    assert("extract_turn".r.findAllIn(p).length == 1, p)
+    assert(p.indexOf("extract_turn") < p.indexOf("Exchange"), p)
   }
 
   test("q30 ANN: query side broadcast — corpus never shuffles for the join") {
@@ -68,6 +74,21 @@ class PlanSpec extends AnyFunSuite {
       "SELECT extract_text('<body><p>hi</p></body>') AS t, simhash64('a b c') AS h")
       .collect()(0)
     assert(r.getString(0) == "hi")
+    val turn = s2.sql("SELECT extract_turn('<body><p>hi</p></body>') AS x")
+    assert(turn.schema("x").dataType == graft.functions.ExtractTurn.dataType)
+    val x = turn.select("x.extracted_text", "x.metrics.chars").collect()(0)
+    assert(x.getString(0) == "hi" && x.getInt(1) == 2)
+    // null quarantines to the empty turn, as in batch and streaming
+    assert(s2.sql("SELECT extract_text(CAST(NULL AS STRING))").head().getString(0) == "")
+    // selecting two fields of one payload extracts once per row: the kernel
+    // call appears once in the generated code (a non-literal payload, so
+    // constant folding does not evaluate it at planning time)
+    val both = s2.range(2)
+      .selectExpr("concat('<body><p>hi ', CAST(id AS STRING), '</p></body>') AS p")
+      .selectExpr("extract_text(p) AS t", "extract_spans(p) AS s")
+    assert(both.collect().map(_.getString(0)).toSeq == Seq("hi 0", "hi 1"))
+    val code = both.queryExecution.debug.codegenToSeq().map(_._2).mkString("\n")
+    assert("ExtractTurnKernel".r.findAllIn(code).length == 1, code)
     val spans = s2.sql(
       "SELECT explode(extract_spans('<body><p>hi</p></body>')) AS s")
       .select("s.start", "s.end", "s.label").collect()
