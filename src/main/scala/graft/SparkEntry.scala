@@ -636,16 +636,16 @@ object SparkEntry {
       import s.implicits._
       val _ = dir
       val synthetic = s.createDataset(Seq(
-        ("synthetic/labels_mixed.pdf", graft.testgen.Synth.pdfWithPageLabels(7,
-          "<< /Nums [0 << /S /r >> 2 << /S /D >> 5 << /S /D /P (A-) >>] >>")),
-        ("synthetic/labels_letters.pdf", graft.testgen.Synth.pdfWithPageLabels(3,
-          "<< /Nums [0 << /S /A /St 26 >>] >>")),
-        ("synthetic/labels_kids.pdf", graft.testgen.Synth.pdfWithPageLabels(4,
-          "<< /Kids [7 0 R 8 0 R] >>", Seq(
+        ("synthetic/labels_mixed.pdf", graft.testgen.Synth.pdfWithCatalogExtra(7,
+          "/PageLabels << /Nums [0 << /S /r >> 2 << /S /D >> 5 << /S /D /P (A-) >>] >>")),
+        ("synthetic/labels_letters.pdf", graft.testgen.Synth.pdfWithCatalogExtra(3,
+          "/PageLabels << /Nums [0 << /S /A /St 26 >>] >>")),
+        ("synthetic/labels_kids.pdf", graft.testgen.Synth.pdfWithCatalogExtra(4,
+          "/PageLabels << /Kids [7 0 R 8 0 R] >>", Seq(
             "<< /Limits [0 1] /Nums [0 << /S /r >>] >>",
             "<< /Limits [2 3] /Nums [2 << /S /D >>] >>"))),
-        ("synthetic/labels_malformed.pdf", graft.testgen.Synth.pdfWithPageLabels(2,
-          "<< /Nums [0 << /S /Q >>] >>"))))
+        ("synthetic/labels_malformed.pdf", graft.testgen.Synth.pdfWithCatalogExtra(2,
+          "/PageLabels << /Nums [0 << /S /Q >>] >>"))))
       s.read.format("binaryFile").option("pathGlobFilter", "*.pdf")
         .load("/root/reference/src/test/resources/input", "/root/reference/test-papers")
         .select(col("path"), col("content"))

@@ -9,7 +9,11 @@ import org.apache.spark.sql.functions._
   * Usage:
   *   spark-submit --class graft.app.Main <jar> \
   *     --input <transcript table path> --output <extracted table path> \
-  *     --manifest <manifest path> [--partitions N] [--mode full|resume]
+  *     --manifest <manifest path> [--partitions N] [--mode full|resume] \
+  *     [--snapshot ID] [--buckets N]
+  *
+  * Any other flag, a flag without a value, an unknown mode or a non-positive
+  * count is rejected with an IllegalArgumentException before the job starts.
   *
   * Resume semantics: input partitions are bucketed by conv_id prefix; completed
   * buckets (manifest status=done for the same snapshot) are anti-joined away,
@@ -30,9 +34,28 @@ object Main {
     finally spark.stop()
   }
 
+  private val Flags =
+    Set("--input", "--output", "--manifest", "--mode", "--partitions", "--snapshot", "--buckets")
+
+  /** Flag → value pairs, validated (see the object doc). */
+  private def parseArgs(args: Array[String]): Map[String, String] = {
+    def bad(msg: String): Nothing = throw new IllegalArgumentException(msg)
+    val opts = args.grouped(2).map {
+      case Array(k, _*) if !Flags(k) => bad(s"unknown argument: $k")
+      case Array(k, v) if !Flags(v) => k -> v
+      case Array(k, _*) => bad(s"$k needs a value")
+    }.toMap
+    Seq("--input", "--output").filterNot(opts.contains).foreach(k => bad(s"missing $k"))
+    opts.get("--mode").filterNot(Set("full", "resume")).foreach(m =>
+      bad(s"--mode must be full or resume, got $m"))
+    Seq("--buckets", "--partitions").foreach(k => opts.get(k).foreach(v =>
+      if (!v.toIntOption.exists(_ > 0)) bad(s"$k must be a positive integer, got $v")))
+    opts
+  }
+
   /** Session-agnostic job body (tests drive it with their own session). */
   def run(spark: SparkSession, args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
+    val opts = parseArgs(args)
     val input = opts("--input")
     val output = opts("--output")
     val manifestPath = opts.getOrElse("--manifest", s"$output.manifest")

@@ -858,47 +858,16 @@ object Jbig2Synth {
       else if (mmr) (embeddedMmrStream(testBitmap(w, h, seed), w, h), None)
       else (embeddedStream(testBitmap(w, h, seed), w, h), None)
     val content = s"q $w 0 0 $h 100 600 cm /ImJ Do Q"
-    val parms = if (globalsSplit) "\n  /DecodeParms << /JBIG2Globals 6 0 R >>" else ""
-    // the binary stream is appended as RAW BYTES, never routed through
-    // stripMargin — stripMargin eats "newline, low bytes, |" sequences, which
-    // arithmetic-coded data will eventually contain
-    val head = (s"""%PDF-1.4
-       |1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj
-       |2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj
-       |3 0 obj << /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792]
-       |  /Resources << /XObject << /ImJ 4 0 R >> >> /Contents 5 0 R >> endobj
-       |4 0 obj << /Type /XObject /Subtype /Image /Width $w /Height $h
-       |  /BitsPerComponent 1 /ColorSpace /DeviceGray /Filter /JBIG2Decode$parms
-       |  /Length ${stream.length} >>
-       |stream
-       |""").stripMargin
-    val mid = (s"""
-       |endstream
-       |endobj
-       |5 0 obj << /Length ${content.length} >>
-       |stream
-       |$content
-       |endstream
-       |endobj
-       |""").stripMargin
-    val globalsObj = globals.map { g =>
-      (s"""6 0 obj << /Length ${g.length} >>
-         |stream
-         |""").stripMargin.getBytes(ISO_8859_1) ++ g ++
-        "\nendstream\nendobj\n".getBytes(ISO_8859_1)
-    }
-    val tail = (s"""trailer << /Size 7 /Root 1 0 R >>
-       |startxref
-       |0
-       |%%EOF
-       |""").stripMargin
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(head.getBytes(ISO_8859_1))
-    out.write(stream)
-    out.write(mid.getBytes(ISO_8859_1))
-    globalsObj.foreach(out.write)
-    out.write(tail.getBytes(ISO_8859_1))
-    out.toByteArray
+    val parms = if (globalsSplit) " /DecodeParms << /JBIG2Globals 6 0 R >>" else ""
+    PdfWriter(Seq[PdfWriter.Body](
+      "<< /Type /Catalog /Pages 2 0 R >>",
+      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+      "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
+        "/Resources << /XObject << /ImJ 4 0 R >> >> /Contents 5 0 R >>",
+      PdfWriter.stream(s"/Type /XObject /Subtype /Image /Width $w /Height $h " +
+        s"/BitsPerComponent 1 /ColorSpace /DeviceGray /Filter /JBIG2Decode$parms", stream),
+      PdfWriter.stream("", content.getBytes(ISO_8859_1))) ++
+      globals.map(g => PdfWriter.stream("", g)))
   }
 
   // ── Huffman-coded fixtures (T.88 SDHUFF/SBHUFF paths, round 6) ─────────

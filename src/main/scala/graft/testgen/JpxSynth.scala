@@ -1434,33 +1434,13 @@ object JpxSynth {
     val stream = if (jp2) wrapJp2(cs0, w, h, planes.length, 8) else cs0
     val csName = if (rgb || sub420) "/DeviceRGB" else "/DeviceGray"
     val content = s"q $w 0 0 $h 100 600 cm /ImX Do Q"
-    val head = (s"""%PDF-1.5
-       |1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj
-       |2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj
-       |3 0 obj << /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792]
-       |  /Resources << /XObject << /ImX 4 0 R >> >> /Contents 5 0 R >> endobj
-       |4 0 obj << /Type /XObject /Subtype /Image /Width $w /Height $h
-       |  /BitsPerComponent 8 /ColorSpace $csName /Filter /JPXDecode
-       |  /Length ${stream.length} >>
-       |stream
-       |""").stripMargin
-    val tail = (s"""
-       |endstream
-       |endobj
-       |5 0 obj << /Length ${content.length} >>
-       |stream
-       |$content
-       |endstream
-       |endobj
-       |trailer << /Size 6 /Root 1 0 R >>
-       |startxref
-       |0
-       |%%EOF
-       |""").stripMargin
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(head.getBytes(ISO_8859_1))
-    out.write(stream)
-    out.write(tail.getBytes(ISO_8859_1))
-    out.toByteArray
+    PdfWriter(Seq(
+      "<< /Type /Catalog /Pages 2 0 R >>",
+      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+      "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
+        "/Resources << /XObject << /ImX 4 0 R >> >> /Contents 5 0 R >>",
+      PdfWriter.stream(s"/Type /XObject /Subtype /Image /Width $w /Height $h " +
+        s"/BitsPerComponent 8 /ColorSpace $csName /Filter /JPXDecode", stream),
+      PdfWriter.stream("", content.getBytes(ISO_8859_1))))
   }
 }

@@ -4,6 +4,8 @@ import graft.core.{GlyphRun, NumFmt}
 import graft.eval.FontMetrics
 import graft.svg.SvgEmitter
 
+import java.nio.charset.StandardCharsets.ISO_8859_1
+
 import scala.collection.mutable.ArrayBuffer
 
 /** Deterministic payload encoders + transcript generator (seed-fixed; no external
@@ -167,59 +169,23 @@ object Synth {
     def nextDouble(): Double = (nextLong() >>> 11) * 1.1102230246251565e-16
   }
 
-  /** Minimal n-page PDF whose catalog carries the given /PageLabels value
-    * verbatim (a number-tree dict body, e.g. `<< /Nums [0 << /S /r >>] >>`,
-    * or extra objects appended via `extraObjs` for /Kids-split trees).
-    * Pages are empty — the fixture exists for the label surface alone. */
-  def pdfWithPageLabels(nPages: Int, pageLabels: String,
-      extraObjs: Seq[String] = Nil): Array[Byte] = {
-    val sb = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit =
-      sb.write(s.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
-    w("%PDF-1.4\n")
-    w(s"1 0 obj\n<< /Type /Catalog /Pages 2 0 R /PageLabels $pageLabels >>\nendobj\n")
-    val kids = (0 until nPages).map(i => s"${3 + i} 0 R").mkString(" ")
-    w(s"2 0 obj\n<< /Type /Pages /Kids [$kids] /Count $nPages >>\nendobj\n")
-    (0 until nPages).foreach { i =>
-      w(s"${3 + i} 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] >>\nendobj\n")
-    }
-    // extra objects (number-tree kid nodes etc.) start at 3 + nPages
-    extraObjs.zipWithIndex.foreach { case (body, k) =>
-      w(s"${3 + nPages + k} 0 obj\n$body\nendobj\n")
-    }
-    w(s"trailer\n<< /Size ${3 + nPages + extraObjs.length} /Root 1 0 R >>\n")
-    w("startxref\n0\n%%EOF\n")
-    sb.toByteArray
-  }
-
-  /** Minimal PDF with arbitrary extra CATALOG entries (e.g. `/Outlines 7 0 R
-    * /Names << /Dests 8 0 R >>`) and trailing objects numbered from
-    * 3 + nPages — the same recovery-scan skeleton as pdfWithPageLabels. */
+  /** Minimal n-page PDF (empty pages, objects 3..2+nPages) with arbitrary
+    * extra CATALOG entries (e.g. `/Outlines 7 0 R /Names << /Dests 8 0 R >>`
+    * or `/PageLabels << /Nums [0 << /S /r >>] >>`) and trailing objects
+    * numbered from 3 + nPages (outline items, number-tree kids, ...). */
   def pdfWithCatalogExtra(nPages: Int, catalogExtra: String,
-      extraObjs: Seq[String] = Nil): Array[Byte] = {
-    val sb = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit =
-      sb.write(s.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
-    w("%PDF-1.4\n")
-    w(s"1 0 obj\n<< /Type /Catalog /Pages 2 0 R $catalogExtra >>\nendobj\n")
+      extraObjs: Seq[PdfWriter.Body] = Nil): Array[Byte] = {
     val kids = (0 until nPages).map(i => s"${3 + i} 0 R").mkString(" ")
-    w(s"2 0 obj\n<< /Type /Pages /Kids [$kids] /Count $nPages >>\nendobj\n")
-    (0 until nPages).foreach { i =>
-      w(s"${3 + i} 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] >>\nendobj\n")
-    }
-    extraObjs.zipWithIndex.foreach { case (body, k) =>
-      w(s"${3 + nPages + k} 0 obj\n$body\nendobj\n")
-    }
-    w(s"trailer\n<< /Size ${3 + nPages + extraObjs.length} /Root 1 0 R >>\n")
-    w("startxref\n0\n%%EOF\n")
-    sb.toByteArray
+    val page: PdfWriter.Body = "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] >>"
+    PdfWriter(Seq[PdfWriter.Body](s"<< /Type /Catalog /Pages 2 0 R $catalogExtra >>",
+      s"<< /Type /Pages /Kids [$kids] /Count $nPages >>") ++ Seq.fill(nPages)(page) ++ extraObjs)
   }
 
   /** Deterministic attachment fixture: an /EmbeddedFiles name tree with a
     * backslash-laden /F filespec (Flate content), a UTF-16BE /UF filespec
     * (raw content), and an /EF-less filespec (content null). */
   def pdfWithAttachments(): Array[Byte] = {
-    val raw = "hello attachment\n".getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+    val raw = "hello attachment\n".getBytes(ISO_8859_1)
     val flateSrc = Array.tabulate[Byte](64)(i => ((i * 7 + 3) & 0xff).toByte)
     val deflater = new java.util.zip.Deflater()
     deflater.setInput(flateSrc)
@@ -227,7 +193,6 @@ object Synth {
     val buf = new Array[Byte](256)
     val n = deflater.deflate(buf)
     deflater.end()
-    val flate = new String(buf, 0, n, java.nio.charset.StandardCharsets.ISO_8859_1)
     // "file2.bin" as a UTF-16BE hex string for both the tree key and /UF
     val u16 = "FEFF" + "file2.bin".map(c => f"${c.toInt}%04X").mkString
     pdfWithCatalogExtra(1, "/Names << /EmbeddedFiles 4 0 R >>", Seq(
@@ -236,9 +201,8 @@ object Synth {
       "<< /Type /Filespec /F (a\\\\\\\\b\\\\c.txt) /EF << /F 9 0 R >> >>",
       s"<< /Type /Filespec /UF <$u16> /EF << /UF 8 0 R >> >>",
       "<< /Type /Filespec /F (orphan.txt) >>",
-      s"<< /Length ${raw.length} >>\nstream\n${new String(raw,
-        java.nio.charset.StandardCharsets.ISO_8859_1)}\nendstream",
-      s"<< /Length $n /Filter /FlateDecode >>\nstream\n$flate\nendstream"))
+      PdfWriter.stream("", raw),
+      PdfWriter.stream("/Filter /FlateDecode", buf.take(n))))
   }
 
   /** Deterministic document-JavaScript fixture: a /JavaScript name tree
@@ -257,7 +221,7 @@ object Synth {
           "<< /S /JavaScript /JS (app.alert\\(1\\);) >>",
           "<< /S /JavaScript /JS 8 0 R >>",
           "<< /S /GoTo /D (x) >>",
-          s"<< /Length ${js2.length} >>\nstream\n$js2\nendstream"))
+          PdfWriter.stream("", js2.getBytes(ISO_8859_1))))
     }
   }
 
@@ -279,23 +243,16 @@ object Synth {
         |endcmap
         |end""".stripMargin
     val content = "BT /F1 12 Tf 72 700 Td (DAEBC) Tj 0 -40 Td (EBE) Tj ET"
-    val sb = new StringBuilder
-    def obj(n: Int, body: String): Unit =
-      sb.append(s"$n 0 obj\n$body\nendobj\n")
-    def stream(n: Int, data: String): Unit =
-      sb.append(s"$n 0 obj\n<< /Length ${data.length} >>\nstream\n$data\nendstream\nendobj\n")
-    sb.append("%PDF-1.4\n")
-    obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
-    obj(2, "<< /Type /Pages /Kids [3 0 R] /Count 1 >>")
-    obj(3, "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-      "/Resources << /Font << /F1 4 0 R >> >> /Contents 6 0 R >>")
-    obj(4, "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica " +
-      "/FirstChar 65 /LastChar 69 /Widths [500 500 500 500 500] " +
-      "/ToUnicode 5 0 R >>")
-    stream(5, cmap)
-    stream(6, content)
-    sb.append("trailer\n<< /Size 7 /Root 1 0 R >>\nstartxref\n0\n%%EOF\n")
-    sb.toString.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+    PdfWriter(Seq(
+      "<< /Type /Catalog /Pages 2 0 R >>",
+      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+      "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
+        "/Resources << /Font << /F1 4 0 R >> >> /Contents 6 0 R >>",
+      "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica " +
+        "/FirstChar 65 /LastChar 69 /Widths [500 500 500 500 500] " +
+        "/ToUnicode 5 0 R >>",
+      PdfWriter.stream("", cmap.getBytes(ISO_8859_1)),
+      PdfWriter.stream("", content.getBytes(ISO_8859_1))))
   }
 
   final case class SynthTurn(conv_id: String, turn_idx: Int, role: String,

@@ -2,7 +2,7 @@ package graft
 
 import graft.JsonMini._
 import graft.pdf.{AnnotData, PdfDocument}
-import graft.testgen.Synth
+import graft.testgen.{PdfWriter, Synth}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets
@@ -93,7 +93,7 @@ class AnnotationsParitySpec extends AnyFunSuite {
 
   // ── synthetic lanes the corpus lacks ──
 
-  private def open(catalogExtra: String, extra: Seq[String], annots: String) = {
+  private def open(catalogExtra: String, extra: Seq[PdfWriter.Body], annots: String) = {
     // a 1-page doc whose page carries /Annots
     val raw = Synth.pdfWithCatalogExtra(1, catalogExtra, extra)
     // splice /Annots into the page object (3 0 obj)

@@ -14,6 +14,20 @@ class AppMainSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
 
+  test("app.Main rejects unknown, dangling and out-of-range arguments before running") {
+    val base = Array("--input", "/nonexistent/in", "--output", "/nonexistent/out")
+    for ((extra, named) <- Seq(
+        (Array("--mdoe", "resume"), "--mdoe"),
+        (Array("--mode", "resum"), "resum"),
+        (Array("--buckets"), "--buckets"),
+        (Array("--mode", "--buckets", "4"), "--mode"),
+        (Array("--buckets", "0"), "--buckets"),
+        (Array("--partitions", "x"), "--partitions"))) {
+      val e = intercept[IllegalArgumentException](graft.app.Main.run(spark, base ++ extra))
+      assert(e.getMessage.contains(named), e.getMessage)
+    }
+  }
+
   test("app.Main: full run, idempotent resume, partial-manifest resume") {
     import spark.implicits._
     val in = Files.createTempDirectory("graft-app-in").toString + "/turns"

@@ -1,6 +1,7 @@
 package graft
 
 import graft.pdf.{FontLoader, PdfDocument, PdfFile}
+import graft.testgen.PdfWriter
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets.ISO_8859_1
@@ -8,16 +9,10 @@ import java.nio.charset.StandardCharsets.ISO_8859_1
 /** Composite (Type0/Identity-H) font path: two-byte charcodes, CID widths from
   * /DW + /W, text from a 2-byte-keyed /ToUnicode CMap (SURVEY.md §2.5 F3/F4
   * multi-byte path; charsToGlyphs pdf.combined.js:36697-36714). The synthetic
-  * PDF deliberately ships a broken startxref so the document also exercises
-  * the S6 recovery scan (XRef.indexObjects discipline).
+  * PDF has no usable xref (PdfWriter), so the document also exercises the S6
+  * recovery scan (XRef.indexObjects discipline).
   */
 class CompositeFontSpec extends AnyFunSuite {
-
-  private def obj(num: Int, body: String): String = s"$num 0 obj\n$body\nendobj\n"
-
-  private def stream(num: Int, data: String): String = {
-    s"$num 0 obj\n<< /Length ${data.length} >>\nstream\n$data\nendstream\nendobj\n"
-  }
 
   private val toUnicodeCMap =
     """/CIDInit /ProcSet findresource begin
@@ -35,27 +30,21 @@ class CompositeFontSpec extends AnyFunSuite {
   private val content =
     "BT /F1 12 Tf 72 720 Td <000100020001> Tj 0 -20 Td <000A000B000C> Tj ET"
 
-  private def pdfBytes: Array[Byte] = {
-    val sb = new StringBuilder
-    sb.append("%PDF-1.4\n")
-    sb.append(obj(1, "<< /Type /Catalog /Pages 2 0 R >>"))
-    sb.append(obj(2, "<< /Type /Pages /Kids [3 0 R] /Count 1 >>"))
-    sb.append(obj(3, "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-      "/Resources << /Font << /F1 4 0 R >> >> /Contents 8 0 R >>"))
-    sb.append(obj(4, "<< /Type /Font /Subtype /Type0 /BaseFont /TestCID " +
-      "/Encoding /Identity-H /DescendantFonts [5 0 R] /ToUnicode 7 0 R >>"))
-    sb.append(obj(5, "<< /Type /Font /Subtype /CIDFontType2 /BaseFont /TestCID " +
+  private def pdfBytes: Array[Byte] = PdfWriter(Seq(
+    "<< /Type /Catalog /Pages 2 0 R >>",
+    "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+    "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
+      "/Resources << /Font << /F1 4 0 R >> >> /Contents 8 0 R >>",
+    "<< /Type /Font /Subtype /Type0 /BaseFont /TestCID " +
+      "/Encoding /Identity-H /DescendantFonts [5 0 R] /ToUnicode 7 0 R >>",
+    "<< /Type /Font /Subtype /CIDFontType2 /BaseFont /TestCID " +
       "/CIDSystemInfo << /Registry (Adobe) /Ordering (Identity) /Supplement 0 >> " +
-      "/FontDescriptor 6 0 R /DW 1000 /W [1 [500 600] 10 12 750] >>"))
-    sb.append(obj(6, "<< /Type /FontDescriptor /FontName /TestCID /Flags 4 " +
+      "/FontDescriptor 6 0 R /DW 1000 /W [1 [500 600] 10 12 750] >>",
+    "<< /Type /FontDescriptor /FontName /TestCID /Flags 4 " +
       "/FontBBox [0 0 1000 1000] /ItalicAngle 0 /Ascent 800 /Descent -200 " +
-      "/CapHeight 700 /StemV 80 >>"))
-    sb.append(stream(7, toUnicodeCMap))
-    sb.append(stream(8, content))
-    // broken xref on purpose: the recovery scan must index the objects
-    sb.append("trailer\n<< /Size 9 /Root 1 0 R >>\nstartxref\n0\n%%EOF\n")
-    sb.toString.getBytes(ISO_8859_1)
-  }
+      "/CapHeight 700 /StemV 80 >>",
+    PdfWriter.stream("", toUnicodeCMap.getBytes(ISO_8859_1)),
+    PdfWriter.stream("", content.getBytes(ISO_8859_1))))
 
   test("Identity-H composite font: 2-byte charcodes, CID widths, ToUnicode text") {
     val doc = PdfDocument.open(pdfBytes)
@@ -166,29 +155,23 @@ class CompositeFontSpec extends AnyFunSuite {
       |endcmap
       |end""".stripMargin
 
-  private def cjkPdfBytes: Array[Byte] = {
-    val content = "BT /F1 12 Tf 72 720 Td <4E2D4E8B3042> Tj ET"
-    val sb = new StringBuilder
-    sb.append("%PDF-1.4\n")
-    sb.append(obj(1, "<< /Type /Catalog /Pages 2 0 R >>"))
-    sb.append(obj(2, "<< /Type /Pages /Kids [3 0 R] /Count 1 >>"))
-    sb.append(obj(3, "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-      "/Resources << /Font << /F1 4 0 R >> >> /Contents 8 0 R >>"))
-    sb.append(obj(4, "<< /Type /Font /Subtype /Type0 /BaseFont /TestCJK " +
-      "/Encoding 9 0 R /DescendantFonts [5 0 R] /ToUnicode 7 0 R >>"))
+  private def cjkPdfBytes: Array[Byte] = PdfWriter(Seq(
+    "<< /Type /Catalog /Pages 2 0 R >>",
+    "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+    "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
+      "/Resources << /Font << /F1 4 0 R >> >> /Contents 8 0 R >>",
+    "<< /Type /Font /Subtype /Type0 /BaseFont /TestCJK " +
+      "/Encoding 9 0 R /DescendantFonts [5 0 R] /ToUnicode 7 0 R >>",
     // /W keyed by the MAPPED CIDs: 4E2D→145, 4E8B→239, 3042→501
-    sb.append(obj(5, "<< /Type /Font /Subtype /CIDFontType2 /BaseFont /TestCJK " +
+    "<< /Type /Font /Subtype /CIDFontType2 /BaseFont /TestCJK " +
       "/CIDSystemInfo << /Registry (Test) /Ordering (CJK) /Supplement 0 >> " +
-      "/FontDescriptor 6 0 R /DW 1000 /W [145 [950] 239 [900] 501 [880]] >>"))
-    sb.append(obj(6, "<< /Type /FontDescriptor /FontName /TestCJK /Flags 4 " +
+      "/FontDescriptor 6 0 R /DW 1000 /W [145 [950] 239 [900] 501 [880]] >>",
+    "<< /Type /FontDescriptor /FontName /TestCJK /Flags 4 " +
       "/FontBBox [0 0 1000 1000] /ItalicAngle 0 /Ascent 800 /Descent -200 " +
-      "/CapHeight 700 /StemV 80 >>"))
-    sb.append(stream(7, cjkToUnicode))
-    sb.append(stream(8, content))
-    sb.append(stream(9, cidCMapStream))
-    sb.append("trailer\n<< /Size 10 /Root 1 0 R >>\nstartxref\n0\n%%EOF\n")
-    sb.toString.getBytes(ISO_8859_1)
-  }
+      "/CapHeight 700 /StemV 80 >>",
+    PdfWriter.stream("", cjkToUnicode.getBytes(ISO_8859_1)),
+    PdfWriter.stream("", "BT /F1 12 Tf 72 720 Td <4E2D4E8B3042> Tj ET".getBytes(ISO_8859_1)),
+    PdfWriter.stream("", cidCMapStream.getBytes(ISO_8859_1))))
 
   test("embedded CID CMap: codes map through cidrange/cidchar to /W widths") {
     val doc = PdfDocument.open(cjkPdfBytes)

@@ -2,7 +2,7 @@ package graft
 
 import graft.JsonMini._
 import graft.pdf.{OutlineItem, PdfDocument}
-import graft.testgen.Synth
+import graft.testgen.{PdfWriter, Synth}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets
@@ -131,7 +131,7 @@ class OutlineParitySpec extends AnyFunSuite {
 
   // ── synthetic rule coverage the corpus can't reach ──
 
-  private def synth(catalogExtra: String, extraObjs: Seq[String], nPages: Int = 3) =
+  private def synth(catalogExtra: String, extraObjs: Seq[PdfWriter.Body], nPages: Int = 3) =
     PdfDocument.open(Synth.pdfWithCatalogExtra(nPages, catalogExtra, extraObjs))
 
   test("URL actions pass the scheme allowlist; invalid schemes drop") {

@@ -13,6 +13,12 @@ import java.nio.charset.StandardCharsets.ISO_8859_1
   */
 class XrefStreamSpec extends AnyFunSuite {
 
+  /** One /W [1 4 2] xref-stream row: type, 4-byte field 2, 2-byte field 3. */
+  private def row(t: Int, a: Int, b: Int): Array[Byte] =
+    Array(t.toByte,
+      ((a >> 24) & 0xff).toByte, ((a >> 16) & 0xff).toByte, ((a >> 8) & 0xff).toByte, (a & 0xff).toByte,
+      ((b >> 8) & 0xff).toByte, (b & 0xff).toByte)
+
   test("xref stream + object stream document parses and extracts") {
     val out = new ByteArrayOutputStream()
     def offset: Int = out.size
@@ -40,10 +46,6 @@ class XrefStreamSpec extends AnyFunSuite {
 
     // object 6: the xref stream (/W [1 4 2], uncompressed)
     val off6 = offset
-    def row(t: Int, a: Int, b: Int): Array[Byte] =
-      Array(t.toByte,
-        ((a >> 24) & 0xff).toByte, ((a >> 16) & 0xff).toByte, ((a >> 8) & 0xff).toByte, (a & 0xff).toByte,
-        ((b >> 8) & 0xff).toByte, (b & 0xff).toByte)
     val rows = Array(
       row(0, 0, 0xffff), // 0: free
       row(1, off1, 0), // 1: the ObjStm itself
@@ -71,10 +73,6 @@ class XrefStreamSpec extends AnyFunSuite {
     def write(s: String): Unit = out.write(s.getBytes(ISO_8859_1))
     write("%PDF-1.5\n")
     val offX = out.size
-    def row(t: Int, a: Int, b: Int): Array[Byte] =
-      Array(t.toByte,
-        ((a >> 24) & 0xff).toByte, ((a >> 16) & 0xff).toByte, ((a >> 8) & 0xff).toByte, (a & 0xff).toByte,
-        ((b >> 8) & 0xff).toByte, (b & 0xff).toByte)
     // 1: claims to live in ObjStm 1 (itself); 2 in 3 and 3 in 2 (mutual cycle)
     val rows = Array(
       row(0, 0, 0xffff),

@@ -1,5 +1,6 @@
 package graft.pdf
 
+import graft.testgen.PdfWriter
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets.ISO_8859_1
@@ -27,38 +28,14 @@ class BidiPdfSpec extends AnyFunSuite {
         |<A3> <05D3>
         |endbfchar
         |endcmap""".stripMargin
-    (s"""%PDF-1.4
-       |1 0 obj
-       |<< /Type /Catalog /Pages 2 0 R >>
-       |endobj
-       |2 0 obj
-       |<< /Type /Pages /Kids [3 0 R] /Count 1 >>
-       |endobj
-       |3 0 obj
-       |<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792]
-       |   /Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>
-       |endobj
-       |4 0 obj
-       |<< /Length ${content.length} >>
-       |stream
-       |$content
-       |endstream
-       |endobj
-       |5 0 obj
-       |<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /ToUnicode 6 0 R >>
-       |endobj
-       |6 0 obj
-       |<< /Length ${cmap.length} >>
-       |stream
-       |$cmap
-       |endstream
-       |endobj
-       |trailer
-       |<< /Size 7 /Root 1 0 R >>
-       |startxref
-       |0
-       |%%EOF
-       |""").stripMargin.getBytes(ISO_8859_1)
+    PdfWriter(Seq(
+      "<< /Type /Catalog /Pages 2 0 R >>",
+      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+      "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
+        "/Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
+      PdfWriter.stream("", content.getBytes(ISO_8859_1)),
+      "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /ToUnicode 6 0 R >>",
+      PdfWriter.stream("", cmap.getBytes(ISO_8859_1))))
   }
 
   test("RTL line reverses on the reading-order surface, not on the tspan surface") {

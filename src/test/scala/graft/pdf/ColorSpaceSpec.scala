@@ -1,5 +1,6 @@
 package graft.pdf
 
+import graft.testgen.PdfWriter
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets.ISO_8859_1
@@ -12,20 +13,15 @@ import java.nio.charset.StandardCharsets.ISO_8859_1
 class ColorSpaceSpec extends AnyFunSuite {
 
   /** One-page doc whose /ColorSpace dict maps /CS0 to `csBody` (plus any
-    * `extraObjs`), content exercising `cs`/`scn`. */
-  private def doc(csBody: String, content: String, extraObjs: String = ""): PdfDocument = {
-    val sb = new java.io.ByteArrayOutputStream()
-    def w(s: String) = sb.write(s.getBytes(ISO_8859_1))
-    w("%PDF-1.4\n")
-    w("1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    w("2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n")
-    w("3 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-      s"/Resources << /ColorSpace << /CS0 $csBody >> >> /Contents 4 0 R >>\nendobj\n")
-    w(s"4 0 obj\n<< /Length ${content.length} >>\nstream\n$content\nendstream\nendobj\n")
-    w(extraObjs)
-    w("trailer\n<< /Size 9 /Root 1 0 R >>\nstartxref\n0\n%%EOF\n")
-    PdfDocument.open(sb.toByteArray)
-  }
+    * `extraObjs`, numbered from 5), content exercising `cs`/`scn`. */
+  private def doc(csBody: String, content: String,
+      extraObjs: Seq[PdfWriter.Body] = Nil): PdfDocument =
+    PdfDocument.open(PdfWriter(Seq[PdfWriter.Body](
+      "<< /Type /Catalog /Pages 2 0 R >>",
+      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+      "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
+        s"/Resources << /ColorSpace << /CS0 $csBody >> >> /Contents 4 0 R >>",
+      PdfWriter.stream("", content.getBytes(ISO_8859_1))) ++ extraObjs))
 
   test("Indexed over DeviceRGB: scn index dereferences the lookup table") {
     // lookup: idx0 = red (ff 00 00), idx1 = blue (00 00 ff)
@@ -37,26 +33,26 @@ class ColorSpaceSpec extends AnyFunSuite {
   }
 
   test("Separation: tint → gray (1−t); distinct tints stay distinct runs") {
-    val cs = "[/Separation /PANTONE /DeviceRGB 8 0 R]"
+    val cs = "[/Separation /PANTONE /DeviceRGB 5 0 R]"
     val content = "BT /F1 10 Tf /CS0 cs 0.25 scn 10 700 Td (a) Tj 1 scn (b) Tj ET"
-    val d = doc(cs, content, "8 0 obj\n<< /FunctionType 2 /Domain [0 1] >>\nendobj\n")
+    val d = doc(cs, content, Seq("<< /FunctionType 2 /Domain [0 1] >>"))
     val runs = d.evalPage(0).runs
     assert(runs.map(_.fill) == Vector("rgb(191,191,191)", "rgb(0,0,0)"))
     assert(runs.length == 2) // fill change broke the run
   }
 
   test("ICCBased: /N selects gray / RGB / CMYK semantics") {
-    val cs = "[/ICCBased 8 0 R]"
-    val icc = "8 0 obj\n<< /N 3 /Length 0 >>\nstream\n\nendstream\nendobj\n"
+    val cs = "[/ICCBased 5 0 R]"
+    val icc = Seq(PdfWriter.stream("/N 3", Array.emptyByteArray))
     val content = "BT /F1 10 Tf /CS0 cs 1 0 0 scn 10 700 Td (r) Tj ET"
     val runs = doc(cs, content, icc).evalPage(0).runs
     assert(runs.map(_.fill) == Vector("rgb(255,0,0)"))
   }
 
   test("DeviceN: mean tint → gray") {
-    val cs = "[/DeviceN [/Cyan /Magenta] /DeviceCMYK 8 0 R]"
+    val cs = "[/DeviceN [/Cyan /Magenta] /DeviceCMYK 5 0 R]"
     val content = "BT /F1 10 Tf /CS0 cs 1 1 scn 10 700 Td (x) Tj ET"
-    val d = doc(cs, content, "8 0 obj\n<< /FunctionType 2 >>\nendobj\n")
+    val d = doc(cs, content, Seq("<< /FunctionType 2 >>"))
     assert(d.evalPage(0).runs.map(_.fill) == Vector("rgb(0,0,0)"))
   }
 

@@ -1,5 +1,6 @@
 package graft.pdf
 
+import graft.testgen.PdfWriter
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets.ISO_8859_1
@@ -15,21 +16,14 @@ class DecryptSpec extends AnyFunSuite {
   private val content = "BT /F1 12 Tf 72 720 Td (secret but extractable) Tj ET"
   private val docId = "0123456789abcdef".getBytes(ISO_8859_1)
 
-  private def buildPdf(encBody: String, encStream: Array[Byte]): Array[Byte] = {
-    val sb = new java.io.ByteArrayOutputStream()
-    def w(s: String) = sb.write(s.getBytes(ISO_8859_1))
-    w("%PDF-1.5\n")
-    w("1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    w("2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n")
-    w("3 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents 4 0 R >>\nendobj\n")
-    w(s"4 0 obj\n<< /Length ${encStream.length} >>\nstream\n")
-    sb.write(encStream)
-    w("\nendstream\nendobj\n")
-    w(s"5 0 obj\n$encBody\nendobj\n")
-    // ID strings in the trailer are plaintext; broken startxref → recovery scan
-    w("trailer\n<< /Size 6 /Root 1 0 R /Encrypt 5 0 R /ID [<30313233343536373839616263646566> <30313233343536373839616263646566>] >>\nstartxref\n0\n%%EOF\n")
-    sb.toByteArray
-  }
+  // ID strings in the trailer are plaintext; no usable xref → recovery scan
+  private def buildPdf(encBody: String, encStream: Array[Byte]): Array[Byte] = PdfWriter(Seq(
+    "<< /Type /Catalog /Pages 2 0 R >>",
+    "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+    "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents 4 0 R >>",
+    PdfWriter.stream("", encStream),
+    encBody),
+    " /Encrypt 5 0 R /ID [<30313233343536373839616263646566> <30313233343536373839616263646566>]")
 
   private def encDict(v: Int, r: Int, extra: String = ""): String =
     s"<< /Filter /Standard /V $v /R $r /Length 128 /P -3904 " +

@@ -1,5 +1,6 @@
 package graft.pdf
 
+import graft.testgen.PdfWriter
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets.ISO_8859_1
@@ -12,23 +13,15 @@ import java.nio.file.{Files, Paths}
   */
 class FontCacheSpec extends AnyFunSuite {
 
-  private def miniPdf(fontWidths: String): Array[Byte] = {
-    val sb = new java.io.ByteArrayOutputStream()
-    def w(s: String) = sb.write(s.getBytes(ISO_8859_1))
-    w("%PDF-1.4\n")
-    w("1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    w("2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n")
-    w("3 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-      "/Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>\nendobj\n")
-    val content = "BT /F1 10 Tf 10 700 Td (hi) Tj ET"
-    w(s"4 0 obj\n<< /Length ${content.length} >>\nstream\n$content\nendstream\nendobj\n")
-    w("5 0 obj\n<< /Type /Font /Subtype /Type1 /BaseFont /Courier " +
-      s"/FirstChar 32 /LastChar 33 /Widths [$fontWidths] /FontDescriptor 6 0 R >>\nendobj\n")
-    w("6 0 obj\n<< /Type /FontDescriptor /FontName /Courier /Flags 33 " +
-      "/MissingWidth 600 >>\nendobj\n")
-    w("trailer\n<< /Size 7 /Root 1 0 R >>\nstartxref\n0\n%%EOF\n")
-    sb.toByteArray
-  }
+  private def miniPdf(fontWidths: String): Array[Byte] = PdfWriter(Seq(
+    "<< /Type /Catalog /Pages 2 0 R >>",
+    "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+    "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
+      "/Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
+    PdfWriter.stream("", "BT /F1 10 Tf 10 700 Td (hi) Tj ET".getBytes(ISO_8859_1)),
+    "<< /Type /Font /Subtype /Type1 /BaseFont /Courier " +
+      s"/FirstChar 32 /LastChar 33 /Widths [$fontWidths] /FontDescriptor 6 0 R >>",
+    "<< /Type /FontDescriptor /FontName /Courier /Flags 33 /MissingWidth 600 >>"))
 
   test("identical font content across documents shares one FontSpec instance") {
     val a = new PdfFile(miniPdf("600 600"))

@@ -1,5 +1,6 @@
 package graft.pdf
 
+import graft.testgen.PdfWriter
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets.ISO_8859_1
@@ -11,21 +12,16 @@ import java.nio.charset.StandardCharsets.ISO_8859_1
 class FormMemoSpec extends AnyFunSuite {
 
   test("repeated Do of the same form decodes it once; output repeats") {
-    val sb = new java.io.ByteArrayOutputStream()
-    def w(s: String) = sb.write(s.getBytes(ISO_8859_1))
-    w("%PDF-1.4\n")
-    w("1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    w("2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n")
-    w("3 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-      "/Resources << /XObject << /Fm1 5 0 R >> >> /Contents 4 0 R >>\nendobj\n")
     val content =
       "q 1 0 0 1 0 0 cm /Fm1 Do Q q 1 0 0 1 0 -20 cm /Fm1 Do Q q 1 0 0 1 0 -40 cm /Fm1 Do Q"
-    w(s"4 0 obj\n<< /Length ${content.length} >>\nstream\n$content\nendstream\nendobj\n")
     val form = "BT /F1 10 Tf 72 700 Td (stamp) Tj ET"
-    w(s"5 0 obj\n<< /Type /XObject /Subtype /Form /Length ${form.length} >>\nstream\n$form\nendstream\nendobj\n")
-    w("trailer\n<< /Size 6 /Root 1 0 R >>\nstartxref\n0\n%%EOF\n")
-
-    val doc = PdfDocument.open(sb.toByteArray)
+    val doc = PdfDocument.open(PdfWriter(Seq(
+      "<< /Type /Catalog /Pages 2 0 R >>",
+      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+      "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
+        "/Resources << /XObject << /Fm1 5 0 R >> >> /Contents 4 0 R >>",
+      PdfWriter.stream("", content.getBytes(ISO_8859_1)),
+      PdfWriter.stream("/Type /XObject /Subtype /Form", form.getBytes(ISO_8859_1)))))
     val runs = doc.evalPage(0).runs
     assert(runs.map(_.text) == Vector("stamp", "stamp", "stamp"))
     assert(doc.formDecodeCount == 1, s"form decoded ${doc.formDecodeCount} times")

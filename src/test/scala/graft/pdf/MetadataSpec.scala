@@ -1,5 +1,6 @@
 package graft.pdf
 
+import graft.testgen.PdfWriter
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets.ISO_8859_1
@@ -23,19 +24,16 @@ class MetadataSpec extends AnyFunSuite {
   }
 
   test("synthetic /Info dict: validated keys only, Trapped name, bad types dropped") {
-    val sb = new java.io.ByteArrayOutputStream()
-    def w(s: String) = sb.write(s.getBytes(ISO_8859_1))
-    w("%PDF-1.4\n")
-    w("1 0 obj\n<< /Type /Catalog /Pages 2 0 R /Metadata 5 0 R >>\nendobj\n")
-    w("2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n")
-    w("3 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] >>\nendobj\n")
-    // Title valid; Author wrong type (number) dropped; custom key ignored;
-    // Trapped name kept
-    w("4 0 obj\n<< /Title (Hello) /Author 7 /MyCustomKey (nope) /Trapped /True >>\nendobj\n")
     val xml = "<?xpacket?><x:xmpmeta xmlns:x=\"adobe:ns:meta/\"></x:xmpmeta>"
-    w(s"5 0 obj\n<< /Type /Metadata /Subtype /XML /Length ${xml.length} >>\nstream\n$xml\nendstream\nendobj\n")
-    w("trailer\n<< /Size 6 /Root 1 0 R /Info 4 0 R >>\nstartxref\n0\n%%EOF\n")
-    val doc = PdfDocument.open(sb.toByteArray)
+    val doc = PdfDocument.open(PdfWriter(Seq(
+      "<< /Type /Catalog /Pages 2 0 R /Metadata 5 0 R >>",
+      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+      "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] >>",
+      // Title valid; Author wrong type (number) dropped; custom key ignored;
+      // Trapped name kept
+      "<< /Title (Hello) /Author 7 /MyCustomKey (nope) /Trapped /True >>",
+      PdfWriter.stream("/Type /Metadata /Subtype /XML", xml.getBytes(ISO_8859_1))),
+      " /Info 4 0 R"))
     assert(doc.info == Map("Title" -> "Hello", "Trapped" -> "True"))
     assert(doc.xmp.contains(xml))
   }
@@ -63,22 +61,15 @@ class MetadataSpec extends AnyFunSuite {
     val content = "BT /F1 12 Tf 72 720 Td (s) Tj ET"
     val encStream = dec.decrypt(content.getBytes(ISO_8859_1), 4, 0) // RC4 involution
     val xml = "<?xpacket?><x:xmpmeta>plain</x:xmpmeta>"
-    val sb = new java.io.ByteArrayOutputStream()
-    def w(s: String) = sb.write(s.getBytes(ISO_8859_1))
-    w("%PDF-1.5\n")
-    w("1 0 obj\n<< /Type /Catalog /Pages 2 0 R /Metadata 6 0 R >>\nendobj\n")
-    w("2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n")
-    w("3 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents 4 0 R >>\nendobj\n")
-    w(s"4 0 obj\n<< /Length ${encStream.length} >>\nstream\n")
-    sb.write(encStream)
-    w("\nendstream\nendobj\n")
-    w(s"5 0 obj\n$encBody\nendobj\n")
-    // metadata stream stored PLAINTEXT (EncryptMetadata false)
-    w(s"6 0 obj\n<< /Type /Metadata /Subtype /XML /Length ${xml.length} >>\nstream\n$xml\nendstream\nendobj\n")
-    w("trailer\n<< /Size 7 /Root 1 0 R /Encrypt 5 0 R " +
-      "/ID [<30313233343536373839616263646566> <30313233343536373839616263646566>] >>\n" +
-      "startxref\n0\n%%EOF\n")
-    val doc = PdfDocument.open(sb.toByteArray)
+    val doc = PdfDocument.open(PdfWriter(Seq(
+      "<< /Type /Catalog /Pages 2 0 R /Metadata 6 0 R >>",
+      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+      "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents 4 0 R >>",
+      PdfWriter.stream("", encStream),
+      encBody,
+      // metadata stream stored PLAINTEXT (EncryptMetadata false)
+      PdfWriter.stream("/Type /Metadata /Subtype /XML", xml.getBytes(ISO_8859_1))),
+      " /Encrypt 5 0 R /ID [<30313233343536373839616263646566> <30313233343536373839616263646566>]"))
     assert(doc.xmp.contains(xml), doc.xmp)
     assert(doc.evalPage(0).runs.map(_.text) == Vector("s")) // content still decrypts
   }

@@ -1,6 +1,6 @@
 package graft.pdf
 
-import graft.testgen.Synth
+import graft.testgen.{PdfWriter, Synth}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Catalog /PageLabels number tree → per-page display labels, mirroring the
@@ -11,8 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * partial array). */
 class PageLabelsSpec extends AnyFunSuite {
 
-  private def labels(nPages: Int, body: String, extra: Seq[String] = Nil) =
-    PdfDocument.open(Synth.pdfWithPageLabels(nPages, body, extra)).pageLabels
+  private def labels(nPages: Int, body: String, extra: Seq[PdfWriter.Body] = Nil) =
+    PdfDocument.open(Synth.pdfWithCatalogExtra(nPages, s"/PageLabels $body", extra)).pageLabels
 
   test("mixed roman front matter + decimal body + prefixed appendix") {
     // the canonical real-world shape: i, ii, 1, 2, 3, A-1, A-2
@@ -83,7 +83,7 @@ class PageLabelsSpec extends AnyFunSuite {
   }
 
   test("absent /PageLabels → None; corpus labels pinned") {
-    val plain = Synth.pdfWithPageLabels(2, "<< /Nums [] >>")
+    val plain = Synth.pdfWithCatalogExtra(2, "/PageLabels << /Nums [] >>")
     // builder always embeds the key; empty Nums = all-empty labels
     assert(PdfDocument.open(plain).pageLabels.contains(Vector("", "")))
     // two corpus papers carry REAL decimal label trees (test24 routes the

@@ -1,5 +1,6 @@
 package graft.pdf
 
+import graft.testgen.PdfWriter
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets.ISO_8859_1
@@ -44,21 +45,13 @@ class PdfImagesSpec extends AnyFunSuite {
   }
 
   private def pdfWithImage(imgDict: String, imgBytes: Array[Byte],
-      content: String = "q 100 0 0 100 0 0 cm /Im1 Do Q"): Array[Byte] = {
-    val sb = new java.io.ByteArrayOutputStream()
-    def w(s: String) = sb.write(s.getBytes(ISO_8859_1))
-    w("%PDF-1.4\n")
-    w("1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    w("2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n")
-    w("3 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-      "/Resources << /XObject << /Im1 5 0 R >> >> /Contents 4 0 R >>\nendobj\n")
-    w(s"4 0 obj\n<< /Length ${content.length} >>\nstream\n$content\nendstream\nendobj\n")
-    w(s"5 0 obj\n<< /Type /XObject /Subtype /Image $imgDict /Length ${imgBytes.length} >>\nstream\n")
-    sb.write(imgBytes)
-    w("\nendstream\nendobj\n")
-    w("trailer\n<< /Size 6 /Root 1 0 R >>\nstartxref\n0\n%%EOF\n")
-    sb.toByteArray
-  }
+      content: String = "q 100 0 0 100 0 0 cm /Im1 Do Q"): Array[Byte] = PdfWriter(Seq(
+    "<< /Type /Catalog /Pages 2 0 R >>",
+    "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+    "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
+      "/Resources << /XObject << /Im1 5 0 R >> >> /Contents 4 0 R >>",
+    PdfWriter.stream("", content.getBytes(ISO_8859_1)),
+    PdfWriter.stream(s"/Type /XObject /Subtype /Image $imgDict", imgBytes)))
 
   test("synthetic: embedded JPEG round-trips through DCTDecode") {
     val jpeg = graft.ops.Multimodal.encodeTestJpeg(40, 30, seed = 7)
@@ -108,25 +101,17 @@ class PdfImagesSpec extends AnyFunSuite {
   }
 
   test("images nested in form XObjects list with path-qualified names") {
-    val sb = new java.io.ByteArrayOutputStream()
-    def w(s: String) = sb.write(s.getBytes(ISO_8859_1))
     val jpeg = graft.ops.Multimodal.encodeTestJpeg(16, 16, seed = 3)
-    w("%PDF-1.4\n")
-    w("1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    w("2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n")
-    w("3 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-      "/Resources << /XObject << /Fm1 4 0 R >> >> /Contents 6 0 R >>\nendobj\n")
-    val form = "/Im1 Do"
-    w(s"4 0 obj\n<< /Type /XObject /Subtype /Form " +
-      s"/Resources << /XObject << /Im1 5 0 R >> >> /Length ${form.length} >>\nstream\n$form\nendstream\nendobj\n")
-    w(s"5 0 obj\n<< /Type /XObject /Subtype /Image /Width 16 /Height 16 " +
-      s"/BitsPerComponent 8 /ColorSpace /DeviceRGB /Filter /DCTDecode /Length ${jpeg.length} >>\nstream\n")
-    sb.write(jpeg)
-    w("\nendstream\nendobj\n")
-    val content = "/Fm1 Do"
-    w(s"6 0 obj\n<< /Length ${content.length} >>\nstream\n$content\nendstream\nendobj\n")
-    w("trailer\n<< /Size 7 /Root 1 0 R >>\nstartxref\n0\n%%EOF\n")
-    val imgs = PdfImages.list(PdfDocument.open(sb.toByteArray))
+    val imgs = PdfImages.list(PdfDocument.open(PdfWriter(Seq(
+      "<< /Type /Catalog /Pages 2 0 R >>",
+      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+      "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
+        "/Resources << /XObject << /Fm1 4 0 R >> >> /Contents 6 0 R >>",
+      PdfWriter.stream("/Type /XObject /Subtype /Form /Resources << /XObject << /Im1 5 0 R >> >>",
+        "/Im1 Do".getBytes(ISO_8859_1)),
+      PdfWriter.stream("/Type /XObject /Subtype /Image /Width 16 /Height 16 " +
+        "/BitsPerComponent 8 /ColorSpace /DeviceRGB /Filter /DCTDecode", jpeg),
+      PdfWriter.stream("", "/Fm1 Do".getBytes(ISO_8859_1))))))
     assert(imgs.map(_.name) == Vector("Fm1/Im1"))
     assert(imgs.head.decodedW == 16)
   }

@@ -1,5 +1,6 @@
 package graft.pdf
 
+import graft.testgen.PdfWriter
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets.ISO_8859_1
@@ -10,30 +11,11 @@ import java.nio.charset.StandardCharsets.ISO_8859_1
   */
 class RotateSpec extends AnyFunSuite {
 
-  private def pdf(rotate: Int, content: String): Array[Byte] = {
-    (s"""%PDF-1.4
-       |1 0 obj
-       |<< /Type /Catalog /Pages 2 0 R >>
-       |endobj
-       |2 0 obj
-       |<< /Type /Pages /Kids [3 0 R] /Count 1 >>
-       |endobj
-       |3 0 obj
-       |<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Rotate $rotate /Contents 4 0 R >>
-       |endobj
-       |4 0 obj
-       |<< /Length ${content.length} >>
-       |stream
-       |$content
-       |endstream
-       |endobj
-       |trailer
-       |<< /Size 5 /Root 1 0 R >>
-       |startxref
-       |0
-       |%%EOF
-       |""").stripMargin.getBytes(ISO_8859_1)
-  }
+  private def pdf(rotate: Int, content: String): Array[Byte] = PdfWriter(Seq(
+    "<< /Type /Catalog /Pages 2 0 R >>",
+    "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+    s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Rotate $rotate /Contents 4 0 R >>",
+    PdfWriter.stream("", content.getBytes(ISO_8859_1))))
 
   test("Rotate 90: display-top line extracts first") {
     // display (90° cw): dispY grows with content x — "first" at smaller x is

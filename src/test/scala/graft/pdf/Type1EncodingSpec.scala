@@ -1,5 +1,6 @@
 package graft.pdf
 
+import graft.testgen.PdfWriter
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets.ISO_8859_1
@@ -54,25 +55,18 @@ class Type1EncodingSpec extends AnyFunSuite {
   }
 
   test("end-to-end: symbolic Type1 font's builtin encoding drives glyph text") {
-    val sb = new java.io.ByteArrayOutputStream()
-    def w(s: String) = sb.write(s.getBytes(ISO_8859_1))
-    w("%PDF-1.4\n")
-    w("1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    w("2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n")
-    w("3 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-      "/Resources << /Font << /F1 4 0 R >> >> /Contents 7 0 R >>\nendobj\n")
-    // no /Encoding in the dict: the program's builtin mapping must win
-    w("4 0 obj\n<< /Type /Font /Subtype /Type1 /BaseFont /TestSym " +
-      "/FirstChar 65 /LastChar 66 /Widths [500 500] /FontDescriptor 5 0 R >>\nendobj\n")
-    w("5 0 obj\n<< /Type /FontDescriptor /FontName /TestSym /Flags 4 " +
-      "/FontFile 6 0 R >>\nendobj\n")
-    val prog = pfa
-    w(s"6 0 obj\n<< /Length ${prog.length} /Length1 ${prog.length} >>\nstream\n$prog\nendstream\nendobj\n")
-    val content = "BT /F1 12 Tf 72 720 Td (AB) Tj ET"
-    w(s"7 0 obj\n<< /Length ${content.length} >>\nstream\n$content\nendstream\nendobj\n")
-    w("trailer\n<< /Size 8 /Root 1 0 R >>\nstartxref\n0\n%%EOF\n")
-
-    val doc = PdfDocument.open(sb.toByteArray)
+    val prog = pfa.getBytes(ISO_8859_1)
+    val doc = PdfDocument.open(PdfWriter(Seq(
+      "<< /Type /Catalog /Pages 2 0 R >>",
+      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+      "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
+        "/Resources << /Font << /F1 4 0 R >> >> /Contents 7 0 R >>",
+      // no /Encoding in the dict: the program's builtin mapping must win
+      "<< /Type /Font /Subtype /Type1 /BaseFont /TestSym " +
+        "/FirstChar 65 /LastChar 66 /Widths [500 500] /FontDescriptor 5 0 R >>",
+      "<< /Type /FontDescriptor /FontName /TestSym /Flags 4 /FontFile 6 0 R >>",
+      PdfWriter.stream(s"/Length1 ${prog.length}", prog),
+      PdfWriter.stream("", "BT /F1 12 Tf 72 720 Td (AB) Tj ET".getBytes(ISO_8859_1)))))
     val runs = doc.evalPage(0).runs
     // alpha -> U+03B1, beta -> U+03B2 via the Adobe Glyph List
     assert(runs.map(_.text) == Vector("αβ"), runs.map(_.text))
