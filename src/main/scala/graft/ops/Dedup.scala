@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * no UDF in the candidate-generation hot path except the documented signature
   * steps), with shuffle structure chosen for scale:
   *
-  *  - exact: one hash-shuffle on the content hash (map-side partial agg first);
+  *  - exact128: one narrow shuffle on a 128-bit content hash (map-side partial
+  *    agg first); `exact` is its byte-exact reference;
   *  - MinHash+LSH: shingle→minhash→band — the only shuffle is the band-bucket
   *    self-join, whose fan-out is bounded by bucket size, not corpus size;
   *  - SimHash: 64-bit fingerprints; near-dup candidates via block-permutation
@@ -18,32 +19,19 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Exact dedupe: survivors = min id per normalized-content group. Map-side
-    * combine makes this one cheap shuffle at any scale; dedupe on xxhash64 of
-    * the text keeps shuffle rows narrow (hash collisions: verify on tie if
-    * byte-exactness is required — flag below).
-    *
-    * Deprecated in favor of [[exact128]]: the single-hash fast path keeps an
-    * arbitrary `first(text)` per 64-bit hash group, so at 10^12 rows (~27
-    * expected collisions) it silently drops a distinct document; the
-    * `verifyBytes = true` path shuffles the corpus text as the group key.
-    * `exact128` gets both right. `verifyBytes = true` remains in use by the
-    * byte-exact oracle queries and tests only. */
-  @deprecated("use exact128 (narrow 128-bit shuffles, no silent collision loss); " +
-    "verifyBytes=true is retained for byte-exact oracle/test use only", "round-4")
-  def exact(df: DataFrame, idCol: String, textCol: String, verifyBytes: Boolean = false): DataFrame =
-    if (verifyBytes)
-      df.groupBy(col(textCol)).agg(min(col(idCol)).as(idCol)).select(idCol, textCol)
-    else
-      df.withColumn("__h", xxhash64(col(textCol)))
-        .groupBy(col("__h"))
-        .agg(min(col(idCol)).as(idCol), first(col(textCol)).as(textCol))
-        .select(idCol, textCol)
+  /** Exact dedupe, the byte-exact reference: survivors = min id per
+    * byte-identical text. Map-side combine makes this one shuffle, but the
+    * exchange carries the text itself as the group key, so production callers
+    * use [[exact128]], which elects the same survivors over 24-byte rows.
+    * This path stays as the reference that q20's oracle and the exact128 test
+    * compare against. */
+  def exact(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.groupBy(col(textCol)).agg(min(col(idCol)).as(idCol)).select(idCol, textCol)
 
   /** Scale-default exact dedupe: 128-bit hash-first, narrow shuffles only.
     *
-    * `exact(verifyBytes=true)`'s groupBy(text) exchange carries the corpus
-    * text as both key and payload — at 100 TB the sort keys are the documents
+    * `exact`'s groupBy(text) exchange carries the corpus text as both key
+    * and payload — at 100 TB the sort keys are the documents
     * themselves and the aggregation hash map holds full texts. Here the
     * winner election shuffles 24-byte rows: a 128-bit content key built from
     * two independent xxhash64 variants (plain text, and the text with a salt
@@ -58,9 +46,9 @@ object Dedup {
     * keyed by an 8-byte id instead of the text, and Catalyst prunes the scan
     * to exactly the output columns.
     *
-    * Same result as `exact(verifyBytes=true)` (min id per byte-identical
-    * text) modulo the ~2^-64-per-pair collision odds; q46 runs this path and
-    * its byte-exact oracle stays green.
+    * Same result as `exact` (min id per byte-identical text) modulo the
+    * ~2^-64-per-pair collision odds; q46 runs this path and its byte-exact
+    * oracle stays green.
     */
   def exact128(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val winners = df

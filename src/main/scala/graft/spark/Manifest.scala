@@ -1,12 +1,13 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Checkpoint/resume manifest: one row per completed input partition with lineage
   * (input snapshot id, partition spec value, row counts, extraction metrics,
-  * wall-clock). Reruns anti-join the pending partition list against completed
-  * manifest entries, so the job resumes idempotently.
+  * wall-clock). A resume run (`app.Main --mode resume`) skips the buckets whose
+  * latest entry is done for the same snapshot, so the job resumes idempotently.
   *
   * Production target is Iceberg `MERGE INTO manifest ON part` (SURVEY.md §7.5);
   * this sandbox has no Iceberg runtime jar, so the same semantics are implemented
@@ -16,14 +17,11 @@ import org.apache.spark.sql.functions._
   */
 object Manifest {
 
-  val schemaCols: Seq[String] =
-    Seq("part", "snapshot_id", "rows", "chars", "status", "run_ts")
+  val schema: StructType = StructType.fromDDL(
+    "part STRING, snapshot_id STRING, rows BIGINT, chars BIGINT, status STRING, run_ts TIMESTAMP")
 
   def read(spark: SparkSession, path: String): DataFrame = {
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "part STRING, snapshot_id STRING, rows BIGINT, chars BIGINT, status STRING, run_ts TIMESTAMP"))
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     try {
       val raw = spark.read.parquet(path)
       // latest-wins per partition key = MERGE semantics on read
@@ -36,11 +34,5 @@ object Manifest {
   }
 
   def append(df: DataFrame, path: String): Unit =
-    df.select(schemaCols.map(col): _*).write.mode(SaveMode.Append).parquet(path)
-
-  /** Partitions still to process: all input partitions minus completed ones. */
-  def pending(allParts: DataFrame, manifest: DataFrame): DataFrame =
-    allParts.join(
-      manifest.filter(col("status") === "done").select("part"),
-      Seq("part"), "left_anti")
+    df.select(schema.map(f => col(f.name)): _*).write.mode(SaveMode.Append).parquet(path)
 }

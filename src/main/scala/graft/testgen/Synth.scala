@@ -11,7 +11,7 @@ import scala.collection.mutable.ArrayBuffer
 /** Deterministic payload encoders + transcript generator (seed-fixed; no external
   * data — FIXTURES.md §§2-4, 6). Encoders are exact inverses of the extractor on
   * well-formed input: encode(text) |> extract == text, which is the basis of the
-  * DuckDB-verifiable round-trip queries in SparkEntry.
+  * DuckDB-verifiable round-trip queries in graft.entry.ExtractionQueries.
   */
 object Synth {
 
@@ -144,7 +144,7 @@ object Synth {
     text.split(" ", -1).grouped(WordsPerLine).map(_.mkString(" ")).mkString("\n")
 
   /** Deterministic conv/turn key for a doc id (shared by Spark side and oracle
-    * SQL — keep in sync with SparkEntry.oracleSql). */
+    * SQL — keep in sync with the oracles in graft.entry). */
   def convId(docId: Long, convs: Int = 50): String = f"conv_${docId % convs}%04d"
   def turnIdx(docId: Long, convs: Int = 50): Int = (docId / convs).toInt
 

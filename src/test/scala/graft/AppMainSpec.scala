@@ -115,4 +115,32 @@ class AppMainSpec extends AnyFunSuite {
     assert(m2.filter(col("part") === emptyBucket).select("rows").head.getLong(0) == 0)
     assert(spark.read.parquet(out).count() == 10) // stale files cleared, not counted
   }
+
+  test("app.Main: resume under a new --snapshot re-extracts every bucket") {
+    import spark.implicits._
+    val in = Files.createTempDirectory("graft-appsnap-in").toString + "/turns"
+    val out = Files.createTempDirectory("graft-appsnap-out").toString + "/extracted"
+    val mf = Files.createTempDirectory("graft-appsnap-mf").toString + "/manifest"
+    val turns = (0 until 40).map { i =>
+      Turn(f"c${i % 8}%03d", i / 8, "user", s"plain text $i", "",
+        new java.sql.Timestamp(1700000000000L + i))
+    }
+    spark.createDataset(turns).write.parquet(in)
+
+    def run(mode: String, snapshot: String): Unit = graft.app.Main.run(spark, Array(
+      "--input", in, "--output", out, "--manifest", mf, "--mode", mode,
+      "--snapshot", snapshot, "--buckets", "4", "--partitions", "2"))
+
+    run("full", "s1")
+    assert(spark.read.parquet(mf).count() == 4)
+    // same snapshot: every bucket is done, nothing is pending
+    run("resume", "s1")
+    assert(spark.read.parquet(mf).count() == 4)
+    // a new snapshot: a done entry for s1 does not count, so all 4 rerun
+    run("resume", "s2")
+    assert(spark.read.parquet(mf).count() == 8)
+    val latest = Manifest.read(spark, mf)
+    assert(latest.filter(col("status") === "done" && col("snapshot_id") === "s2").count() == 4)
+    assert(spark.read.parquet(out).count() == 40)
+  }
 }

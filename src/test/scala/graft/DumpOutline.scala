@@ -3,8 +3,8 @@ package graft
 import graft.pdf.PdfDocument
 
 /** Scratch dump: the q65/q66 oracle VALUES rows for the corpus + synthetic
-  * outline docs (run once per fixture refresh; output pasted into
-  * SparkEntry.oracleSql). */
+  * outline docs (run once per fixture refresh; output pasted into the q65/q66
+  * oracles in graft.entry.PdfQueries). */
 object DumpOutline {
   def main(args: Array[String]): Unit = {
     val inputs: Seq[(String, Array[Byte])] = Seq(

@@ -1,27 +1,33 @@
 package graft
 
+import graft.entry.Query
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Contract checks on the driver-facing SparkEntry maps: every oracle key has a
-  * query, and no key literal is duplicated inside either Map literal — Scala Map
-  * literals silently keep the LAST binding, so a duplicated key would silently
-  * swap an oracle (this exact footgun bit twice in round 1).
-  */
+/** Contract checks on `SparkEntry`'s `queries` and `oracleSql` maps, which
+  * are built from the per-area query registry under `graft.entry`. */
 class EntryContractSpec extends AnyFunSuite {
 
-  test("every oracleSql key has a queries entry") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle keys without a query: $missing")
+  test("queries and oracleSql bind the same 70 names") {
+    assert(SparkEntry.queries.size == 70)
+    assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet)
   }
 
-  test("no key literal bound more than once per map in SparkEntry source") {
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")), "UTF-8")
-    val keyRe = """"(q\w+)"\s*->""".r
-    val counts = keyRe.findAllMatchIn(src).map(_.group(1)).toSeq
-      .groupBy(identity).view.mapValues(_.size).toMap
-    // each key may appear at most twice: once in queries, once in oracleSql
-    val dups = counts.filter(_._2 > 2)
-    assert(dups.isEmpty, s"key literals bound more than twice (duplicate Map binding): $dups")
+  test("the registry loads: no query name is bound twice") {
+    assert(SparkEntry.registry.size == 70)
+    val q = Query("q00_dup", "SELECT 1")((s, _) => s.emptyDataFrame)
+    val e = intercept[IllegalArgumentException](SparkEntry.index(Seq(q, q)))
+    assert(e.getMessage.contains("q00_dup"), e.getMessage)
+  }
+
+  test("oracle pin: the oracle SQL of every query is unchanged") {
+    // MD5 over the oracles sorted by name, NUL between name and SQL and SOH
+    // between entries. Any edit to an oracle string changes it; if the
+    // change is intended, recompute the pin and say why in CHANGES.md.
+    val canon = SparkEntry.oracleSql.toSeq.sortBy(_._1)
+      .map { case (k, v) => k + "\u0000" + v }.mkString("\u0001")
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest(canon.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString
+    assert(md5 == "1fca716deabf08e612ffd061dea78622")
   }
 }

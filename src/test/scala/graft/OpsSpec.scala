@@ -4,9 +4,6 @@ import graft.ops.{Dedup, Multimodal, Similarity, TextStats}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import scala.annotation.nowarn
-
-@nowarn("cat=deprecation") // Dedup.exact stays under test as the exact128 reference
 class OpsSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
@@ -25,7 +22,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("exact dedup keeps min id per content group") {
-    val out = Dedup.exact(docs, "doc_id", "text", verifyBytes = true)
+    val out = Dedup.exact(docs, "doc_id", "text")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(out == Set(0L, 2L, 3L, 4L, 5L))
   }
@@ -33,19 +30,11 @@ class OpsSpec extends AnyFunSuite {
   test("exact128 hash-first path keeps the same survivors as the byte-exact path") {
     val by128 = Dedup.exact128(docs, "doc_id", "text")
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val byBytes = Dedup.exact(docs, "doc_id", "text", verifyBytes = true)
+    val byBytes = Dedup.exact(docs, "doc_id", "text")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(by128 == byBytes)
     // all original columns survive the semi-join
     assert(Dedup.exact128(docs, "doc_id", "text").columns.toSeq == Seq("doc_id", "text"))
-  }
-
-  test("exact dedup hash path (verifyBytes=false) matches the byte-exact path") {
-    val byHash = Dedup.exact(docs, "doc_id", "text")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val byBytes = Dedup.exact(docs, "doc_id", "text", verifyBytes = true)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(byHash == byBytes)
   }
 
   test("sketch kernels fold codepoints, not UTF-16 units (oracle parity off the BMP)") {

@@ -109,4 +109,34 @@ class StreamingSpec extends AnyFunSuite {
     // earliest 1-minute window: turns 0 (user) + 1 (assistant) → 2 turns total
     assert(out.filter(_._1.getTime == minStart).map(_._2).sum == 2, out.toSeq.toString)
   }
+
+  test("a bounded event stream deletes its staged dir, also when the stream fails") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def staged(): Set[String] = {
+      val ls = java.nio.file.Files.list(tmp)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft_events")).toSet
+      finally ls.close()
+    }
+    // an events table as the single parquet file the helper stages
+    val eventsDir = java.nio.file.Files.createTempDirectory("graft-events-src")
+    (0 until 20).map(i => (i % 4L, i.toLong, "click", s"props $i",
+        new java.sql.Timestamp(1700000000000L + i * 1000L)))
+      .toDF("user_id", "event_id", "event_type", "props", "ts")
+      .coalesce(1).write.parquet(eventsDir.resolve("w").toString)
+    val ls = java.nio.file.Files.list(eventsDir.resolve("w"))
+    val part = try ls.iterator().asScala.find(_.toString.endsWith(".parquet")).get finally ls.close()
+    java.nio.file.Files.move(part, eventsDir.resolve("events.parquet"))
+    val before = staged()
+    val rows = graft.entry.StreamingQueries.boundedEventStream(spark, eventsDir.toString, copies = 1)(identity)
+    assert(rows.count() == 20)
+    assert(staged() == before)
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      graft.entry.StreamingQueries.boundedEventStream(spark, eventsDir.toString, copies = 2)(
+        _.map[Turn](_ => throw new IllegalStateException("planted stream failure")))
+    }
+    assert(staged() == before)
+  }
 }

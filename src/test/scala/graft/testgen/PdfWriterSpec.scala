@@ -15,7 +15,7 @@ class PdfWriterSpec extends AnyFunSuite {
 
   // MD5s of the bytes Synth wrote before it moved onto PdfWriter
   private val pinned: Seq[(String, Array[Byte], String)] = Seq(
-    // SparkEntry q65, q67, q68, q64 synthetic rows
+    // graft.entry.PdfQueries q65, q67, q68, q64 synthetic rows
     ("outline_url", Synth.pdfWithCatalogExtra(2, "/Outlines 5 0 R", Seq(
       "<< /First 6 0 R /Last 7 0 R >>",
       "<< /Title (Site) /F 3 /C [0 0.5 1] /A << /S /URI /URI (https://example.org/p) >> /Next 7 0 R >>",
