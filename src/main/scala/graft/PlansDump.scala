@@ -54,7 +54,7 @@ object PlansDump {
       val turns = spark.createDataset(Seq(
         graft.core.Turn("c1", 0, "user", "plain", "", new java.sql.Timestamp(0))))
       val df = Pipeline.extractTurns(turns)
-      out.append("\n## extraction pipeline — single range exchange, sorted partitions, extract_turn projection\n\n```\n")
+      out.append("\n## extraction pipeline — single range exchange, extract_turn projection, sorted partitions\n\n```\n")
       out.append(df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       out.append("\n```\n")

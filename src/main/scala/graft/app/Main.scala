@@ -1,7 +1,7 @@
 package graft.app
 
-import graft.spark.{Manifest, Pipeline}
-import org.apache.spark.sql.SparkSession
+import graft.spark.{BucketTally, Manifest, Pipeline}
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** spark-submit entrypoint for the production extraction job.
@@ -15,11 +15,20 @@ import org.apache.spark.sql.functions._
   * Any other flag, a flag without a value, an unknown mode or a non-positive
   * count is rejected with an IllegalArgumentException before the job starts.
   *
-  * Resume semantics: input partitions are bucketed by conv_id prefix; completed
-  * buckets (manifest status=done for the same snapshot) are anti-joined away,
-  * so reruns only process pending data, and the output write is idempotent per
-  * (conv_id, turn_idx) — MERGE INTO in the Iceberg deployment, partition
-  * overwrite here.
+  * One write pass per job: each turn gets its bucket (xxhash64(conv_id) mod
+  * buckets) once, before the exchange; `Pipeline.extractSorted` ranges on
+  * (bucket, conv_id, turn_idx), extracts, and sorts each partition on the
+  * same key, which is the ordering the bucketed write needs, so the write
+  * adds no Sort and every file is in (conv_id, turn_idx) order. Each task
+  * owns a contiguous run of buckets, so a job writes at most
+  * partitions + buckets − 1 files. The manifest's per-bucket rows and chars
+  * are observed during that write (`Dataset.observe` with a `graft.spark.BucketTally`);
+  * the output is never read back.
+  *
+  * Resume semantics: completed buckets (manifest status=done for the same
+  * snapshot) are filtered away before the exchange, so reruns only process
+  * pending data, and the output write is idempotent per (conv_id, turn_idx) —
+  * MERGE INTO in the Iceberg deployment, partition overwrite here.
   */
 object Main {
 
@@ -65,30 +74,31 @@ object Main {
     val snapshotId = opts.getOrElse("--snapshot", "latest")
     val buckets = opts.get("--buckets").map(_.toInt).getOrElse(64)
 
-    val turnsAll = Pipeline.readTurns(spark, input)
-      .withColumn("__bucket", pmod(xxhash64(col("conv_id")), lit(buckets)).cast("string"))
-
-    val pendingBuckets: Set[String] =
-      if (mode == "resume") {
-        val done = Manifest.read(spark, manifestPath)
-          .filter(col("status") === "done" && col("snapshot_id") === snapshotId)
-          .select("part").collect().map(_.getString(0)).toSet
-        (0 until buckets).map(_.toString).toSet -- done
-      } else (0 until buckets).map(_.toString).toSet
+    val done: Set[String] =
+      if (mode == "resume") Manifest.read(spark, manifestPath)
+        .filter(col("status") === "done" && col("snapshot_id") === snapshotId)
+        .select("part").collect().map(_.getString(0)).toSet
+      else Set.empty
+    val pending = (0 until buckets).filterNot(b => done(b.toString))
 
     import spark.implicits._
-    val pending = pendingBuckets.toSeq.sorted
     if (pending.nonEmpty) {
       // ONE pass over the input: all pending buckets extracted together and
       // split at write time via partitionBy — a per-bucket filter loop would
       // rescan the full table O(buckets) times (xxhash64(conv_id) pmod can't be
       // pushed down or pruned). Dynamic partition overwrite keeps the write
       // idempotent per bucket (Iceberg deployment: MERGE INTO keyed on
-      // (conv_id, turn_idx)).
-      val turns = turnsAll.filter(col("__bucket").isin(pending: _*))
-        .drop("__bucket").as[graft.core.Turn]
-      val extracted = Pipeline.extractTurns(turns, partitions)
-        .withColumn("bucket", pmod(xxhash64(col("conv_id")), lit(buckets)).cast("string"))
+      // (conv_id, turn_idx)). The bucket is computed once, here, and leads
+      // the extraction's range and sort key (see Pipeline).
+      val all = Pipeline.readTurns(spark, input)
+        .withColumn("bucket", pmod(xxhash64(col("conv_id")), lit(buckets)).cast("int"))
+      val turns = if (pending.length == buckets) all else all.filter(col("bucket").isin(pending: _*))
+      // per-bucket rows and characters (code points, as Spark's `length`
+      // counts them), observed in the write's own result stage
+      val tally = Observation()
+      val extracted = Pipeline.extractSorted(turns, partitions, lead = Seq("bucket"))
+        .observe(tally, udaf(new BucketTally(buckets)).apply(
+          col("bucket"), coalesce(length(col("extracted_text")), lit(0))).as("tally"))
       val outPath = new org.apache.hadoop.fs.Path(output)
       val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       // Write discipline per mode:
@@ -102,10 +112,9 @@ object Main {
       //    resume considers every bucket done.
       //  - resume: dynamic overwrite only replaces partitions present in the
       //    new data, so a pending bucket whose extraction now yields zero
-      //    rows would keep its stale files (and the metrics read below would
-      //    count them). Pending buckets carry no manifest entry by
-      //    definition, so pre-clearing exactly those is crash-safe: a rerun
-      //    re-extracts them.
+      //    rows would keep its stale files. Pending buckets carry no manifest
+      //    entry by definition, so pre-clearing exactly those is crash-safe:
+      //    a rerun re-extracts them.
       if (mode == "resume" && fs.exists(outPath)) pending.foreach { b =>
         val p = new org.apache.hadoop.fs.Path(outPath, s"bucket=$b")
         if (fs.exists(p)) fs.delete(p, true)
@@ -118,24 +127,13 @@ object Main {
         case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
         case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
       }
-      // per-bucket metrics from the just-written files — never re-run extraction
+      val counts = tally.get("tally").asInstanceOf[scala.collection.Seq[Long]]
       val ts = new java.sql.Timestamp(System.currentTimeMillis())
-      val anyData = fs.exists(outPath) &&
-        fs.listStatus(outPath).exists(_.getPath.getName.startsWith("bucket="))
-      val counted: Map[String, (Long, Long)] =
-        if (!anyData) Map.empty
-        else spark.read.parquet(output)
-          .filter(col("bucket").isin(pending: _*))
-          .groupBy(col("bucket").cast("string").as("part"))
-          .agg(count(lit(1)).as("rows"), coalesce(sum(length(col("extracted_text"))), lit(0L)).as("chars"))
-          .collect()
-          .map(r => r.getString(0) -> (r.getAs[Long]("rows"), r.getAs[Long]("chars"))).toMap
       // every pending bucket gets a 'done' row — zero-yield buckets included,
       // else they are re-extracted on every subsequent resume
       Manifest.append(
-        pending.map { b =>
-          val (n, c) = counted.getOrElse(b, (0L, 0L))
-          (b, snapshotId, n, c, "done", ts)
+        pending.sortBy(_.toString).map { b =>
+          (b.toString, snapshotId, counts(b), counts(buckets + b), "done", ts)
         }.toDF("part", "snapshot_id", "rows", "chars", "status", "run_ts"),
         manifestPath)
     }

@@ -204,11 +204,7 @@ private[graft] object DedupQueries {
       // q32 (cosine exactly 1), so every twin pair forms a 2-node cluster
       // whose original is the survivor; untouched embeddings are singleton
       // survivors. Oracle = the q32 pair mirror + exact recursive closure.
-      val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val twins = emb.filter(col("vec_id") < 20).select(
-        (col("vec_id") + 100000).as("vec_id"),
-        transform(col("embedding"), v => v * lit(1.5f)).as("embedding"))
-      Dedup.semanticClusters(emb.union(twins), "vec_id", "embedding",
+      Dedup.semanticClusters(SimilarityQueries.withScaledTwins(s, dir), "vec_id", "embedding",
         threshold = 0.999, bits = 6)
     },
     Query("q44_chunking",
@@ -289,16 +285,8 @@ private[graft] object DedupQueries {
       val docs = t(s, dir, "documents")
       val deduped = graft.ops.Dedup.exact128(docs, "doc_id", "text")
         .select(col("text"), col("doc_id"))
-      val len = length(col("text"))
-      val nWords = TextStats.wsTokenCount(col("text"))
-      val nStop = graft.functions.TextHashes.token_set_count(lower(col("text")),
-        Seq("the", "of", "and", "a", "to", "in", "is", "for", "on", "with"))
-      val punct = TextStats.punctCount(col("text"))
-      val quality = when(len.between(50, 10000), lit(4)).when(len.between(20, 50000), lit(2)).otherwise(lit(0)) +
-        when(nStop * 20 > nWords, lit(3)).otherwise(lit(0)) +
-        when(punct * 5 < len, lit(3)).otherwise(lit(0))
       val cleaned = deduped
-        .filter(quality >= 7)
+        .filter(TextQueries.qualityX10(col("text")) >= 7)
         .filter(TextStats.langId(col("text")) === "en")
         .select(col("doc_id"), graft.ops.Chunking.redactPii(col("text")).as("text"))
       graft.ops.Chunking.chunkWords(cleaned, "doc_id", "text", size = 32, stride = 24)

@@ -2,12 +2,23 @@ package graft.entry
 
 import graft.entry.Inputs.t
 import graft.ops.Similarity
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Vector similarity search over the embeddings table: brute force, LSH
   * (exact bucket and multi-probe), IVF, IVF-PQ and cosine near-duplicates. */
 private[graft] object SimilarityQueries {
+
+  /** (vec_id, embedding) plus a 1.5×-scaled twin (id + 100000) of each of the
+    * first 20 embeddings: random embeddings have no near-dups, and a scaled
+    * twin has cosine exactly 1 with its original. The planted pairs of q32
+    * and q37, whose oracles build the same `un` union. */
+  private[entry] def withScaledTwins(s: SparkSession, dir: String): DataFrame = {
+    val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
+    emb.union(emb.filter(col("vec_id") < 20).select(
+      (col("vec_id") + 100000).as("vec_id"),
+      transform(col("embedding"), v => v * lit(1.5f)).as("embedding")))
+  }
 
   /** The in-query recall gate of q33 and q34: recall_ok = 1 for each query
     * whose approximate top-5 (`approx`: qid, nid) recovers at least 2 of the
@@ -83,12 +94,7 @@ private[graft] object SimilarityQueries {
          |      (sqrt(list_dot_product(l.v, l.v)) * sqrt(list_dot_product(r.v, r.v))) >= 0.999
          |ORDER BY a, b""".stripMargin
     }) { (s, dir) =>
-      // random embeddings have no near-dups; add scaled twins (cosine exactly 1)
-      val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val twins = emb.filter(col("vec_id") < 20).select(
-        (col("vec_id") + 100000).as("vec_id"),
-        transform(col("embedding"), v => v * lit(1.5f)).as("embedding"))
-      Similarity.cosineNearDups(emb.union(twins), "vec_id", "embedding",
+      Similarity.cosineNearDups(withScaledTwins(s, dir), "vec_id", "embedding",
         threshold = 0.999, bits = 6)
         .select("a", "b").orderBy("a", "b")
     },

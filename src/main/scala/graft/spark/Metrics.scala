@@ -1,34 +1,30 @@
 package graft.spark
 
 import graft.core.ExtractedTurn
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
-final case class ExtractionStats(
-    turns: Long, chars: Long, runs: Long, dropped: Long, maxChars: Long)
-
-/** One-pass typed metrics bundle (`Aggregator[IN, BUF, OUT]` — SURVEY.md §4.3's
-  * fused single-pass metric option): a single map-side-combined pass instead of
-  * five column aggregates. */
-object MetricsAgg extends Aggregator[ExtractedTurn, ExtractionStats, ExtractionStats] {
-  override def zero: ExtractionStats = ExtractionStats(0, 0, 0, 0, 0)
-  override def reduce(b: ExtractionStats, t: ExtractedTurn): ExtractionStats =
-    ExtractionStats(
-      b.turns + 1,
-      b.chars + t.extracted_text.length,
-      b.runs + t.metrics.runs,
-      b.dropped + t.metrics.dropped_nodes,
-      math.max(b.maxChars, t.extracted_text.length.toLong))
-  override def merge(a: ExtractionStats, b: ExtractionStats): ExtractionStats =
-    ExtractionStats(a.turns + b.turns, a.chars + b.chars, a.runs + b.runs,
-      a.dropped + b.dropped, math.max(a.maxChars, b.maxChars))
-  override def finish(r: ExtractionStats): ExtractionStats = r
-  override def bufferEncoder: Encoder[ExtractionStats] = Encoders.product[ExtractionStats]
-  override def outputEncoder: Encoder[ExtractionStats] = Encoders.product[ExtractionStats]
-
-  def over(ds: Dataset[ExtractedTurn]): ExtractionStats =
-    ds.select(MetricsAgg.toColumn).collect()(0)
+/** Per-bucket rows and characters of one write, taken while the write runs:
+  * `app.Main` feeds it `(bucket, length(extracted_text))` through
+  * `Dataset.observe`, so the manifest needs no re-read of the output. The
+  * buffer holds the `n` row counts, then the `n` character counts. */
+final class BucketTally(n: Int) extends Aggregator[(Int, Int), Array[Long], Array[Long]] {
+  override def zero: Array[Long] = new Array[Long](2 * n)
+  override def reduce(b: Array[Long], r: (Int, Int)): Array[Long] = {
+    b(r._1) += 1
+    b(n + r._1) += r._2
+    b
+  }
+  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+    var i = 0
+    while (i < a.length) { a(i) += b(i); i += 1 }
+    a
+  }
+  override def finish(r: Array[Long]): Array[Long] = r
+  override def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+  override def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
 }
 
 /** Per-conversation rollups with explicit salt: the two-phase aggregation the

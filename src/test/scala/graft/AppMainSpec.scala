@@ -143,4 +143,97 @@ class AppMainSpec extends AnyFunSuite {
     assert(latest.filter(col("status") === "done" && col("snapshot_id") === "s2").count() == 4)
     assert(spark.read.parquet(out).count() == 40)
   }
+
+  private def dirs(prefix: String): (String, String, String) = {
+    def d(n: String) = Files.createTempDirectory(s"graft-$prefix-$n").toString
+    (d("in") + "/turns", d("out") + "/extracted", d("mf") + "/manifest")
+  }
+
+  private def runMain(in: String, out: String, mf: String, mode: String,
+      buckets: Int, partitions: Int): Unit = graft.app.Main.run(spark, Array(
+    "--input", in, "--output", out, "--manifest", mf, "--mode", mode,
+    "--buckets", buckets.toString, "--partitions", partitions.toString))
+
+  /** Per bucket (rows, chars) of the written output, by re-reading it. */
+  private def reread(out: String): Map[String, (Long, Long)] =
+    spark.read.parquet(out).groupBy(col("bucket").cast("string"))
+      .agg(count(lit(1)), sum(length(col("extracted_text"))))
+      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+
+  /** Per part (rows, chars) of the manifest's latest entries. */
+  private def manifest(mf: String): Map[String, (Long, Long)] =
+    Manifest.read(spark, mf).filter(col("status") === "done").collect()
+      .map(r => r.getAs[String]("part") -> (r.getAs[Long]("rows"), r.getAs[Long]("chars"))).toMap
+
+  test("app.Main: every written file is in (conv_id, turn_idx) order") {
+    import spark.implicits._
+    val (in, out, mf) = dirs("order")
+    // 60 conversations of uneven length, written in a shuffled order so that
+    // only the job's own sort can put the files in key order
+    val turns = for (c <- 0 until 60; i <- 0 until 5 + c % 7) yield
+      Turn(f"c$c%03d", i, "user", s"plain text $c $i", "", new java.sql.Timestamp(1700000000000L + i))
+    spark.createDataset(new scala.util.Random(3).shuffle(turns)).repartition(3).write.parquet(in)
+    runMain(in, out, mf, "full", buckets = 16, partitions = 4)
+
+    val files = scala.util.Using.resource(Files.walk(java.nio.file.Paths.get(out)))(_.toArray.map(_.toString))
+      .filter(f => f.endsWith(".parquet") && f.contains("bucket="))
+    assert(files.nonEmpty)
+    val unsorted = files.filter { f =>
+      val keys = spark.read.parquet(f).select("conv_id", "turn_idx").collect()
+        .map(r => (r.getString(0), r.getInt(1))).toSeq
+      keys != keys.sorted
+    }
+    assert(unsorted.isEmpty, s"${unsorted.length} of ${files.length} files out of order")
+    // each task owns a contiguous run of buckets
+    assert(files.length <= 4 + 16 - 1, files.length)
+    assert(spark.read.parquet(out).count() == turns.length)
+  }
+
+  test("app.Main: manifest rows and chars equal a re-read of the output, in code points") {
+    import spark.implicits._
+    val (in, out, mf) = dirs("parity")
+    // 😀 is one code point and two UTF-16 units: chars must count it once
+    val turns = (0 until 120).map { i =>
+      Turn(f"c${i % 24}%03d", i / 24, "user", s"plain 😀 text ${"é😀" * (i % 5)} $i", "",
+        new java.sql.Timestamp(1700000000000L + i))
+    }
+    spark.createDataset(turns).write.parquet(in)
+    runMain(in, out, mf, "full", buckets = 8, partitions = 3)
+    val m = manifest(mf)
+    val r = reread(out)
+    assert(m.keySet == (0 until 8).map(_.toString).toSet)
+    (0 until 8).map(_.toString).foreach(b => assert(m(b) == r.getOrElse(b, (0L, 0L)), b))
+    assert(m.values.map(_._1).sum == 120)
+    val utf16 = spark.read.parquet(out).collect().map(_.getAs[String]("extracted_text").length.toLong).sum
+    assert(m.values.map(_._2).sum < utf16) // the emoji reached the output
+  }
+
+  test("app.Main: an empty input table records rows=0 done entries") {
+    import spark.implicits._
+    val (in, out, mf) = dirs("empty")
+    spark.createDataset(Seq.empty[Turn]).write.parquet(in)
+    runMain(in, out, mf, "full", buckets = 4, partitions = 2)
+    assert(manifest(mf) == (0 until 4).map(b => b.toString -> (0L, 0L)).toMap)
+  }
+
+  test("app.Main: a resume whose pending buckets are all empty records rows=0 for each") {
+    import spark.implicits._
+    val (in, out, mf) = dirs("resume-empty")
+    val turns = (0 until 10).map(i =>
+      Turn("conv_only", i, "user", s"text $i", "", new java.sql.Timestamp(1700000000000L + i)))
+    spark.createDataset(turns).write.parquet(in)
+    runMain(in, out, mf, "full", buckets = 8, partitions = 2)
+    val full = manifest(mf)
+    val filled = full.collect { case (b, (n, _)) if n > 0 => b }.toSet
+    assert(filled.size == 1)
+    // keep only the filled bucket's entry: the 7 pending buckets hold no rows
+    val mf2 = Files.createTempDirectory("graft-resume-empty-mf2").toString + "/manifest"
+    spark.read.parquet(mf).filter(col("part").isin(filled.toSeq: _*)).write.parquet(mf2)
+    runMain(in, out, mf2, "resume", buckets = 8, partitions = 2)
+    val latest = spark.read.parquet(mf2).filter(!col("part").isin(filled.toSeq: _*))
+    assert(latest.count() == 7)
+    assert(latest.filter(col("status") === "done" && col("rows") === 0 && col("chars") === 0).count() == 7)
+    assert(spark.read.parquet(out).count() == 10)
+    assert(manifest(mf2) == full)
+  }
 }

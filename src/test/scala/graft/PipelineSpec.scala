@@ -72,24 +72,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(b.exceptAll(a).count() == 0)
   }
 
-  test("metrics aggregate in one pass") {
-    val (ds, _) = synthTurns(convs = 4, avg = 3, mega = 10)
-    val m = Pipeline.metrics(Pipeline.extractTurns(ds)).collect()(0)
-    assert(m.getAs[Long]("turns") == ds.count())
-    assert(m.getAs[Long]("chars") > 0)
-  }
-
-  test("typed MetricsAgg one-pass bundle equals column aggregates") {
-    val (ds, _) = synthTurns(convs = 4, avg = 3, mega = 10)
-    val out = Pipeline.extractTurns(ds)
-    val typed = graft.spark.MetricsAgg.over(out)
-    val df = Pipeline.metrics(out).collect()(0)
-    assert(typed.turns == df.getAs[Long]("turns"))
-    assert(typed.chars == df.getAs[Long]("chars"))
-    assert(typed.runs == df.getAs[Long]("runs"))
-    assert(typed.dropped == df.getAs[Long]("dropped_nodes"))
-  }
-
   test("salted conv rollup equals unsalted groupBy") {
     val (ds, _) = synthTurns(convs = 5, avg = 4, mega = 40)
     val out = Pipeline.extractTurns(ds)

@@ -57,6 +57,70 @@ class PlanSpec extends AnyFunSuite {
     assert(p.indexOf("extract_turn") < p.indexOf("Exchange"), p)
   }
 
+  test("app.Main: one write pass — bucket-led range exchange, one sort above extract_turn, observed metrics") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.{CollectMetricsExec, FileSourceScanExec, QueryExecution, SortExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import spark.implicits._
+    object Plans extends AdaptiveSparkPlanHelper
+    def tmp(n: String) = java.nio.file.Files.createTempDirectory(s"graft-plan-$n").toString + s"/$n"
+    val (in, out, mf) = (tmp("in"), tmp("out"), tmp("mf"))
+    spark.createDataset((0 until 64).map(i => graft.core.Turn(f"c${i % 9}%02d", i / 9, "user",
+      s"plain $i", "", new java.sql.Timestamp(i.toLong)))).write.parquet(in)
+
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def run(manifest: String, mode: String): Unit = graft.app.Main.run(spark, Array("--input", in,
+      "--output", out, "--manifest", manifest, "--mode", mode, "--buckets", "8", "--partitions", "3"))
+    spark.listenerManager.register(listener)
+    try {
+      run(mf, "full")
+      // a resume with one bucket pending: the plan also filters by bucket
+      val mf2 = tmp("mf2")
+      spark.read.parquet(mf).filter($"part" =!= "1").write.parquet(mf2)
+      run(mf2, "resume")
+      org.apache.spark.sql.ListenerDrain(spark)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val plans = seen.asScala.toSeq.map(_.executedPlan)
+
+    // no query reads the output back
+    def local(p: org.apache.hadoop.fs.Path) = p.toUri.getPath.stripSuffix("/")
+    val outScans = plans.flatMap(p => Plans.collectWithSubqueries(p) {
+      case s: FileSourceScanExec if s.relation.location.rootPaths.exists(local(_).startsWith(out)) => s
+    })
+    assert(outScans.isEmpty, outScans.mkString("\n"))
+
+    val writes = plans.filter(p => Plans.collect(p) {
+      case w: DataWritingCommandExec => w.cmd
+    }.exists {
+      case c: InsertIntoHadoopFsRelationCommand => local(c.outputPath) == out
+      case _ => false
+    })
+    assert(writes.length == 2, plans.mkString("\n\n")) // the full and the resume run
+    writes.foreach { w =>
+      val exchanges = Plans.collect(w) { case e: ShuffleExchangeLike => e }
+      assert(exchanges.length == 1, w)
+      exchanges.head.outputPartitioning match {
+        case RangePartitioning(order, _) =>
+          assert(order.map(_.child.references.head.name) == Seq("bucket", "conv_id", "turn_idx"), w)
+        case other => fail(s"expected range partitioning, got $other")
+      }
+      val sorts = Plans.collect(w) { case s: SortExec => s }
+      assert(sorts.length == 1, w)
+      assert(sorts.head.sortOrder.map(_.child.references.head.name) == Seq("bucket", "conv_id", "turn_idx"), w)
+      assert(Plans.find(sorts.head.child)(_.expressions.exists(_.toString.contains("extract_turn"))).nonEmpty, w)
+      assert(Plans.collect(w) { case c: CollectMetricsExec => c }.length == 1, w)
+    }
+  }
+
   test("q30 ANN: query side broadcast — corpus never shuffles for the join") {
     val p = plan("q30_ann_bruteforce")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"), p)
