@@ -119,14 +119,11 @@ object Main {
         val p = new org.apache.hadoop.fs.Path(outPath, s"bucket=$b")
         if (fs.exists(p)) fs.delete(p, true)
       }
-      val overwriteMode = if (mode == "resume") "dynamic" else "static"
-      val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", overwriteMode)
-      try extracted.write.mode("overwrite").partitionBy("bucket").parquet(output)
-      finally prevMode match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      // a write option, which the parquet write reads before the session
+      // conf, so the session's own setting is left as it was
+      extracted.write.mode("overwrite")
+        .option("partitionOverwriteMode", if (mode == "resume") "dynamic" else "static")
+        .partitionBy("bucket").parquet(output)
       val counts = tally.get("tally").asInstanceOf[scala.collection.Seq[Long]]
       val ts = new java.sql.Timestamp(System.currentTimeMillis())
       // every pending bucket gets a 'done' row — zero-yield buckets included,

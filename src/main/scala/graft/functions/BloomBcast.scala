@@ -19,7 +19,10 @@ import org.apache.spark.util.sketch.BloomFilter
   * task — so `substringDedupTwoPass` broadcasts the bytes and tests through
   * this expression. The filter deserializes lazily once per executor JVM
   * (the `@transient lazy val`), and codegen stays whole-stage via a
-  * reference-object call, the same pattern as the TextHashes kernels.
+  * reference-object call. It is the one hand-written kernel expression in
+  * `graft.functions`: the other kernels are static methods bound through
+  * `Kernel`'s one generic `KernelCall`, but this one holds per-executor
+  * state behind a broadcast handle, which a static call cannot carry.
   */
 case class BloomMightContainBcast(bloom: Broadcast[Array[Byte]],
     child: Expression)

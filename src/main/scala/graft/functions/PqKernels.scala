@@ -1,18 +1,18 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Product-quantization kernels (Jégou/Douze/Schmid, "Product Quantization
   * for Nearest Neighbor Search", TPAMI 2011): vectors split into M subspaces,
   * each encoded as the index of its nearest sub-centroid, distances
-  * approximated by table lookups (ADC). All hot-path kernels are native
-  * codegen'd expressions — codebooks ride as codegen reference objects, the
-  * same discipline as NearestCentroid (higher-order functions are
-  * CodegenFallback and must stay out of corpus-wide scans).
+  * approximated by table lookups (ADC). Every hot-path kernel is a static
+  * method that generated code calls directly ([[PqFunctions]] binds it
+  * through [[Kernel]]); codebooks ride as constants in the generated code's
+  * `references[]`, the same discipline as `VectorKernels.nearestCentroid`
+  * (higher-order functions are CodegenFallback and must stay out of
+  * corpus-wide scans).
   *
   * Scale shape: an encoded corpus row is M bytes + one precomputed norm —
   * a 64-dim float vector compresses 16× at M=16, which is what makes the
@@ -181,9 +181,9 @@ object PqResidual {
   }
 
   /** ADC against a per-list constant table: Σ_m lut(list)(m·ksub + code(m)).
-    * The table is corpus-wide constant (nlist × m·ksub doubles) and rides as
-    * a codegen reference object. The loop intentionally mirrors PqVector.adc
-    * rather than sharing a core: adc reads a per-row ArrayData column and
+    * The table is corpus-wide constant (nlist × m·ksub doubles) and rides in
+    * the generated code's `references[]`. The loop intentionally mirrors
+    * PqVector.adc rather than sharing a core: adc reads a per-row ArrayData column and
     * must not copy it to an array per row; a PqSpec identity test pins the
     * two to each other. Out-of-range list ids fail loudly (see subtract). */
   def adcIndexed(code: Array[Byte], list: Int, luts: Array[Array[Double]]): Double = {
@@ -203,121 +203,26 @@ object PqResidual {
   }
 }
 
-case class CentroidResidual(left: Expression, right: Expression,
-    centroids: Array[Array[Double]]) extends BinaryExpression {
-  private def isFloat: Boolean = left.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullSafeEval(vec: Any, list: Any): Any =
-    new GenericArrayData(PqResidual.subtract(
-      vec.asInstanceOf[ArrayData], list.asInstanceOf[Int], centroids, isFloat))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("centroids", centroids, "double[][]")
-    defineCodeGen(ctx, ev, (v, l) =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.functions.PqResidual.subtract($v, $l, $cRef, $isFloat))")
-  }
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): CentroidResidual =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "centroid_residual"
-}
-
-case class PqAdcIndexed(left: Expression, right: Expression,
-    luts: Array[Array[Double]]) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(code: Any, list: Any): Any =
-    PqResidual.adcIndexed(code.asInstanceOf[Array[Byte]], list.asInstanceOf[Int], luts)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lRef = ctx.addReferenceObj("luts", luts, "double[][]")
-    defineCodeGen(ctx, ev, (c, l) =>
-      s"graft.functions.PqResidual.adcIndexed($c, $l, $lRef)")
-  }
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): PqAdcIndexed =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "pq_adc_indexed"
-}
-
-case class PqEncode(child: Expression, codebooks: Array[Array[Array[Double]]])
-    extends UnaryExpression {
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(input: Any): Any =
-    PqVector.encode(input.asInstanceOf[ArrayData], codebooks, isFloat)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cbRef = ctx.addReferenceObj("codebooks", codebooks, "double[][][]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.PqVector.encode($c, $cbRef, $isFloat)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): PqEncode =
-    copy(child = newChild)
-  override def prettyName: String = "pq_encode"
-}
-
-case class PqCodeNormSq(child: Expression, codebooks: Array[Array[Array[Double]]])
-    extends UnaryExpression {
-  private val normSq: Array[Array[Double]] =
-    codebooks.map(_.map(c => c.map(x => x * x).sum))
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(input: Any): Any =
-    PqVector.codeNormSq(input.asInstanceOf[Array[Byte]], normSq)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val nRef = ctx.addReferenceObj("normSq", normSq, "double[][]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.PqVector.codeNormSq($c, $nRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): PqCodeNormSq =
-    copy(child = newChild)
-  override def prettyName: String = "pq_code_norm_sq"
-}
-
-case class PqLut(child: Expression, codebooks: Array[Array[Array[Double]]])
-    extends UnaryExpression {
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    new GenericArrayData(PqVector.lut(input.asInstanceOf[ArrayData], codebooks, isFloat))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cbRef = ctx.addReferenceObj("codebooks", codebooks, "double[][][]")
-    defineCodeGen(ctx, ev, c =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.functions.PqVector.lut($c, $cbRef, $isFloat))")
-  }
-  override protected def withNewChildInternal(newChild: Expression): PqLut =
-    copy(child = newChild)
-  override def prettyName: String = "pq_lut"
-}
-
-case class PqAdc(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(code: Any, lut: Any): Any =
-    PqVector.adc(code.asInstanceOf[Array[Byte]], lut.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (c, l) => s"graft.functions.PqVector.adc($c, $l)")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): PqAdc =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "pq_adc"
-}
-
-/** Column wrappers. */
+/** Column wrappers: each one a call of its kernel method through [[Kernel]].
+  * The vector kernels read float or double elements, as the input column
+  * holds. */
 object PqFunctions {
-  import org.apache.spark.sql.GraftBridge.{toColumn => column, toExpression => expression}
+  import Kernel.{call, isFloat, primitiveArray}
 
   def pq_encode(v: Column, codebooks: Array[Array[Array[Double]]]): Column =
-    column(PqEncode(expression(v), codebooks))
-  def pq_code_norm_sq(code: Column, codebooks: Array[Array[Array[Double]]]): Column =
-    column(PqCodeNormSq(expression(code), codebooks))
+    Kernel("pq_encode", v)(x => call(PqVector, "encode", BinaryType)(x, codebooks, isFloat(x)))
+  /** The per-subspace squared sub-centroid norms are computed here, once. */
+  def pq_code_norm_sq(code: Column, codebooks: Array[Array[Array[Double]]]): Column = {
+    val normSq = codebooks.map(_.map(c => c.map(x => x * x).sum))
+    Kernel("pq_code_norm_sq", code)(call(PqVector, "codeNormSq", DoubleType)(_, normSq))
+  }
   def pq_lut(q: Column, codebooks: Array[Array[Array[Double]]]): Column =
-    column(PqLut(expression(q), codebooks))
+    Kernel("pq_lut", q)(x => primitiveArray(PqVector, "lut", DoubleType)(x, codebooks, isFloat(x)))
   def pq_adc(code: Column, lut: Column): Column =
-    column(PqAdc(expression(code), expression(lut)))
+    Kernel("pq_adc", code, lut)(call(PqVector, "adc", DoubleType)(_, _))
   def centroid_residual(vec: Column, list: Column, centroids: Array[Array[Double]]): Column =
-    column(CentroidResidual(expression(vec), expression(list), centroids))
+    Kernel("centroid_residual", vec, list)((v, l) =>
+      primitiveArray(PqResidual, "subtract", DoubleType)(v, l, centroids, isFloat(v)))
   def pq_adc_indexed(code: Column, list: Column, luts: Array[Array[Double]]): Column =
-    column(PqAdcIndexed(expression(code), expression(list), luts))
+    Kernel("pq_adc_indexed", code, list)(call(PqResidual, "adcIndexed", DoubleType)(_, _, luts))
 }

@@ -1,21 +1,22 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GetStructField}
+import org.apache.spark.sql.catalyst.expressions.objects.NewInstance
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Single-pass text-sketch kernels as native Catalyst expressions.
+/** Single-pass text-sketch kernels, as static methods that Catalyst calls
+  * through [[Kernel]] (generated code calls them directly).
   *
   * The declarative formulation (64 `aggregate()` lambdas, each re-hashing every
   * shingle) produced megabyte codegen and O(64·shingles) string hashing per row.
-  * These expressions do one pass over the token stream per row: hash each
+  * These kernels do one pass over the token stream per row: hash each
   * shingle once, then derive the k MinHash slots (or 64 SimHash bit votes) with
   * long arithmetic. Preference order per the engine's design rules: compose
-  * built-ins < native Expression < UDF — this is the middle tier, with codegen
-  * delegating to a static kernel (no virtual calls in the loop).
+  * built-ins < a static kernel call < UDF — this is the middle tier (no
+  * virtual calls in the loop).
   */
 object TextSketch {
 
@@ -310,110 +311,13 @@ object TextSketchMore {
   }
 }
 
-case class ShingleHashes(child: Expression, shingleK: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    new GenericArrayData(TextSketchMore.shingleHashes(input.asInstanceOf[UTF8String], shingleK))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.functions.TextSketchMore.shingleHashes($c, $shingleK))")
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
-    copy(child = newChild)
-  override def prettyName: String = "shingle_hashes"
-}
-
-/** Positional L-token-gram hashes (array index = token offset) — the
-  * substring-dedup candidate kernel; mirrored by SketchSql positional CTEs. */
-case class TokenGramHashes(child: Expression, gramK: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    new GenericArrayData(TextSketchMore.tokenGramHashes(input.asInstanceOf[UTF8String], gramK))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.functions.TextSketchMore.tokenGramHashes($c, $gramK))")
-  override protected def withNewChildInternal(newChild: Expression): TokenGramHashes =
-    copy(child = newChild)
-  override def prettyName: String = "token_gram_hashes"
-}
-
-/** Clip sorted disjoint 0-based token ranges [starts(i), ends(i)) out of the
-  * text; surviving tokens re-join on single spaces. */
-case class DropTokenSpans(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(t: Any, s: Any, e: Any): Any =
-    TextSketchMore.dropTokenSpans(t.asInstanceOf[UTF8String],
-      s.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      e.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, s, e) =>
-      s"graft.functions.TextSketchMore.dropTokenSpans($t, $s, $e)")
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): DropTokenSpans =
-    copy(first = newFirst, second = newSecond, third = newThird)
-  override def prettyName: String = "drop_token_spans"
-}
-
-/** splitmix64 finalizer over a long column — the deterministic rank key for
-  * hash-ordered sampling (mirrored exactly by SketchSql.mix64). */
-case class Mix64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    TextSketch.mix64(input.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextSketch.mix64($c)")
-  override protected def withNewChildInternal(newChild: Expression): Mix64 =
-    copy(child = newChild)
-  override def prettyName: String = "mix64"
-}
-
-case class WinnowSet(child: Expression, k: Int, w: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    new GenericArrayData(TextSketch.winnowSet(input.asInstanceOf[UTF8String], k, w))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.functions.TextSketch.winnowSet($c, $k, $w))")
-  override protected def withNewChildInternal(newChild: Expression): WinnowSet =
-    copy(child = newChild)
-  override def prettyName: String = "winnow_set"
-}
-
-case class MinHashSignature(child: Expression, shingleK: Int, numHashes: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    new GenericArrayData(TextSketch.minhash(input.asInstanceOf[UTF8String], shingleK, numHashes))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"graft.functions.TextSketch.minhash($c, $shingleK, $numHashes))")
-  override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
-    copy(child = newChild)
-  override def prettyName: String = "minhash_signature"
-}
-
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    TextSketch.simhash(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextSketch.simhash($c)")
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-  override def prettyName: String = "simhash64"
-}
-
 object VectorSketch {
   /** Random-hyperplane LSH signature: bit p set iff the projection of the
     * vector onto pseudo-hyperplane p is positive; hyperplane components are
     * ±1 from the parity of mix64(d*K1 + p*K2) — seed-stable across executors,
     * no plane matrix broadcast, and exactly mirrorable in the DuckDB oracle
     * (graft.oracle.SketchSql.lshSignatureExpr). One pass, O(bits·dim) in a
-    * single codegen'd kernel (replaces `bits` separate aggregate-lambda
+    * single kernel call per row (replaces `bits` separate aggregate-lambda
     * passes). */
   def lshSignature(vec: org.apache.spark.sql.catalyst.util.ArrayData, bits: Int, isFloat: Boolean): Long = {
     val n = vec.numElements()
@@ -438,7 +342,7 @@ object VectorSketch {
 
 object VectorKernels {
   /** Floored centroid norms — THE normalization the assignment rule uses.
-    * Single definition shared by the corpus kernel (NearestCentroid), the
+    * Single definition shared by the corpus kernel (nearestCentroid), the
     * query-side probe scoring, and driver-side residual training: if these
     * ever diverged, PQ residuals would train against different lists than
     * the corpus assigns. */
@@ -711,246 +615,107 @@ object TextScan {
   }
 }
 
-case class TopBigramShare(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(input: Any): Any =
-    TextScan.topBigramShare(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextScan.topBigramShare($c)")
-  override protected def withNewChildInternal(newChild: Expression): TopBigramShare =
-    copy(child = newChild)
-  override def prettyName: String = "top_bigram_share"
-}
-
-case class TokenSetCount(child: Expression, words: Array[String], byLetters: Boolean)
-    extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(input: Any): Any =
-    TextScan.tokenSetCount(input.asInstanceOf[UTF8String], words, byLetters)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wordsRef = ctx.addReferenceObj("words", words, "java.lang.String[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextScan.tokenSetCount($c, $wordsRef, $byLetters)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): TokenSetCount =
-    copy(child = newChild)
-  override def prettyName: String = "token_set_count"
-}
-
-case class WsWordCount(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(input: Any): Any =
-    TextScan.wordCount(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextScan.wordCount($c)")
-  override protected def withNewChildInternal(newChild: Expression): WsWordCount =
-    copy(child = newChild)
-  override def prettyName: String = "ws_word_count"
-}
-
-case class TokenInVocab(child: Expression, words: Array[String]) extends UnaryExpression {
-  private val vocab: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String](words.length * 2)
-    words.foreach(s.add)
-    s
-  }
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(input: Any): Any =
-    TextScan.tokenInVocab(input.asInstanceOf[UTF8String], vocab)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val vRef = ctx.addReferenceObj("vocab", vocab, "java.util.HashSet")
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextScan.tokenInVocab($c, $vRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): TokenInVocab =
-    copy(child = newChild)
-  override def prettyName: String = "token_in_vocab"
-}
-
-/** split(" ") token count by byte scan — the `length − length(regexp_replace)`
-  * replacement (r7). */
-case class WsTokenCount(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(input: Any): Any =
-    TextScan.wsTokenCountKernel(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextScan.wsTokenCountKernel($c)")
-  override protected def withNewChildInternal(newChild: Expression): WsTokenCount =
-    copy(child = newChild)
-  override def prettyName: String = "ws_token_count"
-}
-
-/** Java \p{Punct} code-point count by byte scan (r7). */
-case class PunctCount(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(input: Any): Any =
-    TextScan.punctCount(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextScan.punctCount($c)")
-  override protected def withNewChildInternal(newChild: Expression): PunctCount =
-    copy(child = newChild)
-  override def prettyName: String = "punct_count"
-}
-
-/** Overlapping word-window chunks as byte-range slices (r7 — replaces the
-  * interpreted split/transform/slice/array_join chain in Chunking). */
-case class ChunkWordsExpr(child: Expression, size: Int, stride: Int) extends UnaryExpression {
-  // containsNull = true matches the transform/array_join formulation this
-  // kernel replaced, so downstream schemas (posexplode output nullability,
-  // written parquet optionality) stay bit-identical
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def nullSafeEval(input: Any): Any =
-    new GenericArrayData(
-      TextScan.chunkWords(input.asInstanceOf[UTF8String], size, stride)
-        .asInstanceOf[Array[Any]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"(Object[]) graft.functions.TextScan.chunkWords($c, $size, $stride))")
-  override protected def withNewChildInternal(newChild: Expression): ChunkWordsExpr =
-    copy(child = newChild)
-  override def prettyName: String = "chunk_words"
-}
-
-case class BpeishWordTokens(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    TextScan.bpeishWordTokens(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextScan.bpeishWordTokens($c)")
-  override protected def withNewChildInternal(newChild: Expression): BpeishWordTokens =
-    copy(child = newChild)
-  override def prettyName: String = "bpeish_word_tokens"
-}
-
-/** Codegen'd cosine similarity: array<float|double> x2 -> double. */
-case class CosineSim(left: Expression, right: Expression) extends BinaryExpression {
-  private def isFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernels.cosineSim(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], isFloat(left),
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], isFloat(right))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.VectorKernels.cosineSim($a, ${isFloat(left)}, $b, ${isFloat(right)})")
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): CosineSim =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "cosine_sim"
-}
-
-/** Nearest-centroid assignment for IVF: the centroid matrix rides along as a
-  * codegen reference object (it is broadcast-tiny — nlist × dim doubles). */
-case class NearestCentroid(child: Expression, centroids: Array[Array[Double]])
-    extends UnaryExpression {
-  private val norms: Array[Double] = VectorKernels.centroidNorms(centroids)
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.nearestCentroid(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], centroids, norms, isFloat)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("centroids", centroids, "double[][]")
-    val normsRef = ctx.addReferenceObj("norms", norms, "double[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.VectorKernels.nearestCentroid($c, $centsRef, $normsRef, $isFloat)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): NearestCentroid =
-    copy(child = newChild)
-  override def prettyName: String = "nearest_centroid"
-}
-
-case class LshSignature(child: Expression, bits: Int) extends UnaryExpression {
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    VectorSketch.lshSignature(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], bits, isFloat)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.VectorSketch.lshSignature($c, $bits, $isFloat)")
-  override protected def withNewChildInternal(newChild: Expression): LshSignature =
-    copy(child = newChild)
-  override def prettyName: String = "lsh_signature"
-}
-
-case class WinnowFingerprint(child: Expression, window: Int) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    TextSketch.fingerprint(input.asInstanceOf[UTF8String], window)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextSketch.fingerprint($c, $window)")
-  override protected def withNewChildInternal(newChild: Expression): WinnowFingerprint =
-    copy(child = newChild)
-  override def prettyName: String = "winnow_fingerprint"
-}
-
-/** Column wrappers + SQL registration. */
+/** The column functions and the SQL surface. Each one is a call of its
+  * kernel method through [[Kernel]]. */
 object TextHashes {
   import org.apache.spark.sql.GraftBridge.{toColumn => column, toExpression => expression}
+  import Kernel.{call, isFloat, primitiveArray}
 
   def minhash_signature(c: Column, shingleK: Int = 3, numHashes: Int = 64): Column =
-    column(MinHashSignature(expression(c), shingleK, numHashes))
-  def simhash64(c: Column): Column = column(SimHash64(expression(c)))
+    Kernel("minhash_signature", c)(primitiveArray(TextSketch, "minhash", LongType)(_, shingleK, numHashes))
+  def simhash64(c: Column): Column = Kernel("simhash64", c)(call(TextSketch, "simhash", LongType)(_))
   def winnow_fingerprint(c: Column, window: Int = 16): Column =
-    column(WinnowFingerprint(expression(c), window))
+    Kernel("winnow_fingerprint", c)(call(TextSketch, "fingerprint", LongType)(_, window))
   def winnow_set(c: Column, k: Int = 24, w: Int = 12): Column =
-    column(WinnowSet(expression(c), k, w))
-  def mix64_col(c: Column): Column = column(Mix64(expression(c)))
+    Kernel("winnow_set", c)(primitiveArray(TextSketch, "winnowSet", LongType)(_, k, w))
+  /** splitmix64 finalizer over a long column — the deterministic rank key for
+    * hash-ordered sampling (mirrored exactly by SketchSql.mix64). */
+  def mix64_col(c: Column): Column = Kernel("mix64", c)(call(TextSketch, "mix64", LongType)(_))
   def shingle_hashes(c: Column, shingleK: Int = 3): Column =
-    column(ShingleHashes(expression(c), shingleK))
+    Kernel("shingle_hashes", c)(primitiveArray(TextSketchMore, "shingleHashes", LongType)(_, shingleK))
+  /** Positional L-token-gram hashes (array index = token offset) — the
+    * substring-dedup candidate kernel; mirrored by SketchSql positional CTEs. */
   def token_gram_hashes(c: Column, gramK: Int): Column =
-    column(TokenGramHashes(expression(c), gramK))
+    Kernel("token_gram_hashes", c)(primitiveArray(TextSketchMore, "tokenGramHashes", LongType)(_, gramK))
+  /** Clip sorted disjoint 0-based token ranges [starts(i), ends(i)) out of the
+    * text; surviving tokens re-join on single spaces. */
   def drop_token_spans(text: Column, starts: Column, ends: Column): Column =
-    column(DropTokenSpans(expression(text), expression(starts), expression(ends)))
-  def lsh_signature(c: Column, bits: Int): Column =
-    column(LshSignature(expression(c), bits))
-  def nearest_centroid(c: Column, centroids: Array[Array[Double]]): Column =
-    column(NearestCentroid(expression(c), centroids))
-  def cosine_sim(a: Column, b: Column): Column =
-    column(CosineSim(expression(a), expression(b)))
-  def token_set_count(c: Column, words: Seq[String], byLetters: Boolean = false): Column =
-    column(TokenSetCount(expression(c), words.toArray, byLetters))
-  def ws_word_count(c: Column): Column = column(WsWordCount(expression(c)))
-  def token_in_vocab(c: Column, words: Seq[String]): Column =
-    column(TokenInVocab(expression(c), words.toArray))
-  def bpeish_word_tokens(c: Column): Column = column(BpeishWordTokens(expression(c)))
-  def ws_token_count(c: Column): Column = column(WsTokenCount(expression(c)))
-  def punct_count(c: Column): Column = column(PunctCount(expression(c)))
-  def chunk_words(c: Column, size: Int, stride: Int): Column =
-    column(ChunkWordsExpr(expression(c), size, stride))
-  def top_bigram_share(c: Column): Column = column(TopBigramShare(expression(c)))
+    Kernel("drop_token_spans", text, starts, ends)(call(TextSketchMore, "dropTokenSpans", StringType)(_, _, _))
 
-  def extract_turn(c: Column): Column = column(ExtractTurn(expression(c)))
+  // The vector kernels read float or double elements, as the input column holds.
+  def lsh_signature(c: Column, bits: Int): Column =
+    Kernel("lsh_signature", c)(v => call(VectorSketch, "lshSignature", LongType)(v, bits, isFloat(v)))
+  /** Nearest-centroid assignment for IVF: the centroid matrix and its norms
+    * ride along as constants (broadcast-tiny — nlist × dim doubles). */
+  def nearest_centroid(c: Column, centroids: Array[Array[Double]]): Column = {
+    val norms = VectorKernels.centroidNorms(centroids)
+    Kernel("nearest_centroid", c)(v =>
+      call(VectorKernels, "nearestCentroid", IntegerType)(v, centroids, norms, isFloat(v)))
+  }
+  def cosine_sim(a: Column, b: Column): Column =
+    Kernel("cosine_sim", a, b)((x, y) => call(VectorKernels, "cosineSim", DoubleType)(x, isFloat(x), y, isFloat(y)))
+
+  def token_set_count(c: Column, words: Seq[String], byLetters: Boolean = false): Column = {
+    val set = words.toArray
+    Kernel("token_set_count", c)(call(TextScan, "tokenSetCount", IntegerType)(_, set, byLetters))
+  }
+  def ws_word_count(c: Column): Column = Kernel("ws_word_count", c)(call(TextScan, "wordCount", IntegerType)(_))
+  def token_in_vocab(c: Column, words: Seq[String]): Column = {
+    val vocab = new java.util.HashSet[String](words.length * 2)
+    words.foreach(vocab.add)
+    Kernel("token_in_vocab", c)(call(TextScan, "tokenInVocab", IntegerType)(_, vocab))
+  }
+  def bpeish_word_tokens(c: Column): Column =
+    Kernel("bpeish_word_tokens", c)(call(TextScan, "bpeishWordTokens", LongType)(_))
+  /** split(" ") token count by byte scan. */
+  def ws_token_count(c: Column): Column =
+    Kernel("ws_token_count", c)(call(TextScan, "wsTokenCountKernel", IntegerType)(_))
+  /** Java \p{Punct} code-point count by byte scan. */
+  def punct_count(c: Column): Column = Kernel("punct_count", c)(call(TextScan, "punctCount", IntegerType)(_))
+  /** Overlapping word-window chunks as byte-range slices. The array may hold
+    * nulls (containsNull = true), as the split/transform/array_join chain it
+    * replaced did, so downstream schemas stay the same. */
+  def chunk_words(c: Column, size: Int, stride: Int): Column = Kernel("chunk_words", c) { t =>
+    val chunks = call(TextScan, "chunkWords", ObjectType(classOf[Array[UTF8String]]))(t, size, stride)
+    NewInstance(classOf[GenericArrayData], Seq(chunks), ArrayType(StringType, containsNull = true))
+  }
+  def top_bigram_share(c: Column): Column =
+    Kernel("top_bigram_share", c)(call(TextScan, "topBigramShare", DoubleType)(_))
+
+  /** `extract_turn(payload)` — the one extraction path behind batch, streaming
+    * and SQL: main-content extraction of a turn payload as a
+    * [[ExtractTurn.dataType]] struct. Never null: a null payload goes to the
+    * kernel and comes back quarantined. */
+  def extract_turn(c: Column): Column =
+    Kernel("extract_turn", c)(call(ExtractTurnKernel, "extract", ExtractTurn.dataType, nullIn = true)(_))
 
   /** The SQL surface as (name, usage, builder) — [[register]] and
     * [[GraftExtensions]] both install exactly this list. */
-  val sqlFunctions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-    ("extract_turn", "extract_turn(payload) - struct<extracted_text, spans, metrics>",
-      es => ExtractTurn(es.head)),
-    ("extract_text", "extract_text(payload) - extract_turn(payload).extracted_text",
-      es => ExtractTurn.field(es.head, "extracted_text")),
-    ("extract_spans", "extract_spans(payload) - extract_turn(payload).spans",
-      es => ExtractTurn.field(es.head, "spans")),
-    ("minhash_signature", "minhash_signature(text) - 64-slot MinHash",
-      es => MinHashSignature(es.head, 3, 64)),
-    ("simhash64", "simhash64(text) - 64-bit SimHash", es => SimHash64(es.head)),
-    ("shingle_hashes", "shingle_hashes(text) - distinct 3-shingle hashes",
-      es => ShingleHashes(es.head, 3)),
-    ("winnow_fingerprint", "winnow_fingerprint(text) - rolling-hash fingerprint",
-      es => WinnowFingerprint(es.head, 16)),
-    ("token_gram_hashes", "token_gram_hashes(text) - positional 50-token-gram hashes",
-      es => TokenGramHashes(es.head, 50)),
-    ("drop_token_spans", "drop_token_spans(text, starts, ends) - clip token ranges",
-      es => DropTokenSpans(es(0), es(1), es(2))))
+  val sqlFunctions: Seq[(String, String, Seq[Expression] => Expression)] = {
+    def sql(f: Seq[Column] => Column): Seq[Expression] => Expression =
+      es => expression(f(es.map(column)))
+    // a field accessor: a query selecting several fields still extracts once
+    // per row (subexpression elimination shares the struct)
+    def field(name: String): Seq[Expression] => Expression = es => GetStructField(
+      expression(extract_turn(column(es.head))), ExtractTurn.dataType.fieldIndex(name), Some(name))
+    Seq(
+      ("extract_turn", "extract_turn(payload) - struct<extracted_text, spans, metrics>",
+        sql(cs => extract_turn(cs.head))),
+      ("extract_text", "extract_text(payload) - extract_turn(payload).extracted_text",
+        field("extracted_text")),
+      ("extract_spans", "extract_spans(payload) - extract_turn(payload).spans", field("spans")),
+      ("minhash_signature", "minhash_signature(text) - 64-slot MinHash",
+        sql(cs => minhash_signature(cs.head, 3, 64))),
+      ("simhash64", "simhash64(text) - 64-bit SimHash", sql(cs => simhash64(cs.head))),
+      ("shingle_hashes", "shingle_hashes(text) - distinct 3-shingle hashes",
+        sql(cs => shingle_hashes(cs.head, 3))),
+      ("winnow_fingerprint", "winnow_fingerprint(text) - rolling-hash fingerprint",
+        sql(cs => winnow_fingerprint(cs.head, 16))),
+      ("token_gram_hashes", "token_gram_hashes(text) - positional 50-token-gram hashes",
+        sql(cs => token_gram_hashes(cs.head, 50))),
+      ("drop_token_spans", "drop_token_spans(text, starts, ends) - clip token ranges",
+        sql(cs => drop_token_spans(cs(0), cs(1), cs(2)))))
+  }
 
   /** Register [[sqlFunctions]] on an already-built session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {

@@ -95,8 +95,8 @@ object Dedup {
       x => x.isNotNull)
   }
 
-  /** MinHash signature — single-pass native expression (graft.functions.
-    * MinHashSignature): shingle hashes computed once per row, k slots derived
+  /** MinHash signature — the single-pass `graft.functions.TextSketch.minhash`
+    * kernel: shingle hashes computed once per row, k slots derived
     * with long arithmetic. Replaces a 64-aggregate formulation whose generated
     * code re-hashed every shingle per slot (measured 40s/1k rows → ~ms). */
   def minhashSignature(textCol: Column, shingleK: Int, numHashes: Int): Column =
@@ -519,7 +519,7 @@ object Dedup {
   }
 
   /** SimHash: 64-bit fingerprint — sign of the per-bit vote sum of token hashes;
-    * single-pass native expression (graft.functions.SimHash64). */
+    * the single-pass `graft.functions.TextSketch.simhash` kernel. */
   def simhash(textCol: Column): Column =
     graft.functions.TextHashes.simhash64(textCol).as("simhash")
 

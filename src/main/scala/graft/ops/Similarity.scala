@@ -26,10 +26,11 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Cosine similarity — native codegen'd kernel (graft.functions.CosineSim).
-    * The previous aggregate(zip_with) formulation ran interpreted (HOFs are
-    * CodegenFallback); the kernel accumulates in the identical left-to-right
-    * double order, so scores are bit-for-bit unchanged. */
+  /** Cosine similarity — the `VectorKernels.cosineSim` kernel, called
+    * directly by generated code. The previous aggregate(zip_with) formulation
+    * ran interpreted (HOFs are CodegenFallback); the kernel accumulates in the
+    * identical left-to-right double order, so scores are bit-for-bit
+    * unchanged. */
   def cosine(a: Column, b: Column): Column = graft.functions.TextHashes.cosine_sim(a, b)
 
   /** Brute-force top-k cosine neighbors for each query vector.
@@ -52,8 +53,9 @@ object Similarity {
   /** Random-hyperplane signature: `bits` deterministic pseudo-hyperplanes; bit i
     * = sign of dot(v, h_i). Hyperplane components are ±1 from the parity of
     * mix64(dim, plane) — seed-stable across executors with no broadcast of
-    * plane matrices, computed by one native codegen'd kernel per row
-    * (graft.functions.LshSignature) and exactly mirrored by the DuckDB oracle. */
+    * plane matrices, computed by one kernel call per row
+    * (`graft.functions.VectorSketch.lshSignature`) and exactly mirrored by the
+    * DuckDB oracle. */
   def lshSignature(vecCol: Column, bits: Int): Column =
     graft.functions.TextHashes.lsh_signature(vecCol, bits)
 
@@ -91,15 +93,16 @@ object Similarity {
     * used for corpus assignment and query probing, so probes land where the
     * neighbors were assigned. Query-side only (a handful of rows): Spark's
     * higher-order array functions are interpreted (CodegenFallback), so the
-    * corpus-side assignment uses the native NearestCentroid kernel instead. */
+    * corpus-side assignment calls the `VectorKernels.nearestCentroid` kernel
+    * instead. */
   private def centroidScores(cents: Array[Array[Double]], v: Column): Column = {
     val centsCol = typedlit(cents.map(_.toSeq).toSeq)
     val normsCol = typedlit(graft.functions.VectorKernels.centroidNorms(cents).toSeq)
     zip_with(centsCol, normsCol, (c, n) => dot(v, c) / n)
   }
 
-  /** Corpus-side assignment: native codegen'd argmax with the identical
-    * normalized-dot scoring and first-index tie-break. */
+  /** Corpus-side assignment: the `VectorKernels.nearestCentroid` argmax
+    * with the identical normalized-dot scoring and first-index tie-break. */
   private def assignList(cents: Array[Array[Double]], v: Column): Column =
     graft.functions.TextHashes.nearest_centroid(v, cents)
 

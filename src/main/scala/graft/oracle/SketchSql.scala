@@ -315,7 +315,7 @@ object SketchSql {
   }
 
   /** Random-hyperplane LSH signature over a DOUBLE[] expression — mirrors the
-    * native LshSignature expression: bit p set iff sum_d v[d]*sign(d,p) > 0
+    * `graft.functions.VectorSketch.lshSignature` kernel: bit p set iff sum_d v[d]*sign(d,p) > 0
     * where sign(d,p) = +1 when mix64((d)*K1 + p*K2) has even parity (d
     * 0-based). Pure list lambdas; summation order matches the kernel's
     * sequential loop. */

@@ -20,16 +20,19 @@ object Manifest {
   val schema: StructType = StructType.fromDDL(
     "part STRING, snapshot_id STRING, rows BIGINT, chars BIGINT, status STRING, run_ts TIMESTAMP")
 
+  /** The latest entry per part; empty when no manifest has been written yet.
+    * A missing path is checked for, not read and caught, so a first resume
+    * runs no failing query. The manifest is read with its known schema. */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    try {
-      val raw = spark.read.parquet(path)
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else {
       // latest-wins per partition key = MERGE semantics on read
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("part")).orderBy(col("run_ts").desc)
-      raw.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException => empty // no manifest yet
+      spark.read.schema(schema).parquet(path)
+        .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
     }
   }
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.GraftBridge.{toColumn => column, toExpression => expression}
 import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The production extraction job, Spark-first:
   *
@@ -40,10 +41,39 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline {
 
+  /** The schema every turn table is read with, batch and streaming alike.
+    * Every column is nullable, as parquet stores them; `extract` asserts the
+    * key columns non-null, so a null `turn_idx` fails the job. Reading with
+    * a given schema also spares the batch read a schema-inference job. */
+  val turnReadSchema: StructType = StructType.fromDDL(
+    "conv_id STRING, turn_idx INT, role STRING, text STRING, tool STRING, ts TIMESTAMP")
+
   def readTurns(spark: SparkSession, path: String): Dataset[Turn] = {
     import spark.implicits._
-    spark.read.parquet(path).as[Turn]
+    requireTurnColumns(spark, path)
+    spark.read.schema(turnReadSchema).parquet(path).as[Turn]
   }
+
+  /** A turn table must hold every column of [[turnReadSchema]]: a read with
+    * a given schema fills a missing column with nulls, and every row would
+    * then come back quarantined. Checks the footer of the table's first data
+    * file on the driver, the file Spark's schema inference would read. */
+  private def requireTurnColumns(spark: SparkSession, path: String): Unit = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    root.getFileSystem(conf).listStatus(root).map(_.getPath).sortBy(_.getName)
+      .find(f => !f.getName.startsWith("_") && !f.getName.startsWith(".") && f.getName.endsWith(".parquet"))
+      .foreach { file =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+        val footer = try reader.getFileMetaData.getSchema finally reader.close()
+        val missing = turnReadSchema.fieldNames.filterNot(footer.containsField)
+        require(missing.isEmpty, s"turn table $path lacks column(s): ${missing.mkString(", ")}")
+      }
+  }
+
 
   /** Core extraction: ordered, skew-safe, one shuffle. `payload` is a per-row
     * step on `text` that runs AFTER the range exchange (guide §2.3/§8): the

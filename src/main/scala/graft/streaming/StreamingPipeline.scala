@@ -27,7 +27,7 @@ object StreamingPipeline {
   def readTurnStream(spark: SparkSession, path: String): Dataset[Turn] = {
     import spark.implicits._
     spark.readStream
-      .schema("conv_id STRING, turn_idx INT, role STRING, text STRING, tool STRING, ts TIMESTAMP")
+      .schema(Pipeline.turnReadSchema)
       .parquet(path)
       .as[Turn]
   }

@@ -44,7 +44,18 @@ class AppMainSpec extends AnyFunSuite {
       "--input", in, "--output", out, "--manifest", mf,
       "--mode", mode, "--buckets", "4", "--partitions", "4"))
 
-    run("full")
+    // the job's partition overwrite mode is its own: a session value set
+    // before the run is still there after it
+    val overwriteKey = "spark.sql.sources.partitionOverwriteMode"
+    val prevOverwrite = spark.conf.getOption(overwriteKey)
+    spark.conf.set(overwriteKey, "DYNAMIC")
+    try {
+      run("full")
+      assert(spark.conf.get(overwriteKey) == "DYNAMIC")
+    } finally prevOverwrite match {
+      case Some(v) => spark.conf.set(overwriteKey, v)
+      case None => spark.conf.unset(overwriteKey)
+    }
     val extracted = spark.read.parquet(out)
     assert(extracted.count() == 200)
     val m1 = Manifest.read(spark, mf)
@@ -235,5 +246,53 @@ class AppMainSpec extends AnyFunSuite {
     assert(latest.filter(col("status") === "done" && col("rows") === 0 && col("chars") === 0).count() == 7)
     assert(spark.read.parquet(out).count() == 10)
     assert(manifest(mf2) == full)
+  }
+
+  test("app.Main: a first resume against a missing manifest posts no failed query") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import spark.implicits._
+    val (in, out, mf) = dirs("first-resume")
+    spark.createDataset((0 until 10).map(i =>
+      Turn(s"c$i", 0, "user", s"text $i", "", new java.sql.Timestamp(i.toLong)))).write.parquet(in)
+    val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = ()
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = failed.add(s"$f: $e")
+    }
+    spark.listenerManager.register(listener)
+    try {
+      runMain(in, out, mf, "resume", buckets = 4, partitions = 2)
+      org.apache.spark.sql.ListenerDrain(spark)
+    } finally spark.listenerManager.unregister(listener)
+    assert(failed.isEmpty, failed)
+    assert(manifest(mf).size == 4)
+    assert(spark.read.parquet(out).count() == 10)
+  }
+
+  test("app.Main: a null turn_idx in the input fails the job") {
+    val (in, out, mf) = dirs("null-idx")
+    spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+        org.apache.spark.sql.Row("c1", 0, "user", "plain a", "", new java.sql.Timestamp(0)),
+        org.apache.spark.sql.Row("c1", null, "user", "plain b", "", new java.sql.Timestamp(1)))),
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "conv_id STRING, turn_idx INT, role STRING, text STRING, tool STRING, ts TIMESTAMP"))
+      .write.parquet(in)
+    val e = intercept[Exception](runMain(in, out, mf, "full", buckets = 2, partitions = 2))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.toString).mkString("\n")
+    assert(chain.contains("NOT_NULL_ASSERT_VIOLATION"), chain)
+    assert(!new java.io.File(mf).exists) // no manifest entry for a failed job
+  }
+
+  test("app.Main: a turn table without a text column fails before the job runs") {
+    val (in, out, mf) = dirs("no-text")
+    spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+        org.apache.spark.sql.Row("c1", 0, "user", "", new java.sql.Timestamp(0)))),
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "conv_id STRING, turn_idx INT, role STRING, tool STRING, ts TIMESTAMP"))
+      .write.parquet(in)
+    val e = intercept[IllegalArgumentException](runMain(in, out, mf, "full", buckets = 2, partitions = 2))
+    assert(e.getMessage.contains("lacks column(s): text"), e.getMessage)
+    assert(!new java.io.File(out).exists && !new java.io.File(mf).exists)
   }
 }

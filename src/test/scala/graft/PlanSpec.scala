@@ -53,8 +53,8 @@ class PlanSpec extends AnyFunSuite {
     }
     // printed top-down: above the exchange means the post-shuffle map stage,
     // so the RangePartitioner's sampling pass never runs the kernel
-    assert("extract_turn".r.findAllIn(p).length == 1, p)
-    assert(p.indexOf("extract_turn") < p.indexOf("Exchange"), p)
+    assert("ExtractTurnKernel.extract".r.findAllIn(p).length == 1, p)
+    assert(p.indexOf("ExtractTurnKernel.extract") < p.indexOf("Exchange"), p)
   }
 
   test("app.Main: one write pass — bucket-led range exchange, one sort above extract_turn, observed metrics") {
@@ -116,7 +116,8 @@ class PlanSpec extends AnyFunSuite {
       val sorts = Plans.collect(w) { case s: SortExec => s }
       assert(sorts.length == 1, w)
       assert(sorts.head.sortOrder.map(_.child.references.head.name) == Seq("bucket", "conv_id", "turn_idx"), w)
-      assert(Plans.find(sorts.head.child)(_.expressions.exists(_.toString.contains("extract_turn"))).nonEmpty, w)
+      assert(Plans.find(sorts.head.child)(
+        _.expressions.exists(_.toString.contains("ExtractTurnKernel.extract"))).nonEmpty, w)
       assert(Plans.collect(w) { case c: CollectMetricsExec => c }.length == 1, w)
     }
   }
@@ -268,8 +269,81 @@ class PlanSpec extends AnyFunSuite {
   test("q34 IVF-PQ: probe join broadcast; ADC stage ranks codes, not vectors") {
     val p = plan("q34_ann_ivfpq")
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastExchange"), p)
-    // the native kernels appear in the plan (codegen'd expressions, not HOFs)
-    assert(p.contains("pq_adc"), p)
-    assert(p.contains("pq_encode"), p)
+    // the kernel calls appear in the plan (static kernel calls, not HOFs)
+    assert(p.contains("PqVector.adc"), p)
+    assert(p.contains("PqVector.encode"), p)
+  }
+
+  /** MD5 of `schema.json` per registry query over `sfDir`. The queries left
+    * out need the reference checkout mounted and do not build without it.
+    * A kernel column that reaches a query's output must carry an alias: its
+    * generated name is the kernel call, constants included. */
+  private val schemaPins: Map[String, String] = Map(
+    "q01_agg" -> "4e3e63c02a9f67fdb5736edd2c5a6720",
+    "q02_join_broadcast" -> "adad5f395a0e519bf159cf1d5614db73",
+    "q03_window" -> "db8ab10effedcbb41ed89c9fbac2999f",
+    "q04_topn" -> "121a95ebedb2347f0769cea65d89a5b7",
+    "q05_filter_pushdown" -> "7d180ce99f090a17772f0c6df3726191",
+    "q06_distinct" -> "89940a303413f84f88059b7a2123c527",
+    "q07_semi_join" -> "e98dd27fad16ef160e0da10a09c69b13",
+    "q08_anti_join" -> "e98dd27fad16ef160e0da10a09c69b13",
+    "q09_set_union" -> "5c5501151eb72a8772cad8bcc48e1584",
+    "q10_extract_html" -> "33ed7c9760d503a25089b8c94c2dc02c",
+    "q11_extract_svg" -> "33ed7c9760d503a25089b8c94c2dc02c",
+    "q12_extract_pdf" -> "33ed7c9760d503a25089b8c94c2dc02c",
+    "q13_pipeline_e2e" -> "85c3543e6dc2b3f948bd7ca34f23bda4",
+    "q14_spans" -> "eb2b421c8faa1f9aad00c1c420a3fbc5",
+    "q15_ordering" -> "3fd066fe06ba3da9422a80637573c933",
+    "q16_sql_extract" -> "33ed7c9760d503a25089b8c94c2dc02c",
+    "q17_conv_rollup" -> "deab3e127b33b5e53f1e065b54f8145c",
+    "q20_dedup_exact" -> "49c522fd3df8710c34746d27b8d13127",
+    "q21_dedup_minhash" -> "7b189717d8d6c454a6ab416c7f08396e",
+    "q22_simhash_pairs" -> "7b189717d8d6c454a6ab416c7f08396e",
+    "q23_ngram_jaccard" -> "bdc037aeb18ce0b713841a8af85a7e37",
+    "q24_dedup_norm" -> "e0bcfeaa25051762c9fa98720a9211f2",
+    "q25_fingerprint_pairs" -> "8d554d98f3ed278aa059a3827870abb1",
+    "q26_dedup_clusters" -> "bf7757c45654f596315320efc7224e43",
+    "q26b_dedup_clusters_dist" -> "61501b54a0a128ed2cdd2af3a6fb1b57",
+    "q27_stratified_sample" -> "2f64cf6b9425155055368dd11e805934",
+    "q28_pack_sequences" -> "c214e342951bcd7c7241b4c5dd987e43",
+    "q29_oov_rate" -> "ec04e316d9ffa79cc4e89bd7c25f24d7",
+    "q30_ann_bruteforce" -> "0fcd39c9ff1f9b7526f04bfb0f3269b9",
+    "q31_ann_lsh" -> "0fcd39c9ff1f9b7526f04bfb0f3269b9",
+    "q32_cosine_neardup" -> "7b189717d8d6c454a6ab416c7f08396e",
+    "q33_ann_ivf" -> "48213baa5e6dc24115a6b752785bc491",
+    "q34_ann_ivfpq" -> "48213baa5e6dc24115a6b752785bc491",
+    "q35_ann_lsh_multiprobe" -> "0fcd39c9ff1f9b7526f04bfb0f3269b9",
+    "q36_substring_dedup" -> "d1fac0b476df3c021d2bd009826df9d2",
+    "q36b_substring_dedup_bloom" -> "d1fac0b476df3c021d2bd009826df9d2",
+    "q37_semantic_dedup" -> "afebb1d0044185796ed5e6f6b8937420",
+    "q40_textstats" -> "a401603748d403dfb841089ede4f3787",
+    "q41_quality" -> "d85d6892dc0c80e76161d4a29b9932f7",
+    "q42_langid" -> "7a019a825879d79b4111f7bc9b404613",
+    "q43_fingerprint" -> "5600cb78ee74b8f13d43818cc781882f",
+    "q44_chunking" -> "bcb1827f54d00a960f6d6dc9e60cc40c",
+    "q45_redact" -> "086846472eecbbd5936e422eef9170bf",
+    "q46_clean_pipeline" -> "bcb1827f54d00a960f6d6dc9e60cc40c",
+    "q47_decontaminate" -> "983d330176a26cddd7e71f056e39bd16",
+    "q48_repetition" -> "8a838e28c5f89d7a9c7ef474fde79081",
+    "q49_extract_markdown" -> "33ed7c9760d503a25089b8c94c2dc02c",
+    "q50_events_window" -> "d8d7510467ba1b6a020c27fa031c9316",
+    "q51_sessionize" -> "0c278e4be3d897e9803b57188d31ac0a",
+    "q52_events_minmax" -> "54c5602b4922d16312d5454f730d3c39",
+    "q53_rollup" -> "a1e917a90cc8d93eca1853dda1fcbb7a",
+    "q58_salted_join" -> "d0cfbd1b1094a21e3b7d8a7524045f80",
+    "q59_asof_join" -> "78db2e31545b55597e82cc7d95cdfa2e",
+    "q60_multimodal" -> "538a53fdf5abefbe99cdd124bfe6ddb4",
+    "q71_streaming_sessions" -> "a7595a9d36e1331516f17a91d052d11a",
+    "q72_streaming_dedup" -> "2936cdbb78a4d57757d7869923a0f7e7",
+    "q73_streaming_windows" -> "b86ea71fcad6456181bd227398ef6c87")
+
+  test("schema pin: every runnable registry query keeps its output schema") {
+    def md5(s: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)).map("%02x".format(_)).mkString
+    val diff = schemaPins.toSeq.sortBy(_._1).flatMap { case (n, m) =>
+      val got = scala.util.Try(md5(SparkEntry.queries(n)(spark, sfDir).schema.json))
+      if (got.toOption.contains(m)) None else Some(s"$n: pinned $m, got $got")
+    }
+    assert(diff.isEmpty, diff.mkString("\n"))
   }
 }
