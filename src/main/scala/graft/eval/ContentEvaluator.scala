@@ -1,15 +1,11 @@
 package graft.eval
 
 import graft.core.{GlyphRun, NumFmt}
-import graft.lex.{ContentLexer, Tok}
+import graft.lex.Tok
 
 import scala.collection.mutable.ArrayBuffer
 
-/** Rectangle painted by `re` — layout feature for rule/boilerplate heuristics
-  * (the reference's 1×1 image-mask → solid-rule case, pdf.combined.js:47464-47483). */
-final case class PageBox(x: Double, y: Double, w: Double, h: Double)
-
-final case class EvalResult(runs: Vector[GlyphRun], boxes: Vector[PageBox], errors: Int)
+final case class EvalResult(runs: Vector[GlyphRun], errors: Int)
 
 /** Resource context for a content stream: font lookups and Form XObjects
   * (SURVEY.md §2.2 E8/R7 — the reference's resources dict + buildFormXObject,
@@ -17,9 +13,8 @@ final case class EvalResult(runs: Vector[GlyphRun], boxes: Vector[PageBox], erro
 trait PageResources {
   def font(name: String): FontSpec
   def form(name: String): Option[FormXObject] = None
-  /** True when the XObject is a raster image — painted as a layout box
-    * (SURVEY.md §2.2 E9: image markers feed the boilerplate heuristics,
-    * pixels are never decoded). */
+  /** True when the XObject is a raster image (SURVEY.md §2.2 E9): the text
+    * items treat its paint as an item break; pixels are never decoded. */
   def isImage(name: String): Boolean = false
   /** ExtGState /Font entry: (font, size) when the graphics-state dict sets one
     * (SURVEY.md §2.2 E6 — gs expansion, pdf.combined.js:45123-45180). */
@@ -44,101 +39,19 @@ object PageResources {
 
 /** Content-stream → positioned glyph runs.
   *
-  * Fuses the reference's decode + render stages into one pass per row:
-  * EvaluatorPreprocessor.read (arg collection, arity tolerance, unknown-command
-  * skip — pdf.combined.js:47366-47434) feeding the SVGGraphics text state machine
-  * (beginText/setTextMatrix/moveText/showText — pdf.combined.js:20256-20431).
-  * Run-break semantics match the reference exactly: `Tm`/`Td`/`TD`/`T*`/`'`/`"`/
-  * `Tf`/fill-color changes each start a new tspan; consecutive `Tj` extend one.
+  * Reads the stream through [[OpReader]] (EvaluatorPreprocessor.read: operand
+  * collection, arity tolerance, unknown-command skip) and runs the SVGGraphics
+  * text state machine over the accepted operators (beginText/setTextMatrix/
+  * moveText/showText — pdf.combined.js:20256-20431). Run-break semantics
+  * match the reference exactly: `Tm`/`Td`/`TD`/`T*`/`'`/`"`/`Tf`/fill-color
+  * changes each start a new tspan; consecutive `Tj` extend one.
   *
-  * Purely sequential per row — designed to run inside `mapPartitions` over a
-  * typed Dataset with zero allocation beyond the output runs.
+  * Purely sequential per content stream: the `extract_turn` kernel calls it
+  * once per fragment row and `PdfDocument.evalPage` once per page, and it
+  * allocates little beyond the output runs. `errors` counts skipped
+  * operators, operands of the wrong type and unbalanced restores.
   */
 object ContentEvaluator {
-
-  /** Streaming replica of the reference QueueOptimizer's text-block fusion
-    * (pdf.combined.js:47757-47825): ≥3 (max 1000) consecutive
-    * `(BT, Tf, Tm, Tj, ET)` quintets with the same font collapse to
-    * `(BT, Tf, (Tm, Tj)+, ET)`. The vendored SVG backend creates a fresh
-    * tspan AND text element on every setTextMatrix (pdf.combined.js:
-    * 20268-20283), so for the tspan-texts surface the fusion is
-    * output-neutral — it is replicated here for op-stream parity with the
-    * reference pipeline, and because dropping the per-quintet BT/ET/Tf
-    * removes two state resets and a font re-resolve per stamp from the hot
-    * loop. Lookahead fills stop at the first non-matching token, so a `BI`
-    * inline image is never tokenized past (its binary payload stays
-    * untouched for seekAfterEI).
-    */
-  private final class FusingTokens(lexer: graft.lex.ContentLexer) {
-    private val buf = scala.collection.mutable.ArrayDeque.empty[Tok]
-    private var sawEof = false
-    private def fill(n: Int): Boolean = {
-      while (buf.size <= n && !sawEof) {
-        val t = lexer.getObj()
-        if (t == Tok.EOF) sawEof = true else buf.append(t)
-      }
-      buf.size > n
-    }
-    private def at(i: Int): Tok = if (fill(i)) buf(i) else Tok.EOF
-
-    def seekAfterEI(): Unit = { buf.clear(); sawEof = false; lexer.seekAfterEI() }
-
-    // quintet body once its BT is consumed:
-    // [Name, Num, Tf, n1..n6, Tm, Str, Tj, ET] = 13 tokens
-    private def quintetFont(base: Int): (String, Double) =
-      (at(base), at(base + 1), at(base + 2)) match {
-        case (Tok.Name(f), Tok.Num(s), Tok.Cmd("Tf")) =>
-          var i = base + 3
-          var nums = true
-          while (i < base + 9) { if (!at(i).isInstanceOf[Tok.Num]) { nums = false; i = base + 9 } else i += 1 }
-          if (nums && at(base + 9) == Tok.Cmd("Tm") && at(base + 10).isInstanceOf[Tok.Str] &&
-            at(base + 11) == Tok.Cmd("Tj") && at(base + 12) == Tok.Cmd("ET")) (f, s)
-          else null
-        case _ => null
-      }
-
-    /** Called after a BT was consumed; rewrites the buffered quintets. */
-    private def tryFuse(): Unit = {
-      val key = quintetFont(0)
-      if (key == null) return
-      var count = 1
-      // MIN 3 / MAX 1000 quintets — reference thresholds (47763-47764)
-      while (count < 1000 && at(13 + 14 * (count - 1)) == Tok.Cmd("BT") &&
-        quintetFont(14 * count) == key) count += 1
-      if (count < 3) return
-      val out = scala.collection.mutable.ArrayBuffer.empty[Tok]
-      out += buf(0) += buf(1) += buf(2) // Name Num Tf, once
-      var q = 0
-      while (q < count) {
-        val b = if (q == 0) 0 else 14 * q
-        var i = b + 3
-        while (i <= b + 11) { out += buf(i); i += 1 } // n1..n6 Tm Str Tj
-        q += 1
-      }
-      out += Tok.Cmd("ET")
-      val consumed = 14 * (count - 1) + 13
-      val rest = buf.drop(consumed)
-      buf.clear()
-      buf ++= out
-      buf ++= rest
-    }
-
-    def next(): Tok = {
-      if (!fill(0)) return Tok.EOF
-      val t = buf.removeHead()
-      if (t == Tok.Cmd("BT")) tryFuse()
-      t
-    }
-  }
-
-  /** Test-only boundary trace: when `sink` is non-null the evaluator appends
-    * one TSV row per tspan boundary with the geometric features the fake-space
-    * decision sees. Used to fit the golden generator's rule empirically. */
-  private[graft] object EvalTrace {
-    var sink: scala.collection.mutable.ArrayBuffer[String] = null
-  }
-
-  private val FontMatrix0 = 0.001 // FONT_IDENTITY_MATRIX[0]
 
   private final class State {
     var ctm: Array[Double] = NumFmt.Identity
@@ -177,8 +90,10 @@ object ContentEvaluator {
     }
   }
 
-  def evaluate(content: Array[Byte], resources: Map[String, FontSpec] = Map.empty): EvalResult =
-    evaluatePage(content, PageResources.fromMap(resources))
+  /** A content-stream fragment with no resources: every font name resolves
+    * to the core metrics (the `extract_turn` fragment dialect). */
+  def evaluate(content: Array[Byte]): EvalResult =
+    evaluatePage(content, PageResources.empty)
 
   /** `fakeSpaces = true` reconstructs inter-word spaces the way the reference
     * CLI's golden output does (SURVEY.md §2.9 R3/R5): a single leading space on
@@ -195,10 +110,8 @@ object ContentEvaluator {
     st.ctm = initialCtm
     val stack = ArrayBuffer.empty[State]
     val runs = Vector.newBuilder[GlyphRun]
-    val boxes = Vector.newBuilder[PageBox]
 
     // current tspan accumulation
-    var flushedCount = 0
     val sb = new StringBuilder
     val xcoords = ArrayBuffer.empty[Double]
     var tspanY = 0.0
@@ -209,7 +122,6 @@ object ContentEvaluator {
 
     def flush(): Unit = {
       if (sb.nonEmpty) {
-        flushedCount += 1
         runs += GlyphRun(
           sb.toString, xcoords.toArray, tspanY,
           tspanFont.family, tspanSize,
@@ -239,10 +151,7 @@ object ContentEvaluator {
     var lastEndX, lastEndY = 0.0
     var lastCtm: Array[Double] = null
     var lastTm: Array[Double] = null
-    var lastGlyphStartX = 0.0
-    var glyphStartTmp = 0.0
     var prevSw = 0.0
-    var cBT, cET, cTf, cTm, cTd, cTc, cOther = 0 // ops seen since the previous show (trace)
     def spaceWidthUnits: Double = {
       val est = st.font.spaceWidthEst
       (if (est.isNaN) st.font.widths(' '.toInt) else est) * 0.001 * st.fontSize
@@ -265,23 +174,6 @@ object ContentEvaluator {
           java.util.Arrays.equals(lastTm, st.textMatrix)
         val curX = st.x + showX * textHScale
         val sw = spaceWidthUnits
-        if (EvalTrace.sink != null) {
-          def dev(ctm: Array[Double], tm: Array[Double], x: Double, y: Double): (Double, Double) = {
-            val m = NumFmt.mul(ctm, tm)
-            (m(0) * x + m(2) * y + m(4), m(1) * x + m(3) * y + m(5))
-          }
-          val (pdx, pdy) = dev(lastCtm, lastTm, lastEndX, lastEndY)
-          val (pgx, _) = dev(lastCtm, lastTm, lastGlyphStartX, lastEndY)
-          val (cdx, cdy) = dev(st.ctm, st.textMatrix, curX, st.y)
-          val pScale = { val m = NumFmt.mul(lastCtm, lastTm); math.hypot(m(0), m(1)) }
-          val cScale = { val m = NumFmt.mul(st.ctm, st.textMatrix); math.hypot(m(0), m(1)) }
-          EvalTrace.sink += Seq(
-            flushedCount,
-            if (sameFrame) 1 else 0, cBT, cET, cTf, cTm, cTd, cTc,
-            f"$pdx%.3f", f"$pdy%.3f", f"$pgx%.3f", f"$cdx%.3f", f"$cdy%.3f",
-            f"${prevSw * pScale}%.4f", f"${sw * cScale}%.4f",
-            f"${lastEndX}%.3f", f"$curX%.3f", f"${st.fontSize * cScale}%.3f").mkString("\t")
-        }
         // single leading space on a new tspan after a positive x-gap within the
         // same (ctm, textMatrix) frame — the golden corpus shows the generator
         // compared x only (column jumps with Δy also get exactly one space).
@@ -296,9 +188,7 @@ object ContentEvaluator {
         var i = 0
         while (i < str.length) {
           val c = str.charAt(i)
-          val gx = st.x + showX * textHScale
-          glyphStartTmp = gx
-          xcoords += gx
+          xcoords += st.x + showX * textHScale
           // `(glyph.isSpace ? wordSpacing : 0) + charSpacing`, pdf.combined.js:29772
           val spacing = st.charSpacing + (if (c == ' ') st.wordSpacing else 0.0)
           showX += widths(c.toInt) * widthAdvanceScale + spacing * st.fontDirection
@@ -323,7 +213,6 @@ object ContentEvaluator {
           // keep one xcoord per emitted char so xs.length == text.length holds
           val g = glyphText(c)
           val gx = st.x + showX * textHScale
-          glyphStartTmp = gx
           var k = 0
           while (k < g.length) { xcoords += gx; k += 1 }
           val spacing = st.charSpacing + (if (!wide && c == ' ') st.wordSpacing else 0.0)
@@ -356,9 +245,7 @@ object ContentEvaluator {
       if (fakeSpaces) {
         lastEndX = st.x; lastEndY = st.y
         lastCtm = st.ctm; lastTm = st.textMatrix
-        lastGlyphStartX = glyphStartTmp
         prevSw = spaceWidthUnits
-        cBT = 0; cET = 0; cTf = 0; cTm = 0; cTd = 0; cTc = 0; cOther = 0
       }
       // tspan attrs are (re)set at every showText; record state of last one
       tspanY = -st.y
@@ -367,7 +254,7 @@ object ContentEvaluator {
       tspanSize = st.fontSize
       tspanFill = st.fillColor
     }
-    def showText(strs: String*): Unit = { showBegin(); strs.foreach(showString); showEnd() }
+    def showText(s: String): Unit = { showBegin(); showString(s); showEnd() }
 
     def setFont(name: String, size: Double, res: PageResources): Unit = {
       flush()
@@ -383,210 +270,153 @@ object ContentEvaluator {
       * XObjects recurse here with their own resources; `active` keys guard
       * against reference cycles and `depth` bounds pathological nesting. */
     def exec(bytes: Array[Byte], res: PageResources, depth: Int, active: Set[String]): Int = {
-    val lexer = new ContentLexer(bytes, OpTable.knownCommands)
-    val toks = new FusingTokens(lexer) // reference QueueOptimizer text-block fusion
-    var errors = 0
-    val args = ArrayBuffer.empty[Tok]
-    def numArg(i: Int): Double = args(i) match {
-      case Tok.Num(v) => v
-      case _ => errors += 1; 0.0
-    }
-    var tok = toks.next()
-    while (tok != Tok.EOF) {
-      tok match {
-        case Tok.Cmd(cmd) =>
-          OpTable.ops.get(cmd) match {
-            case None =>
-              cmd match {
-                case "[" | "]" | "<<" | ">>" | "{" | "}" =>
-                  // structure tokens inside arg lists are kept as args (TJ arrays
-                  // handled below); dict args (BDC/DP/gs payloads) are dropped
-                  args += tok
-                case _ =>
-                  errors += 1; args.clear() // unknown command: skip (47374-47377)
-              }
-            case Some(spec) =>
-              // tolerate excess args: use the last numArgs (47383-47408 rebalancing)
-              // — except for array-valued args (TJ/dict payloads), where the token
-              // buffer legitimately holds the whole array
-              val hasStructure = args.exists {
-                case Tok.Cmd("[") | Tok.Cmd("<<") => true
-                case _ => false
-              }
-              if (!hasStructure && !spec.variableArgs && args.length > spec.numArgs && spec.numArgs > 0)
-                args.remove(0, args.length - spec.numArgs)
-              if (!spec.variableArgs && args.length < spec.numArgs) {
-                errors += 1 // too few args: skip op
-              } else cmd match {
-                case "q" => stack += st.snapshot
-                case "Q" =>
-                  if (stack.nonEmpty) {
-                    flush() // restore may change fill/font/position: close the tspan
-                    st.restoreFrom(stack.remove(stack.length - 1))
-                  } else errors += 1 // unbalanced restore tolerated (45891-45895)
-                case "cm" =>
-                  st.ctm = NumFmt.mul(st.ctm,
-                    Array(numArg(0), numArg(1), numArg(2), numArg(3), numArg(4), numArg(5)))
-                case "BT" =>
-                  cBT += 1
-                  st.x = 0; st.y = 0; st.lineX = 0; st.lineY = 0
-                  st.textMatrix = NumFmt.Identity; st.lineMatrix = NumFmt.Identity
+      val reader = new OpReader(bytes)
+      var errors = 0
+      val skipped = reader.read { (cmd, args) =>
+        def numArg(i: Int): Double = args(i) match {
+          case Tok.Num(v) => v
+          case _ => errors += 1; 0.0
+        }
+        def show(arg: Tok): Unit = arg match {
+          case Tok.Str(s) => showText(s)
+          case _ => errors += 1
+        }
+        cmd match {
+          case "q" => stack += st.snapshot
+          case "Q" =>
+            if (stack.nonEmpty) {
+              flush() // restore may change fill/font/position: close the tspan
+              st.restoreFrom(stack.remove(stack.length - 1))
+            } else errors += 1 // unbalanced restore tolerated (45891-45895)
+          case "cm" =>
+            st.ctm = NumFmt.mul(st.ctm,
+              Array(numArg(0), numArg(1), numArg(2), numArg(3), numArg(4), numArg(5)))
+          case "BT" =>
+            st.x = 0; st.y = 0; st.lineX = 0; st.lineY = 0
+            st.textMatrix = NumFmt.Identity; st.lineMatrix = NumFmt.Identity
+            flush()
+          case "ET" => flush()
+          case "Tf" =>
+            (args(0), args(1)) match {
+              case (Tok.Name(n), Tok.Num(sz)) => setFont(n, sz, res)
+              case _ => errors += 1
+            }
+          case "Td" => moveText(numArg(0), numArg(1))
+          case "TD" => st.leading = numArg(1); moveText(numArg(0), numArg(1))
+          case "Tm" =>
+            st.textMatrix = Array(numArg(0), numArg(1), numArg(2), numArg(3), numArg(4), numArg(5))
+            st.lineMatrix = st.textMatrix
+            st.x = 0; st.y = 0; st.lineX = 0; st.lineY = 0
+            flush()
+          case "T*" => moveText(0, st.leading)
+          case "TL" => st.leading = -numArg(0)
+          case "Tc" => st.charSpacing = numArg(0)
+          case "Tw" => st.wordSpacing = numArg(0)
+          case "Tz" => st.textHScale = numArg(0) / 100
+          case "Ts" => st.textRise = numArg(0)
+          case "Tj" => show(args(0))
+          case "'" => moveText(0, st.leading); show(args(0))
+          case "\"" =>
+            st.wordSpacing = numArg(0); st.charSpacing = numArg(1)
+            moveText(0, st.leading)
+            show(args(2))
+          case "TJ" =>
+            // args hold "[" item* "]": strings shown, numbers kern —
+            // one show op (PartialEvaluator TJ flattening, 45710-45726)
+            showBegin()
+            args.foreach {
+              case Tok.Str(s) => showString(s)
+              case Tok.Num(n) => showKern(n)
+              case _ => ()
+            }
+            showEnd()
+          // rg/g/k also SELECT the device space (the reference sets
+          // fillColorSpace on these ops, pdf.combined.js:45762-45785) —
+          // without the reset a stale resolved /Indexed or /Separation
+          // from an earlier cs would misread later sc operands
+          case "rg" =>
+            flush(); st.fillCS = ColorSpaceModel.RGB
+            st.fillColor = rgb(numArg(0), numArg(1), numArg(2))
+          case "g" =>
+            flush(); st.fillCS = ColorSpaceModel.Gray
+            val v = numArg(0); st.fillColor = rgb(v, v, v)
+          case "k" =>
+            flush(); st.fillCS = ColorSpaceModel.CMYK
+            val (c, m, yy, kk) = (numArg(0), numArg(1), numArg(2), numArg(3))
+            st.fillColor = rgb((1 - c) * (1 - kk), (1 - m) * (1 - kk), (1 - yy) * (1 - kk))
+          case "cs" =>
+            // select the fill color space: device names inline, anything
+            // else resolved from the resource dict (E5; the reference
+            // keeps a ColorSpace object on the graphics state)
+            args(0) match {
+              case Tok.Name(n) =>
+                st.fillCS =
+                  if (n == "Pattern") null
+                  else ColorSpaceModel.fromName(n).orElse(res.colorSpace(n)).orNull
+              case _ => errors += 1
+            }
+          case "sc" | "scn" =>
+            // resolved color space when cs named one; otherwise the
+            // component-count heuristic (SURVEY.md §2.2 E5): 1 → gray,
+            // 3 → RGB, 4 → CMYK; name operands (pattern fills) leave the
+            // color unchanged
+            val nums = args.collect { case Tok.Num(v) => v }
+            if (nums.length == args.length && nums.nonEmpty) {
+              if (st.fillCS != null) {
+                ColorSpaceModel.toRgb(st.fillCS, nums.toArray).foreach { case (r, g, b) =>
+                  flush(); st.fillColor = rgb(r, g, b)
+                }
+              } else nums.length match {
+                case 1 => flush(); st.fillColor = rgb(nums(0), nums(0), nums(0))
+                case 3 => flush(); st.fillColor = rgb(nums(0), nums(1), nums(2))
+                case 4 =>
                   flush()
-                case "ET" => cET += 1; flush()
-                case "Tf" =>
-                  cTf += 1
-                  (args(0), args(1)) match {
-                    case (Tok.Name(n), Tok.Num(sz)) => setFont(n, sz, res)
-                    case _ => errors += 1
-                  }
-                case "Td" => cTd += 1; moveText(numArg(0), numArg(1))
-                case "TD" => cTd += 1; st.leading = numArg(1); moveText(numArg(0), numArg(1))
-                case "Tm" =>
-                  cTm += 1
-                  st.textMatrix = Array(numArg(0), numArg(1), numArg(2), numArg(3), numArg(4), numArg(5))
-                  st.lineMatrix = st.textMatrix
-                  st.x = 0; st.y = 0; st.lineX = 0; st.lineY = 0
-                  flush()
-                case "T*" => cTd += 1; moveText(0, st.leading)
-                case "TL" => st.leading = -numArg(0)
-                case "Tc" => cTc += 1; st.charSpacing = numArg(0)
-                case "Tw" => st.wordSpacing = numArg(0)
-                case "Tz" => st.textHScale = numArg(0) / 100
-                case "Ts" => st.textRise = numArg(0)
-                case "Tr" => () // render mode: no effect on extraction
-                case "Tj" =>
-                  args(0) match {
-                    case Tok.Str(s) => showText(s)
-                    case _ => errors += 1
-                  }
-                case "'" =>
-                  moveText(0, st.leading)
-                  args(0) match {
-                    case Tok.Str(s) => showText(s)
-                    case _ => errors += 1
-                  }
-                case "\"" =>
-                  st.wordSpacing = numArg(0); st.charSpacing = numArg(1)
-                  moveText(0, st.leading)
-                  args(2) match {
-                    case Tok.Str(s) => showText(s)
-                    case _ => errors += 1
-                  }
-                case "TJ" =>
-                  // args hold "[" item* "]": strings shown, numbers kern —
-                  // one show op (PartialEvaluator TJ flattening, 45710-45726)
-                  showBegin()
-                  args.foreach {
-                    case Tok.Str(s) => showString(s)
-                    case Tok.Num(n) => showKern(n)
-                    case _ => ()
-                  }
-                  showEnd()
-                // rg/g/k also SELECT the device space (the reference sets
-                // fillColorSpace on these ops, pdf.combined.js:45762-45785) —
-                // without the reset a stale resolved /Indexed or /Separation
-                // from an earlier cs would misread later sc operands
-                case "rg" =>
-                  flush(); st.fillCS = ColorSpaceModel.RGB
-                  st.fillColor = rgb(numArg(0), numArg(1), numArg(2))
-                case "g" =>
-                  flush(); st.fillCS = ColorSpaceModel.Gray
-                  val v = numArg(0); st.fillColor = rgb(v, v, v)
-                case "k" =>
-                  flush(); st.fillCS = ColorSpaceModel.CMYK
-                  val (c, m, yy, kk) = (numArg(0), numArg(1), numArg(2), numArg(3))
-                  st.fillColor = rgb((1 - c) * (1 - kk), (1 - m) * (1 - kk), (1 - yy) * (1 - kk))
-                case "cs" =>
-                  // select the fill color space: device names inline, anything
-                  // else resolved from the resource dict (E5; the reference
-                  // keeps a ColorSpace object on the graphics state)
-                  args(0) match {
-                    case Tok.Name(n) =>
-                      st.fillCS =
-                        if (n == "Pattern") null
-                        else ColorSpaceModel.fromName(n).orElse(res.colorSpace(n)).orNull
-                    case _ => errors += 1
-                  }
-                case "sc" | "scn" =>
-                  // resolved color space when cs named one; otherwise the
-                  // component-count heuristic (SURVEY.md §2.2 E5): 1 → gray,
-                  // 3 → RGB, 4 → CMYK; name operands (pattern fills) leave the
-                  // color unchanged
-                  val nums = args.collect { case Tok.Num(v) => v }
-                  if (nums.length == args.length && nums.nonEmpty) {
-                    if (st.fillCS != null) {
-                      ColorSpaceModel.toRgb(st.fillCS, nums.toArray).foreach { case (r, g, b) =>
-                        flush(); st.fillColor = rgb(r, g, b)
-                      }
-                    } else nums.length match {
-                      case 1 => flush(); st.fillColor = rgb(nums(0), nums(0), nums(0))
-                      case 3 => flush(); st.fillColor = rgb(nums(0), nums(1), nums(2))
-                      case 4 =>
-                        flush()
-                        st.fillColor = rgb((1 - nums(0)) * (1 - nums(3)),
-                          (1 - nums(1)) * (1 - nums(3)), (1 - nums(2)) * (1 - nums(3)))
-                      case _ => ()
-                    }
-                  }
-                case "re" =>
-                  val (rx, ry) = NumFmt.apply(st.ctm, numArg(0), numArg(1))
-                  boxes += PageBox(rx, ry, numArg(2), numArg(3))
-                case "gs" =>
-                  args(0) match {
-                    case Tok.Name(n) =>
-                      res.gsFont(n).foreach { case (f, size) =>
-                        flush()
-                        st.font = f
-                        if (size < 0) { st.fontSize = -size; st.fontDirection = -1 }
-                        else { st.fontSize = size; st.fontDirection = 1 }
-                      }
-                    case _ => ()
-                  }
-                case "BI" =>
-                  // inline image: record the CTM unit square as a layout box
-                  // (the reference's 1x1 image-mask solid-rule case feeds the
-                  // same heuristics, pdf.combined.js:47464-47483)
-                  boxes += PageBox(st.ctm(4), st.ctm(5), st.ctm(0), st.ctm(3))
-                case "ID" => toks.seekAfterEI()
-                case "Do" =>
-                  args(0) match {
-                    case Tok.Name(n) =>
-                      res.form(n) match {
-                        case Some(fx) if depth < 12 && !active.contains(fx.key) =>
-                          // buildFormXObject: save → transform(/Matrix) → run →
-                          // restore (pdf.combined.js:45075-45121); the stack is
-                          // truncated afterwards so an unbalanced q/Q inside the
-                          // form cannot leak outer state away
-                          flush()
-                          val snapshot = st.snapshot
-                          val stackDepth = stack.length
-                          st.ctm = NumFmt.mul(st.ctm, fx.matrix)
-                          errors += exec(fx.content, fx.resources, depth + 1, active + fx.key)
-                          flush()
-                          if (stack.length > stackDepth) stack.remove(stackDepth, stack.length - stackDepth)
-                          st.restoreFrom(snapshot)
-                        case _ =>
-                          // image XObject: the CTM maps the unit square to the
-                          // painted area — record it as a layout box (E9)
-                          if (res.isImage(n))
-                            boxes += PageBox(st.ctm(4), st.ctm(5), st.ctm(0), st.ctm(3))
-                      }
-                    case _ => errors += 1
-                  }
-                case _ => () // consumed: stroke colors, paths, gs, marked content…
+                  st.fillColor = rgb((1 - nums(0)) * (1 - nums(3)),
+                    (1 - nums(1)) * (1 - nums(3)), (1 - nums(2)) * (1 - nums(3)))
+                case _ => ()
               }
-              args.clear()
-          }
-        case Tok.EOF => ()
-        case t => args += t
+            }
+          case "gs" =>
+            args(0) match {
+              case Tok.Name(n) =>
+                res.gsFont(n).foreach { case (f, size) =>
+                  flush()
+                  st.font = f
+                  if (size < 0) { st.fontSize = -size; st.fontDirection = -1 }
+                  else { st.fontSize = size; st.fontDirection = 1 }
+                }
+              case _ => ()
+            }
+          case "ID" => reader.skipInlineImage()
+          case "Do" =>
+            args(0) match {
+              case Tok.Name(n) =>
+                res.form(n) match {
+                  case Some(fx) if depth < 12 && !active.contains(fx.key) =>
+                    // buildFormXObject: save → transform(/Matrix) → run →
+                    // restore (pdf.combined.js:45075-45121); the stack is
+                    // truncated afterwards so an unbalanced q/Q inside the
+                    // form cannot leak outer state away
+                    flush()
+                    val snapshot = st.snapshot
+                    val stackDepth = stack.length
+                    st.ctm = NumFmt.mul(st.ctm, fx.matrix)
+                    errors += exec(fx.content, fx.resources, depth + 1, active + fx.key)
+                    flush()
+                    if (stack.length > stackDepth) stack.remove(stackDepth, stack.length - stackDepth)
+                    st.restoreFrom(snapshot)
+                  case _ => () // image or unknown XObject: paints no text
+                }
+              case _ => errors += 1
+            }
+          case _ => () // consumed: stroke colors, paths, clipping, marked content…
+        }
       }
-      tok = toks.next()
-    }
-    errors
+      errors + skipped
     }
 
     val errors = exec(content, pageResources, 0, Set.empty)
     flush()
-    EvalResult(runs.result(), boxes.result(), errors)
+    EvalResult(runs.result(), errors)
   }
 }

@@ -1,10 +1,14 @@
 package graft.eval
 
+import graft.lex.{ContentLexer, Tok}
+
+import scala.collection.mutable.ArrayBuffer
+
 /** Content-stream operator table: the 73 commands the reference accepts
   * (opMap, /root/reference/src/main/js/pdf.combined.js:47221-47329), with
   * arity and variable-args flags. Commands are from the public PDF spec
-  * (ISO 32000-1 §A.2); the tolerance rules (skip unknown, rebalance excess
-  * args) mirror EvaluatorPreprocessor.read (pdf.combined.js:47366-47434).
+  * (ISO 32000-1 §A.2). [[OpReader]] is the one loop that reads a content
+  * stream against this table, for the evaluator and the text items alike.
   */
 final case class OpSpec(name: String, numArgs: Int, variableArgs: Boolean = false)
 
@@ -50,4 +54,54 @@ object OpTable {
     * `null`, `BMC`, `BDC`) from being split. */
   val knownCommands: Set[String] = ops.keySet ++ Set(
     "BM", "BD", "true", "fa", "fal", "fals", "false", "nu", "nul", "null")
+}
+
+/** The one content-stream operator reader, after EvaluatorPreprocessor.read
+  * (pdf.combined.js:47366-47434), which the reference's getOperatorList and
+  * getTextContent both use. It collects operands, keeps `[ ] << >> { }`
+  * tokens as operands (TJ arrays, dict payloads), skips unknown commands,
+  * keeps only the last `numArgs` operands of a fixed-arity operator that has
+  * more (unless they hold an array or dict), and skips an operator with too
+  * few. `ContentEvaluator` and `TextItems` keep only their operator switches.
+  */
+final class OpReader(bytes: Array[Byte]) {
+  private val lexer = new ContentLexer(bytes, OpTable.knownCommands)
+
+  /** Skip an inline image's data: reading resumes after the next `EI`. */
+  def skipInlineImage(): Unit = lexer.seekAfterEI()
+
+  /** Read the stream to its end, passing each accepted operator and its
+    * operands to `handle` (the operand buffer is reused: read it during the
+    * call only). Returns the number of skipped operators. */
+  def read(handle: (String, scala.collection.IndexedSeq[Tok]) => Unit): Int = {
+    val args = ArrayBuffer.empty[Tok]
+    var skipped = 0
+    var tok = lexer.getObj()
+    while (tok != Tok.EOF) {
+      tok match {
+        case Tok.Cmd(cmd) =>
+          OpTable.ops.get(cmd) match {
+            case None =>
+              cmd match {
+                case "[" | "]" | "<<" | ">>" | "{" | "}" => args += tok
+                case _ => skipped += 1; args.clear() // unknown command (47374-47377)
+              }
+            case Some(spec) =>
+              // excess operands: keep the last numArgs (47383-47408)
+              val hasStructure = args.exists {
+                case Tok.Cmd("[") | Tok.Cmd("<<") => true
+                case _ => false
+              }
+              if (!hasStructure && !spec.variableArgs && args.length > spec.numArgs && spec.numArgs > 0)
+                args.remove(0, args.length - spec.numArgs)
+              if (!spec.variableArgs && args.length < spec.numArgs) skipped += 1
+              else handle(cmd, args)
+              args.clear()
+          }
+        case t => args += t
+      }
+      tok = lexer.getObj()
+    }
+    skipped
+  }
 }

@@ -1,10 +1,12 @@
 package graft.extract
 
 /** Bidi-lite (reference `bidi`, pdf.combined.js:1788-1990: UAX#9-lite with a
-  * 30% RTL-character heuristic). Applied per line on the document-text
-  * reading-order surface (`PdfDocument.extractPageText`) — the reference runs
-  * its bidi transform in getTextContent and never in the SVG path, so the
-  * golden/tspan surface stays untouched.
+  * 30% RTL-character heuristic). Applied per line to whole-PDF page text
+  * (`PdfDocument.pageText`, which `extractText` and `extract_turn`'s
+  * whole-PDF dialect both read) and per item to the text items — the
+  * reference runs its bidi transform in getTextContent and never in the SVG
+  * path, so the golden/tspan surface and the content-stream fragment dialect
+  * stay untouched.
   *
   * The transform is a visual→logical flip for RTL-dominant lines that is
   * RUN-aware, not a whole-line character reverse. Kept-order runs follow the
@@ -59,6 +61,15 @@ object Bidi {
   private def isSep(d: Byte): Boolean =
     d == Character.DIRECTIONALITY_COMMON_NUMBER_SEPARATOR ||
       d == Character.DIRECTIONALITY_EUROPEAN_NUMBER_SEPARATOR
+
+  /** [[reverseIfRtl]] on each `\n`-separated line of `text`; text with no
+    * RTL character comes back as it is, without a split. */
+  def reverseRtlLines(text: String): String = {
+    var i = 0
+    while (i < text.length && !isRtlChar(text.charAt(i))) i += 1
+    if (i == text.length) text
+    else text.split("\n", -1).iterator.map(reverseIfRtl(_)).mkString("\n")
+  }
 
   /** Run-aware visual→logical flip when the 30% heuristic fires (the
     * reference's threshold); otherwise identity. Two passes, no per-atom

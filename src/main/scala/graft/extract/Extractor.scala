@@ -14,6 +14,7 @@ import java.nio.charset.StandardCharsets
   *   A: reference-dialect SVG positioned glyph runs → parse tspans → line reassembly
   *   B: HTML-wrapped turns → DOM heuristics boilerplate strip
   *   C: raw PDF content-stream fragment → tokenizer/evaluator → glyph runs → lines
+  *   whole PDF file → `PdfDocument.pageText` per page, pages joined by a newline
   *   fallback: plain text passes through unchanged.
   *
   * Never throws: corrupt payloads degrade to the fallback with an error-marking
@@ -119,21 +120,22 @@ object Extractor {
           Result(asm.text, asm.spans, TurnMetrics(res.runs.length, asm.text.length, res.errors))
         case Dialect.PdfFile =>
           // a whole PDF file as the turn payload (latin-1-preserved bytes):
-          // full xref → page tree → fonts → evaluator → line assembly per page
+          // each page's reading-order text, pages joined by a newline; the
+          // pages' evaluator errors count as dropped nodes
           val doc = graft.pdf.PdfDocument.open(payload.getBytes(StandardCharsets.ISO_8859_1))
           val sb = new StringBuilder
           val spans = Seq.newBuilder[Span]
-          var runsTotal = 0
+          var runs, errors = 0
           doc.pages.indices.foreach { p =>
-            val r = doc.evalPage(p)
-            val asm = LineAssembler.assemble(r.runs)
+            val page = doc.pageText(p)
             if (p > 0 && sb.nonEmpty) sb.append('\n')
             val start = sb.length
-            sb.append(asm.text)
+            sb.append(page.text)
             spans += Span(start, sb.length, s"pdf>page${p + 1}")
-            runsTotal += r.runs.length
+            runs += page.runs
+            errors += page.errors
           }
-          Result(sb.toString, spans.result(), TurnMetrics(runsTotal, sb.length, 0))
+          Result(sb.toString, spans.result(), TurnMetrics(runs, sb.length, errors))
         case Dialect.Markdown =>
           val ex = MarkdownLite.strip(payload)
           Result(ex.text, Seq(Span(0, ex.text.length, "markdown")),

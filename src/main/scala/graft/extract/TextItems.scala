@@ -1,9 +1,8 @@
 package graft.extract
 
 import graft.core.NumFmt
-import graft.eval.{FontSpec, PageResources}
-import graft.lex.{ContentLexer, Tok}
-import graft.eval.OpTable
+import graft.eval.{FontSpec, OpReader, PageResources}
+import graft.lex.Tok
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -39,6 +38,10 @@ final case class TextStyle(fontFamily: String, ascent: Double, descent: Double,
   *   - word spacing on the 1-byte 0x20 charcode adds fake spaces before the
   *     space glyph (46101-46107);
   *   - per-item bidi with an ltr/rtl direction (runBidiTransform, 46033).
+  *
+  * The content stream is read through `OpReader`, the operator reader the
+  * evaluator uses too, so both surfaces accept and skip the same operators;
+  * only the operator switch below is item-specific.
   *
   * Disclosed deltas (str-neutral for the committed fixture gates):
   * the Type3 tsm height adjustment only shapes item.height, not item.str.
@@ -338,141 +341,117 @@ object TextItems {
     var cacheItems: Vector[TextItem] = null
 
     def walk(bytes: Array[Byte], res0: PageResources, depth: Int): Unit = {
-      val lexer = new ContentLexer(bytes, OpTable.knownCommands)
-      val args = ArrayBuffer.empty[Tok]
-      def numArg(i: Int): Double = args(i) match {
-        case Tok.Num(v) => v
-        case _ => 0.0
-      }
-      var tok = lexer.getObj()
-      while (tok != Tok.EOF) {
-        tok match {
-          case Tok.Cmd(cmd) =>
-            OpTable.ops.get(cmd) match {
-              case None =>
-                cmd match {
-                  case "[" | "]" | "<<" | ">>" | "{" | "}" => args += tok
-                  case _ => args.clear()
-                }
-              case Some(spec) =>
-                val hasStructure = args.exists {
-                  case Tok.Cmd("[") | Tok.Cmd("<<") => true
-                  case _ => false
-                }
-                if (!hasStructure && !spec.variableArgs &&
-                  args.length > spec.numArgs && spec.numArgs > 0)
-                  args.remove(0, args.length - spec.numArgs)
-                if (!spec.variableArgs && args.length < spec.numArgs) ()
-                else cmd match {
-                  case "q" => stack += st.snapshot
-                  case "Q" =>
-                    if (stack.nonEmpty) st.restoreFrom(stack.remove(stack.length - 1))
-                  case "cm" =>
-                    st.ctm = NumFmt.mul(st.ctm, Array(numArg(0), numArg(1),
-                      numArg(2), numArg(3), numArg(4), numArg(5)))
-                  case "BT" =>
-                    flushItem()
-                    st.textMatrix = NumFmt.Identity.clone()
-                    st.textLineMatrix = NumFmt.Identity.clone()
-                  case "ET" => () // not in the reference's text switch
-                  case "Tf" =>
-                    flushItem()
-                    (args(0), args(1)) match {
-                      case (Tok.Name(n), Tok.Num(sz)) =>
-                        st.fontSize = sz
-                        st.font = res0.font(n)
-                      case _ => ()
-                    }
-                  case "Ts" => flushItem(); st.textRise = numArg(0)
-                  case "Tz" => flushItem(); st.textHScale = numArg(0) / 100
-                  case "TL" => flushItem(); st.leading = numArg(0)
-                  case "Tc" => st.charSpacing = numArg(0)
-                  case "Tw" => st.wordSpacing = numArg(0)
-                  case "Td" => moveText(numArg(0), numArg(1))
-                  case "TD" =>
-                    flushItem()
-                    st.leading = -numArg(1)
-                    st.translateTextLineMatrix(numArg(0), numArg(1))
-                    st.textMatrix = st.textLineMatrix.clone()
-                  case "T*" => flushItem(); st.carriageReturn()
-                  case "Tm" =>
-                    flushItem()
-                    st.textMatrix = Array(numArg(0), numArg(1), numArg(2),
-                      numArg(3), numArg(4), numArg(5))
-                    st.textLineMatrix = st.textMatrix.clone()
-                  case "Tj" =>
-                    args(0) match {
-                      case Tok.Str(s) => buildItem(s)
-                      case _ => ()
-                    }
-                  case "'" =>
-                    flushItem()
-                    st.carriageReturn()
-                    args(0) match {
-                      case Tok.Str(s) => buildItem(s)
-                      case _ => ()
-                    }
-                  case "\"" =>
-                    flushItem()
-                    st.wordSpacing = numArg(0)
-                    st.charSpacing = numArg(1)
-                    st.carriageReturn()
-                    args(2) match {
-                      case Tok.Str(s) => buildItem(s)
-                      case _ => ()
-                    }
-                  case "TJ" =>
-                    args.foreach {
-                      case Tok.Str(s) => buildItem(s)
-                      case Tok.Num(n) => showKern(n)
-                      case _ => ()
-                    }
-                  case "Do" =>
-                    flushItem()
-                    args.headOption match {
-                      case Some(Tok.Name(name)) =>
-                        if (cacheKey == name && cacheItems != null) {
-                          items ++= cacheItems
-                        } else if (res0.isImage(name)) {
-                          cacheKey = name; cacheItems = null
-                        } else res0.form(name) match {
-                          case Some(form) if depth < 8 =>
-                            val before = items.length
-                            stack += st.snapshot
-                            if (form.matrix != null)
-                              st.ctm = NumFmt.mul(st.ctm, form.matrix)
-                            walk(form.content, form.resources, depth + 1)
-                            flushItem()
-                            // a stray Q inside the form may have consumed the
-                            // Do snapshot (the reference shares one state
-                            // stack too and its restore() no-ops when empty)
-                            if (stack.nonEmpty)
-                              st.restoreFrom(stack.remove(stack.length - 1))
-                            cacheKey = name
-                            cacheItems = items.drop(before).toVector
-                          case _ =>
-                            cacheKey = name; cacheItems = null
-                        }
-                      case _ => ()
-                    }
-                  case "gs" =>
-                    flushItem()
-                    args.headOption match {
-                      case Some(Tok.Name(n)) =>
-                        res0.gsFont(n).foreach { case (f, sz) =>
-                          st.fontSize = sz
-                          st.font = f
-                        }
-                      case _ => ()
-                    }
-                  case "BI" => lexer.seekAfterEI()
-                  case _ => () // color/path/marked-content ops: no item effect
-                }
-                args.clear()
-            }
-          case _ => args += tok
+      val reader = new OpReader(bytes)
+      reader.read { (cmd, args) =>
+        def numArg(i: Int): Double = args(i) match {
+          case Tok.Num(v) => v
+          case _ => 0.0
         }
-        tok = lexer.getObj()
+        cmd match {
+          case "q" => stack += st.snapshot
+          case "Q" =>
+            if (stack.nonEmpty) st.restoreFrom(stack.remove(stack.length - 1))
+          case "cm" =>
+            st.ctm = NumFmt.mul(st.ctm, Array(numArg(0), numArg(1),
+              numArg(2), numArg(3), numArg(4), numArg(5)))
+          case "BT" =>
+            flushItem()
+            st.textMatrix = NumFmt.Identity.clone()
+            st.textLineMatrix = NumFmt.Identity.clone()
+          case "ET" => () // not in the reference's text switch
+          case "Tf" =>
+            flushItem()
+            (args(0), args(1)) match {
+              case (Tok.Name(n), Tok.Num(sz)) =>
+                st.fontSize = sz
+                st.font = res0.font(n)
+              case _ => ()
+            }
+          case "Ts" => flushItem(); st.textRise = numArg(0)
+          case "Tz" => flushItem(); st.textHScale = numArg(0) / 100
+          case "TL" => flushItem(); st.leading = numArg(0)
+          case "Tc" => st.charSpacing = numArg(0)
+          case "Tw" => st.wordSpacing = numArg(0)
+          case "Td" => moveText(numArg(0), numArg(1))
+          case "TD" =>
+            flushItem()
+            st.leading = -numArg(1)
+            st.translateTextLineMatrix(numArg(0), numArg(1))
+            st.textMatrix = st.textLineMatrix.clone()
+          case "T*" => flushItem(); st.carriageReturn()
+          case "Tm" =>
+            flushItem()
+            st.textMatrix = Array(numArg(0), numArg(1), numArg(2),
+              numArg(3), numArg(4), numArg(5))
+            st.textLineMatrix = st.textMatrix.clone()
+          case "Tj" =>
+            args(0) match {
+              case Tok.Str(s) => buildItem(s)
+              case _ => ()
+            }
+          case "'" =>
+            flushItem()
+            st.carriageReturn()
+            args(0) match {
+              case Tok.Str(s) => buildItem(s)
+              case _ => ()
+            }
+          case "\"" =>
+            flushItem()
+            st.wordSpacing = numArg(0)
+            st.charSpacing = numArg(1)
+            st.carriageReturn()
+            args(2) match {
+              case Tok.Str(s) => buildItem(s)
+              case _ => ()
+            }
+          case "TJ" =>
+            args.foreach {
+              case Tok.Str(s) => buildItem(s)
+              case Tok.Num(n) => showKern(n)
+              case _ => ()
+            }
+          case "Do" =>
+            flushItem()
+            args.headOption match {
+              case Some(Tok.Name(name)) =>
+                if (cacheKey == name && cacheItems != null) {
+                  items ++= cacheItems
+                } else if (res0.isImage(name)) {
+                  cacheKey = name; cacheItems = null
+                } else res0.form(name) match {
+                  case Some(form) if depth < 8 =>
+                    val before = items.length
+                    stack += st.snapshot
+                    if (form.matrix != null)
+                      st.ctm = NumFmt.mul(st.ctm, form.matrix)
+                    walk(form.content, form.resources, depth + 1)
+                    flushItem()
+                    // a stray Q inside the form may have consumed the
+                    // Do snapshot (the reference shares one state
+                    // stack too and its restore() no-ops when empty)
+                    if (stack.nonEmpty)
+                      st.restoreFrom(stack.remove(stack.length - 1))
+                    cacheKey = name
+                    cacheItems = items.drop(before).toVector
+                  case _ =>
+                    cacheKey = name; cacheItems = null
+                }
+              case _ => ()
+            }
+          case "gs" =>
+            flushItem()
+            args.headOption match {
+              case Some(Tok.Name(n)) =>
+                res0.gsFont(n).foreach { case (f, sz) =>
+                  st.fontSize = sz
+                  st.font = f
+                }
+              case _ => ()
+            }
+          case "BI" => reader.skipInlineImage()
+          case _ => () // color/path/marked-content ops: no item effect
+        }
       }
     }
 

@@ -371,52 +371,49 @@ final class PdfDocument private (val file: PdfFile) {
       }
   }
 
-  /** Evaluate page `i` → positioned glyph runs (page index stamped).
-    * `fakeSpaces` reconstructs inter-word spaces inside run texts (the golden
-    * tspan surface wants them; the line assembler derives spacing from the
-    * x-coordinates instead and must not get them twice). */
-  def evalPage(i: Int, fakeSpaces: Boolean = true): EvalResult =
+  /** Evaluate page `i` → positioned glyph runs (page index stamped), with
+    * the golden tspan surface's fake spaces reconstructed inside run texts.
+    * Page text needs them too: the line assembler sees only run-boundary
+    * geometry, so kern word gaps inside a run are invisible to it. It does
+    * not double them: a leading fake space sits at the previous run's end x,
+    * so its gap test sees no gap. */
+  def evalPage(i: Int): EvalResult =
     try {
       val p = pages(i)
-      val r = ContentEvaluator.evaluatePage(p.content, p.resources, fakeSpaces,
+      val r = ContentEvaluator.evaluatePage(p.content, p.resources, true,
         initialCtm = p.rotationCtm)
       r.copy(runs = r.runs.map(_.copy(page = i)))
     } catch {
       // corrupt page: salvage nothing from it but never fail the document —
       // at 10^12 rows a single malformed file must not kill the job (S6)
-      case scala.util.control.NonFatal(_) => EvalResult(Vector.empty, Vector.empty, 1)
+      case scala.util.control.NonFatal(_) => EvalResult(Vector.empty, 1)
     }
 
   /** All pages' runs in document order. */
   def allRuns: Vector[GlyphRun] =
     pages.indices.flatMap(i => evalPage(i).runs).toVector
 
-  /** Reading-order page text through the line assembler (y-clustering +
-    * metric-based word-gap inference) — the library's user-facing extraction
-    * surface for whole PDF files. */
-  def extractPageText(i: Int): String = {
-    // fake spaces ON: intra-run kern word gaps are invisible to the line
-    // assembler (it only sees run-boundary geometry); leading fake spaces sit
-    // at the previous run's end x, so the assembler's gap test sees no gap and
-    // does not double them
-    val text = graft.extract.LineAssembler.assemble(evalPage(i).runs).text
-    // bidi per assembled line, ON the reading-order surface ONLY — the
-    // reference applies its bidi transform in getTextContent
-    // (pdf.combined.js:46033-46045) and never in the SVG path, so the tspan/
-    // golden surface stays byte-identical while document text reads RTL
-    // scripts in logical order
-    if (text.isEmpty) text
-    else text.linesIterator.map(graft.extract.Bidi.reverseIfRtl(_)).mkString("\n")
+  /** Reading-order text of page `i` — the one page-text function for whole
+    * PDFs, behind `extractText` and `extract_turn`'s whole-PDF dialect:
+    * `evalPage`, then the line assembler (y-clustering + metric-based
+    * word-gap inference), then bidi per assembled line. The reference applies
+    * its bidi transform in getTextContent (pdf.combined.js:46033-46045) and
+    * never in the SVG path, so the tspan/golden surface stays byte-identical
+    * while document text reads RTL scripts in logical order. */
+  def pageText(i: Int): PageText = {
+    val r = evalPage(i)
+    val text = graft.extract.LineAssembler.assemble(r.runs).text
+    PageText(graft.extract.Bidi.reverseRtlLines(text), r.runs.length, r.errors)
   }
 
   /** Whole-document text, pages joined by a blank line. */
-  def extractText: String = pages.indices.map(extractPageText).mkString("\n\n")
+  def extractText: String = pages.indices.map(pageText(_).text).mkString("\n\n")
 
   /** Reference-parity text-content ITEMS for page `i` — the alternative
     * reading-order surface (SURVEY.md §2.7 R2/R4): the reference's exact
     * getTextContent item semantics (same-line Td merge, TJ run breaks,
-    * fake-space thresholds) instead of the generalized y-cluster the default
-    * `extractPageText` uses. Gated item-for-item against a fixture generated
+    * fake-space thresholds) instead of the generalized y-cluster that
+    * `pageText` uses. Gated item-for-item against a fixture generated
     * by the vendored CLI's own getTextContent (TextItemsSpec). */
   def textContentItems(i: Int,
       normalizeWhitespace: Boolean = false): Vector[graft.extract.TextItem] =
@@ -440,7 +437,7 @@ final class PdfDocument private (val file: PdfFile) {
   /** Page text through the ITEM surface, items joined by single spaces —
     * the reference CLI's own plain-text rendering (getinfo.js:
     * `strings.join(' ')`). The item-parity alternative to
-    * `extractPageText`'s y-cluster assembly. */
+    * `pageText`'s y-cluster assembly. */
   def textContentText(i: Int): String =
     textContentItems(i).iterator.map(_.str).mkString(" ")
 
@@ -1334,6 +1331,10 @@ object PdfDocument {
     case _ => "?"
   }
 }
+
+/** One page's reading-order text with the page's run count and evaluator
+  * errors (`PdfDocument.pageText`). */
+final case class PageText(text: String, runs: Int, errors: Int)
 
 /** One annotation's extracted data — the reference getAnnotations record
   * shape (Annotation.data, pdf.combined.js:48010-48022 and the subtype

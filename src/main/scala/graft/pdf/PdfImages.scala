@@ -36,8 +36,8 @@ object PdfImages {
 
   /** All image XObjects reachable from each page's resources, form-recursive
     * (depth-capped, cycle-guarded), in (page, name) order. A form stamped on
-    * several pages re-lists its images per page — the row is a *reference*,
-    * matching how layout boxes are emitted per paint. */
+    * several pages re-lists its images per page — the row is a *reference*
+    * to the image from that page, not a decoded copy. */
   def list(doc: PdfDocument): Vector[PdfImage] = {
     val file = doc.file
     val out = Vector.newBuilder[PdfImage]

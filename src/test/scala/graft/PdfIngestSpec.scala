@@ -103,7 +103,7 @@ class PdfIngestSpec extends AnyFunSuite {
     val pdfPath = inputDir.resolve("1301.4293.pdf")
     if (!Files.exists(pdfPath)) cancel("reference inputs not present")
     val doc = PdfDocument.open(Files.readAllBytes(pdfPath))
-    val p0 = doc.extractPageText(0)
+    val p0 = doc.pageText(0).text
     val title = p0.indexOf("Latent Relation Representations for Universal")
     val intro = p0.indexOf("1 Introduction")
     val body = p0.indexOf("Supervised relation extraction uses a")

@@ -65,7 +65,10 @@ class XrefStreamSpec extends AnyFunSuite {
     assert(doc.pages.length == 1)
     val runs = doc.evalPage(0).runs
     assert(runs.map(_.text) == Vector("xref stream works"))
-    assert(doc.extractPageText(0) == "xref stream works")
+    assert(doc.pageText(0).text == "xref stream works")
+    // the same text through the call extract_turn runs on a whole-PDF payload
+    assert(graft.extract.Extractor.extract(new String(out.toByteArray, ISO_8859_1)).text ==
+      "xref stream works")
   }
 
   test("self/mutual ObjStm cycles degrade to PNull instead of StackOverflowError") {

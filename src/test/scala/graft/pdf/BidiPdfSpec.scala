@@ -1,14 +1,16 @@
 package graft.pdf
 
+import graft.extract.Extractor
 import graft.testgen.PdfWriter
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets.ISO_8859_1
 
-/** Bidi split parity with the reference: the reading-order surface
-  * (extractPageText, the getTextContent analogue) applies the RTL heuristic
-  * per line, while the tspan/SVG surface never does — the reference runs
-  * runBidiTransform only in getTextContent (pdf.combined.js:46033-46045).
+/** Bidi split parity with the reference: the reading-order surface (page
+  * text, the getTextContent analogue, which `extract_turn` returns for a
+  * whole PDF) applies the RTL heuristic per line, while the tspan/SVG surface
+  * never does — the reference runs runBidiTransform only in getTextContent
+  * (pdf.combined.js:46033-46045).
   */
 class BidiPdfSpec extends AnyFunSuite {
 
@@ -38,14 +40,22 @@ class BidiPdfSpec extends AnyFunSuite {
       PdfWriter.stream("", cmap.getBytes(ISO_8859_1))))
   }
 
+  /** Trimmed lines of the whole-PDF payload through `Extractor.extract`, the
+    * call `extract_turn` runs (the file as a latin-1 string). */
+  private def jobLines(content: String): Seq[String] =
+    Extractor.extract(new String(pdf(content), ISO_8859_1)).text
+      .linesIterator.map(_.trim).toSeq
+
   test("RTL line reverses on the reading-order surface, not on the tspan surface") {
     val content = "BT /F1 12 Tf 100 700 Td (\u00a0\u00a1\u00a2\u00a3) Tj 0 -20 Td (hello world) Tj ET"
     val doc = PdfDocument.open(pdf(content))
     val logical = "אבגד" // alef bet gimel dalet
     // reading order: the RTL line comes out REVERSED (visual → logical flip
     // per the reference's 30%-RTL heuristic), the LTR line untouched
-    assert(doc.extractPageText(0).linesIterator.map(_.trim).toSeq ==
+    assert(doc.pageText(0).text.linesIterator.map(_.trim).toSeq ==
       Seq(logical.reverse, "hello world"))
+    // the job's whole-PDF dialect reads the same page text
+    assert(jobLines(content) == Seq(logical.reverse, "hello world"))
     // golden/tspan surface: byte-identical to the evaluator output — no bidi
     assert(doc.tspanTexts.map(_.trim) == Vector(logical, "hello world"))
   }
@@ -53,7 +63,8 @@ class BidiPdfSpec extends AnyFunSuite {
   test("pure-LTR documents are byte-identical with bidi enabled") {
     val content = "BT /F1 12 Tf 100 700 Td (hello) Tj 0 -20 Td (world (x)) Tj ET"
     val doc = PdfDocument.open(pdf(content))
-    assert(doc.extractPageText(0).linesIterator.map(_.trim).toSeq == Seq("hello", "world (x)"))
+    assert(doc.pageText(0).text.linesIterator.map(_.trim).toSeq == Seq("hello", "world (x)"))
+    assert(jobLines(content) == Seq("hello", "world (x)"))
   }
 
   test("text-content items carry rtl direction and reordered strings") {

@@ -1,5 +1,6 @@
 package graft.pdf
 
+import graft.extract.Extractor
 import graft.testgen.PdfWriter
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,26 +18,32 @@ class RotateSpec extends AnyFunSuite {
     s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Rotate $rotate /Contents 4 0 R >>",
     PdfWriter.stream("", content.getBytes(ISO_8859_1))))
 
+  /** Trimmed page lines through the document and through `Extractor.extract`,
+    * the call `extract_turn` runs on a whole-PDF payload. */
+  private def lines(rotate: Int, content: String): (Seq[String], Seq[String]) = {
+    val bytes = pdf(rotate, content)
+    def trimmed(text: String) = text.linesIterator.map(_.trim).toSeq
+    (trimmed(PdfDocument.open(bytes).pageText(0).text),
+      trimmed(Extractor.extract(new String(bytes, ISO_8859_1)).text))
+  }
+
   test("Rotate 90: display-top line extracts first") {
     // display (90° cw): dispY grows with content x — "first" at smaller x is
     // the upper display line
     val content = "BT /F1 12 Tf 50 700 Td (first) Tj 70 0 Td (second) Tj ET"
-    val doc = PdfDocument.open(pdf(90, content))
     // leading fake spaces are golden-surface artifacts; reading order is the claim
-    assert(doc.extractPageText(0).linesIterator.map(_.trim).toSeq == Seq("first", "second"))
+    assert(lines(90, content) == (Seq("first", "second"), Seq("first", "second")))
   }
 
   test("Rotate 180: bottom-up content reads top-down") {
     // 180°: larger pdf y displays LOWER; write "second" above "first" in raw
     // page space so the rotated view reads first, then second
     val content = "BT /F1 12 Tf 100 200 Td (first) Tj 0 300 Td (second) Tj ET"
-    val doc = PdfDocument.open(pdf(180, content))
-    assert(doc.extractPageText(0).linesIterator.map(_.trim).toSeq == Seq("first", "second"))
+    assert(lines(180, content) == (Seq("first", "second"), Seq("first", "second")))
   }
 
   test("Rotate 0 unchanged") {
     val content = "BT /F1 12 Tf 100 700 Td (first) Tj 0 -20 Td (second) Tj ET"
-    val doc = PdfDocument.open(pdf(0, content))
-    assert(doc.extractPageText(0).linesIterator.map(_.trim).toSeq == Seq("first", "second"))
+    assert(lines(0, content) == (Seq("first", "second"), Seq("first", "second")))
   }
 }
