@@ -142,7 +142,7 @@ object ContentEvaluator {
     // one show op = a Tj string or a TJ item sequence; `x` (the intra-op
     // advance accumulator, reference showText local) threads through the items.
     // Glyph iteration is allocation-free: widths looked up per char, no glyph
-    // objects (the metrics-only model makes GlyphM redundant on this path).
+    // objects.
     var showX = 0.0
     def showBegin(): Unit = showX = 0.0
 

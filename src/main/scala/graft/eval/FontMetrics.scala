@@ -5,8 +5,6 @@ package graft.eval
   * reference's std-14 metrics fallback uses (pdf.combined.js:46811-46845, backed by
   * the public Adobe AFM width tables).
   */
-final case class GlyphM(fontChar: String, width: Double, isSpace: Boolean)
-
 final case class FontSpec(
     family: String,
     widths: Int => Double,
@@ -62,22 +60,7 @@ final case class FontSpec(
     /** Document-scoped getTextContent font name (`g_d0_f<id>` / the
       * styleName override) — assigned by PdfDocument at first load, NOT by
       * the cross-document font cache (ids are per-document state). */
-    loadedName: String = "") {
-
-  /** string → glyphs; 1-byte charcodes through the font mapping (charsToGlyphs,
-    * pdf.combined.js:36674-36719, simple-font path). */
-  def charsToGlyphs(s: String): Array[GlyphM] = {
-    val out = new Array[GlyphM](s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      out(i) = GlyphM(glyphText(c.toInt), widths(c.toInt), c == ' ')
-      i += 1
-    }
-    out
-  }
-  def spaceWidth: Double = widths(' ')
-}
+    loadedName: String = "")
 
 object FontSpec {
   val IdentityChar: Int => String = {

@@ -28,20 +28,19 @@ object Boilerplate {
     "pre", "li", "td", "th", "h1", "h2", "h3", "h4", "h5", "h6", "figcaption", "dd", "dt")
   private val LinkDensityMax = 0.33
 
-  private final case class NodeStats(chars: Int, linkedChars: Int, tags: Int) {
+  private final case class NodeStats(chars: Int, linkedChars: Int) {
     def linkDensity: Double = if (chars == 0) 1.0 else linkedChars.toDouble / chars
-    def textDensity: Double = chars.toDouble / math.max(1, tags)
   }
 
   private def stats(n: HNode, inLink: Boolean): NodeStats = n match {
     case HText(t) =>
       val c = t.count(!_.isWhitespace)
-      NodeStats(c, if (inLink) c else 0, 0)
+      NodeStats(c, if (inLink) c else 0)
     case e: HElem =>
       val link = inLink || e.tag == "a"
-      e.children.foldLeft(NodeStats(0, 0, 1)) { (acc, ch) =>
+      e.children.foldLeft(NodeStats(0, 0)) { (acc, ch) =>
         val s = stats(ch, link)
-        NodeStats(acc.chars + s.chars, acc.linkedChars + s.linkedChars, acc.tags + s.tags)
+        NodeStats(acc.chars + s.chars, acc.linkedChars + s.linkedChars)
       }
   }
 
@@ -82,9 +81,9 @@ object Boilerplate {
       val inlineRun = ArrayBuffer.empty[HNode]
       def flushInline(): Unit = {
         if (inlineRun.nonEmpty) {
-          val st = inlineRun.foldLeft(NodeStats(0, 0, 0)) { (acc, n) =>
+          val st = inlineRun.foldLeft(NodeStats(0, 0)) { (acc, n) =>
             val s = stats(n, inLink = false)
-            NodeStats(acc.chars + s.chars, acc.linkedChars + s.linkedChars, acc.tags + s.tags)
+            NodeStats(acc.chars + s.chars, acc.linkedChars + s.linkedChars)
           }
           if (isDenseBoilerplate(st)) dropped += 1
           else {

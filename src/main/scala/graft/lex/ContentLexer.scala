@@ -1,36 +1,47 @@
 package graft.lex
 
-/** Tokens of the PDF content-stream dialect (reference Lexer yields exactly these
-  * shapes — pdf.combined.js:28154-28246). */
+/** Tokens of PDF syntax (reference Lexer yields exactly these shapes —
+  * pdf.combined.js:28154-28246). */
 sealed trait Tok
 object Tok {
   final case class Num(v: Double) extends Tok
   final case class Str(s: String) extends Tok // literal or hex string (byte-ish chars)
   final case class Name(n: String) extends Tok
-  final case class Cmd(c: String) extends Tok // operators + [ ] << >> { }
+  final case class Cmd(c: String) extends Tok // operators, keywords + [ ] << >> { }
   final case class Bool(b: Boolean) extends Tok
   case object Null extends Tok
   case object EOF extends Tok
 }
 
-/** Byte-stream tokenizer for PDF content streams.
+/** The one tokenizer of PDF syntax, after the reference's Lexer
+  * (pdf.combined.js:27841-28246), which likewise feeds every reader of PDF
+  * syntax. Three read it: `eval.OpReader` (content streams),
+  * `pdf.ObjParser` (objects, xref tables, object-stream headers, trailers)
+  * and `pdf.CMapReader` (`/ToUnicode` and embedded CID CMaps).
   *
-  * Semantics-faithful re-implementation of the reference lexer
-  * (/root/reference/src/main/js/pdf.combined.js:27841-28246): byte-class table,
-  * Adobe-tolerant number lexing (`--`, mid-number `-`, scientific E), literal
-  * strings with nested parens/escapes/octal/line-folds, `#xx` name escapes, hex
-  * strings with invalid-char tolerance, comments, and longest-prefix command
-  * disambiguation against a known-command set (handles glued tokens like `q1`).
+  * Byte-class table, Adobe-tolerant number lexing (`--`, mid-number `-`,
+  * scientific E), literal strings with nested parens/escapes/octal/line-folds,
+  * `#xx` name escapes, hex strings with invalid-char tolerance, comments, and
+  * longest-prefix command disambiguation against a known-command set (handles
+  * glued tokens like `q1`); with an empty set a command runs to the next
+  * whitespace or delimiter, as in the reference's object lexer.
+  *
+  * Reading starts at `start`; [[offset]] is the index of the first byte not
+  * yet consumed, which is how the object parser finds stream data.
   *
   * This is the hot inner loop of the extractor: one mutable cursor, one reusable
   * StringBuilder, no per-token allocation beyond the token itself.
   */
-final class ContentLexer(data: Array[Byte], knownCommands: Set[String]) {
+final class ContentLexer(data: Array[Byte], knownCommands: Set[String], start: Int = 0) {
 
   import ContentLexer._
 
-  private var pos = 0
-  private var cur: Int = if (data.nonEmpty) data(0) & 0xff else -1
+  private var pos = start
+  private var cur: Int = if (pos >= 0 && pos < data.length) data(pos) & 0xff else -1
+
+  /** Index of the first byte not yet consumed. */
+  def offset: Int = pos
+
   private val strBuf = new StringBuilder(64)
 
   private def nextChar(): Int = {

@@ -37,10 +37,4 @@ object Chunking {
     regexp_replace(
       regexp_replace(textCol, EmailRe, "<EMAIL>"),
       PhoneRe, "<PHONE>")
-
-  /** The oracle-side SQL equivalents (kept adjacent so they evolve together);
-    * the patterns are restricted to syntax Java and RE2 share, so they pass
-    * through verbatim. */
-  val EmailReSql: String = EmailRe
-  val PhoneReSql: String = PhoneRe
 }

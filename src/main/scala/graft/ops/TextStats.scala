@@ -34,12 +34,6 @@ object TextStats {
   def punctCount(textCol: Column): Column =
     graft.functions.TextHashes.punct_count(textCol)
 
-  def upperRatio(textCol: Column): Column = {
-    val letters = length(regexp_replace(textCol, "[^a-zA-Z]", ""))
-    val uppers = length(regexp_replace(textCol, "[^A-Z]", ""))
-    when(letters === 0, lit(0.0)).otherwise(uppers.cast("double") / letters)
-  }
-
   private val stopwords = Seq("the", "of", "and", "a", "to", "in", "is", "for",
     "on", "with", "as", "by", "at", "from", "or", "an", "be", "this", "that", "it")
 

@@ -147,24 +147,6 @@ object FontData {
     }
   }
 
-  /** ProblematicCharRanges (pdf.combined.js:34214-34233): fontChar codes in
-    * these ranges are moved to the private-use area by adjustMapping. */
-  private val problematicRanges: Array[Int] = Array(
-    0x0000, 0x0020, 0x007F, 0x00A1, 0x00AD, 0x00AE,
-    0x0600, 0x0780, 0x08A0, 0x10A0, 0x1780, 0x1800,
-    0x2000, 0x2010, 0x2011, 0x2012, 0x2028, 0x2030, 0x205F, 0x2070,
-    0x25CC, 0x25CD, 0xAA60, 0xAA80, 0xFFF0, 0x10000)
-
-  def isProblematicUnicodeLocation(code: Int): Boolean = {
-    var i = 0
-    var j = problematicRanges.length - 1
-    while (i < j) {
-      val c = (i + j + 1) >> 1
-      if (code < problematicRanges(c)) j = c - 1 else i = c
-    }
-    (i & 1) == 0
-  }
-
   /** mapSpecialUnicodeValues (pdf.combined.js:16640-16647 + the special-PUA
     * symbol table): collapse Specials block, remap Adobe PUA symbols. */
   def mapSpecialUnicodeValues(code: Int): Int = {

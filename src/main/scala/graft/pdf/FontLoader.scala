@@ -18,7 +18,7 @@ import scala.collection.immutable.ArraySeq
   * Type3, TrueType metrics-only) plus composite Type0 fonts under Identity
   * CMaps (two-byte charcodes, /DW + /W CID widths, 2-byte /ToUnicode) and
   * embedded CMap STREAMS (code→CID cidrange/cidchar tables + /WMode, the
-  * CJK shape — CidCMap below).
+  * CJK shape — CidCMap, read by `CMapReader`).
   * Predefined non-Identity CMaps would need the Adobe cmap resource files
   * (not shipped; the reference bundles none either) and degrade to identity
   * CIDs; Type1/TrueType *program* parsing is metrics-only.
@@ -699,140 +699,5 @@ object FontLoader {
       .map(c => widths.getOrElse(c, 0.0))
       .find(_ != 0.0)
       .getOrElse(defaultWidth)
-  }
-}
-
-/** /ToUnicode CMap stream parser: bfchar + bfrange sections, UTF-16BE targets
-  * (readToUnicode, pdf.combined.js:46503-46540; CMap text format is public
-  * Adobe CMap spec syntax). */
-/** Embedded CID CMap (PDF 32000-1 §9.7.5.3, Adobe CMap format): the
-  * /Encoding STREAM of a Type0 font, mapping charcodes to CIDs via
-  * cidrange/cidchar entries — the reference parses these with no external
-  * resources (CMapFactory.create stream branch, pdf.combined.js:31519-31539).
-  * Predefined non-Identity NAMES still degrade to identity (both engines
-  * ship no Adobe cmap resource files). */
-object CidCMap {
-
-  final case class Parsed(toCid: Map[Int, Int], wmode: Int, codeBytes: Int,
-      identityBase: Boolean) {
-    /** code → CID; unmapped codes fall back to the usecmap'd Identity base
-      * (extendCMap merge semantics) or CID 0 (.notdef). */
-    def cid(code: Int): Int = toCid.getOrElse(code, if (identityBase) code else 0)
-  }
-
-  private final val MaxEntries = 1 << 20 // range-expansion bound
-
-  def parse(data: Array[Byte]): Parsed = {
-    val s = new String(data, java.nio.charset.StandardCharsets.ISO_8859_1)
-    // per-entry tolerance: a single malformed entry (over-long hex bound,
-    // out-of-range CID) is skipped, never aborting the whole font load
-    def hexToInt(h: String): Option[Int] =
-      if (h.isEmpty || h.length > 8) None
-      else Some(java.lang.Long.parseLong(h, 16).toInt)
-    def decToInt(d: String): Option[Int] =
-      try Some(d.toInt) catch { case _: NumberFormatException => None }
-    val wmode = "/WMode\\s+(\\d+)".r.findFirstMatchIn(s)
-      .flatMap(m => decToInt(m.group(1))).getOrElse(0)
-    val identityBase = "/(Identity-[HV])\\s+usecmap".r.findFirstMatchIn(s).isDefined
-    // code byte count from the first codespacerange bound (mixed-width
-    // codespaces degrade to the first class — disclosed subset)
-    val codeBytes = "(?s)begincodespacerange\\s*<([0-9a-fA-F]+)>".r
-      .findFirstMatchIn(s).map(m => math.max(1, m.group(1).length / 2))
-      .getOrElse(2)
-    val out = Map.newBuilder[Int, Int]
-    var n = 0
-    val rangeBlocks = "(?s)begincidrange(.*?)endcidrange".r
-    val charBlocks = "(?s)begincidchar(.*?)endcidchar".r
-    val rangeEntry = "<([0-9a-fA-F]+)>\\s*<([0-9a-fA-F]+)>\\s+(\\d+)".r
-    val charEntry = "<([0-9a-fA-F]+)>\\s+(\\d+)".r
-    rangeBlocks.findAllMatchIn(s).foreach { b =>
-      rangeEntry.findAllMatchIn(b.group(1)).foreach { e =>
-        (hexToInt(e.group(1)), hexToInt(e.group(2)), decToInt(e.group(3))) match {
-          case (Some(lo), Some(hi), Some(cid0)) =>
-            var c = lo
-            while (c <= hi && n < MaxEntries) {
-              out += c -> (cid0 + (c - lo))
-              c += 1
-              n += 1
-            }
-          case _ => () // malformed entry: skip it, keep the rest
-        }
-      }
-    }
-    charBlocks.findAllMatchIn(s).foreach { b =>
-      charEntry.findAllMatchIn(b.group(1)).foreach { e =>
-        (hexToInt(e.group(1)), decToInt(e.group(2))) match {
-          case (Some(code), Some(cid)) if n < MaxEntries =>
-            out += code -> cid
-            n += 1
-          case _ => ()
-        }
-      }
-    }
-    Parsed(out.result(), wmode, codeBytes, identityBase)
-  }
-}
-
-object ToUnicodeCMap {
-
-  def parse(data: Array[Byte]): Map[Int, String] = {
-    val s = new String(data, java.nio.charset.StandardCharsets.ISO_8859_1)
-    val out = Map.newBuilder[Int, String]
-
-    def hexToInt(h: String): Int = java.lang.Long.parseLong(h, 16).toInt
-    def hexToString(h: String): String = {
-      // UTF-16BE code units, surrogate pairs preserved as-is (String is UTF-16)
-      val sb = new StringBuilder
-      var i = 0
-      while (i + 4 <= h.length) {
-        sb.append(Integer.parseInt(h.substring(i, i + 4), 16).toChar)
-        i += 4
-      }
-      if (i < h.length && h.length >= 2) // odd (1-byte) target
-        sb.append(Integer.parseInt(h.substring(i), 16).toChar)
-      sb.toString
-    }
-
-    val bfchar = "(?s)beginbfchar(.*?)endbfchar".r
-    val bfrange = "(?s)beginbfrange(.*?)endbfrange".r
-    val pair = "<([0-9a-fA-F]+)>\\s*<([0-9a-fA-F]+)>".r
-    val triple = "<([0-9a-fA-F]+)>\\s*<([0-9a-fA-F]+)>\\s*(<[0-9a-fA-F]+>|\\[[^\\]]*\\])".r
-    val hexItem = "<([0-9a-fA-F]+)>".r
-
-    bfchar.findAllMatchIn(s).foreach { m =>
-      pair.findAllMatchIn(m.group(1)).foreach { p =>
-        out += hexToInt(p.group(1)) -> hexToString(p.group(2))
-      }
-    }
-    bfrange.findAllMatchIn(s).foreach { m =>
-      triple.findAllMatchIn(m.group(1)).foreach { t =>
-        val lo = hexToInt(t.group(1))
-        val hi = hexToInt(t.group(2))
-        val dst = t.group(3)
-        if (dst.startsWith("[")) {
-          val items = hexItem.findAllMatchIn(dst).map(_.group(1)).toVector
-          var c = lo
-          items.foreach { h =>
-            if (c <= hi) out += c -> hexToString(h)
-            c += 1
-          }
-        } else {
-          val base = dst.stripPrefix("<").stripSuffix(">")
-          val baseStr = hexToString(base)
-          var c = lo
-          while (c <= hi) {
-            // increment the LAST code unit (CMap range semantics)
-            val off = c - lo
-            if (baseStr.nonEmpty) {
-              val adjusted = baseStr.substring(0, baseStr.length - 1) +
-                (baseStr.last + off).toChar
-              out += c -> adjusted
-            }
-            c += 1
-          }
-        }
-      }
-    }
-    out.result()
   }
 }

@@ -1,242 +1,121 @@
 package graft.pdf
 
 import PObj._
+import graft.lex.{ContentLexer, Tok}
 
 import scala.collection.mutable
 
-/** File-level object syntax parser: dicts, arrays, strings, hex strings, names,
-  * numbers, refs, streams (SURVEY.md §2.2 P1 — the Parser.getObj object model;
-  * reference Parser/Lexer, pdf.combined.js:48900-49400). Operates directly on
-  * the byte array; `pos` advances as values are consumed.
+/** File-level object syntax: recursive descent over `ContentLexer`'s tokens,
+  * after the reference's Parser.getObj (pdf.combined.js:27307-27379; SURVEY.md
+  * §2.2 P1), with its two-token lookahead for `num gen R` and `>> stream`.
+  * `PdfFile` reads objects, xref tables, the xref-stream and object-stream
+  * headers, `startxref` and trailers through it. Reading starts at `start`.
   */
-final class ObjParser(val bytes: Array[Byte], var pos: Int) {
+final class ObjParser(bytes: Array[Byte], start: Int) {
 
-  private def isWs(c: Int): Boolean =
-    c == 0x20 || c == 0x0a || c == 0x0d || c == 0x09 || c == 0x0c || c == 0x00
-  private def isDelim(c: Int): Boolean =
-    c == '(' || c == ')' || c == '<' || c == '>' || c == '[' || c == ']' ||
-      c == '{' || c == '}' || c == '/' || c == '%'
+  import ObjParser._
 
-  def skipWs(): Unit = {
-    var going = true
-    while (going && pos < bytes.length) {
-      val c = bytes(pos) & 0xff
-      if (isWs(c)) pos += 1
-      else if (c == '%') { // comment to EOL
-        while (pos < bytes.length && bytes(pos) != '\n' && bytes(pos) != '\r') pos += 1
-      } else going = false
-    }
+  private var lexer: ContentLexer = _
+  private var buf1: Tok = Tok.EOF
+  private var buf2: Tok = Tok.EOF
+  seek(start)
+
+  private def seek(at: Int): Unit = {
+    lexer = new ContentLexer(bytes, Set.empty, at)
+    buf1 = lexer.getObj()
+    buf2 = lexer.getObj()
   }
 
-  def peekKeyword(kw: String): Boolean = {
-    skipWs()
-    if (pos + kw.length > bytes.length) return false
-    var i = 0
-    while (i < kw.length) {
-      if (bytes(pos + i) != kw.charAt(i).toByte) return false
-      i += 1
-    }
-    val after = pos + kw.length
-    after >= bytes.length || isWs(bytes(after) & 0xff) || isDelim(bytes(after) & 0xff)
+  private def shift(): Unit = {
+    buf1 = buf2
+    buf2 = lexer.getObj()
   }
 
-  def consumeKeyword(kw: String): Boolean = {
-    if (peekKeyword(kw)) { pos += kw.length; true } else false
+  private def isCmd(t: Tok, c: String): Boolean = t match {
+    case Tok.Cmd(x) => x == c
+    case _ => false
   }
 
-  /** Parse one object. Refs are recognized by `num gen R` lookahead. */
+  /** Consumes the keyword `kw` if it is the next token. */
+  def keyword(kw: String): Boolean =
+    if (isCmd(buf1, kw)) { shift(); true } else false
+
+  /** True when the next token is a number. */
+  def atNumber: Boolean = buf1.isInstanceOf[Tok.Num]
+
+  /** Consumes the next token if it is a number and returns it as an Int;
+    * otherwise returns 0 and consumes nothing. */
+  def int(): Int = buf1 match {
+    case Tok.Num(v) => shift(); v.toInt
+    case _ => 0
+  }
+
+  /** Parse one object. A keyword other than true/false/null reads as null. */
   def parseValue(): PObj = {
-    skipWs()
-    if (pos >= bytes.length) return PNull
-    val c = bytes(pos) & 0xff
-    c match {
-      case '/' => parseName()
-      case '(' => parseLiteralString()
-      case '[' =>
-        pos += 1
+    val t = buf1
+    shift()
+    t match {
+      case Tok.Num(n) =>
+        buf1 match {
+          case Tok.Num(g) if isCmd(buf2, "R") && isRefPart(n) && isRefPart(g) =>
+            shift(); shift()
+            PRef(n.toInt, g.toInt)
+          case _ => PNum(n)
+        }
+      case Tok.Name(n) => PName(n)
+      case Tok.Str(s) => PStr(s.toCharArray.map(_.toByte)) // chars are bytes (octal escapes wrap)
+      case Tok.Bool(b) => PBool(b)
+      case Tok.Cmd("[") =>
         val items = Vector.newBuilder[PObj]
-        skipWs()
-        while (pos < bytes.length && bytes(pos) != ']') {
-          items += parseValue()
-          skipWs()
-        }
-        if (pos < bytes.length) pos += 1 // ']'
+        while (!isCmd(buf1, "]") && buf1 != Tok.EOF) items += parseValue()
+        shift() // ']'
         PArr(items.result())
-      case '<' =>
-        if (pos + 1 < bytes.length && bytes(pos + 1) == '<') parseDictOrStream()
-        else parseHexString()
-      case _ if c == '+' || c == '-' || c == '.' || (c >= '0' && c <= '9') =>
-        parseNumberOrRef()
-      case _ =>
-        if (consumeKeyword("true")) PBool(true)
-        else if (consumeKeyword("false")) PBool(false)
-        else if (consumeKeyword("null")) PNull
-        else { pos += 1; PNull } // unknown byte: skip (never-fail)
+      case Tok.Cmd("<<") => parseDictOrStream()
+      case _ => PNull
     }
   }
 
-  private def parseName(): PName = {
-    pos += 1 // '/'
-    val sb = new StringBuilder
-    while (pos < bytes.length && !isWs(bytes(pos) & 0xff) && !isDelim(bytes(pos) & 0xff)) {
-      val c = bytes(pos) & 0xff
-      if (c == '#' && pos + 2 < bytes.length) {
-        val h = Character.digit(bytes(pos + 1), 16)
-        val l = Character.digit(bytes(pos + 2), 16)
-        if (h >= 0 && l >= 0) { sb.append(((h << 4) | l).toChar); pos += 3 }
-        else { sb.append(c.toChar); pos += 1 }
-      } else { sb.append(c.toChar); pos += 1 }
-    }
-    PName(sb.toString)
-  }
+  private def isRefPart(v: Double): Boolean = v >= 0 && v == math.floor(v) && v <= Int.MaxValue
 
-  private def parseLiteralString(): PStr = {
-    pos += 1 // '('
-    val out = new java.io.ByteArrayOutputStream()
-    var depth = 1
-    while (pos < bytes.length && depth > 0) {
-      val c = bytes(pos) & 0xff
-      c match {
-        case '\\' =>
-          pos += 1
-          if (pos < bytes.length) {
-            val e = bytes(pos) & 0xff
-            e match {
-              case 'n' => out.write('\n'); pos += 1
-              case 'r' => out.write('\r'); pos += 1
-              case 't' => out.write('\t'); pos += 1
-              case 'b' => out.write('\b'); pos += 1
-              case 'f' => out.write('\f'); pos += 1
-              case '\r' => // line continuation
-                pos += 1
-                if (pos < bytes.length && bytes(pos) == '\n') pos += 1
-              case '\n' => pos += 1
-              case d if d >= '0' && d <= '7' =>
-                var v = 0
-                var n = 0
-                while (n < 3 && pos < bytes.length && bytes(pos) >= '0' && bytes(pos) <= '7') {
-                  v = (v << 3) | (bytes(pos) - '0'); pos += 1; n += 1
-                }
-                out.write(v & 0xff)
-              case other => out.write(other); pos += 1
-            }
-          }
-        case '(' => depth += 1; out.write(c); pos += 1
-        case ')' =>
-          depth -= 1
-          if (depth > 0) out.write(c)
-          pos += 1
-        case _ => out.write(c); pos += 1
-      }
-    }
-    PStr(out.toByteArray)
-  }
-
-  private def parseHexString(): PStr = {
-    pos += 1 // '<'
-    val out = new java.io.ByteArrayOutputStream()
-    var hi = -1
-    var going = true
-    while (going && pos < bytes.length) {
-      val c = bytes(pos) & 0xff
-      if (c == '>') { going = false; pos += 1 }
-      else {
-        val d = Character.digit(c, 16)
-        if (d >= 0) {
-          if (hi < 0) hi = d else { out.write((hi << 4) | d); hi = -1 }
-        }
-        pos += 1
-      }
-    }
-    if (hi >= 0) out.write(hi << 4)
-    PStr(out.toByteArray)
-  }
-
-  private def parseNumberOrRef(): PObj = {
-    val save = pos
-    val n1 = parseNumber()
-    if (n1.value >= 0 && n1.value == math.floor(n1.value)) {
-      val afterFirst = pos
-      skipWs()
-      val save2 = pos
-      if (pos < bytes.length && bytes(pos) >= '0' && bytes(pos) <= '9') {
-        val n2 = parseNumber()
-        skipWs()
-        if (pos < bytes.length && bytes(pos) == 'R' &&
-            (pos + 1 >= bytes.length || isWs(bytes(pos + 1) & 0xff) || isDelim(bytes(pos + 1) & 0xff))) {
-          pos += 1
-          return PRef(n1.value.toInt, n2.value.toInt)
-        }
-      }
-      pos = afterFirst
-      val _ = save2
-    }
-    val _ = save
-    n1
-  }
-
-  def parseNumber(): PNum = {
-    skipWs()
-    val start = pos
-    if (pos < bytes.length && (bytes(pos) == '+' || bytes(pos) == '-')) pos += 1
-    while (pos < bytes.length && ((bytes(pos) >= '0' && bytes(pos) <= '9') || bytes(pos) == '.')) pos += 1
-    val s = new String(bytes, start, pos - start, java.nio.charset.StandardCharsets.ISO_8859_1)
-    PNum(try s.toDouble catch { case _: NumberFormatException => 0.0 })
-  }
-
-  /** `<< ... >>` possibly followed by `stream`. Raw stream bytes are sliced by
-    * /Length when it is a direct number; an indirect /Length is resolved later
-    * by PdfFile (which re-slices against `endstream` as a fallback). */
+  /** After `<<`: entries up to `>>`, then a stream when `stream` follows.
+    * Raw stream bytes are sliced by /Length when it is a direct number and
+    * `endstream` follows there; otherwise up to the next `endstream` (an
+    * indirect /Length is resolved later by PdfFile). */
   private def parseDictOrStream(): PObj = {
-    pos += 2 // '<<'
     val entries = Map.newBuilder[String, PObj]
-    skipWs()
-    while (pos + 1 < bytes.length && !(bytes(pos) == '>' && bytes(pos + 1) == '>')) {
-      parseValue() match {
-        case PName(key) => entries += key -> parseValue()
-        case _ => () // junk key: value already consumed by next loop turn
-      }
-      skipWs()
+    while (!isCmd(buf1, ">>") && buf1 != Tok.EOF) buf1 match {
+      case Tok.Name(key) =>
+        shift()
+        entries += key -> parseValue()
+      case _ => parseValue() // not a key: read and drop a value
     }
-    if (pos + 1 < bytes.length) pos += 2 // '>>'
     val dict = PDict(entries.result())
-    val save = pos
-    skipWs()
-    if (consumeKeyword("stream")) {
-      // EOL after 'stream': CRLF or LF (spec 7.3.8.1)
-      if (pos < bytes.length && bytes(pos) == '\r') pos += 1
-      if (pos < bytes.length && bytes(pos) == '\n') pos += 1
-      val dataStart = pos
-      val len = dict.get("Length") match {
-        case Some(PNum(v)) => v.toInt
-        case _ => -1 // indirect or missing: scan for endstream
-      }
-      val dataEnd =
-        if (len >= 0 && dataStart + len <= bytes.length &&
-            endstreamNear(dataStart + len)) dataStart + len
-        else scanEndstream(dataStart)
-      pos = dataEnd
-      skipWs()
-      consumeKeyword("endstream")
-      PStream(dict, java.util.Arrays.copyOfRange(bytes, dataStart, dataEnd))
-    } else { pos = save; dict }
+    if (!isCmd(buf2, "stream")) { shift(); return dict } // '>>'
+    // buf2 is `stream`: the lexer stands right after the keyword.
+    // EOL after 'stream': CRLF or LF (spec 7.3.8.1)
+    var dataStart = lexer.offset
+    if (dataStart < bytes.length && bytes(dataStart) == '\r') dataStart += 1
+    if (dataStart < bytes.length && bytes(dataStart) == '\n') dataStart += 1
+    val len = dict.get("Length") match {
+      case Some(PNum(v)) => v.toInt
+      case _ => -1 // indirect or missing: find endstream
+    }
+    val fits = len >= 0 && dataStart + len <= bytes.length
+    if (fits) seek(dataStart + len)
+    val dataEnd =
+      if (fits && isCmd(buf1, "endstream")) dataStart + len
+      else { val e = endstreamBefore(dataStart); seek(e); e }
+    keyword("endstream")
+    PStream(dict, java.util.Arrays.copyOfRange(bytes, dataStart, dataEnd))
   }
 
-  private def endstreamNear(p: Int): Boolean = {
-    var i = p
-    val limit = math.min(bytes.length, p + 4)
-    while (i < limit && (bytes(i) == '\r' || bytes(i) == '\n' || bytes(i) == ' ')) i += 1
-    i + 9 <= bytes.length && new String(bytes, i, 9, java.nio.charset.StandardCharsets.ISO_8859_1) == "endstream"
-  }
-
-  private def scanEndstream(from: Int): Int = {
-    val target = "endstream".getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
+  /** The first `endstream` at or after `from`, less at most one EOL before
+    * it (the end of the file when there is none). Stream data is not PDF
+    * syntax, so this is a search, not a tokenization. */
+  private def endstreamBefore(from: Int): Int = {
     var i = from
-    while (i + target.length <= bytes.length) {
-      var j = 0
-      while (j < target.length && bytes(i + j) == target(j)) j += 1
-      if (j == target.length) {
-        // strip at most one EOL before the keyword
+    while (i + Endstream.length <= bytes.length) {
+      if (java.util.Arrays.equals(bytes, i, i + Endstream.length, Endstream, 0, Endstream.length)) {
         var e = i
         if (e > from && bytes(e - 1) == '\n') e -= 1
         if (e > from && bytes(e - 1) == '\r') e -= 1
@@ -246,6 +125,10 @@ final class ObjParser(val bytes: Array[Byte], var pos: Int) {
     }
     bytes.length
   }
+}
+
+object ObjParser {
+  private val Endstream = "endstream".getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
 }
 
 /** Cross-reference machinery + object fetch (SURVEY.md §2.1 S3-S9): startxref
@@ -340,12 +223,10 @@ final class PdfFile(val bytes: Array[Byte]) {
 
   private def parseObjectAt(offset: Int, expectNum: Int): PObj = {
     val p = new ObjParser(bytes, offset)
-    p.skipWs()
-    val n = p.parseNumber()
-    p.skipWs()
-    val gen = p.parseNumber().value.toInt
-    if (!p.consumeKeyword("obj")) {
-      if (!recovered && n.value.toInt != expectNum) { recoverScan(); return fetchNoCache(expectNum) }
+    val n = p.int()
+    val gen = p.int()
+    if (!p.keyword("obj")) {
+      if (!recovered && n != expectNum) { recoverScan(); return fetchNoCache(expectNum) }
       return PNull
     }
     var obj = p.parseValue()
@@ -388,9 +269,9 @@ final class PdfFile(val bytes: Array[Byte]) {
         var off = -1
         var i = 0
         while (i <= idx) {
-          hp.skipWs(); hp.parseNumber() // obj num
-          hp.skipWs(); val o = hp.parseNumber()
-          if (i == idx) off = o.value.toInt
+          hp.int() // obj num
+          val o = hp.int()
+          if (i == idx) off = o
           i += 1
         }
         if (off < 0) PNull
@@ -419,42 +300,29 @@ final class PdfFile(val bytes: Array[Byte]) {
     val s = new String(bytes, tail, bytes.length - tail, java.nio.charset.StandardCharsets.ISO_8859_1)
     val i = s.lastIndexOf("startxref")
     if (i < 0) return -1
-    val p = new ObjParser(bytes, tail + i + "startxref".length)
-    p.skipWs()
-    p.parseNumber().value.toInt
+    new ObjParser(bytes, tail + i + "startxref".length).int()
   }
 
   /** Parse one xref section (table or stream) at `offset`; returns /Prev or -1. */
   private def parseXRefSection(offset: Int): Int = {
     val p = new ObjParser(bytes, offset)
-    if (p.consumeKeyword("xref")) {
-      // classic table: subsections "first count" then 20-byte entries
-      p.skipWs()
-      var progressing = true
-      while (progressing && !p.peekKeyword("trailer") && p.pos < bytes.length) {
-        val before = p.pos
-        val first = p.parseNumber().value.toInt
-        if (p.pos == before) progressing = false
-        else {
-        p.skipWs()
-        val count = p.parseNumber().value.toInt
-        p.skipWs()
+    if (p.keyword("xref")) {
+      // classic table: subsections "first count", then "offset gen n|f" entries
+      while (p.atNumber) {
+        val first = p.int()
+        val count = p.int()
         var i = 0
-        while (i < count) {
-          val off = p.parseNumber().value.toInt
-          p.skipWs()
-          p.parseNumber() // gen
-          p.skipWs()
-          val kind = if (p.pos < bytes.length) bytes(p.pos).toChar else 'f'
-          p.pos += 1
+        while (i < count && p.atNumber) {
+          val off = p.int()
+          p.int() // gen
           val num = first + i
-          if (kind == 'n' && !entries.contains(num)) entries(num) = Right(off)
-          p.skipWs()
+          val inUse = p.keyword("n")
+          if (!inUse) p.keyword("f")
+          if (inUse && !entries.contains(num)) entries(num) = Right(off)
           i += 1
         }
-        }
       }
-      if (p.consumeKeyword("trailer")) {
+      if (p.keyword("trailer")) {
         p.parseValue() match {
           case d: PDict =>
             mergeTrailer(d)
@@ -474,8 +342,8 @@ final class PdfFile(val bytes: Array[Byte]) {
       -1
     } else {
       // xref stream: "N G obj << /Type /XRef ... >> stream"
-      p.skipWs(); p.parseNumber(); p.skipWs(); p.parseNumber()
-      if (!p.consumeKeyword("obj")) return -1
+      p.int(); p.int()
+      if (!p.keyword("obj")) return -1
       p.parseValue() match {
         case s: PStream =>
           val dict = s.dict

@@ -143,10 +143,9 @@ object Synth {
   def expectedLines(text: String): String =
     text.split(" ", -1).grouped(WordsPerLine).map(_.mkString(" ")).mkString("\n")
 
-  /** Deterministic conv/turn key for a doc id (shared by Spark side and oracle
+  /** Deterministic conv key for a doc id (shared by Spark side and oracle
     * SQL — keep in sync with the oracles in graft.entry). */
   def convId(docId: Long, convs: Int = 50): String = f"conv_${docId % convs}%04d"
-  def turnIdx(docId: Long, convs: Int = 50): Int = (docId / convs).toInt
 
   // --- seeded free-standing corpus (skew/bench fixture, FIXTURES.md §6) ---
 

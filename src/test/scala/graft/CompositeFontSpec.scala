@@ -14,37 +14,7 @@ import java.nio.charset.StandardCharsets.ISO_8859_1
   */
 class CompositeFontSpec extends AnyFunSuite {
 
-  private val toUnicodeCMap =
-    """/CIDInit /ProcSet findresource begin
-      |begincmap
-      |2 beginbfchar
-      |<0001> <4F60>
-      |<0002> <597D>
-      |endbfchar
-      |1 beginbfrange
-      |<000A> <000C> <0041>
-      |endbfrange
-      |endcmap
-      |end""".stripMargin
-
-  private val content =
-    "BT /F1 12 Tf 72 720 Td <000100020001> Tj 0 -20 Td <000A000B000C> Tj ET"
-
-  private def pdfBytes: Array[Byte] = PdfWriter(Seq(
-    "<< /Type /Catalog /Pages 2 0 R >>",
-    "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-    "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-      "/Resources << /Font << /F1 4 0 R >> >> /Contents 8 0 R >>",
-    "<< /Type /Font /Subtype /Type0 /BaseFont /TestCID " +
-      "/Encoding /Identity-H /DescendantFonts [5 0 R] /ToUnicode 7 0 R >>",
-    "<< /Type /Font /Subtype /CIDFontType2 /BaseFont /TestCID " +
-      "/CIDSystemInfo << /Registry (Adobe) /Ordering (Identity) /Supplement 0 >> " +
-      "/FontDescriptor 6 0 R /DW 1000 /W [1 [500 600] 10 12 750] >>",
-    "<< /Type /FontDescriptor /FontName /TestCID /Flags 4 " +
-      "/FontBBox [0 0 1000 1000] /ItalicAngle 0 /Ascent 800 /Descent -200 " +
-      "/CapHeight 700 /StemV 80 >>",
-    PdfWriter.stream("", toUnicodeCMap.getBytes(ISO_8859_1)),
-    PdfWriter.stream("", content.getBytes(ISO_8859_1))))
+  import CompositeFontSpec._
 
   test("Identity-H composite font: 2-byte charcodes, CID widths, ToUnicode text") {
     val doc = PdfDocument.open(pdfBytes)
@@ -118,61 +88,6 @@ class CompositeFontSpec extends AnyFunSuite {
     assert(spec.vmetrics(2).toSeq == Seq(-1000.0, 300.0, 880.0)) // DW2 default, vx = width/2
   }
 
-  // ── embedded CID CMap (round 5): the CJK shape — codes ≠ CIDs ─────────────
-
-  private val cidCMapStream =
-    """%!PS-Adobe-3.0 Resource-CMap
-      |/CIDInit /ProcSet findresource begin
-      |12 dict begin
-      |begincmap
-      |/CIDSystemInfo << /Registry (Test) /Ordering (CJK) /Supplement 0 >> def
-      |/CMapName /Test-CJK-H def
-      |/CMapType 1 def
-      |1 begincodespacerange
-      |<0000> <FFFF>
-      |endcodespacerange
-      |2 begincidrange
-      |<4E00> <4EFF> 100
-      |<3041> <3096> 500
-      |endcidrange
-      |1 begincidchar
-      |<0020> 1
-      |endcidchar
-      |endcmap
-      |CMapName currentdict /CMap defineresource pop
-      |end
-      |end""".stripMargin
-
-  private val cjkToUnicode =
-    """/CIDInit /ProcSet findresource begin
-      |begincmap
-      |1 beginbfrange
-      |<4E00> <4EFF> <4E00>
-      |endbfrange
-      |1 beginbfchar
-      |<3042> <3042>
-      |endbfchar
-      |endcmap
-      |end""".stripMargin
-
-  private def cjkPdfBytes: Array[Byte] = PdfWriter(Seq(
-    "<< /Type /Catalog /Pages 2 0 R >>",
-    "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
-    "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-      "/Resources << /Font << /F1 4 0 R >> >> /Contents 8 0 R >>",
-    "<< /Type /Font /Subtype /Type0 /BaseFont /TestCJK " +
-      "/Encoding 9 0 R /DescendantFonts [5 0 R] /ToUnicode 7 0 R >>",
-    // /W keyed by the MAPPED CIDs: 4E2D→145, 4E8B→239, 3042→501
-    "<< /Type /Font /Subtype /CIDFontType2 /BaseFont /TestCJK " +
-      "/CIDSystemInfo << /Registry (Test) /Ordering (CJK) /Supplement 0 >> " +
-      "/FontDescriptor 6 0 R /DW 1000 /W [145 [950] 239 [900] 501 [880]] >>",
-    "<< /Type /FontDescriptor /FontName /TestCJK /Flags 4 " +
-      "/FontBBox [0 0 1000 1000] /ItalicAngle 0 /Ascent 800 /Descent -200 " +
-      "/CapHeight 700 /StemV 80 >>",
-    PdfWriter.stream("", cjkToUnicode.getBytes(ISO_8859_1)),
-    PdfWriter.stream("", "BT /F1 12 Tf 72 720 Td <4E2D4E8B3042> Tj ET".getBytes(ISO_8859_1)),
-    PdfWriter.stream("", cidCMapStream.getBytes(ISO_8859_1))))
-
   test("embedded CID CMap: codes map through cidrange/cidchar to /W widths") {
     val doc = PdfDocument.open(cjkPdfBytes)
     val runs = doc.evalPage(0).runs
@@ -233,4 +148,96 @@ class CompositeFontSpec extends AnyFunSuite {
     // adds |27|
     assert(math.abs(first.height - 31.0) < 1e-6, s"height=${first.height}")
   }
+}
+
+/** The spec's documents and CMap streams, shared with the object and CMap
+  * pins (`ObjectPinSpec`). */
+object CompositeFontSpec {
+
+  private[graft] val toUnicodeCMap =
+    """/CIDInit /ProcSet findresource begin
+      |begincmap
+      |2 beginbfchar
+      |<0001> <4F60>
+      |<0002> <597D>
+      |endbfchar
+      |1 beginbfrange
+      |<000A> <000C> <0041>
+      |endbfrange
+      |endcmap
+      |end""".stripMargin
+
+  private[graft] val content =
+    "BT /F1 12 Tf 72 720 Td <000100020001> Tj 0 -20 Td <000A000B000C> Tj ET"
+
+  private[graft] def pdfBytes: Array[Byte] = PdfWriter(Seq(
+    "<< /Type /Catalog /Pages 2 0 R >>",
+    "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+    "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
+      "/Resources << /Font << /F1 4 0 R >> >> /Contents 8 0 R >>",
+    "<< /Type /Font /Subtype /Type0 /BaseFont /TestCID " +
+      "/Encoding /Identity-H /DescendantFonts [5 0 R] /ToUnicode 7 0 R >>",
+    "<< /Type /Font /Subtype /CIDFontType2 /BaseFont /TestCID " +
+      "/CIDSystemInfo << /Registry (Adobe) /Ordering (Identity) /Supplement 0 >> " +
+      "/FontDescriptor 6 0 R /DW 1000 /W [1 [500 600] 10 12 750] >>",
+    "<< /Type /FontDescriptor /FontName /TestCID /Flags 4 " +
+      "/FontBBox [0 0 1000 1000] /ItalicAngle 0 /Ascent 800 /Descent -200 " +
+      "/CapHeight 700 /StemV 80 >>",
+    PdfWriter.stream("", toUnicodeCMap.getBytes(ISO_8859_1)),
+    PdfWriter.stream("", content.getBytes(ISO_8859_1))))
+
+  // ── embedded CID CMap (round 5): the CJK shape — codes ≠ CIDs ─────────────
+
+  private[graft] val cidCMapStream =
+    """%!PS-Adobe-3.0 Resource-CMap
+      |/CIDInit /ProcSet findresource begin
+      |12 dict begin
+      |begincmap
+      |/CIDSystemInfo << /Registry (Test) /Ordering (CJK) /Supplement 0 >> def
+      |/CMapName /Test-CJK-H def
+      |/CMapType 1 def
+      |1 begincodespacerange
+      |<0000> <FFFF>
+      |endcodespacerange
+      |2 begincidrange
+      |<4E00> <4EFF> 100
+      |<3041> <3096> 500
+      |endcidrange
+      |1 begincidchar
+      |<0020> 1
+      |endcidchar
+      |endcmap
+      |CMapName currentdict /CMap defineresource pop
+      |end
+      |end""".stripMargin
+
+  private[graft] val cjkToUnicode =
+    """/CIDInit /ProcSet findresource begin
+      |begincmap
+      |1 beginbfrange
+      |<4E00> <4EFF> <4E00>
+      |endbfrange
+      |1 beginbfchar
+      |<3042> <3042>
+      |endbfchar
+      |endcmap
+      |end""".stripMargin
+
+  private[graft] def cjkPdfBytes: Array[Byte] = PdfWriter(Seq(
+    "<< /Type /Catalog /Pages 2 0 R >>",
+    "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+    "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
+      "/Resources << /Font << /F1 4 0 R >> >> /Contents 8 0 R >>",
+    "<< /Type /Font /Subtype /Type0 /BaseFont /TestCJK " +
+      "/Encoding 9 0 R /DescendantFonts [5 0 R] /ToUnicode 7 0 R >>",
+    // /W keyed by the MAPPED CIDs: 4E2D→145, 4E8B→239, 3042→501
+    "<< /Type /Font /Subtype /CIDFontType2 /BaseFont /TestCJK " +
+      "/CIDSystemInfo << /Registry (Test) /Ordering (CJK) /Supplement 0 >> " +
+      "/FontDescriptor 6 0 R /DW 1000 /W [145 [950] 239 [900] 501 [880]] >>",
+    "<< /Type /FontDescriptor /FontName /TestCJK /Flags 4 " +
+      "/FontBBox [0 0 1000 1000] /ItalicAngle 0 /Ascent 800 /Descent -200 " +
+      "/CapHeight 700 /StemV 80 >>",
+    PdfWriter.stream("", cjkToUnicode.getBytes(ISO_8859_1)),
+    PdfWriter.stream("", "BT /F1 12 Tf 72 720 Td <4E2D4E8B3042> Tj ET".getBytes(ISO_8859_1)),
+    PdfWriter.stream("", cidCMapStream.getBytes(ISO_8859_1))))
 }

@@ -24,6 +24,8 @@ import java.nio.charset.StandardCharsets.ISO_8859_1
   */
 class ContentStreamPinSpec extends AnyFunSuite {
 
+  import ContentStreamPinSpec._
+
   private def md5(s: String): String =
     java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
       .map(x => f"${x & 0xff}%02x").mkString
@@ -102,9 +104,58 @@ class ContentStreamPinSpec extends AnyFunSuite {
   private def evalDump(runs: Seq[GlyphRun], errors: Int): String =
     (runs.map(runKey) :+ s"errors=$errors").mkString("\n")
 
+  private def check(name: String, dump: => String, pinned: String): Unit = {
+    val d = dump
+    assert(md5(d) == pinned, s"$name digest moved; dump:\n$d")
+  }
+
+  test("content streams: evaluate (fragment dialect) pin") {
+    check("evaluate", streams.map { s =>
+      val r = ContentEvaluator.evaluate(bytes(s))
+      evalDump(r.runs, r.errors)
+    }.mkString("\n--\n"), "7db010f77dd48569fabd625aeae68e63")
+  }
+
+  test("content streams: evaluatePage with resources and fake spaces pin") {
+    check("evaluatePage", streams.map { s =>
+      val r = ContentEvaluator.evaluatePage(bytes(s), res, true)
+      evalDump(r.runs, r.errors)
+    }.mkString("\n--\n"), "6a2fc65b1ee365ea3883c4ed51055d8d")
+  }
+
+  test("content streams: text items pin") {
+    check("items", streams.map { s =>
+      TextItems.extract(bytes(s), res).map(itemKey).mkString("\n")
+    }.mkString("\n--\n"), "3adc4991bfaf4a3cb270d6d590d54370")
+  }
+
+  test("synthetic PDFs: page runs, errors, items and document text pin") {
+    check("pdfs", pdfs.map { case (name, b) =>
+      val doc = PdfDocument.open(b)
+      val pages = doc.pages.indices.map { i =>
+        val r = doc.evalPage(i)
+        Seq(s"page $i", evalDump(r.runs, r.errors),
+          doc.textContentItems(i).map(itemKey).mkString("\n")).mkString("\n")
+      }
+      (s"== $name" +: pages :+ doc.extractText).mkString("\n")
+    }.mkString("\n"), "cf7edac7d674964ebda4880d8843eea1")
+  }
+
+  test("re with a non-numeric operand: same runs, no longer an error") {
+    // re paints no text, so the evaluator never reads its operands: a name
+    // among them is not an error (kept apart from the digests above)
+    val r = ContentEvaluator.evaluate(bytes("10 20 /x 2 re f BT /F1 10 Tf (t) Tj ET"))
+    assert(r.runs.map(_.text) == Vector("t"))
+    assert(r.errors == 0)
+  }
+}
+
+/** The pinned PDFs, shared with the object pin (`ObjectPinSpec`). */
+object ContentStreamPinSpec {
+
   private def bytes(s: String): Array[Byte] = s.getBytes(ISO_8859_1)
 
-  private val hebrewCMap =
+  private[graft] val hebrewCMap =
     """/CIDInit /ProcSet findresource begin
       |begincmap
       |1 begincodespacerange <00> <ff> endcodespacerange
@@ -188,55 +239,10 @@ class ContentStreamPinSpec extends AnyFunSuite {
         "BT /F1 12 Tf 72 720 Td <000100020001> Tj 0 -20 Td [<000A> -500 <000B000C>] TJ ET"))))
   }
 
-  private lazy val pdfs: Seq[(String, Array[Byte])] = Seq(
+  private[graft] lazy val pdfs: Seq[(String, Array[Byte])] = Seq(
     "mixed" -> mixedPdf,
     "composite" -> compositePdf,
     "whitespace" -> Synth.pdfWithWhitespaceText(),
     "attachments" -> Synth.pdfWithAttachments(),
     "labels" -> Synth.pdfWithCatalogExtra(2, "/PageLabels << /Nums [0 << /S /r >>] >>"))
-
-  private def check(name: String, dump: => String, pinned: String): Unit = {
-    val d = dump
-    assert(md5(d) == pinned, s"$name digest moved; dump:\n$d")
-  }
-
-  test("content streams: evaluate (fragment dialect) pin") {
-    check("evaluate", streams.map { s =>
-      val r = ContentEvaluator.evaluate(bytes(s))
-      evalDump(r.runs, r.errors)
-    }.mkString("\n--\n"), "7db010f77dd48569fabd625aeae68e63")
-  }
-
-  test("content streams: evaluatePage with resources and fake spaces pin") {
-    check("evaluatePage", streams.map { s =>
-      val r = ContentEvaluator.evaluatePage(bytes(s), res, true)
-      evalDump(r.runs, r.errors)
-    }.mkString("\n--\n"), "6a2fc65b1ee365ea3883c4ed51055d8d")
-  }
-
-  test("content streams: text items pin") {
-    check("items", streams.map { s =>
-      TextItems.extract(bytes(s), res).map(itemKey).mkString("\n")
-    }.mkString("\n--\n"), "3adc4991bfaf4a3cb270d6d590d54370")
-  }
-
-  test("synthetic PDFs: page runs, errors, items and document text pin") {
-    check("pdfs", pdfs.map { case (name, b) =>
-      val doc = PdfDocument.open(b)
-      val pages = doc.pages.indices.map { i =>
-        val r = doc.evalPage(i)
-        Seq(s"page $i", evalDump(r.runs, r.errors),
-          doc.textContentItems(i).map(itemKey).mkString("\n")).mkString("\n")
-      }
-      (s"== $name" +: pages :+ doc.extractText).mkString("\n")
-    }.mkString("\n"), "cf7edac7d674964ebda4880d8843eea1")
-  }
-
-  test("re with a non-numeric operand: same runs, no longer an error") {
-    // re paints no text, so the evaluator never reads its operands: a name
-    // among them is not an error (kept apart from the digests above)
-    val r = ContentEvaluator.evaluate(bytes("10 20 /x 2 re f BT /F1 10 Tf (t) Tj ET"))
-    assert(r.runs.map(_.text) == Vector("t"))
-    assert(r.errors == 0)
-  }
 }

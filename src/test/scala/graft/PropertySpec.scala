@@ -13,6 +13,8 @@ import java.nio.charset.StandardCharsets
 
 class PropertySpec extends AnyFunSuite {
 
+  import PropertySpec.Written
+
   /** Run a scalacheck property and fail the ScalaTest test on falsification
     * (no scalatestplus bridge in the offline cache — drive scalacheck directly).
     *
@@ -58,6 +60,67 @@ class PropertySpec extends AnyFunSuite {
       val toks = new ContentLexer(
         payload.getBytes(StandardCharsets.ISO_8859_1), OpTable.knownCommands).tokens()
       toks == Vector(Tok.Str(s))
+    })
+  }
+
+  private def writtenObj(depth: Int): Gen[Written] = {
+    import graft.pdf.PObj._
+    def hex2(b: Int): String = f"${b & 0xff}%02X"
+    val name = Gen.nonEmptyListOf(Gen.choose(1, 255)).map { cs =>
+      Written(PName(cs.map(_.toChar).mkString), "/" + cs.map { c =>
+        if (c > 0x20 && c < 0x7f && ContentLexer.specialChars(c) == 0 && c != '#') c.toChar.toString
+        else "#" + hex2(c)
+      }.mkString)
+    }
+    // literal string: plain ASCII, backslashes, bytes 0x80-0xFF as octal
+    // escapes, and balanced nested parens; (value bytes, written text)
+    def literal(d: Int): Gen[(Seq[Byte], String)] = {
+      val plain = Gen.oneOf((0x20 to 0x7e).filterNot(c => c == '(' || c == ')' || c == '\\'))
+        .map(c => (Seq(c.toByte), c.toChar.toString))
+      val backslash = Gen.const((Seq('\\'.toByte), "\\\\"))
+      val high = Gen.choose(0x80, 0xff).map(c => (Seq(c.toByte), "\\" + c.toOctalString))
+      val nested = if (d == 0) plain else literal(d - 1).map { case (b, t) =>
+        (('('.toByte +: b) :+ ')'.toByte, s"($t)")
+      }
+      Gen.choose(0, 6).flatMap(Gen.listOfN(_, Gen.frequency(6 -> plain, 1 -> backslash, 2 -> high, 1 -> nested)))
+        .map(parts => (parts.flatMap(_._1), parts.map(_._2).mkString))
+    }
+    val literalStr = literal(2).map { case (b, t) => Written(PStr(b.toArray), s"($t)") }
+    val hexStr = Gen.listOf(Gen.choose(0, 255)).map(bs =>
+      Written(PStr(bs.map(_.toByte).toArray), bs.map(hex2).mkString("<", "", ">")))
+    // at most 9 significant digits, written in plain decimal notation
+    val number = for {
+      neg <- Gen.oneOf(false, true)
+      digits <- Gen.choose(1, 9).flatMap(Gen.listOfN(_, Gen.numChar)).map(_.mkString)
+      point <- Gen.choose(0, digits.length)
+    } yield {
+      val text = (if (neg) "-" else "") + (if (point == digits.length) digits
+        else digits.substring(0, point) + "." + digits.substring(point))
+      Written(PNum(text.toDouble), text)
+    }
+    val ref = for { n <- Gen.choose(0, 99999); g <- Gen.choose(0, 65535) } yield Written(PRef(n, g), s"$n $g R")
+    val bool = Gen.oneOf(true, false).map(b => Written(PBool(b), b.toString))
+    val leaf = Gen.oneOf(name, literalStr, hexStr, number, ref, bool, Gen.const(Written(PNull, "null")))
+    if (depth == 0) leaf
+    else {
+      val items = Gen.choose(0, 4).flatMap(Gen.listOfN(_, writtenObj(depth - 1)))
+      val array = items.map(xs => Written(PArr(xs.map(_.obj).toVector), xs.map(_.text).mkString("[", " ", "]")))
+      val dict = Gen.choose(0, 4).flatMap(Gen.listOfN(_, Gen.zip(name, writtenObj(depth - 1))))
+        .map(_.groupBy(_._1.obj).map(_._2.head).toSeq)
+        .map { kvs =>
+          Written(PDict(kvs.map { case (k, v) => k.obj.asInstanceOf[PName].name -> v.obj }.toMap),
+            kvs.map { case (k, v) => s"${k.text} ${v.text}" }.mkString("<< ", " ", " >>"))
+        }
+      Gen.frequency(3 -> leaf, 1 -> array, 1 -> dict)
+    }
+  }
+
+  test("object syntax round-trip: ObjParser reads back what a writer spells") {
+    check(Prop.forAll(writtenObj(4)) { (w: Written) =>
+      val parsed = new graft.pdf.ObjParser((w.text + "\n").getBytes(StandardCharsets.ISO_8859_1), 0).parseValue()
+      val ok = ObjectPinSpec.render(parsed) == ObjectPinSpec.render(w.obj)
+      if (!ok) println(s"object round-trip failed on: ${w.text}")
+      ok
     })
   }
 
@@ -170,4 +233,10 @@ class PropertySpec extends AnyFunSuite {
       r != null && r.text != null
     })
   }
+}
+
+object PropertySpec {
+
+  /** One generated object: the value and how a writer spells it. */
+  final case class Written(obj: graft.pdf.PObj, text: String)
 }

@@ -13,13 +13,41 @@ import java.nio.charset.StandardCharsets.ISO_8859_1
   */
 class XrefStreamSpec extends AnyFunSuite {
 
+  import XrefStreamSpec._
+
+  test("xref stream + object stream document parses and extracts") {
+    val bytes = xrefStreamPdf
+    val doc = PdfDocument.open(bytes)
+    assert(doc.pages.length == 1)
+    val runs = doc.evalPage(0).runs
+    assert(runs.map(_.text) == Vector("xref stream works"))
+    assert(doc.pageText(0).text == "xref stream works")
+    // the same text through the call extract_turn runs on a whole-PDF payload
+    assert(graft.extract.Extractor.extract(new String(bytes, ISO_8859_1)).text ==
+      "xref stream works")
+  }
+
+  test("self/mutual ObjStm cycles degrade to PNull instead of StackOverflowError") {
+    val bytes = objStmCyclePdf
+
+    // never-fail: open must not throw (a StackOverflowError is not NonFatal
+    // and would escape every salvage catch)
+    val doc = PdfDocument.open(bytes)
+    assert(doc.pages.isEmpty)
+  }
+}
+
+/** The spec's files, shared with the object pin (`ObjectPinSpec`). */
+object XrefStreamSpec {
+
   /** One /W [1 4 2] xref-stream row: type, 4-byte field 2, 2-byte field 3. */
   private def row(t: Int, a: Int, b: Int): Array[Byte] =
     Array(t.toByte,
       ((a >> 24) & 0xff).toByte, ((a >> 16) & 0xff).toByte, ((a >> 8) & 0xff).toByte, (a & 0xff).toByte,
       ((b >> 8) & 0xff).toByte, (b & 0xff).toByte)
 
-  test("xref stream + object stream document parses and extracts") {
+  /** Catalog, pages and page in an /ObjStm, indexed by an xref stream. */
+  private[graft] def xrefStreamPdf: Array[Byte] = {
     val out = new ByteArrayOutputStream()
     def offset: Int = out.size
     def write(s: String): Unit = out.write(s.getBytes(ISO_8859_1))
@@ -60,18 +88,11 @@ class XrefStreamSpec extends AnyFunSuite {
     out.write(rows)
     write("\nendstream\nendobj\n")
     write(s"startxref\n$off6\n%%EOF\n")
-
-    val doc = PdfDocument.open(out.toByteArray)
-    assert(doc.pages.length == 1)
-    val runs = doc.evalPage(0).runs
-    assert(runs.map(_.text) == Vector("xref stream works"))
-    assert(doc.pageText(0).text == "xref stream works")
-    // the same text through the call extract_turn runs on a whole-PDF payload
-    assert(graft.extract.Extractor.extract(new String(out.toByteArray, ISO_8859_1)).text ==
-      "xref stream works")
+    out.toByteArray
   }
 
-  test("self/mutual ObjStm cycles degrade to PNull instead of StackOverflowError") {
+  /** An xref stream whose ObjStm entries point at themselves or each other. */
+  private[graft] def objStmCyclePdf: Array[Byte] = {
     val out = new ByteArrayOutputStream()
     def write(s: String): Unit = out.write(s.getBytes(ISO_8859_1))
     write("%PDF-1.5\n")
@@ -89,10 +110,6 @@ class XrefStreamSpec extends AnyFunSuite {
     out.write(rows)
     write("\nendstream\nendobj\n")
     write(s"startxref\n$offX\n%%EOF\n")
-
-    // never-fail: open must not throw (a StackOverflowError is not NonFatal
-    // and would escape every salvage catch)
-    val doc = PdfDocument.open(out.toByteArray)
-    assert(doc.pages.isEmpty)
+    out.toByteArray
   }
 }

@@ -13,8 +13,20 @@ class PdfWriterSpec extends AnyFunSuite {
   private def md5(b: Array[Byte]): String =
     java.security.MessageDigest.getInstance("MD5").digest(b).map(x => f"${x & 0xff}%02x").mkString
 
+  import PdfWriterSpec._
+
+  test("every literal-bearing Synth fixture keeps its bytes") {
+    val drift = pinned.map { case (name, pdf, want) => (name, md5(pdf), want) }
+      .collect { case (name, got, want) if got != want => s"$name: $got (pinned $want)" }
+    assert(drift.isEmpty, drift.mkString("\n"))
+  }
+}
+
+/** The pinned fixtures, shared with the object pin (`graft.ObjectPinSpec`). */
+object PdfWriterSpec {
+
   // MD5s of the bytes Synth wrote before it moved onto PdfWriter
-  private val pinned: Seq[(String, Array[Byte], String)] = Seq(
+  private[graft] val pinned: Seq[(String, Array[Byte], String)] = Seq(
     // graft.entry.PdfQueries q65, q67, q68, q64 synthetic rows
     ("outline_url", Synth.pdfWithCatalogExtra(2, "/Outlines 5 0 R", Seq(
       "<< /First 6 0 R /Last 7 0 R >>",
@@ -83,10 +95,4 @@ class PdfWriterSpec extends AnyFunSuite {
       "<< /Subtype /Link /Rect [0 0 1 1] /A << /S /URI /URI (javascript:x) >> >>",
       "<< /Subtype /Link /Rect [0 0 1 1] /A << /S /GoToR /F << /F (other.pdf) >> /D [0 /Fit] >> >>",
       "<< /Subtype /Link /Rect [0 0 1 1] /A << /S /Named /N /NextPage >> >>")), "f79407bcd202a8f425adc5702a19e77c"))
-
-  test("every literal-bearing Synth fixture keeps its bytes") {
-    val drift = pinned.map { case (name, pdf, want) => (name, md5(pdf), want) }
-      .collect { case (name, got, want) if got != want => s"$name: $got (pinned $want)" }
-    assert(drift.isEmpty, drift.mkString("\n"))
-  }
 }
