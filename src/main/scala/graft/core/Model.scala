@@ -48,9 +48,6 @@ final case class GlyphRun(
     matrix: Array[Double], // text transform [a b c d e f]
     page: Int = 0 // page index within the payload (multi-page stitching, §2.8 C1-C2)
 ) {
-  /** Page-space y of the run baseline (text-space point (x, -yAttr) through the
-    * text matrix; the `scale(1,-1)` on svg:text cancels against the page flip). */
-  def pageY: Double = matrix(1) * (if (xs.nonEmpty) xs(0) else 0.0) + matrix(3) * -y + matrix(5)
   /** Effective glyph scale: font-size is in text space; the matrix scales it. */
   def scale: Double = math.hypot(matrix(0), matrix(1))
 }

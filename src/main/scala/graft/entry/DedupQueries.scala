@@ -25,7 +25,7 @@ private[graft] object DedupQueries {
     Dedup.fingerprintNearDups(t(s, dir, "documents"), "doc_id", "text",
       k = 24, w = 12, minShared = 2)
 
-  /** The planted-span corpus of q36 and q36b: the synthetic corpus has no
+  /** The planted-span corpus of q36: the synthetic corpus has no
     * natural cross-doc 15-grams, so docs with doc_id % 10 == 3 get the first
     * document's leading 25 words appended — known duplicated spans the
     * operator must find and clip (including from the source document's own
@@ -166,13 +166,6 @@ private[graft] object DedupQueries {
       // span merge and the clip positionally in DuckDB.
       Dedup.substringDedup(plantedSpanCorpus(s, dir), "doc_id", "text", l = 15, minDocs = 2)
     },
-    Query("q36b_substring_dedup_bloom",
-      graft.oracle.SketchSql.substringDedupOracle(l = 15, minDocs = 2, snip = 25)) { (s, dir) =>
-      // the TWO-PASS variant (bloom pre-filter before the gram exchange) on
-      // the same planted fixture — must be byte-identical to q36's output,
-      // proven by sharing q36's positional-replay oracle verbatim
-      Dedup.substringDedupTwoPass(plantedSpanCorpus(s, dir), "doc_id", "text", l = 15, minDocs = 2)
-    },
     Query("q37_semantic_dedup", {
       val sig = graft.oracle.SketchSql.lshSignatureExpr("v", 6)
       s"""WITH RECURSIVE un AS (
@@ -286,7 +279,7 @@ private[graft] object DedupQueries {
       val deduped = graft.ops.Dedup.exact128(docs, "doc_id", "text")
         .select(col("text"), col("doc_id"))
       val cleaned = deduped
-        .filter(TextQueries.qualityX10(col("text")) >= 7)
+        .filter(TextStats.qualityX10(col("text")) >= 7)
         .filter(TextStats.langId(col("text")) === "en")
         .select(col("doc_id"), graft.ops.Chunking.redactPii(col("text")).as("text"))
       graft.ops.Chunking.chunkWords(cleaned, "doc_id", "text", size = 32, stride = 24)

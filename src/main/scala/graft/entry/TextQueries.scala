@@ -2,29 +2,11 @@ package graft.entry
 
 import graft.entry.Inputs.t
 import graft.ops.TextStats
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Per-document text analysis: token and stopword counts, the quality
   * score, language guess, OOV rate and fingerprints. */
 private[graft] object TextQueries {
-
-  /** The ten-word stopword list of q40, q41 and q46 (their oracles spell the
-    * same list). */
-  private val Stopwords = Seq("the", "of", "and", "a", "to", "in", "is", "for", "on", "with")
-
-  /** Stopword tokens of `text` (lower-cased, split on single spaces). */
-  private def stopCount(text: Column): Column =
-    graft.functions.TextHashes.token_set_count(lower(text), Stopwords)
-
-  /** The 4/3/3 quality score ×10 of q41 and q46: length band, stopword share
-    * and punctuation share (an int column). */
-  private[entry] def qualityX10(text: Column): Column = {
-    val len = length(text)
-    when(len.between(50, 10000), lit(4)).when(len.between(20, 50000), lit(2)).otherwise(lit(0)) +
-      when(stopCount(text) * 20 > TextStats.wsTokenCount(text), lit(3)).otherwise(lit(0)) +
-      when(TextStats.punctCount(text) * 5 < len, lit(3)).otherwise(lit(0))
-  }
 
   val all: Seq[Query] = Seq(
     Query("q29_oov_rate",
@@ -66,7 +48,7 @@ private[graft] object TextQueries {
         col("doc_id"),
         length(col("text")).cast("long").as("n_chars"),
         TextStats.wsTokenCount(col("text")).cast("long").as("ws_tokens"),
-        stopCount(col("text")).cast("long").as("n_stop"))
+        TextStats.stopCount(col("text")).cast("long").as("n_stop"))
     },
     Query("q41_quality",
       """SELECT doc_id,
@@ -81,7 +63,7 @@ private[graft] object TextQueries {
         |    THEN 3 ELSE 0 END)) AS BIGINT) AS quality_x10
         |FROM documents""".stripMargin) { (s, dir) =>
       t(s, dir, "documents").select(
-        col("doc_id"), qualityX10(col("text")).cast("long").as("quality_x10"))
+        col("doc_id"), TextStats.qualityX10(col("text")).cast("long").as("quality_x10"))
     },
     Query("q42_langid",
       """WITH sc AS (

@@ -1,5 +1,7 @@
 package graft.html
 
+import graft.core.Entities
+
 import scala.collection.mutable.ArrayBuffer
 
 /** Minimal HTML DOM for boilerplate analysis — same spirit as the reference's
@@ -33,7 +35,7 @@ object DomLite {
     def top: HElem = stack.head
     def textUntil(end: Int): Unit = {
       if (end > i) {
-        val t = Entities.decode(html.substring(i, end))
+        val t = Entities.decode(html.substring(i, end), Entities.Html)
         if (t.nonEmpty) top.children += HText(t)
       }
     }
@@ -123,7 +125,7 @@ object DomLite {
             val q = s.charAt(j)
             val e = s.indexOf(q, j + 1)
             if (e < 0) { attrs += aName -> s.substring(j + 1); i = n }
-            else { attrs += aName -> Entities.decode(s.substring(j + 1, e)); i = e + 1 }
+            else { attrs += aName -> Entities.decode(s.substring(j + 1, e), Entities.Html); i = e + 1 }
           } else {
             val vStart = j
             while (j < n && !Character.isWhitespace(s.charAt(j)) && s.charAt(j) != '>') j += 1
@@ -135,42 +137,5 @@ object DomLite {
       }
     }
     (name, attrs.result(), selfClosed, i)
-  }
-}
-
-object Entities {
-  private val named = Map(
-    "amp" -> "&", "lt" -> "<", "gt" -> ">", "quot" -> "\"", "apos" -> "'",
-    "nbsp" -> " ", "copy" -> "©", "reg" -> "®", "trade" -> "™",
-    "mdash" -> "—", "ndash" -> "–", "hellip" -> "…",
-    "lsquo" -> "‘", "rsquo" -> "’", "ldquo" -> "“", "rdquo" -> "”")
-
-  def decode(s: String): String = {
-    if (s.indexOf('&') < 0) return s
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '&') {
-        val semi = s.indexOf(';', i)
-        if (semi < 0 || semi - i > 10) { sb.append(c); i += 1 }
-        else {
-          val ent = s.substring(i + 1, semi)
-          val dec: Option[String] =
-            if (ent.startsWith("#x") || ent.startsWith("#X"))
-              try Some(new String(Character.toChars(Integer.parseInt(ent.substring(2), 16))))
-              catch { case _: Exception => None }
-            else if (ent.startsWith("#"))
-              try Some(new String(Character.toChars(Integer.parseInt(ent.substring(1)))))
-              catch { case _: Exception => None }
-            else named.get(ent)
-          dec match {
-            case Some(d) => sb.append(d); i = semi + 1
-            case None => sb.append(c); i += 1
-          }
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
   }
 }

@@ -232,7 +232,8 @@ object Dedup {
     * documents keep their text verbatim. */
   def substringDedup(df: DataFrame, idCol: String, textCol: String,
       l: Int = 50, minDocs: Int = 2, maxDocs: Long = 0L): DataFrame = {
-    import graft.functions.TextHashes.token_gram_hashes
+    import graft.functions.TextHashes.{drop_token_spans, token_gram_hashes}
+    import org.apache.spark.sql.expressions.Window
     val grams = df.select(col(idCol),
       posexplode(token_gram_hashes(col(textCol), l)).as(Seq("__pos", "__h")))
     // `maxDocs > 0` excludes grams present in MORE than maxDocs documents
@@ -248,74 +249,6 @@ object Dedup {
         (if (maxDocs > 0) col("__d") <= maxDocs else lit(true)))
       .select(col("__h"))
     val flagged = grams.join(dup, Seq("__h"), "left_semi")
-    clipFlagged(df, idCol, textCol, l, flagged)
-  }
-
-  /** Two-pass `substringDedup` for corpora where the duplicated-gram set is
-    * NOT tiny: pass 1 aggregates the duplicated grams into a bloom filter
-    * (driver-bounded at `bloomBits / 8` bytes) that pre-filters the
-    * positional gram stream MAP-SIDE — only candidate positions (true
-    * positives plus the bloom's false-positive trickle) reach the exact
-    * semi-join exchange, instead of every gram in the corpus. The exact join
-    * then kills the false positives, so the output is oracle-identical to
-    * the one-pass operator (q36's oracle gates this variant too).
-    *
-    * Spark registers no bloom SQL surface, so the pre-filter uses the same
-    * internal expressions the optimizer's own runtime-filter injection
-    * uses (BloomFilterAggregate / BloomFilterMightContain), bridged into
-    * Columns. Size `bloomItems` to the expected duplicated-gram count;
-    * the default 4M items / 64M bits holds ~1% false positives.
-    *
-    * Broadcast lifetime (r7 ADVICE): each invocation broadcasts one serialized
-    * bloom (128 MB at production sizing) that the returned plan references.
-    * The only reference held is the expression tree's own, so Spark's
-    * ContextCleaner reclaims the driver and executor blocks as soon as the
-    * caller releases the returned DataFrame (referenceTracking is on by
-    * default) — but a caller that HOLDS many returned frames in one session
-    * holds their blooms too, and should release (or `.unpersist()` via the
-    * plan's broadcast) between invocations. */
-  def substringDedupTwoPass(df: DataFrame, idCol: String, textCol: String,
-      l: Int = 50, minDocs: Int = 2, maxDocs: Long = 0L,
-      bloomItems: Long = 4L << 20, bloomBits: Long = 64L << 20): DataFrame = {
-    import graft.functions.TextHashes.token_gram_hashes
-    import graft.functions.BloomMightContainBcast
-    import org.apache.spark.sql.GraftBridge
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    val grams = df.select(col(idCol),
-      posexplode(token_gram_hashes(col(textCol), l)).as(Seq("__pos", "__h")))
-    // pass 1: the duplicated-gram hash set (narrow 8-byte rows), checkpointed
-    // because BOTH the bloom aggregate and the exact semi-join consume it
-    val dup = grams.select(col("__h"), col(idCol)).distinct()
-      .groupBy(col("__h")).agg(count(lit(1)).as("__d"))
-      .filter(col("__d") >= minDocs &&
-        (if (maxDocs > 0) col("__d") <= maxDocs else lit(true)))
-      .select(col("__h"))
-      .localCheckpoint(true)
-    val bloomAgg = GraftBridge.toColumn(
-      new BloomFilterAggregate(GraftBridge.toExpression(col("__h")),
-        Literal(bloomItems), Literal(bloomBits)).toAggregateExpression())
-    val bloomBytes = dup.agg(bloomAgg.as("bf")).head().getAs[Array[Byte]](0)
-    val flagged =
-      if (bloomBytes == null) grams.filter(lit(false)) // zero duplicated grams
-      else {
-        // broadcast the filter bytes (production sizing reaches 128 MB; a
-        // Literal would ride every task closure) and test map-side through
-        // the broadcast-backed expression
-        val bc = df.sparkSession.sparkContext.broadcast(bloomBytes)
-        val mightContain = GraftBridge.toColumn(
-          BloomMightContainBcast(bc, GraftBridge.toExpression(col("__h"))))
-        grams.filter(mightContain).join(dup, Seq("__h"), "left_semi")
-      }
-    clipFlagged(df, idCol, textCol, l, flagged)
-  }
-
-  /** Shared ExactSubstr tail: merge flagged gram positions into spans
-    * (gaps-and-islands) and clip them from each document. */
-  private def clipFlagged(df: DataFrame, idCol: String, textCol: String,
-      l: Int, flagged: DataFrame): DataFrame = {
-    import graft.functions.TextHashes.drop_token_spans
-    import org.apache.spark.sql.expressions.Window
     // gaps-and-islands span merge: a flagged position starts a new span iff it
     // lies beyond every earlier span end (pos > max(prev pos + l)); adjacent
     // spans merge (their union is the same contiguous dropped-token range)

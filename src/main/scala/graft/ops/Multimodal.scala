@@ -69,27 +69,6 @@ object Multimodal {
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Real resize through Graphics2D bilinear scaling, re-encoded as PNG
-    * (deterministic, lossless — JPEG re-encode bytes vary by encoder). */
-  def resizeImage(bytes: Array[Byte], outW: Int, outH: Int): Option[Array[Byte]] =
-    try {
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      if (img == null || outW <= 0 || outH <= 0) None
-      else {
-        val dst = new java.awt.image.BufferedImage(outW, outH,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        val g = dst.createGraphics()
-        try {
-          g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-            java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-          g.drawImage(img, 0, 0, outW, outH, null)
-        } finally g.dispose()
-        val out = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(dst, "png", out)
-        Some(out.toByteArray)
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-
   /** Deterministic w×h JPEG (smooth gradient keyed by `seed`) — the synthetic
     * corpus generator for the real image lane. */
   def encodeTestJpeg(w: Int, h: Int, seed: Long): Array[Byte] = {
@@ -247,38 +226,6 @@ object Multimodal {
           MediaFeatures(r.media_id, r.kind, r.media.length.toLong, feats)
         }
       }
-  }
-
-  final case class Frame(media_id: Long, frame_idx: Int, frame: Array[Byte])
-
-  /** Frame sampling: one media row → every `stride`-th fixed-size chunk as a
-    * frame row. === STUB === the chunker stands in for a video demuxer; the
-    * Spark shape is the contract: flatMap explosion with bounded fan-out, frame
-    * rows carry (media_id, frame_idx) for downstream grouping, and the output
-    * is explode-partitioned so one long video never pins a task. */
-  def sampleFrames(ds: Dataset[MediaRow], frameBytes: Int = 256, stride: Int = 4): Dataset[Frame] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.flatMap { r =>
-      val nFrames = math.max(1, r.media.length / frameBytes)
-      (0 until nFrames by stride).iterator.map { f =>
-        val from = f * frameBytes
-        val until = math.min(r.media.length, from + frameBytes)
-        Frame(r.media_id, f, java.util.Arrays.copyOfRange(r.media, from, until))
-      }
-    }
-  }
-
-  /** "Resize": deterministic downsample of a frame to `outBytes` by strided
-    * byte selection. === STUB === stands in for image resize; signature
-    * (bytes, target dims → bytes) and per-partition batching are the contract. */
-  def resizeStub(frame: Array[Byte], outBytes: Int = 64): Array[Byte] = {
-    if (frame.isEmpty) return Array.emptyByteArray
-    val out = new Array[Byte](math.min(outBytes, frame.length))
-    val step = math.max(1, frame.length / out.length)
-    var i = 0
-    while (i < out.length) { out(i) = frame(math.min(frame.length - 1, i * step)); i += 1 }
-    out
   }
 
   /** Deterministic synthetic media table (documents' text bytes as stand-in

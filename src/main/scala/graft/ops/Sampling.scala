@@ -153,44 +153,4 @@ object Sampling {
       }
       .toDF(groupCol, idCol, tokensCol, "seq_idx")
   }
-
-  /** Best-fit-decreasing packing: same grouping and output shape as
-    * [[packSequences]], but documents sort by token count DESCENDING (id
-    * tie-break) and each lands in the fullest already-open sequence that
-    * still fits, else opens a new one. Trades the greedy path's document
-    * order preservation for strictly-no-worse fill (the classic BFD bound:
-    * ≤ 11/9·OPT + 6/9 bins); use when sequences need no intra-group document
-    * order (e.g. packing independent documents, not conversation turns).
-    *
-    * Deterministic (sort + first-best tie-break), no RNG. The per-group scan
-    * is O(docs × open bins) — fine for conversation-sized groups; a TreeMap
-    * keyed by remaining capacity makes it O(docs log bins) if groups grow. */
-  def packSequencesBfd(df: DataFrame, groupCol: String, idCol: String,
-      tokensCol: String, budget: Long): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(groupCol).cast("long"), col(idCol).cast("long"),
-        col(tokensCol).cast("long"))
-      .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups { (g, it) =>
-        val rows = it.toArray.sortBy(r => (-r._3, r._2))
-        val remaining = scala.collection.mutable.ArrayBuffer.empty[Long]
-        rows.iterator.map { case (_, id, tok) =>
-          var best = -1
-          var bestRem = Long.MaxValue
-          var i = 0
-          while (i < remaining.length) {
-            val r = remaining(i)
-            if (r >= tok && r < bestRem) { best = i; bestRem = r }
-            i += 1
-          }
-          val bin =
-            if (best >= 0) { remaining(best) -= tok; best }
-            else { remaining += math.max(budget - tok, 0L); remaining.length - 1 }
-          (g, id, tok, bin.toLong)
-        }
-      }
-      .toDF(groupCol, idCol, tokensCol, "seq_idx")
-  }
 }

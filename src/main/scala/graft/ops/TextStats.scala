@@ -34,28 +34,23 @@ object TextStats {
   def punctCount(textCol: Column): Column =
     graft.functions.TextHashes.punct_count(textCol)
 
-  private val stopwords = Seq("the", "of", "and", "a", "to", "in", "is", "for",
-    "on", "with", "as", "by", "at", "from", "or", "an", "be", "this", "that", "it")
+  /** The ten-word stopword list of q40, q41 and q46 (their oracles spell the
+    * same list). */
+  private val Stopwords = Seq("the", "of", "and", "a", "to", "in", "is", "for", "on", "with")
 
-  def stopwordRatio(textCol: Column): Column = {
-    // native single-pass membership count; denominator = split-token count
-    // (spaces+1 — split(" ") counts empty tokens, so this is wsTokenCount)
-    val total = wsTokenCount(textCol)
-    val stops = graft.functions.TextHashes.token_set_count(lower(textCol), stopwords)
-    when(total === 0, lit(0.0)).otherwise(stops.cast("double") / total)
-  }
+  /** Stopword tokens of `text` (lower-cased, split on single spaces). */
+  def stopCount(text: Column): Column =
+    graft.functions.TextHashes.token_set_count(lower(text), Stopwords)
 
-  /** Composite quality score in [0,1]: length band + stopword presence + low
-    * punctuation noise (heuristics from public web-corpus filtering pipelines —
-    * C4/Gopher-style rules). */
-  def qualityScore(textCol: Column): Column = {
-    val len = length(textCol)
-    val lenScore = when(len.between(50, 10000), lit(0.4))
-      .when(len.between(20, 50000), lit(0.2)).otherwise(lit(0.0))
-    val stopScore = when(stopwordRatio(textCol) > 0.05, lit(0.3)).otherwise(lit(0.0))
-    val punctRatio = punctCount(textCol).cast("double") / greatest(len, lit(1))
-    val punctScore = when(punctRatio < 0.2, lit(0.3)).otherwise(lit(0.0))
-    (lenScore + stopScore + punctScore).as("quality")
+  /** The quality score ×10 (an int column in [0, 10]): 4 for a length in
+    * [50, 10000] (2 in [20, 50000]), 3 when stopwords are more than 5 % of the
+    * tokens, 3 when punctuation is under 20 % of the characters (heuristics
+    * from public web-corpus filtering pipelines — C4/Gopher-style rules). */
+  def qualityX10(text: Column): Column = {
+    val len = length(text)
+    when(len.between(50, 10000), lit(4)).when(len.between(20, 50000), lit(2)).otherwise(lit(0)) +
+      when(stopCount(text) * 20 > wsTokenCount(text), lit(3)).otherwise(lit(0)) +
+      when(punctCount(text) * 5 < len, lit(3)).otherwise(lit(0))
   }
 
   /** Language-ID heuristic: score per language = fraction of that language's

@@ -146,20 +146,4 @@ object FontData {
         -1
     }
   }
-
-  /** mapSpecialUnicodeValues (pdf.combined.js:16640-16647 + the special-PUA
-    * symbol table): collapse Specials block, remap Adobe PUA symbols. */
-  def mapSpecialUnicodeValues(code: Int): Int = {
-    if (code >= 0xFFF0 && code <= 0xFFFF) 0
-    else if (code >= 0xF600 && code <= 0xF8FF) specialPUASymbols.getOrElse(code, code)
-    else code
-  }
-
-  private val specialPUASymbols: Map[Int, Int] = Map(
-    63721 -> 0x00A9, 63193 -> 0x00A9, 63720 -> 0x00AE, 63194 -> 0x00AE,
-    63722 -> 0x2122, 63195 -> 0x2122, 63729 -> 0x23A7, 63730 -> 0x23A8,
-    63731 -> 0x23A9, 63740 -> 0x23AB, 63741 -> 0x23AC, 63742 -> 0x23AD,
-    63726 -> 0x23A1, 63727 -> 0x23A2, 63728 -> 0x23A3, 63737 -> 0x23A4,
-    63738 -> 0x23A5, 63739 -> 0x23A6, 63723 -> 0x239B, 63724 -> 0x239C,
-    63725 -> 0x239D, 63734 -> 0x239E, 63735 -> 0x239F, 63736 -> 0x23A0)
 }

@@ -17,8 +17,7 @@ import scala.collection.mutable
 final class PdfDocument private (val file: PdfFile) {
 
   private val fontCache = mutable.Map.empty[AnyRef, FontSpec]
-  private val formCache = mutable.Map.empty[String, Option[graft.eval.FormXObject]]
-  private[pdf] var formDecodeCount = 0 // observability hook for the memo test
+  private[pdf] val formCache = mutable.Map.empty[String, Option[graft.eval.FormXObject]]
 
   // ── getTextContent font naming (loadFont, pdf.combined.js:45460-45508) ──
   // Sequential per-document ids for descriptor-bearing fonts, aliased by
@@ -31,8 +30,23 @@ final class PdfDocument private (val file: PdfFile) {
   private var fontSeqId = 0
   private val fontAliasIds = mutable.Map.empty[String, Int]
 
-  private def withLoadedName(spec: FontSpec, fontRef: PObj, resourceName: String): FontSpec =
-    spec.copy(loadedName = loadedNameFor(spec, fontRef, resourceName))
+  /** The font at `fontRef` (a `Tf` resource or an ExtGState `/Font`),
+    * loaded once per document and named on first load. The cache is keyed by
+    * indirect ref, so a font a page selects again (by either operator) does
+    * not re-run the loader, embedded program parse included. */
+  private def loadFont(fontRef: PObj, resourceName: String): FontSpec = {
+    val key: AnyRef = fontRef match {
+      case PRef(n, g) => (n, g)
+      case other => other
+    }
+    fontCache.getOrElseUpdate(key, {
+      val spec = file.resolve(fontRef) match {
+        case d: PDict => FontLoader.load(d, file)
+        case _ => FontMetrics.Helvetica
+      }
+      spec.copy(loadedName = loadedNameFor(spec, fontRef, resourceName))
+    })
+  }
 
   private def loadedNameFor(spec: FontSpec, fontRef: PObj, resourceName: String): String = {
     import file.dictGet
@@ -293,18 +307,7 @@ final class PdfDocument private (val file: PdfFile) {
 
     override def font(name: String): FontSpec =
       fontDict.get(name) match {
-        case Some(ref) =>
-          val key: AnyRef = ref match {
-            case PRef(n, g) => (n, g)
-            case other => other
-          }
-          fontCache.getOrElseUpdate(key, {
-            val spec = file.resolve(ref) match {
-              case d: PDict => FontLoader.load(d, file)
-              case _ => FontMetrics.Helvetica
-            }
-            withLoadedName(spec, ref, name)
-          })
+        case Some(ref) => loadFont(ref, name)
         case None => FontMetrics.resolve(name)
       }
 
@@ -313,21 +316,8 @@ final class PdfDocument private (val file: PdfFile) {
         .flatMap(gsd => file.dictGet(gsd, name)).collect { case d: PDict => d }
         .flatMap(gs => file.dictGet(gs, "Font")).collect {
           case PArr(Vector(fref, sz)) =>
-            // same ref-keyed cache as font(): a gs op repeated per page must
-            // not re-run the font loader (embedded program parse included)
-            val key: AnyRef = fref match {
-              case PRef(n, g) => (n, g)
-              case other => other
-            }
-            val spec = fontCache.getOrElseUpdate(key, {
-              val s0 = file.resolve(fref) match {
-                case d: PDict => FontLoader.load(d, file)
-                case _ => FontMetrics.Helvetica
-              }
-              withLoadedName(s0, fref, name)
-            })
             val size = file.resolve(sz) match { case PNum(v) => v; case _ => 0.0 }
-            (spec, size)
+            (loadFont(fref, name), size)
         }
 
     override def colorSpace(name: String): Option[graft.eval.ColorSpaceModel] =
@@ -348,7 +338,6 @@ final class PdfDocument private (val file: PdfFile) {
       xobjDict.get(name).flatMap { ref =>
         def build(key: String): Option[FormXObject] = file.resolve(ref) match {
           case s: PStream if file.dictGet(s.dict, "Subtype").contains(PName("Form")) =>
-            formDecodeCount += 1
             val matrix = file.dictGet(s.dict, "Matrix") match {
               case Some(PArr(items)) if items.length == 6 =>
                 items.map(file.resolve).map { case PNum(v) => v; case _ => 0.0 }.toArray
@@ -508,42 +497,10 @@ final class PdfDocument private (val file: PdfFile) {
       pl <- root.get("PageLabels") // raw — the tree walk resolves
     } yield pl).getOrElse(return None)
 
-    // NameOrNumberTree.getAll: BFS with a duplicate-kid guard (a repeated
-    // ref is the reference's cycle assert → null), non-dict nodes skipped,
-    // /Kids nodes never read /Nums, leaf /Nums read pairwise
     val nums = mutable.Map.empty[Int, PObj]
-    val processed = mutable.Set[PObj](treeRoot)
-    val queue = mutable.Queue(treeRoot)
-    while (queue.nonEmpty) {
-      file.resolve(queue.dequeue()) match {
-        case d: PDict =>
-          if (d.has("Kids")) {
-            file.resolve(d.get("Kids").getOrElse(PNull)) match {
-              case PArr(kids) =>
-                var k = 0
-                while (k < kids.length) {
-                  val kid = kids(k)
-                  if (processed.contains(kid)) return None
-                  processed += kid
-                  queue += kid
-                  k += 1
-                }
-              case _ => () // non-array Kids: node contributes nothing
-            }
-          } else file.dictGet(d, "Nums") match {
-            case Some(PArr(entries)) =>
-              var i = 0
-              while (i + 1 < entries.length) {
-                file.resolve(entries(i)) match {
-                  case PNum(k) if k.isWhole => nums(k.toInt) = file.resolve(entries(i + 1))
-                  case _ => () // non-integer key: unreachable by page index
-                }
-                i += 2
-              }
-            case _ => ()
-          }
-        case _ => ()
-      }
+    treeEntries(treeRoot, "Nums").foreach {
+      case (PNum(k), v) if k.isWhole => nums(k.toInt) = v
+      case _ => () // non-integer key: unreachable by page index
     }
 
     def toRoman(n: Int, lower: Boolean): String = {
@@ -629,12 +586,13 @@ final class PdfDocument private (val file: PdfFile) {
     try readDestinations()
     catch { case scala.util.control.NonFatal(_) => Map.empty }
 
-  /** NameTree.getAll (pdf.combined.js:43710-43744): BFS with a
-    * duplicate-kid assert (→ caller abandons the surface), /Kids nodes
-    * never read /Names, leaf /Names read pairwise. Keys coerce like JS
-    * object keys: strings keep raw latin-1 bytes, numbers print. */
-  private def nameTreeGetAll(treeRoot: PObj): mutable.LinkedHashMap[String, PObj] = {
-    val out = mutable.LinkedHashMap.empty[String, PObj]
+  /** NameOrNumberTree.getAll (pdf.combined.js:43710-43744): BFS with a
+    * duplicate-kid assert (a repeated kid throws, and the caller abandons
+    * the surface), non-dict nodes skipped, /Kids nodes never read
+    * `leafKey`, leaf `leafKey` arrays (/Names or /Nums) read pairwise.
+    * Keys and values come back resolved, in tree order. */
+  private def treeEntries(treeRoot: PObj, leafKey: String): Vector[(PObj, PObj)] = {
+    val out = Vector.newBuilder[(PObj, PObj)]
     val processed = mutable.Set[PObj](treeRoot)
     val queue = mutable.Queue(treeRoot)
     while (queue.nonEmpty) {
@@ -647,25 +605,32 @@ final class PdfDocument private (val file: PdfFile) {
                 processed += kid
                 queue += kid
               }
-              case _ => ()
+              case _ => () // non-array Kids: node contributes nothing
             }
-          } else file.dictGet(d, "Names") match {
+          } else file.dictGet(d, leafKey) match {
             case Some(PArr(entries)) =>
               var i = 0
               while (i + 1 < entries.length) {
-                file.resolve(entries(i)) match {
-                  case PStr(b) => out(new String(b,
-                    java.nio.charset.StandardCharsets.ISO_8859_1)) =
-                    file.resolve(entries(i + 1))
-                  case PNum(v) => out(PdfDocument.jsNum(v)) = file.resolve(entries(i + 1))
-                  case _ => () // other key types are unreachable in JS too
-                }
+                out += file.resolve(entries(i)) -> file.resolve(entries(i + 1))
                 i += 2
               }
             case _ => ()
           }
         case _ => ()
       }
+    }
+    out.result()
+  }
+
+  /** NameTree.getAll: the /Names leaves keyed as JS object keys (strings
+    * keep raw latin-1 bytes, numbers print; other key types are unreachable
+    * in JS too). */
+  private def nameTreeGetAll(treeRoot: PObj): mutable.LinkedHashMap[String, PObj] = {
+    val out = mutable.LinkedHashMap.empty[String, PObj]
+    treeEntries(treeRoot, "Names").foreach {
+      case (PStr(b), v) => out(new String(b, java.nio.charset.StandardCharsets.ISO_8859_1)) = v
+      case (PNum(k), v) => out(PdfDocument.jsNum(k)) = v
+      case _ => ()
     }
     out
   }

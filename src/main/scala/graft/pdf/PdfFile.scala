@@ -86,7 +86,8 @@ final class ObjParser(bytes: Array[Byte], start: Int) {
     while (!isCmd(buf1, ">>") && buf1 != Tok.EOF) buf1 match {
       case Tok.Name(key) =>
         shift()
-        entries += key -> parseValue()
+        // a key right before `>>` has no value: the dict ends there, key null
+        entries += key -> (if (isCmd(buf1, ">>")) PNull else parseValue())
       case _ => parseValue() // not a key: read and drop a value
     }
     val dict = PDict(entries.result())

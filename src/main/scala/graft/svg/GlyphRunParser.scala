@@ -257,38 +257,5 @@ object GlyphRunParser {
   private val Pow10: Array[Double] = Array.tabulate(19)(e => math.pow(10, e))
 
   /** Decode the xmlEncode set plus tolerated extras (&gt; &apos; &#NN; &#xNN;). */
-  def xmlDecode(s: String): String = {
-    if (s.indexOf('&') < 0) return s
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '&') {
-        val semi = s.indexOf(';', i)
-        if (semi < 0 || semi - i > 10) { sb.append(c); i += 1 }
-        else {
-          val ent = s.substring(i + 1, semi)
-          val decoded: Option[String] = ent match {
-            case "amp" => Some("&")
-            case "lt" => Some("<")
-            case "gt" => Some(">")
-            case "quot" => Some("\"")
-            case "apos" => Some("'")
-            case e if e.startsWith("#x") || e.startsWith("#X") =>
-              try Some(new String(Character.toChars(Integer.parseInt(e.substring(2), 16))))
-              catch { case _: Exception => None }
-            case e if e.startsWith("#") =>
-              try Some(new String(Character.toChars(Integer.parseInt(e.substring(1)))))
-              catch { case _: Exception => None }
-            case _ => None
-          }
-          decoded match {
-            case Some(d) => sb.append(d); i = semi + 1
-            case None => sb.append(c); i += 1
-          }
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
+  def xmlDecode(s: String): String = graft.core.Entities.decode(s, graft.core.Entities.Xml)
 }

@@ -55,8 +55,6 @@ object SvgEmitter {
   def text(r: GlyphRun): String =
     s"""<svg:text transform="${pm(r.matrix)} scale(1, -1)" xml:space="preserve">${tspan(r)}</svg:text>"""
 
-  /** One page of runs → reference-shaped SVG document (pdfToSvg.js page shell:
-    * flip-Y root group, width/height/viewBox from the viewport). */
   /** Multi-page stitch (SURVEY.md §2.8 C2): one svg:svg element per page, in
     * document order — GlyphRunParser recovers the page index from the element
     * count, matching the reference CLI's combined-SVG structure loosely (its
@@ -64,6 +62,8 @@ object SvgEmitter {
   def document(pages: Seq[Seq[GlyphRun]], width: Double = 612, height: Double = 792): String =
     pages.map(p => page(p, width, height)).mkString("\n")
 
+  /** One page of runs → reference-shaped SVG document (pdfToSvg.js page shell:
+    * flip-Y root group, width/height/viewBox from the viewport). */
   def page(runs: Seq[GlyphRun], width: Double = 612, height: Double = 792): String = {
     val sb = new StringBuilder(runs.length * 160 + 256)
     sb.append("<svg:svg xmlns:xlink=\"http://www.w3.org/1999/xlink\"")

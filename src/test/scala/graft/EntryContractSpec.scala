@@ -7,13 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * are built from the per-area query registry under `graft.entry`. */
 class EntryContractSpec extends AnyFunSuite {
 
-  test("queries and oracleSql bind the same 70 names") {
-    assert(SparkEntry.queries.size == 70)
+  test("queries and oracleSql bind the same 69 names") {
+    assert(SparkEntry.queries.size == 69)
     assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet)
   }
 
   test("the registry loads: no query name is bound twice") {
-    assert(SparkEntry.registry.size == 70)
+    assert(SparkEntry.registry.size == 69)
     val q = Query("q00_dup", "SELECT 1")((s, _) => s.emptyDataFrame)
     val e = intercept[IllegalArgumentException](SparkEntry.index(Seq(q, q)))
     assert(e.getMessage.contains("q00_dup"), e.getMessage)
@@ -28,6 +28,6 @@ class EntryContractSpec extends AnyFunSuite {
     val md5 = java.security.MessageDigest.getInstance("MD5")
       .digest(canon.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString
-    assert(md5 == "1fca716deabf08e612ffd061dea78622")
+    assert(md5 == "c16e78649ee994bd880c827a4e954b2a")
   }
 }

@@ -176,4 +176,19 @@ class KernelBindingSpec extends AnyFunSuite {
       case e => e
     })
   }
+
+  test("one way to bind a kernel: KernelCall is the only Catalyst expression in graft.functions") {
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    val expr = classOf[org.apache.spark.sql.catalyst.expressions.Expression]
+    val loader = getClass.getClassLoader
+    // the compiled classes of the package, from the main classes directory
+    val dir = Path.of(Class.forName("graft.functions.KernelCall", false, loader)
+      .getProtectionDomain.getCodeSource.getLocation.toURI).resolve("graft/functions")
+    val names = Files.list(dir).iterator.asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".class")).map("graft.functions." + _.stripSuffix(".class")).toSeq
+    assert(names.length > 20, names)
+    val expressions = names.filter(n => expr.isAssignableFrom(Class.forName(n, false, loader)))
+    assert(expressions == Seq("graft.functions.KernelCall"), expressions)
+  }
 }

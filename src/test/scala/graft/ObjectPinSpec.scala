@@ -18,10 +18,12 @@ import scala.util.control.NonFatal
   * `MetadataSpec`, `XrefStreamSpec` and `XrefTableSpec` files, the q61
   * JBIG2 and JPX documents, and `PdfFuzzSpec`'s seeded mutations of its synthetic
   * documents, replayed with the same seeds. The digests live in
-  * `src/test/resources/object-pins.txt`, except for 61 fuzz mutations whose
+  * `src/test/resources/object-pins.txt`, except for 58 fuzz mutations whose
   * digest moved only because `ContentLexer` tokenizes them as the reference
   * does (`object-pins-lexer.txt`, before and after; the rules are pinned apart
-  * in the "lexer difference" tests).
+  * in the "lexer difference" tests) and 8 whose digest moved only because a
+  * dict key right before `>>` now ends the dict (`object-pins-dict.txt`,
+  * before and after; pinned apart in the "dict difference" test).
   *
   * CMap pin: `CidCMap.parse` and `ToUnicodeCMap.parse` over
   * `CompositeFontSpec`'s CMap streams and over every `/ToUnicode` and
@@ -43,24 +45,36 @@ class ObjectPinSpec extends AnyFunSuite {
 
   private lazy val unchanged = pinFile("object-pins.txt")
   private lazy val lexerMoved = pinFile("object-pins-lexer.txt")
+  private lazy val dictMoved = pinFile("object-pins-dict.txt")
   private lazy val digests = documents.map { case (name, b) => name -> md5(dump(b)) }
 
   test("object pin: every fetched object of every in-repo PDF") {
     val moved = digests.collect { case (n, d) if unchanged.contains(n) && unchanged(n) != Seq(d) =>
       s"$n $d (pinned ${unchanged(n).head})"
     }
-    val unpinned = digests.map(_._1).filterNot(n => unchanged.contains(n) || lexerMoved.contains(n))
-    val gone = (unchanged.keySet ++ lexerMoved.keySet) -- digests.map(_._1)
+    val unpinned = digests.map(_._1)
+      .filterNot(n => unchanged.contains(n) || lexerMoved.contains(n) || dictMoved.contains(n))
+    val gone = (unchanged.keySet ++ lexerMoved.keySet ++ dictMoved.keySet) -- digests.map(_._1)
     assert(moved.isEmpty && unpinned.isEmpty && gone.isEmpty,
       (moved ++ unpinned.map(_ + " not pinned") ++ gone.map(_ + " missing")).mkString("\n"))
   }
 
+  /** Documents of `pins` whose digest is not the pinned "after". */
+  private def movedFrom(pins: Map[String, Seq[String]]): Seq[String] =
+    digests.collect { case (n, d) if pins.contains(n) && pins(n)(1) != d =>
+      s"$n $d (pinned ${pins(n)(1)}, before ${pins(n).head})"
+    }
+
   test("object pin: the fuzz mutations ContentLexer tokenizes differently") {
     // before → after per document; the rules are pinned apart below
-    val moved = digests.collect { case (n, d) if lexerMoved.contains(n) && lexerMoved(n)(1) != d =>
-      s"$n $d (pinned ${lexerMoved(n)(1)}, before ${lexerMoved(n).head})"
-    }
-    assert(lexerMoved.size == 61 && moved.isEmpty, moved.mkString("\n"))
+    val moved = movedFrom(lexerMoved)
+    assert(lexerMoved.size == 58 && moved.isEmpty, moved.mkString("\n"))
+  }
+
+  test("object pin: the fuzz mutations with a dict key right before >>") {
+    // before → after per document; the rule is pinned apart below
+    val moved = movedFrom(dictMoved)
+    assert(dictMoved.size == 8 && moved.isEmpty, moved.mkString("\n"))
   }
 
   private def parse(s: String): String =
@@ -83,6 +97,15 @@ class ObjectPinSpec extends AnyFunSuite {
     // `--5` is -5 (before: 0.0 then -5.0), `1.2.3` is 1.2 then .3 (before:
     // 0.0), `1e2` is 100 (before: 1.0, null, 2.0), `5-3` is 53 (before: 5.0 then -3.0)
     assert(parse("[--5 1.2.3 1e2 5-3]") == "[-5.0 1.2 0.3 100.0 53.0]")
+  }
+
+  test("dict difference: a key right before >> ends the dict, key null (was: the dict swallowed its stream)") {
+    val obj = "<< /Length 5 /Foo >> stream\nhello\nendstream"
+    assert(parse(obj) == "<</Foo null /Length 5.0>> stream<68656c6c6f>")
+    // before: <</Foo null /Length 5.0>>, and the dict read on past `stream`
+    val f = new PdfFile(s"%PDF-1.4\n1 0 obj\n$obj\nendobj\ntrailer\n<< /Size 2 >>\n%%EOF\n"
+      .getBytes(ISO_8859_1))
+    assert(render(f.fetch(1)) == "<</Foo null /Length 5.0>> stream<68656c6c6f>")
   }
 
   test("CMap pin: both views over every CMap stream") {

@@ -94,32 +94,6 @@ class SamplingSpec extends AnyFunSuite {
       (2L, 20L) -> 0L, (2L, 21L) -> 1L)) // exactly-full then next
   }
 
-  test("packSequencesBfd: best-fit-decreasing beats greedy fill on skew") {
-    import spark.implicits._
-    // 9,9,9,1,1,1 at budget 10: greedy order-preserving needs 4 bins,
-    // BFD packs each 1 into a 9-bin → 3 full bins
-    val df = (0L until 6L).map(i => (1L, i, if (i < 3) 9L else 1L))
-      .toDF("conv", "doc_id", "tokens")
-    val greedy = Sampling.packSequences(df, "conv", "doc_id", "tokens", budget = 10L)
-      .select("seq_idx").distinct().count()
-    val bfd = Sampling.packSequencesBfd(df, "conv", "doc_id", "tokens", budget = 10L)
-      .collect().map(r => (r.getLong(1), r.getLong(3)))
-    assert(greedy == 4L)
-    assert(bfd.map(_._2).distinct.length == 3)
-    // every bin exactly full: per-bin token sums == budget
-    val sums = bfd.groupBy(_._2).values.map(_.map(p => if (p._1 < 3) 9L else 1L).sum)
-    assert(sums.forall(_ == 10L))
-    // determinism + budget invariant + oversized isolation
-    val again = Sampling.packSequencesBfd(df, "conv", "doc_id", "tokens", budget = 10L)
-      .collect().map(r => (r.getLong(1), r.getLong(3)))
-    assert(bfd.sorted.toSeq == again.sorted.toSeq)
-    val over = Sampling.packSequencesBfd(
-      Seq((1L, 0L, 30L), (1L, 1L, 5L), (1L, 2L, 5L)).toDF("conv", "doc_id", "tokens"),
-      "conv", "doc_id", "tokens", budget = 10L)
-      .collect().map(r => (r.getLong(1), r.getLong(3))).toMap
-    assert(over(0L) != over(1L) && over(1L) == over(2L)) // oversized isolated, 5+5 share
-  }
-
   test("oov kernels: word count and hashed-vocab membership") {
     import graft.functions.TextScan
     import org.apache.spark.unsafe.types.UTF8String

@@ -18,11 +18,93 @@ class PdfImagesSpec extends AnyFunSuite {
     PdfImages.list(PdfDocument.open(bytes))
   }
 
+  private def present(path: String): Unit =
+    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
+      cancel(s"reference PDF not present: $path")
+
+  private def deflate(b: Array[Byte]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    val z = new java.util.zip.DeflaterOutputStream(out)
+    z.write(b); z.close()
+    out.toByteArray
+  }
+
+  /** A 64x32 scan of a mostly white page (1 = black): two ruled lines. */
+  private val scanW = 64
+  private val scanH = 32
+  private val scanInk = 2 * scanW + 2 * (scanH - 2)
+  private val scanG4: Array[Byte] = graft.testgen.Jbig2Synth.encodeMmrG4(
+    Array.tabulate[Byte](scanW * scanH) { i =>
+      val (x, y) = (i % scanW, i / scanW)
+      if (y == 8 || y == 20 || x == 4 || x == 5) 1 else 0
+    }, scanW, scanH)
+  private val scanDict = s"/Width $scanW /Height $scanH /BitsPerComponent 1 " +
+    s"/ColorSpace /DeviceGray /Filter /CCITTFaxDecode " +
+    s"/DecodeParms << /K -1 /Columns $scanW /Rows $scanH >>"
+
+  test("corpus: CCITT G4 scans decode white-dominant (photometric mapping)") {
+    // a scanned text page is mostly background; an inverted photometric
+    // mapping would flip it to mostly black
+    val ccitt = PdfImages.list(PdfDocument.open(pdfWithImage(scanDict, scanG4)))
+    assert(ccitt.map(_.filter) == Vector("CCITTFaxDecode"))
+    val expected = math.round(255.0 * (scanW * scanH - scanInk) / (scanW * scanH)).toInt
+    assert(math.abs(ccitt.head.grayMean - expected) <= 1, ccitt.head.grayMean.toString)
+  }
+
+  test("reference corpus: CCITT G4 scans decode white-dominant (photometric mapping)") {
+    present("/root/reference/test-papers/2839.pdf")
+    val ccitt = load("/root/reference/test-papers/2839.pdf")
+      .filter(_.filter == "CCITTFaxDecode")
+    assert(ccitt.length == 7)
+    assert(ccitt.forall(_.grayMean > 128), ccitt.map(_.grayMean).mkString(","))
+  }
+
   test("corpus: every image decodes and decoded dims equal dict dims") {
+    // one image of each kind the reference corpus holds, on one page
+    val grayJpeg = {
+      val img = new java.awt.image.BufferedImage(24, 16, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+      for (y <- 0 until 16; x <- 0 until 24) img.getRaster.setSample(x, y, 0, (x * 10 + y) & 0xff)
+      val out = new java.io.ByteArrayOutputStream()
+      javax.imageio.ImageIO.write(img, "jpg", out)
+      out.toByteArray
+    }
+    val images: Seq[(String, Array[Byte])] = Seq(
+      "/Width 40 /Height 30 /BitsPerComponent 8 /ColorSpace /DeviceRGB /Filter /DCTDecode" ->
+        graft.ops.Multimodal.encodeTestJpeg(40, 30, seed = 7),
+      "/Width 24 /Height 16 /BitsPerComponent 8 /ColorSpace /DeviceGray /Filter /DCTDecode" ->
+        grayJpeg,
+      "/Width 8 /Height 4 /BitsPerComponent 8 /ColorSpace [/ICCBased 12 0 R] /Filter /FlateDecode" ->
+        deflate(Array.tabulate[Byte](32)(i => (i * 8).toByte)),
+      "/Width 4 /Height 4 /BitsPerComponent 8 /ColorSpace [/ICCBased 13 0 R] /Filter /FlateDecode" ->
+        deflate(Array.tabulate[Byte](48)(i => (i * 5).toByte)),
+      "/Width 2 /Height 1 /BitsPerComponent 8 /ColorSpace [/Indexed /DeviceRGB 1 <000000FF0000>]" ->
+        Array[Byte](0, 1),
+      scanDict -> scanG4,
+      "/Width 8 /Height 1 /BitsPerComponent 1 /ImageMask true" -> Array[Byte](0xF0.toByte))
+    val names = images.indices.map(i => s"/Im${i + 1} ${i + 5} 0 R").mkString(" ")
+    val content = images.indices.map(i => s"q 10 0 0 10 ${i * 20} 0 cm /Im${i + 1} Do Q").mkString(" ")
+    val imgs = PdfImages.list(PdfDocument.open(PdfWriter(Seq[PdfWriter.Body](
+      "<< /Type /Catalog /Pages 2 0 R >>",
+      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+      "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
+        s"/Resources << /XObject << $names >> >> /Contents 4 0 R >>",
+      PdfWriter.stream("", content.getBytes(ISO_8859_1))) ++
+      images.map { case (d, b) => PdfWriter.stream(s"/Type /XObject /Subtype /Image $d", b) } ++
+      Seq("/N 1", "/N 3").map(PdfWriter.stream(_, Array.emptyByteArray)))))
+    assert(imgs.length == images.length)
+    imgs.foreach { i =>
+      assert(i.decodedW == i.width && i.decodedH == i.height,
+        s"${i.name}: dict ${i.width}x${i.height} vs decoded ${i.decodedW}x${i.decodedH}")
+      assert(i.grayMean >= 0 && i.grayMean <= 255, s"${i.name} gray ${i.grayMean}")
+    }
+  }
+
+  test("reference corpus: every image decodes and decoded dims equal dict dims") {
     val papers = Map(
       "/root/reference/src/test/resources/input/test24.pdf" -> 15,
       "/root/reference/src/test/resources/input/test25.pdf" -> 11,
       "/root/reference/test-papers/2839.pdf" -> 10)
+    (papers.keys.toSeq :+ "/root/reference/src/test/resources/input/1301.4293.pdf").foreach(present)
     papers.foreach { case (path, expected) =>
       val imgs = load(path)
       assert(imgs.length == expected, s"$path count")
@@ -33,15 +115,6 @@ class PdfImagesSpec extends AnyFunSuite {
       }
     }
     assert(load("/root/reference/src/test/resources/input/1301.4293.pdf").isEmpty)
-  }
-
-  test("corpus: CCITT G4 scans decode white-dominant (photometric mapping)") {
-    // a scanned text page is mostly background; an inverted photometric
-    // mapping would flip these to ~0-50
-    val ccitt = load("/root/reference/test-papers/2839.pdf")
-      .filter(_.filter == "CCITTFaxDecode")
-    assert(ccitt.length == 7)
-    assert(ccitt.forall(_.grayMean > 128), ccitt.map(_.grayMean).mkString(","))
   }
 
   private def pdfWithImage(imgDict: String, imgBytes: Array[Byte],
