@@ -41,10 +41,13 @@ object PageResources {
   *
   * Reads the stream through [[OpReader]] (EvaluatorPreprocessor.read: operand
   * collection, arity tolerance, unknown-command skip) and runs the SVGGraphics
-  * text state machine over the accepted operators (beginText/setTextMatrix/
-  * moveText/showText — pdf.combined.js:20256-20431). Run-break semantics
-  * match the reference exactly: `Tm`/`Td`/`TD`/`T*`/`'`/`"`/`Tf`/fill-color
-  * changes each start a new tspan; consecutive `Tj` extend one.
+  * text operators over the accepted ones (beginText/setTextMatrix/
+  * moveText/showText — pdf.combined.js:20256-20431) on a [[TextState]], as
+  * `graft.extract.TextItems` does; the show arms, run breaks, fill colors,
+  * `Do` and counted bad operands below are the tspan surface's own.
+  * Run-break semantics match the reference exactly: `Tm`/`Td`/`TD`/`T*`/`'`/
+  * `"`/`Tf`/fill-color changes each start a new tspan; consecutive `Tj`
+  * extend one.
   *
   * Purely sequential per content stream: the `extract_turn` kernel calls it
   * once per fragment row and `PdfDocument.evalPage` once per page, and it
@@ -52,43 +55,6 @@ object PageResources {
   * operators, operands of the wrong type and unbalanced restores.
   */
 object ContentEvaluator {
-
-  private final class State {
-    var ctm: Array[Double] = NumFmt.Identity
-    var textMatrix: Array[Double] = NumFmt.Identity
-    var lineMatrix: Array[Double] = NumFmt.Identity
-    var x, y, lineX, lineY = 0.0
-    var charSpacing, wordSpacing = 0.0
-    var textHScale = 1.0
-    var leading = 0.0 // stored negated, as the SVG backend does (setLeading 20597)
-    var textRise = 0.0
-    var fontSize = 0.0
-    var fontDirection = 1.0
-    var font: FontSpec = FontMetrics.Helvetica
-    var fillColor = "rgb(0,0,0)"
-    var fillCS: ColorSpaceModel = null // null = component-count heuristic
-    /** Full clone — the reference save/restore clones the entire extra state
-      * (SVGGraphics save/restore, pdf.combined.js:20015-20029), including text
-      * position, matrices, fontDirection and rise. */
-    def snapshot: State = {
-      val c = new State
-      c.ctm = ctm; c.textMatrix = textMatrix; c.lineMatrix = lineMatrix
-      c.x = x; c.y = y; c.lineX = lineX; c.lineY = lineY
-      c.charSpacing = charSpacing; c.wordSpacing = wordSpacing
-      c.textHScale = textHScale; c.leading = leading; c.textRise = textRise
-      c.fontSize = fontSize; c.fontDirection = fontDirection; c.font = font
-      c.fillColor = fillColor; c.fillCS = fillCS
-      c
-    }
-    def restoreFrom(c: State): Unit = {
-      ctm = c.ctm; textMatrix = c.textMatrix; lineMatrix = c.lineMatrix
-      x = c.x; y = c.y; lineX = c.lineX; lineY = c.lineY
-      charSpacing = c.charSpacing; wordSpacing = c.wordSpacing
-      textHScale = c.textHScale; leading = c.leading; textRise = c.textRise
-      fontSize = c.fontSize; fontDirection = c.fontDirection; font = c.font
-      fillColor = c.fillColor; fillCS = c.fillCS
-    }
-  }
 
   /** A content-stream fragment with no resources: every font name resolves
     * to the core metrics (the `extract_turn` fragment dialect). */
@@ -106,9 +72,9 @@ object ContentEvaluator {
   def evaluatePage(content: Array[Byte], pageResources: PageResources,
       fakeSpaces: Boolean = false,
       initialCtm: Array[Double] = NumFmt.Identity): EvalResult = {
-    val st = new State
+    val st = new TextState
     st.ctm = initialCtm
-    val stack = ArrayBuffer.empty[State]
+    val stack = ArrayBuffer.empty[TextState]
     val runs = Vector.newBuilder[GlyphRun]
 
     // current tspan accumulation
@@ -131,12 +97,6 @@ object ContentEvaluator {
       }
       sb.setLength(0)
       xcoords.clear()
-    }
-
-    def moveText(tx: Double, ty: Double): Unit = {
-      st.lineX += tx; st.x = st.lineX
-      st.lineY += ty; st.y = st.lineY
-      flush()
     }
 
     // one show op = a Tj string or a TJ item sequence; `x` (the intra-op
@@ -256,13 +216,6 @@ object ContentEvaluator {
     }
     def showText(s: String): Unit = { showBegin(); showString(s); showEnd() }
 
-    def setFont(name: String, size: Double, res: PageResources): Unit = {
-      flush()
-      st.font = res.font(name)
-      if (size < 0) { st.fontSize = -size; st.fontDirection = -1 }
-      else { st.fontSize = size; st.fontDirection = 1 }
-    }
-
     def rgb(r: Double, g: Double, b: Double): String =
       s"rgb(${(r * 255).round},${(g * 255).round},${(b * 255).round})"
 
@@ -288,37 +241,19 @@ object ContentEvaluator {
               flush() // restore may change fill/font/position: close the tspan
               st.restoreFrom(stack.remove(stack.length - 1))
             } else errors += 1 // unbalanced restore tolerated (45891-45895)
-          case "cm" =>
-            st.ctm = NumFmt.mul(st.ctm,
-              Array(numArg(0), numArg(1), numArg(2), numArg(3), numArg(4), numArg(5)))
-          case "BT" =>
-            st.x = 0; st.y = 0; st.lineX = 0; st.lineY = 0
-            st.textMatrix = NumFmt.Identity; st.lineMatrix = NumFmt.Identity
-            flush()
+          case "cm" | "TL" | "Tc" | "Tw" | "Tz" | "Ts" => errors += st.exec(cmd, args)
+          case "BT" | "Tm" | "Td" | "TD" | "T*" => errors += st.exec(cmd, args); flush()
           case "ET" => flush()
           case "Tf" =>
             (args(0), args(1)) match {
-              case (Tok.Name(n), Tok.Num(sz)) => setFont(n, sz, res)
+              case (Tok.Name(n), Tok.Num(sz)) => flush(); st.setFont(res.font(n), sz)
               case _ => errors += 1
             }
-          case "Td" => moveText(numArg(0), numArg(1))
-          case "TD" => st.leading = numArg(1); moveText(numArg(0), numArg(1))
-          case "Tm" =>
-            st.textMatrix = Array(numArg(0), numArg(1), numArg(2), numArg(3), numArg(4), numArg(5))
-            st.lineMatrix = st.textMatrix
-            st.x = 0; st.y = 0; st.lineX = 0; st.lineY = 0
-            flush()
-          case "T*" => moveText(0, st.leading)
-          case "TL" => st.leading = -numArg(0)
-          case "Tc" => st.charSpacing = numArg(0)
-          case "Tw" => st.wordSpacing = numArg(0)
-          case "Tz" => st.textHScale = numArg(0) / 100
-          case "Ts" => st.textRise = numArg(0)
           case "Tj" => show(args(0))
-          case "'" => moveText(0, st.leading); show(args(0))
+          case "'" => st.nextLine(); flush(); show(args(0))
           case "\"" =>
             st.wordSpacing = numArg(0); st.charSpacing = numArg(1)
-            moveText(0, st.leading)
+            st.nextLine(); flush()
             show(args(2))
           case "TJ" =>
             // args hold "[" item* "]": strings shown, numbers kern —
@@ -379,15 +314,9 @@ object ContentEvaluator {
           case "gs" =>
             args(0) match {
               case Tok.Name(n) =>
-                res.gsFont(n).foreach { case (f, size) =>
-                  flush()
-                  st.font = f
-                  if (size < 0) { st.fontSize = -size; st.fontDirection = -1 }
-                  else { st.fontSize = size; st.fontDirection = 1 }
-                }
+                res.gsFont(n).foreach { case (f, size) => flush(); st.setFont(f, size) }
               case _ => ()
             }
-          case "ID" => reader.skipInlineImage()
           case "Do" =>
             args(0) match {
               case Tok.Name(n) =>

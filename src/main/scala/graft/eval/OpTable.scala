@@ -62,13 +62,12 @@ object OpTable {
   * tokens as operands (TJ arrays, dict payloads), skips unknown commands,
   * keeps only the last `numArgs` operands of a fixed-arity operator that has
   * more (unless they hold an array or dict), and skips an operator with too
-  * few. `ContentEvaluator` and `TextItems` keep only their operator switches.
+  * few. Like the reference's parser (`makeInlineImage`), it skips an inline
+  * image's data itself, from `ID` to just after `EI`. `ContentEvaluator` and
+  * `TextItems` keep only their operator switches.
   */
 final class OpReader(bytes: Array[Byte]) {
   private val lexer = new ContentLexer(bytes, OpTable.knownCommands)
-
-  /** Skip an inline image's data: reading resumes after the next `EI`. */
-  def skipInlineImage(): Unit = lexer.seekAfterEI()
 
   /** Read the stream to its end, passing each accepted operator and its
     * operands to `handle` (the operand buffer is reused: read it during the
@@ -97,6 +96,7 @@ final class OpReader(bytes: Array[Byte]) {
               if (!spec.variableArgs && args.length < spec.numArgs) skipped += 1
               else handle(cmd, args)
               args.clear()
+              if (cmd == "ID") lexer.seekAfterEI()
           }
         case t => args += t
       }

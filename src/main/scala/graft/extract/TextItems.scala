@@ -1,7 +1,7 @@
 package graft.extract
 
 import graft.core.NumFmt
-import graft.eval.{FontSpec, OpReader, PageResources}
+import graft.eval.{FontSpec, OpReader, PageResources, TextState}
 import graft.lex.Tok
 
 import scala.collection.mutable.ArrayBuffer
@@ -39,9 +39,10 @@ final case class TextStyle(fontFamily: String, ascent: Double, descent: Double,
   *     space glyph (46101-46107);
   *   - per-item bidi with an ltr/rtl direction (runBidiTransform, 46033).
   *
-  * The content stream is read through `OpReader`, the operator reader the
-  * evaluator uses too, so both surfaces accept and skip the same operators;
-  * only the operator switch below is item-specific.
+  * The content stream is read through `OpReader` onto `eval.TextState`, as
+  * the evaluator's is; the show arms, flush points, `Do` arm and uncounted
+  * bad operands below are item-specific. Items carry no position, so only
+  * the linear part of the text and line matrices is read.
   *
   * Disclosed deltas (str-neutral for the committed fixture gates):
   * the Type3 tsm height adjustment only shapes item.height, not item.str.
@@ -83,50 +84,6 @@ object TextItems {
       if (v == null) s else v
     }
 
-  private final class State {
-    var ctm: Array[Double] = NumFmt.Identity
-    var font: FontSpec = null
-    var fontSize = 0.0
-    // matrices are MUTATED in place by the translate ops — never alias the
-    // shared Identity array
-    var textMatrix: Array[Double] = NumFmt.Identity.clone()
-    var textLineMatrix: Array[Double] = NumFmt.Identity.clone()
-    var charSpacing = 0.0
-    var wordSpacing = 0.0
-    var leading = 0.0
-    var textHScale = 1.0
-    var textRise = 0.0
-
-    def snapshot: State = {
-      val c = new State
-      c.ctm = ctm; c.font = font; c.fontSize = fontSize
-      c.textMatrix = textMatrix.clone(); c.textLineMatrix = textLineMatrix.clone()
-      c.charSpacing = charSpacing; c.wordSpacing = wordSpacing
-      c.leading = leading; c.textHScale = textHScale; c.textRise = textRise
-      c
-    }
-    def restoreFrom(c: State): Unit = {
-      ctm = c.ctm; font = c.font; fontSize = c.fontSize
-      textMatrix = c.textMatrix; textLineMatrix = c.textLineMatrix
-      charSpacing = c.charSpacing; wordSpacing = c.wordSpacing
-      leading = c.leading; textHScale = c.textHScale; textRise = c.textRise
-    }
-    def translateTextMatrix(x: Double, y: Double): Unit = {
-      val m = textMatrix
-      m(4) = m(0) * x + m(2) * y + m(4)
-      m(5) = m(1) * x + m(3) * y + m(5)
-    }
-    def translateTextLineMatrix(x: Double, y: Double): Unit = {
-      val m = textLineMatrix
-      m(4) = m(0) * x + m(2) * y + m(4)
-      m(5) = m(1) * x + m(3) * y + m(5)
-    }
-    def carriageReturn(): Unit = {
-      translateTextLineMatrix(0, -leading)
-      textMatrix = textLineMatrix.clone()
-    }
-  }
-
   def extract(content: Array[Byte], res: PageResources,
       initialCtm: Array[Double] = NumFmt.Identity,
       normalizeWhitespace: Boolean = false): Vector[TextItem] =
@@ -155,9 +112,9 @@ object TextItems {
     // plain buffer, NOT a Vector builder: the Do-replay cache reads slices
     // mid-build (builder result() mid-use is undefined for ReusableBuilder)
     val items = ArrayBuffer.empty[TextItem]
-    val st = new State
+    val st = new TextState
     st.ctm = initialCtm
-    val stack = ArrayBuffer.empty[State]
+    val stack = ArrayBuffer.empty[TextState]
 
     // textContentItem mirror
     var initialized = false
@@ -180,6 +137,8 @@ object TextItems {
       if (st.font == null) st.font = res.font("")
       st.font
     }
+    // the size as `Tf` wrote it, sign included
+    def fontSize: Double = st.fontSize * st.fontDirection
 
     def ensureItem(): Unit = {
       if (initialized) return
@@ -187,18 +146,19 @@ object TextItems {
       vertical = font.vertical
       val tm = st.textMatrix
       // trm scale seeds the cross-advance dimension (46967-46987)
-      val tsm = Array(st.fontSize * st.textHScale, 0.0, 0.0, st.fontSize, 0.0, st.textRise)
+      val size = fontSize
+      val tsm = Array(size * st.textHScale, 0.0, 0.0, size, 0.0, st.textRise)
       val trm = NumFmt.mul(st.ctm, NumFmt.mul(tm, tsm))
       if (!vertical) { itemWidth = 0.0; itemHeight = math.hypot(trm(2), trm(3)) }
       else { itemWidth = math.hypot(trm(0), trm(1)); itemHeight = 0.0 }
-      val scaleLineX = math.hypot(st.textLineMatrix(0), st.textLineMatrix(1))
+      val scaleLineX = math.hypot(st.lineMatrix(0), st.lineMatrix(1))
       val scaleCtmX = math.hypot(st.ctm(0), st.ctm(1))
       textAdvanceScale = scaleCtmX * scaleLineX
       lastAdvanceWidth = 0.0
       lastAdvanceHeight = 0.0
       val est = font.spaceWidthEst
       val swUnits = if (est.isNaN) font.widths(' '.toInt) else est
-      val sw = swUnits / 1000 * st.fontSize
+      val sw = swUnits / 1000 * size
       if (sw > 0) {
         spaceWidth = sw
         fakeSpaceMin = sw * 0.3
@@ -243,6 +203,7 @@ object TextItems {
     def buildItem(chars: String): Unit = {
       val font = fontOr()
       ensureItem()
+      val size = fontSize
       var width = 0.0
       var height = 0.0
       val wide = font.wideChars
@@ -274,14 +235,13 @@ object TextItems {
         var ty = 0.0
         if (!vertical) {
           val w0 = glyphWidth * font.fontMatrix0
-          tx = (w0 * st.fontSize + charSpacing) * st.textHScale
+          tx = (w0 * size + charSpacing) * st.textHScale
           width += tx
         } else {
           val w1 = glyphWidth * font.fontMatrix0
-          ty = w1 * st.fontSize + charSpacing
+          ty = w1 * size + charSpacing
           height += ty
         }
-        st.translateTextMatrix(tx, ty)
         buf.append(glyphUnicode)
         i += step
       }
@@ -294,40 +254,33 @@ object TextItems {
       }
     }
 
-    def moveText(tx: Double, ty: Double): Unit = {
+    def mergeMove(tx: Double, ty: Double): Unit = {
       // the same-line merge (46203-46217): treat a small positive same-line
       // move as an advance inside the current item
       val isSameTextLine = st.font != null &&
         (if (st.font.vertical) tx else ty) == 0.0
       val advance = tx - ty
       if (isSameTextLine && initialized && advance > 0 && advance <= fakeMultiSpaceMax) {
-        st.translateTextLineMatrix(tx, ty)
         itemWidth += tx - lastAdvanceWidth
         itemHeight += ty - lastAdvanceHeight
         val diff = (tx - lastAdvanceWidth) - (ty - lastAdvanceHeight)
         addFakeSpaces(diff)
-      } else {
-        flushItem()
-        st.translateTextLineMatrix(tx, ty)
-        st.textMatrix = st.textLineMatrix.clone()
-      }
+      } else flushItem()
     }
 
     def showKern(n: Double): Unit = {
       ensureItem()
-      var advance = n * st.fontSize / 1000
+      var advance = n * fontSize / 1000
       var breakTextRun = false
       if (fontOr().vertical) {
         val offset = advance *
           (st.textHScale * st.textMatrix(2) + st.textMatrix(3))
-        st.translateTextMatrix(0, advance)
         breakTextRun = textRunBreakAllowed && advance > fakeMultiSpaceMax
         if (!breakTextRun) itemHeight += offset
       } else {
         advance = -advance
         val offset = advance *
           (st.textHScale * st.textMatrix(0) + st.textMatrix(1))
-        st.translateTextMatrix(advance, 0)
         breakTextRun = textRunBreakAllowed && advance > fakeMultiSpaceMax
         if (!breakTextRun) itemWidth += offset
       }
@@ -341,8 +294,7 @@ object TextItems {
     var cacheItems: Vector[TextItem] = null
 
     def walk(bytes: Array[Byte], res0: PageResources, depth: Int): Unit = {
-      val reader = new OpReader(bytes)
-      reader.read { (cmd, args) =>
+      new OpReader(bytes).read { (cmd, args) =>
         def numArg(i: Int): Double = args(i) match {
           case Tok.Num(v) => v
           case _ => 0.0
@@ -351,39 +303,15 @@ object TextItems {
           case "q" => stack += st.snapshot
           case "Q" =>
             if (stack.nonEmpty) st.restoreFrom(stack.remove(stack.length - 1))
-          case "cm" =>
-            st.ctm = NumFmt.mul(st.ctm, Array(numArg(0), numArg(1),
-              numArg(2), numArg(3), numArg(4), numArg(5)))
-          case "BT" =>
-            flushItem()
-            st.textMatrix = NumFmt.Identity.clone()
-            st.textLineMatrix = NumFmt.Identity.clone()
-          case "ET" => () // not in the reference's text switch
+          case "cm" | "Tc" | "Tw" => st.exec(cmd, args)
+          case "BT" | "Tm" | "TD" | "T*" | "TL" | "Tz" | "Ts" => flushItem(); st.exec(cmd, args)
+          case "Td" => mergeMove(numArg(0), numArg(1)); st.exec(cmd, args)
           case "Tf" =>
             flushItem()
             (args(0), args(1)) match {
-              case (Tok.Name(n), Tok.Num(sz)) =>
-                st.fontSize = sz
-                st.font = res0.font(n)
+              case (Tok.Name(n), Tok.Num(sz)) => st.setFont(res0.font(n), sz)
               case _ => ()
             }
-          case "Ts" => flushItem(); st.textRise = numArg(0)
-          case "Tz" => flushItem(); st.textHScale = numArg(0) / 100
-          case "TL" => flushItem(); st.leading = numArg(0)
-          case "Tc" => st.charSpacing = numArg(0)
-          case "Tw" => st.wordSpacing = numArg(0)
-          case "Td" => moveText(numArg(0), numArg(1))
-          case "TD" =>
-            flushItem()
-            st.leading = -numArg(1)
-            st.translateTextLineMatrix(numArg(0), numArg(1))
-            st.textMatrix = st.textLineMatrix.clone()
-          case "T*" => flushItem(); st.carriageReturn()
-          case "Tm" =>
-            flushItem()
-            st.textMatrix = Array(numArg(0), numArg(1), numArg(2),
-              numArg(3), numArg(4), numArg(5))
-            st.textLineMatrix = st.textMatrix.clone()
           case "Tj" =>
             args(0) match {
               case Tok.Str(s) => buildItem(s)
@@ -391,7 +319,7 @@ object TextItems {
             }
           case "'" =>
             flushItem()
-            st.carriageReturn()
+            st.nextLine()
             args(0) match {
               case Tok.Str(s) => buildItem(s)
               case _ => ()
@@ -400,7 +328,7 @@ object TextItems {
             flushItem()
             st.wordSpacing = numArg(0)
             st.charSpacing = numArg(1)
-            st.carriageReturn()
+            st.nextLine()
             args(2) match {
               case Tok.Str(s) => buildItem(s)
               case _ => ()
@@ -443,14 +371,10 @@ object TextItems {
             flushItem()
             args.headOption match {
               case Some(Tok.Name(n)) =>
-                res0.gsFont(n).foreach { case (f, sz) =>
-                  st.fontSize = sz
-                  st.font = f
-                }
+                res0.gsFont(n).foreach { case (f, sz) => st.setFont(f, sz) }
               case _ => ()
             }
-          case "BI" => reader.skipInlineImage()
-          case _ => () // color/path/marked-content ops: no item effect
+          case _ => () // ET, color/path/marked-content ops: no item effect
         }
       }
     }

@@ -51,7 +51,12 @@ final class ObjParser(bytes: Array[Byte], start: Int) {
   }
 
   /** Parse one object. A keyword other than true/false/null reads as null. */
-  def parseValue(): PObj = {
+  def parseValue(): PObj = value(0)
+
+  /** An array or dict nested [[MaxDepth]] deep reads as null, and its tokens
+    * are skipped without recursion (pdfium's parser bounds nesting at 64 too),
+    * so no payload can exhaust the stack. */
+  private def value(depth: Int): PObj = {
     val t = buf1
     shift()
     t match {
@@ -65,12 +70,13 @@ final class ObjParser(bytes: Array[Byte], start: Int) {
       case Tok.Name(n) => PName(n)
       case Tok.Str(s) => PStr(s.toCharArray.map(_.toByte)) // chars are bytes (octal escapes wrap)
       case Tok.Bool(b) => PBool(b)
+      case Tok.Cmd(open @ ("[" | "<<")) if depth >= MaxDepth => skipNested(open); PNull
       case Tok.Cmd("[") =>
         val items = Vector.newBuilder[PObj]
-        while (!isCmd(buf1, "]") && buf1 != Tok.EOF) items += parseValue()
+        while (!isCmd(buf1, "]") && buf1 != Tok.EOF) items += value(depth + 1)
         shift() // ']'
         PArr(items.result())
-      case Tok.Cmd("<<") => parseDictOrStream()
+      case Tok.Cmd("<<") => parseDictOrStream(depth)
       case _ => PNull
     }
   }
@@ -81,14 +87,14 @@ final class ObjParser(bytes: Array[Byte], start: Int) {
     * Raw stream bytes are sliced by /Length when it is a direct number and
     * `endstream` follows there; otherwise up to the next `endstream` (an
     * indirect /Length is resolved later by PdfFile). */
-  private def parseDictOrStream(): PObj = {
+  private def parseDictOrStream(depth: Int): PObj = {
     val entries = Map.newBuilder[String, PObj]
     while (!isCmd(buf1, ">>") && buf1 != Tok.EOF) buf1 match {
       case Tok.Name(key) =>
         shift()
         // a key right before `>>` has no value: the dict ends there, key null
-        entries += key -> (if (isCmd(buf1, ">>")) PNull else parseValue())
-      case _ => parseValue() // not a key: read and drop a value
+        entries += key -> (if (isCmd(buf1, ">>")) PNull else value(depth + 1))
+      case _ => value(depth + 1) // not a key: read and drop a value
     }
     val dict = PDict(entries.result())
     if (!isCmd(buf2, "stream")) { shift(); return dict } // '>>'
@@ -110,6 +116,22 @@ final class ObjParser(bytes: Array[Byte], start: Int) {
     PStream(dict, java.util.Arrays.copyOfRange(bytes, dataStart, dataEnd))
   }
 
+  /** Skips to just after the bracket that closes `open`, pairing `[` with
+    * `]` and `<<` with `>>` as the recursive reader does, on a stack of the
+    * closers still expected (stream data in there is read as tokens). */
+  private def skipNested(open: String): Unit = {
+    val closers = scala.collection.mutable.ArrayBuffer(if (open == "[") "]" else ">>")
+    while (closers.nonEmpty && buf1 != Tok.EOF) {
+      buf1 match {
+        case Tok.Cmd("[") => closers += "]"
+        case Tok.Cmd("<<") => closers += ">>"
+        case Tok.Cmd(c) if c == closers.last => closers.remove(closers.length - 1)
+        case _ => ()
+      }
+      shift()
+    }
+  }
+
   /** The first `endstream` at or after `from`, less at most one EOL before
     * it (the end of the file when there is none). Stream data is not PDF
     * syntax, so this is a search, not a tokenization. */
@@ -129,6 +151,8 @@ final class ObjParser(bytes: Array[Byte], start: Int) {
 }
 
 object ObjParser {
+  /** Deepest array or dict nesting the parser builds. */
+  val MaxDepth = 64
   private val Endstream = "endstream".getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
 }
 

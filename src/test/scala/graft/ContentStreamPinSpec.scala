@@ -30,52 +30,6 @@ class ContentStreamPinSpec extends AnyFunSuite {
     java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
       .map(x => f"${x & 0xff}%02x").mkString
 
-  private def stamps(n: Int, font: String = "/F1", size: String = "12"): String =
-    (0 until n).map { i =>
-      s"BT $font $size Tf 1 0 0 1 ${72 + i * 40} 700 Tm (w$i) Tj ET"
-    }.mkString(" ")
-
-  private val streams: Seq[String] = Seq(
-    // same-font BT Tf Tm Tj ET stamps and a font change
-    stamps(2), stamps(3), stamps(4), stamps(3) + " " + stamps(3, font = "/F2"),
-    "BT /F1 10 Tf 10 10 Td (pre) Tj ET " + stamps(5) + " BT /F1 10 Tf 10 40 Td (post) Tj ET",
-    stamps(3, size = "-12"),
-    // unknown and glued commands
-    "BT /F1 12 Tf 72 700 Td (a) Tj foo (b) Tj 1 2 bar (c) Tj ET",
-    "BT/F1 12 Tf 72 700 Td(glued)Tj 0 -14 Td(x)Tj Tq Q ET",
-    "Tq Q BT /F1 12 Tf (after) Tj ET",
-    "BT /F1 12 Tf (unterminated Tj NOT_AN_OP 1 2 3 ET",
-    // excess and missing operands
-    "BT 1 2 3 /F1 12 Tf 9 9 72 700 Td (x) Tj 5 (y) Tj ET",
-    "BT 12 Tf 72 Td (y) Tj /F1 Tf (z) Tj 1 0 0 Tm (w) Tj ET",
-    "BT /F1 12 Tf 72 700 Td Tj (n) 7 Tj ' (q) \" 1 2 (r) \" ET",
-    "BT /F1 12 Tf /Other 1 Td (m) Tj 1 0 0 1 /X 5 Tm (k) Tj ET",
-    // TJ arrays
-    "BT /F1 12 Tf 72 700 Td [(A) -250 (B) 120 (C) -1200 (D)] TJ ET",
-    "BT /F2 10 Tf 72 700 Td [(mono) -3000 (space)] TJ [] TJ [(x) /N (y)] TJ ET",
-    "BT /F1 11.9552 Tf 1 0 0 1 91.92 710.04 Tm [(supported b)-6(y a grant)] TJ 0 -13.55 Td (second line) Tj ET",
-    // inline images
-    "BT /F1 10 Tf (a) Tj BI /W 2 /H 2 ID \u0001\u0002EI  EI (b) Tj ET",
-    "q 10 0 0 10 5 5 cm BI /W 1 /H 1 /BPC 1 /IM true ID \u00ff EI Q BT /F1 10 Tf 5 5 Td (after) Tj ET",
-    // form and image XObjects
-    "BT /F1 10 Tf 10 10 Td (outer) Tj ET q 1 0 0 1 50 50 cm /Fm1 Do Q /Im1 Do /Fm1 Do /Fm1 Do BT (tail) Tj ET",
-    "BT /F1 10 Tf 10 10 Td (a) Tj /Fm1 Do (b) Tj ET /Loop Do /Nope Do 5 Do",
-    // re
-    "q 1 0 0 1 5 7 cm 10 20 100 2 re f Q BT /F1 10 Tf (r) Tj ET",
-    // ExtGState fonts
-    "BT /GS1 gs (mono) Tj /F1 10 Tf (x) Tj /GS0 gs (y) Tj 3 gs (z) Tj ET",
-    // unbalanced q/Q
-    "Q Q BT /F1 10 Tf (a) Tj ET q q BT (b) Tj ET Q",
-    "Q Q Q ET (orphan) Tj",
-    "BT /F1 10 Tf 100 700 Td (a) Tj q 200 0 Td (b) Tj Q (c) Tj ET",
-    // text state, colors and the quote operators
-    "BT /F1 10 Tf 2 Tc 3 Tw 150 Tz 4 Ts 14 TL 72 700 Td (a b) Tj T* (c) Tj (d) ' 1 0 (e) \" ET",
-    "BT /F1 10 Tf 10 -12 TD (one) Tj T* (two) Tj 20 0 Td (three) Tj ET",
-    "BT /F1 10 Tf 1 0 0 rg (red) Tj 0.5 g (gray) Tj 0 0 0 1 k (cmyk) Tj /DeviceRGB cs 0 1 0 sc (green) Tj 0.2 scn (h) Tj /P1 scn (pat) Tj ET",
-    "2 0 0 2 10 10 cm BT /F3 8 Tf 0 1 -1 0 300 100 Tm (rotated) Tj ET",
-    "BT /F1 10 Tf 72 700 Td (A) Tj 5.5 0 Td (B) Tj 30 0 Td (C) Tj 0 -12 Td (D) Tj ET",
-    "/MC0 BMC BT /F1 10 Tf /Span << /ActualText (x) >> BDC (marked) Tj EMC ET EMC")
-
   /** Fonts F1 (Helvetica), F2 (Courier), F3 (Times-Bold); ExtGState GS1;
     * form Fm1 (its own F1 text) and a self-referencing form Loop; image Im1. */
   private lazy val res: PageResources = new PageResources {
@@ -154,6 +108,53 @@ class ContentStreamPinSpec extends AnyFunSuite {
 object ContentStreamPinSpec {
 
   private def bytes(s: String): Array[Byte] = s.getBytes(ISO_8859_1)
+
+  private def stamps(n: Int, font: String = "/F1", size: String = "12"): String =
+    (0 until n).map { i =>
+      s"BT $font $size Tf 1 0 0 1 ${72 + i * 40} 700 Tm (w$i) Tj ET"
+    }.mkString(" ")
+
+  /** The pinned content streams, shared with the text pin (`TextPinSpec`). */
+  private[graft] val streams: Seq[String] = Seq(
+    // same-font BT Tf Tm Tj ET stamps and a font change
+    stamps(2), stamps(3), stamps(4), stamps(3) + " " + stamps(3, font = "/F2"),
+    "BT /F1 10 Tf 10 10 Td (pre) Tj ET " + stamps(5) + " BT /F1 10 Tf 10 40 Td (post) Tj ET",
+    stamps(3, size = "-12"),
+    // unknown and glued commands
+    "BT /F1 12 Tf 72 700 Td (a) Tj foo (b) Tj 1 2 bar (c) Tj ET",
+    "BT/F1 12 Tf 72 700 Td(glued)Tj 0 -14 Td(x)Tj Tq Q ET",
+    "Tq Q BT /F1 12 Tf (after) Tj ET",
+    "BT /F1 12 Tf (unterminated Tj NOT_AN_OP 1 2 3 ET",
+    // excess and missing operands
+    "BT 1 2 3 /F1 12 Tf 9 9 72 700 Td (x) Tj 5 (y) Tj ET",
+    "BT 12 Tf 72 Td (y) Tj /F1 Tf (z) Tj 1 0 0 Tm (w) Tj ET",
+    "BT /F1 12 Tf 72 700 Td Tj (n) 7 Tj ' (q) \" 1 2 (r) \" ET",
+    "BT /F1 12 Tf /Other 1 Td (m) Tj 1 0 0 1 /X 5 Tm (k) Tj ET",
+    // TJ arrays
+    "BT /F1 12 Tf 72 700 Td [(A) -250 (B) 120 (C) -1200 (D)] TJ ET",
+    "BT /F2 10 Tf 72 700 Td [(mono) -3000 (space)] TJ [] TJ [(x) /N (y)] TJ ET",
+    "BT /F1 11.9552 Tf 1 0 0 1 91.92 710.04 Tm [(supported b)-6(y a grant)] TJ 0 -13.55 Td (second line) Tj ET",
+    // inline images
+    "BT /F1 10 Tf (a) Tj BI /W 2 /H 2 ID \u0001\u0002EI  EI (b) Tj ET",
+    "q 10 0 0 10 5 5 cm BI /W 1 /H 1 /BPC 1 /IM true ID \u00ff EI Q BT /F1 10 Tf 5 5 Td (after) Tj ET",
+    // form and image XObjects
+    "BT /F1 10 Tf 10 10 Td (outer) Tj ET q 1 0 0 1 50 50 cm /Fm1 Do Q /Im1 Do /Fm1 Do /Fm1 Do BT (tail) Tj ET",
+    "BT /F1 10 Tf 10 10 Td (a) Tj /Fm1 Do (b) Tj ET /Loop Do /Nope Do 5 Do",
+    // re
+    "q 1 0 0 1 5 7 cm 10 20 100 2 re f Q BT /F1 10 Tf (r) Tj ET",
+    // ExtGState fonts
+    "BT /GS1 gs (mono) Tj /F1 10 Tf (x) Tj /GS0 gs (y) Tj 3 gs (z) Tj ET",
+    // unbalanced q/Q
+    "Q Q BT /F1 10 Tf (a) Tj ET q q BT (b) Tj ET Q",
+    "Q Q Q ET (orphan) Tj",
+    "BT /F1 10 Tf 100 700 Td (a) Tj q 200 0 Td (b) Tj Q (c) Tj ET",
+    // text state, colors and the quote operators
+    "BT /F1 10 Tf 2 Tc 3 Tw 150 Tz 4 Ts 14 TL 72 700 Td (a b) Tj T* (c) Tj (d) ' 1 0 (e) \" ET",
+    "BT /F1 10 Tf 10 -12 TD (one) Tj T* (two) Tj 20 0 Td (three) Tj ET",
+    "BT /F1 10 Tf 1 0 0 rg (red) Tj 0.5 g (gray) Tj 0 0 0 1 k (cmyk) Tj /DeviceRGB cs 0 1 0 sc (green) Tj 0.2 scn (h) Tj /P1 scn (pat) Tj ET",
+    "2 0 0 2 10 10 cm BT /F3 8 Tf 0 1 -1 0 300 100 Tm (rotated) Tj ET",
+    "BT /F1 10 Tf 72 700 Td (A) Tj 5.5 0 Td (B) Tj 30 0 Td (C) Tj 0 -12 Td (D) Tj ET",
+    "/MC0 BMC BT /F1 10 Tf /Span << /ActualText (x) >> BDC (marked) Tj EMC ET EMC")
 
   private[graft] val hebrewCMap =
     """/CIDInit /ProcSet findresource begin

@@ -129,6 +129,29 @@ class PdfFuzzSpec extends AnyFunSuite {
     }
   }
 
+  test("a page dict nested 200,000 deep: Extractor.extract returns the page text on a 512 KB stack") {
+    import java.nio.charset.StandardCharsets.ISO_8859_1
+    val depth = 200000
+    Seq("array" -> ("[" * depth + "]" * depth),
+        "dict" -> ("<< /A " * depth + ">> " * depth)).foreach { case (kind, nested) =>
+      val pdf = PdfWriter(Seq(
+        "<< /Type /Catalog /Pages 2 0 R >>",
+        "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+        s"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Deep $nested " +
+          "/Resources << /Font << /F1 4 0 R >> >> /Contents 5 0 R >>",
+        "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
+        PdfWriter.stream("", "BT /F1 12 Tf 72 720 Td (Deep nesting) Tj ET".getBytes(ISO_8859_1))))
+      // a Spark task thread's stack is small; StackOverflowError is not NonFatal
+      var got: Either[Throwable, String] = Left(new IllegalStateException("not run"))
+      val worker = new Thread(null, () => got =
+        try Right(graft.extract.Extractor.extract(new String(pdf, ISO_8859_1)).text)
+        catch { case e: Throwable => Left(e) }, s"nested-$kind", 512L * 1024)
+      worker.start()
+      worker.join()
+      assert(got == Right("Deep nesting"), kind)
+    }
+  }
+
   test("JBIG2 lane under mutation: corrupt arithmetic data never throws") {
     val base = graft.testgen.Jbig2Synth.pdfWithJbig2(48, 32, seed = 21)
     def listSafely(bytes: Array[Byte], what: String): Unit = {
