@@ -79,7 +79,7 @@ object ContentEvaluator {
 
     // current tspan accumulation
     val sb = new StringBuilder
-    val xcoords = ArrayBuffer.empty[Double]
+    val xcoords = new DoubleBuffer
     var tspanY = 0.0
     var tspanMatrix: Array[Double] = NumFmt.Identity
     var tspanFont: FontSpec = st.font
@@ -143,8 +143,9 @@ object ContentEvaluator {
         if (sameFrame && swEff > 0 && (curX - lastEndX) >= 0.3 * swEff) appendSpaces(1, lastEndX)
       }
       if (glyphText eq FontSpec.IdentityChar) {
-        // identity hot path (synthetic dialect payloads): char-level appends,
-        // zero per-glyph allocation — this loop dominates extraction throughput
+        // identity hot path (synthetic dialect payloads): one xcoord per char,
+        // the text appended whole, zero per-glyph allocation — this loop
+        // dominates extraction throughput
         var i = 0
         while (i < str.length) {
           val c = str.charAt(i)
@@ -152,9 +153,9 @@ object ContentEvaluator {
           // `(glyph.isSpace ? wordSpacing : 0) + charSpacing`, pdf.combined.js:29772
           val spacing = st.charSpacing + (if (c == ' ') st.wordSpacing else 0.0)
           showX += widths(c.toInt) * widthAdvanceScale + spacing * st.fontDirection
-          sb.append(c)
           i += 1
         }
+        sb.append(str)
       } else {
         // mapped fonts: composite fonts consume 2 bytes per charcode (Identity
         // CMaps); word spacing only ever applies to the 1-byte 0x20 charcode
@@ -348,4 +349,19 @@ object ContentEvaluator {
     flush()
     EvalResult(runs.result(), errors)
   }
+}
+
+/** A growable buffer of primitive doubles: the evaluator's per-glyph x
+  * coordinates, appended without boxing. */
+private[eval] final class DoubleBuffer {
+  private var elems = new Array[Double](64)
+  private var size = 0
+
+  def +=(x: Double): Unit = {
+    if (size == elems.length) elems = java.util.Arrays.copyOf(elems, size * 2)
+    elems(size) = x
+    size += 1
+  }
+  def clear(): Unit = size = 0
+  def toArray: Array[Double] = java.util.Arrays.copyOf(elems, size)
 }

@@ -13,7 +13,7 @@ import scala.collection.mutable.ArrayBuffer
 final case class OpSpec(name: String, numArgs: Int, variableArgs: Boolean = false)
 
 object OpTable {
-  val ops: Map[String, OpSpec] = Seq(
+  private val specs: Seq[OpSpec] = Seq(
     // graphics state
     OpSpec("w", 1), OpSpec("J", 1), OpSpec("j", 1), OpSpec("M", 1),
     OpSpec("d", 2), OpSpec("ri", 1), OpSpec("i", 1), OpSpec("gs", 1),
@@ -46,14 +46,22 @@ object OpTable {
     // marked content / compatibility
     OpSpec("MP", 1), OpSpec("DP", 2), OpSpec("BMC", 1), OpSpec("BDC", 2),
     OpSpec("EMC", 0), OpSpec("BX", 0), OpSpec("EX", 0)
-  ).map(s => s.name -> s).toMap
+  )
+
+  /** The table by name: a `java.util.HashMap`, so the per-operator lookup
+    * compares `String`s directly and allocates no `Option`. */
+  val ops: java.util.HashMap[String, OpSpec] = {
+    val m = new java.util.HashMap[String, OpSpec](specs.length * 2)
+    specs.foreach(s => m.put(s.name, s))
+    m
+  }
 
   /** Command set for the lexer's early-break rule — the full op table plus the
     * reference's reserved partial commands (pdf.combined.js:47319-47328), which
     * keep multi-char tokens whose first char is itself a command (`false`,
     * `null`, `BMC`, `BDC`) from being split. */
-  val knownCommands: Set[String] = ops.keySet ++ Set(
-    "BM", "BD", "true", "fa", "fal", "fals", "false", "nu", "nul", "null")
+  val knownCommands: ContentLexer.Commands = ContentLexer.Commands(specs.map(_.name) ++ Seq(
+    "BM", "BD", "true", "fa", "fal", "fals", "false", "nu", "nul", "null"))
 }
 
 /** The one content-stream operator reader, after EvaluatorPreprocessor.read
@@ -80,12 +88,12 @@ final class OpReader(bytes: Array[Byte]) {
       tok match {
         case Tok.Cmd(cmd) =>
           OpTable.ops.get(cmd) match {
-            case None =>
+            case null =>
               cmd match {
                 case "[" | "]" | "<<" | ">>" | "{" | "}" => args += tok
                 case _ => skipped += 1; args.clear() // unknown command (47374-47377)
               }
-            case Some(spec) =>
+            case spec =>
               // excess operands: keep the last numArgs (47383-47408)
               val hasStructure = args.exists {
                 case Tok.Cmd("[") | Tok.Cmd("<<") => true

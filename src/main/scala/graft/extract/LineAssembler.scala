@@ -2,8 +2,6 @@ package graft.extract
 
 import graft.core.{GlyphRun, Span}
 
-import scala.collection.mutable.ArrayBuffer
-
 /** Reassembles reading-order lines from positioned glyph runs.
   *
   * Generalizes the reference's reading-order text path (getTextContent,
@@ -22,65 +20,106 @@ object LineAssembler {
   private val MultiSpaceFactor = 1.5
   private val MultiSpaceFactorMax = 4.0
 
-  private final case class Placed(run: GlyphRun, x0: Double, x1: Double, y: Double)
-
   def assemble(runs: Seq[GlyphRun], lineSep: String = "\n"): Assembled = {
     if (runs.isEmpty) return Assembled("", Nil, 0)
 
-    val placed = runs.map { r =>
+    // each run placed on the page: left and right edge x, baseline y
+    val rs = runs.toArray
+    val n = rs.length
+    val x0s, x1s, ys, scales = new Array[Double](n)
+    val mono = new Array[Boolean](n)
+    var i = 0
+    while (i < n) {
+      val r = rs(i)
+      mono(i) = isMonospace(r.fontFamily)
+      scales(i) = r.scale
       val x0 = if (r.xs.nonEmpty) r.xs(0) else 0.0
       // right edge: last glyph x + its metric advance (exact for payloads built
       // with our metrics-only fonts; close enough elsewhere — the thresholds
       // below have 0.3×spaceWidth slack, as the reference's do)
       val lastAdvance =
-        if (r.text.nonEmpty) widthOf(r.fontFamily, r.text.last) * r.fontSize / 1000.0
+        if (r.text.nonEmpty) widthOf(mono(i), r.text.last) * r.fontSize / 1000.0
         else 0.0
       val x1 = (if (r.xs.nonEmpty) r.xs.last else 0.0) + lastAdvance
-      val (px0, _) = pagePoint(r, x0)
-      val (px1, py) = pagePoint(r, x1)
-      Placed(r, px0, px1, py)
+      // the text-space baseline point mapped through the run's matrix
+      val m = r.matrix
+      val ty = -r.y
+      x0s(i) = m(0) * x0 + m(2) * ty + m(4)
+      x1s(i) = m(0) * x1 + m(2) * ty + m(4)
+      ys(i) = m(1) * x1 + m(3) * ty + m(5)
+      i += 1
     }
 
     // cluster lines on quantized baseline y (tolerance: 40% of median font size)
-    val sizes = runs.map(r => r.fontSize * r.scale).sorted
-    val tol = math.max(0.1, sizes(sizes.length / 2) * 0.4)
+    val sizes = new Array[Double](n)
+    i = 0
+    while (i < n) { sizes(i) = rs(i).fontSize * scales(i); i += 1 }
+    java.util.Arrays.sort(sizes)
+    val tol = math.max(0.1, sizes(n / 2) * 0.4)
 
-    // stable grouping: sort by y, start a new line when the gap exceeds tol
-    val byY = placed.sortBy(p => (p.run.page, p.y))
-    val lines = ArrayBuffer.empty[ArrayBuffer[Placed]]
+    // stable grouping: sort by (page, y), start a new line when the gap
+    // exceeds tol; line k is byY(lineStart(k) until lineStart(k + 1))
+    val pages = new Array[Int](n)
+    i = 0
+    while (i < n) { pages(i) = rs(i).page; i += 1 }
+    val byY = Array.range(0, n)
+    stableSort(byY, 0, n, pages, ys)
+    val lineStart = new Array[Int](n + 1)
+    var lineCount = 0
     var curY = Double.NaN
     var curPage = -1
-    byY.foreach { p =>
-      if (lines.isEmpty || p.run.page != curPage || math.abs(p.y - curY) > tol) {
-        curPage = p.run.page
-        lines += ArrayBuffer(p)
-        curY = p.y
+    i = 0
+    while (i < n) {
+      val p = byY(i)
+      if (lineCount == 0 || rs(p).page != curPage || math.abs(ys(p) - curY) > tol) {
+        curPage = rs(p).page
+        lineStart(lineCount) = i
+        lineCount += 1
+        curY = ys(p)
       } else {
-        lines.last += p
         // drift the cluster center slowly toward new members
-        curY = (curY * (lines.last.length - 1) + p.y) / lines.last.length
+        val members = i - lineStart(lineCount - 1) + 1
+        curY = (curY * (members - 1) + ys(p)) / members
       }
+      i += 1
     }
+    lineStart(lineCount) = n
 
     // reading order: page index ascending, then page y descending = top of page
     // first for y-up coordinates (the SVG page shell flips y; runs carry
     // text-space matrices where larger y is higher on the page), then x
     // ascending within the line.
-    val ordered = lines.sortBy(l => (l.head.run.page, -l.map(_.y).max))
+    val linePage = new Array[Int](lineCount)
+    val lineNegTop = new Array[Double](lineCount)
+    var k = 0
+    while (k < lineCount) {
+      linePage(k) = rs(byY(lineStart(k))).page
+      var top = ys(byY(lineStart(k)))
+      var j = lineStart(k) + 1
+      while (j < lineStart(k + 1)) {
+        val y = ys(byY(j))
+        if (java.lang.Double.compare(top, y) < 0) top = y
+        j += 1
+      }
+      lineNegTop(k) = -top
+      stableSort(byY, lineStart(k), lineStart(k + 1), pages, x0s) // one page per line
+      k += 1
+    }
+    val ordered = Array.range(0, lineCount)
+    stableSort(ordered, 0, lineCount, linePage, lineNegTop)
 
     val out = new StringBuilder
-    val spans = ArrayBuffer.empty[Span]
-    var lineCount = 0
+    val spans = Vector.newBuilder[Span]
     ordered.foreach { line =>
       if (out.nonEmpty) out.append(lineSep)
-      lineCount += 1
-      val sortedLine = line.sortBy(_.x0)
-      val lineStart = out.length
       var prevEnd = Double.NaN
-      sortedLine.foreach { p =>
+      var j = lineStart(line)
+      while (j < lineStart(line + 1)) {
+        val p = byY(j)
+        val r = rs(p)
         if (!prevEnd.isNaN) {
-          val gap = p.x0 - prevEnd
-          val spaceWidth = widthOf(p.run.fontFamily, ' ') * p.run.fontSize * p.run.scale / 1000.0
+          val gap = x0s(p) - prevEnd
+          val spaceWidth = widthOf(mono(p), ' ') * r.fontSize * scales(p) / 1000.0
           if (spaceWidth > 0 && gap >= SpaceFactor * spaceWidth) {
             // R1/R5 (reference 46008-46014, 46276-46299): a gap above
             // 4×spaceWidth on a non-monospace font is a text-RUN BREAK (a
@@ -88,36 +127,90 @@ object LineAssembler {
             // reference's own flat-text rendering joins items with one space
             // (getinfo.js:55). Monospace fonts "fake as much space as
             // needed" (textRunBreakAllowed = !isMonospace).
-            val mono = isMonospace(p.run.fontFamily)
-            val k =
+            val spaces =
               if (gap < MultiSpaceFactor * spaceWidth) 1
-              else if (!mono && gap > MultiSpaceFactorMax * spaceWidth) 1 // item break
+              else if (!mono(p) && gap > MultiSpaceFactorMax * spaceWidth) 1 // item break
               else math.max(1, math.round(gap / spaceWidth).toInt)
-            out.append(" " * k)
+            var s = 0
+            while (s < spaces) { out.append(' '); s += 1 }
           }
         }
         val start = out.length
-        out.append(p.run.text)
+        out.append(r.text)
         spans += Span(start, out.length, "run")
-        prevEnd = p.x1
+        prevEnd = x1s(p)
+        j += 1
       }
-      val _ = lineStart
     }
-    Assembled(out.toString, spans.toSeq, lineCount)
+    Assembled(out.toString, spans.result(), lineCount)
   }
+
+  /** Sorts `idx(from until until)` by `(major(i), minor(i))`, ints and
+    * doubles compared like `Integer.compare` and `java.lang.Double.compare`,
+    * keeping equal keys in their order: the order of Scala's `sortBy` on an
+    * `(Int, Double)` key. Content order is usually sorted or strictly
+    * reversed already, which takes one pass. */
+  private def stableSort(idx: Array[Int], from: Int, until: Int,
+      major: Array[Int], minor: Array[Double]): Unit = {
+    def cmp(a: Int, b: Int): Int = {
+      val c = Integer.compare(major(a), major(b))
+      if (c != 0) c else java.lang.Double.compare(minor(a), minor(b))
+    }
+    var ascending, descending = true
+    var i = from + 1
+    while (i < until && (ascending || descending)) {
+      val c = cmp(idx(i - 1), idx(i))
+      if (c > 0) ascending = false
+      if (c <= 0) descending = false
+      i += 1
+    }
+    if (ascending) return
+    if (descending) { // strictly: reversing keeps no equal pair apart
+      var lo = from
+      var hi = until - 1
+      while (lo < hi) { val t = idx(lo); idx(lo) = idx(hi); idx(hi) = t; lo += 1; hi -= 1 }
+      return
+    }
+    mergeSort(idx, from, until, new Array[Int]((until - from + 1) / 2), cmp)
+  }
+
+  private def mergeSort(idx: Array[Int], from: Int, until: Int, buf: Array[Int],
+      cmp: (Int, Int) => Int): Unit =
+    if (until - from <= 16) {
+      var i = from + 1
+      while (i < until) {
+        val v = idx(i)
+        var j = i - 1
+        while (j >= from && cmp(idx(j), v) > 0) { idx(j + 1) = idx(j); j -= 1 }
+        idx(j + 1) = v
+        i += 1
+      }
+    } else {
+      val mid = (from + until) >>> 1
+      mergeSort(idx, from, mid, buf, cmp)
+      mergeSort(idx, mid, until, buf, cmp)
+      if (cmp(idx(mid - 1), idx(mid)) > 0) {
+        val left = mid - from
+        System.arraycopy(idx, from, buf, 0, left)
+        var a = 0
+        var b = mid
+        var o = from
+        while (a < left && b < until) {
+          // ties take the left element first: the sort is stable
+          if (cmp(idx(b), buf(a)) < 0) { idx(o) = idx(b); b += 1 }
+          else { idx(o) = buf(a); a += 1 }
+          o += 1
+        }
+        System.arraycopy(buf, a, idx, o, left - a)
+      }
+    }
 
   /** Glyph advance in 1/1000 em: Courier-family fonts are monospaced 600; all
     * others use the Helvetica core-metrics table (metrics-only model, §2.5 F2). */
-  private def widthOf(family: String, c: Char): Double =
-    if (isMonospace(family)) 600.0
+  private def widthOf(monospace: Boolean, c: Char): Double =
+    if (monospace) 600.0
     else graft.eval.FontMetrics.Helvetica.widths(c.toInt)
 
   private def isMonospace(family: String): Boolean =
     family.contains("Courier") || family.contains("Mono")
-
-  private def pagePoint(r: GlyphRun, x: Double): (Double, Double) = {
-    val m = r.matrix
-    val ty = -r.y // text-space y of the baseline
-    (m(0) * x + m(2) * ty + m(4), m(1) * x + m(3) * ty + m(5))
-  }
 }

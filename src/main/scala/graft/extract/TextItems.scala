@@ -63,24 +63,23 @@ object TextItems {
     * carried verbatim as a classpath resource. Lookup is keyed on the WHOLE
     * glyph string, and every key is one char, so multi-char /ToUnicode
     * expansions never normalize (same as the reference). */
-  private lazy val normalizedUnicodes: java.util.HashMap[Character, String] = {
-    val m = new java.util.HashMap[Character, String](2048)
-    val in = getClass.getResourceAsStream("/graft/normalized-unicodes.txt")
-    val src = scala.io.Source.fromInputStream(in, "UTF-8")
-    try src.getLines().foreach { line =>
-      val sep = line.indexOf(';')
-      val key = Integer.parseInt(line.substring(0, sep), 16).toChar
-      val value = line.substring(sep + 1).split(' ')
-        .map(h => Integer.parseInt(h, 16).toChar).mkString
-      m.put(key, value)
-    } finally src.close()
-    m
-  }
+  private[graft] val normalizedUnicodes =
+    new graft.core.ResourceTable("/graft/normalized-unicodes.txt")({ lines =>
+      val m = new java.util.HashMap[Character, String](2048)
+      lines.foreach { line =>
+        val sep = line.indexOf(';')
+        val key = Integer.parseInt(line.substring(0, sep), 16).toChar
+        val value = line.substring(sep + 1).split(' ')
+          .map(h => Integer.parseInt(h, 16).toChar).mkString
+        m.put(key, value)
+      }
+      m
+    })
 
   private def normalize(s: String): String =
     if (s.length != 1) s
     else {
-      val v = normalizedUnicodes.get(s.charAt(0))
+      val v = normalizedUnicodes.get.get(s.charAt(0))
       if (v == null) s else v
     }
 

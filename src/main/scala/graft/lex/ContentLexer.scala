@@ -1,5 +1,7 @@
 package graft.lex
 
+import java.nio.charset.StandardCharsets.ISO_8859_1
+
 /** Tokens of PDF syntax (reference Lexer yields exactly these shapes —
   * pdf.combined.js:28154-28246). */
 sealed trait Tok
@@ -24,15 +26,20 @@ object Tok {
   * `#xx` name escapes, hex strings with invalid-char tolerance, comments, and
   * longest-prefix command disambiguation against a known-command set (handles
   * glued tokens like `q1`); with an empty set a command runs to the next
-  * whitespace or delimiter, as in the reference's object lexer.
+  * whitespace or delimiter, as in the reference's object lexer. The set
+  * comes compiled into a byte trie ([[ContentLexer.Commands]]), so a
+  * command token is classified one byte at a time and a known command comes
+  * back as one shared token.
   *
   * Reading starts at `start`; [[offset]] is the index of the first byte not
   * yet consumed, which is how the object parser finds stream data.
   *
   * This is the hot inner loop of the extractor: one mutable cursor, one reusable
-  * StringBuilder, no per-token allocation beyond the token itself.
+  * StringBuilder, no per-token allocation beyond the token itself. A name, or
+  * a string without escapes or nested parentheses, is copied from the bytes
+  * in one step.
   */
-final class ContentLexer(data: Array[Byte], knownCommands: Set[String], start: Int = 0) {
+final class ContentLexer(data: Array[Byte], commands: ContentLexer.Commands, start: Int = 0) {
 
   import ContentLexer._
 
@@ -98,6 +105,15 @@ final class ContentLexer(data: Array[Byte], knownCommands: Set[String], start: I
   }
 
   private def getString(): String = {
+    // fast path: the first `)`, `(` or `\\` after the opening paren closes it
+    var end = pos + 1
+    while (end < data.length && { val b = data(end); b != ')' && b != '(' && b != '\\' }) end += 1
+    if (end < data.length && data(end) == ')') {
+      val s = new String(data, pos + 1, end - pos - 1, ISO_8859_1)
+      pos = end
+      nextChar()
+      return s
+    }
     var numParen = 1
     var done = false
     strBuf.setLength(0)
@@ -143,6 +159,15 @@ final class ContentLexer(data: Array[Byte], knownCommands: Set[String], start: I
   }
 
   private def getName(): String = {
+    // fast path: a name without `#` escapes
+    var end = pos + 1
+    while (end < data.length && specialChars(data(end) & 0xff) == 0 && data(end) != '#') end += 1
+    if (end >= data.length || data(end) != '#') {
+      val s = new String(data, pos + 1, end - pos - 1, ISO_8859_1)
+      pos = end - 1
+      nextChar()
+      return s
+    }
     strBuf.setLength(0)
     var ch = nextChar()
     var done = false
@@ -210,43 +235,41 @@ final class ContentLexer(data: Array[Byte], knownCommands: Set[String], start: I
         return Tok.Num(getNumber())
       case '(' => return Tok.Str(getString())
       case '/' => return Tok.Name(getName())
-      case '[' => nextChar(); return Tok.Cmd("[")
-      case ']' => nextChar(); return Tok.Cmd("]")
+      case '[' => nextChar(); return OpenArray
+      case ']' => nextChar(); return CloseArray
       case '<' =>
         ch = nextChar()
-        if (ch == '<') { nextChar(); return Tok.Cmd("<<") }
+        if (ch == '<') { nextChar(); return OpenDict }
         return Tok.Str(getHexString())
       case '>' =>
         ch = nextChar()
-        if (ch == '>') { nextChar(); return Tok.Cmd(">>") }
-        return Tok.Cmd(">")
-      case '{' => nextChar(); return Tok.Cmd("{")
-      case '}' => nextChar(); return Tok.Cmd("}")
-      case ')' => nextChar(); return Tok.Cmd(")") // illegal; tolerated
+        if (ch == '>') { nextChar(); return CloseDict }
+        return CloseAngle
+      case '{' => nextChar(); return OpenBrace
+      case '}' => nextChar(); return CloseBrace
+      case ')' => nextChar(); return CloseParen // illegal; tolerated
       case _ => ()
     }
 
     // command token: reference rule (pdf.combined.js:28219-28245) — keep
     // accumulating; break early ONLY when the current token already IS a known
     // command and the next char would make it unknown (handles glued `q1`,
-    // while malformed `Tq` stays one unknown token the evaluator skips)
-    var str = ch.toChar.toString
-    var knownCommandFound = knownCommands.contains(str)
+    // while malformed `Tq` stays one unknown token the evaluator skips).
+    // `node` is the trie node the token spells so far, -1 once it left the trie.
+    val tokenStart = pos
+    var node = commands.step(0, ch)
+    var knownCommandFound = commands.token(node) != null
     var done = false
     while (!done && { ch = nextChar(); ch >= 0 } && specialChars(ch) == 0) {
-      val possible = str + ch.toChar
-      if (knownCommandFound && !knownCommands.contains(possible)) done = true
+      val possible = commands.step(node, ch)
+      if (knownCommandFound && commands.token(possible) == null) done = true
       else {
-        str = possible
-        knownCommandFound = knownCommands.contains(str)
+        node = possible
+        knownCommandFound = commands.token(node) != null
       }
     }
-    str match {
-      case "true" => Tok.Bool(true)
-      case "false" => Tok.Bool(false)
-      case "null" => Tok.Null
-      case s => Tok.Cmd(s)
-    }
+    if (knownCommandFound) commands.token(node)
+    else keyword(new String(data, tokenStart, pos - tokenStart, ISO_8859_1))
   }
 
   /** Skip inline-image data after `ID`: scan for whitespace-delimited `EI`
@@ -277,6 +300,65 @@ final class ContentLexer(data: Array[Byte], knownCommands: Set[String], start: I
 }
 
 object ContentLexer {
+  private val OpenArray = Tok.Cmd("[")
+  private val CloseArray = Tok.Cmd("]")
+  private val OpenDict = Tok.Cmd("<<")
+  private val CloseDict = Tok.Cmd(">>")
+  private val CloseAngle = Tok.Cmd(">")
+  private val OpenBrace = Tok.Cmd("{")
+  private val CloseBrace = Tok.Cmd("}")
+  private val CloseParen = Tok.Cmd(")")
+
+  private def keyword(s: String): Tok = s match {
+    case "true" => Tok.Bool(true)
+    case "false" => Tok.Bool(false)
+    case "null" => Tok.Null
+    case s => Tok.Cmd(s)
+  }
+
+  /** A known-command set compiled into a byte trie, once per set. Node 0 is
+    * the root; node `n`'s child for an ASCII byte `b` is `next(n * 128 + b)`,
+    * 0 when there is none (the root is nobody's child). A node that spells a
+    * known command holds that command's one shared token. */
+  final class Commands private (next: Array[Int], tokens: Array[Tok]) {
+    /** The node after `node` reads byte `ch`; -1 off the trie. */
+    private[lex] def step(node: Int, ch: Int): Int =
+      if (node < 0 || ch >= 128) -1
+      else { val n = next(node * 128 + ch); if (n == 0) -1 else n }
+
+    /** The token of the command `node` spells; null for a bare prefix or -1. */
+    private[lex] def token(node: Int): Tok = if (node < 0) null else tokens(node)
+  }
+
+  object Commands {
+    def apply(names: Iterable[String]): Commands = {
+      var next = new Array[Int](128)
+      var tokens = new Array[Tok](1)
+      var nodes = 1
+      names.foreach { name =>
+        require(name.nonEmpty && name.forall(c => c > 0 && c < 128), s"not an ASCII command: '$name'")
+        var node = 0
+        name.foreach { c =>
+          val i = node * 128 + c
+          if (next(i) == 0) {
+            if (nodes == tokens.length) {
+              next = java.util.Arrays.copyOf(next, next.length * 2)
+              tokens = java.util.Arrays.copyOf(tokens, tokens.length * 2)
+            }
+            next(i) = nodes
+            nodes += 1
+          }
+          node = next(i)
+        }
+        tokens(node) = keyword(name)
+      }
+      new Commands(next, tokens)
+    }
+
+    /** No known commands: a keyword runs to the next whitespace or delimiter. */
+    val none: Commands = Commands(Nil)
+  }
+
   /** Byte classes: 1 = whitespace, 2 = delimiter (pdf.combined.js:27865-27882). */
   val specialChars: Array[Int] = {
     val a = new Array[Int](256)

@@ -50,7 +50,7 @@ object CMapReader {
   }
 
   def read(data: Array[Byte]): CMap = {
-    val lexer = new ContentLexer(data, Set.empty)
+    val lexer = new ContentLexer(data, ContentLexer.Commands.none)
     val toCid = Map.newBuilder[Int, Int]
     val toUnicode = Map.newBuilder[Int, String]
     var n = 0

@@ -56,28 +56,48 @@ object Filters {
     data
   }
 
+  /** One thread's inflaters (zlib and raw deflate) and output scratch, reused
+    * across streams: a stream decode allocates only its exact-length result. */
+  private final class FlateScratch {
+    val zlib = new Inflater(false)
+    val raw = new Inflater(true)
+    var out = new Array[Byte](FlateScratchInitial)
+  }
+  private val FlateScratchInitial = 64 * 1024
+  /** Largest output buffer a thread keeps between streams; a larger stream's
+    * buffer is dropped once its copy is out. */
+  private[pdf] val FlateScratchRetained = 1024 * 1024
+  private val flateScratch = ThreadLocal.withInitial[FlateScratch](() => new FlateScratch)
+
   /** zlib inflate; tolerates raw-deflate streams (missing zlib header) the way
     * FlateStream's lenient header check does. */
   def flate(data: Array[Byte]): Array[Byte] = {
-    def inflateWith(nowrap: Boolean): Array[Byte] = {
-      val inf = new Inflater(nowrap)
+    val s = flateScratch.get
+    def inflateWith(inf: Inflater): Array[Byte] = {
+      inf.reset()
       inf.setInput(data)
-      val out = new ByteArrayOutputStream(math.max(64, data.length * 4))
-      val buf = new Array[Byte](16384)
-      try {
-        while (!inf.finished() && !inf.needsDictionary()) {
-          val n = inf.inflate(buf)
-          if (n == 0 && inf.needsInput()) {
-            // truncated stream: return what we have (never-fail discipline)
-            return out.toByteArray
-          }
-          out.write(buf, 0, n)
-        }
-        out.toByteArray
-      } finally inf.end()
+      var out = s.out
+      var len = 0
+      var truncated = false
+      while (!truncated && !inf.finished() && !inf.needsDictionary()) {
+        // the one place the output grows: a bound on decoded bytes belongs here
+        if (len == out.length) out = grow(out)
+        val n = inf.inflate(out, len, out.length - len)
+        // truncated stream: keep what we have (never-fail discipline)
+        if (n == 0 && inf.needsInput()) truncated = true
+        len += n
+      }
+      if (out.length <= FlateScratchRetained) s.out = out
+      java.util.Arrays.copyOf(out, len)
     }
-    try inflateWith(nowrap = false)
-    catch { case _: DataFormatException => try inflateWith(nowrap = true) catch { case _: DataFormatException => Array.emptyByteArray } }
+    try inflateWith(s.zlib)
+    catch { case _: DataFormatException => try inflateWith(s.raw) catch { case _: DataFormatException => Array.emptyByteArray } }
+  }
+
+  private def grow(buf: Array[Byte]): Array[Byte] = {
+    val cap = math.min(buf.length * 2L, Int.MaxValue - 8L).toInt
+    if (cap <= buf.length) throw new OutOfMemoryError("inflated stream exceeds the largest array")
+    java.util.Arrays.copyOf(buf, cap)
   }
 
   /** PNG (predictor >= 10) and TIFF (predictor 2) de-prediction. */

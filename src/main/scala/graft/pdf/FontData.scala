@@ -1,7 +1,8 @@
 package graft.pdf
 
+import graft.core.ResourceTable
+
 import scala.collection.immutable.ArraySeq
-import scala.io.Source
 
 /** Public Adobe font data tables, loaded from resources under
   * graft/fontdata/ (extracted from the reference's vendored copies of the
@@ -9,19 +10,22 @@ import scala.io.Source
   * core-14 AFM metrics and standard-font alias maps —
   * pdf.combined.js:5170 (AGL), 339-586 (encodings), 37484 (CFF strings),
   * 12896 (metrics), 16291-16420 (font maps); all of it published Adobe data).
+  *
+  * Each table is read at most once per JVM ([[ResourceTable]]): when a
+  * resource is missing, every access rethrows the first failure, and
+  * `FontLoader.load` falls back to Helvetica metrics.
   */
 object FontData {
 
-  private def res(name: String): Iterator[String] = {
-    val in = getClass.getResourceAsStream(s"/graft/fontdata/$name")
-    require(in != null, s"missing resource graft/fontdata/$name")
-    Source.fromInputStream(in, "UTF-8").getLines().filterNot(l => l.isEmpty || l.startsWith("# "))
-  }
+  private def table[A](name: String)(parse: Iterator[String] => A): ResourceTable[A] =
+    new ResourceTable(s"/graft/fontdata/$name")(lines =>
+      parse(lines.filterNot(l => l.isEmpty || l.startsWith("# "))))
 
   /** Adobe Glyph List: glyph name -> unicode code point. */
-  lazy val glyphsUnicode: Map[String, Int] = {
+  def glyphsUnicode: Map[String, Int] = agl.get
+  private val agl = table("agl.txt") { lines =>
     val b = Map.newBuilder[String, Int]
-    res("agl.txt").foreach { l =>
+    lines.foreach { l =>
       val sp = l.indexOf(' ')
       if (sp > 0) b += l.substring(0, sp) -> Integer.parseInt(l.substring(sp + 1), 16)
     }
@@ -31,12 +35,13 @@ object FontData {
   /** Predefined encodings as position->glyph-name arrays, replicating the
     * reference's literal array lengths (StandardEncoding is 252 entries there,
     * ExpertEncoding 255 — lookups and `.length` loops behave identically). */
-  lazy val encodings: Map[String, ArraySeq[String]] = {
+  def encodings: Map[String, ArraySeq[String]] = encodingTable.get
+  private val encodingTable = table("encodings.txt") { lines =>
     val out = Map.newBuilder[String, ArraySeq[String]]
     var cur: Array[String] = null
     var curName: String = null
     def flush(): Unit = if (curName != null) out += curName -> ArraySeq.unsafeWrapArray(cur)
-    res("encodings.txt").foreach { l =>
+    lines.foreach { l =>
       if (l.startsWith("#enc ")) {
         flush()
         val parts = l.substring(5).split(" ")
@@ -71,16 +76,17 @@ object FontData {
   }
 
   /** CFF standard strings, SID 0..390. */
-  lazy val cffStandardStrings: ArraySeq[String] =
-    ArraySeq.unsafeWrapArray(res("cff-std-strings.txt").toArray)
+  def cffStandardStrings: ArraySeq[String] = cffStrings.get
+  private val cffStrings = table("cff-std-strings.txt")(lines => ArraySeq.unsafeWrapArray(lines.toArray))
 
   /** Core-14 metrics: font -> Left(monospace width) | Right(glyph name -> width). */
-  lazy val metrics: Map[String, Either[Double, Map[String, Double]]] = {
+  def metrics: Map[String, Either[Double, Map[String, Double]]] = metricsTable.get
+  private val metricsTable = table("metrics.txt") { lines =>
     val out = Map.newBuilder[String, Either[Double, Map[String, Double]]]
     var curName: String = null
     var curMap = Map.newBuilder[String, Double]
     def flush(): Unit = if (curName != null) out += curName -> Right(curMap.result())
-    res("metrics.txt").foreach { l =>
+    lines.foreach { l =>
       if (l.startsWith("#font ")) {
         flush()
         val rest = l.substring(6)
@@ -101,12 +107,12 @@ object FontData {
     out.result()
   }
 
-  private lazy val fontMaps: Map[String, Map[String, String]] = {
+  private val fontMapTable = table("font-maps.txt") { lines =>
     val out = Map.newBuilder[String, Map[String, String]]
     var curName: String = null
     var curMap = Map.newBuilder[String, String]
     def flush(): Unit = if (curName != null) out += curName -> curMap.result()
-    res("font-maps.txt").foreach { l =>
+    lines.foreach { l =>
       if (l.startsWith("#map ")) {
         flush(); curName = l.substring(5); curMap = Map.newBuilder[String, String]
       } else {
@@ -118,6 +124,7 @@ object FontData {
     out.result()
   }
 
+  private[graft] def fontMaps: Map[String, Map[String, String]] = fontMapTable.get
   def stdFontMap: Map[String, String] = fontMaps("stdFontMap")
   def nonStdFontMap: Map[String, String] = fontMaps("nonStdFontMap")
   def serifFonts: Set[String] = fontMaps("serifFonts").keySet

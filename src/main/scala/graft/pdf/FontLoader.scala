@@ -4,6 +4,7 @@ import PObj._
 import graft.eval.{FontMetrics, FontSpec}
 
 import scala.collection.immutable.ArraySeq
+import scala.util.control.NonFatal
 
 /** Simple-font translation: font dict → metrics + charcode→glyph-text mapping
   * (SURVEY.md §2.5 F1-F5, F3/F7). Mirrors the reference's PartialEvaluator
@@ -37,7 +38,9 @@ object FontLoader {
     * binaryFile ingest lane parses each distinct font once per executor JVM
     * instead of once per document. FontSpec is immutable, so sharing across
     * documents and task threads is safe. Measured: font translation is
-    * 30-55% of whole-file ingest time on the reference corpus. */
+    * 30-55% of whole-file ingest time on the reference corpus. A font whose
+    * load fails is cached too, as its Helvetica fallback: the failure is a
+    * function of the same content, so no later document pays it again. */
   private val crossDocCache = new java.util.concurrent.ConcurrentHashMap[String, FontSpec]()
   private val CrossDocCacheMax = 2048
 
@@ -48,17 +51,24 @@ object FontLoader {
           val hit = crossDocCache.get(key)
           if (hit != null) hit
           else {
-            val spec = loadImpl(fontDict, file)
+            val spec = loadOrFallback(fontDict, file)
             // crude bound: a full clear beats LRU bookkeeping at this size —
             // re-parsing a font after a rare flush costs single-digit ms
             if (crossDocCache.size >= CrossDocCacheMax) crossDocCache.clear()
             crossDocCache.put(key, spec)
             spec
           }
-        case None => loadImpl(fontDict, file)
+        case None => loadOrFallback(fontDict, file)
       }
-    } catch { case scala.util.control.NonFatal(_) => FontMetrics.Helvetica }
+    } catch { case NonFatal(_) => FontMetrics.Helvetica }
   }
+
+  /** The cached font for this dict's content, if any document loaded it. */
+  private[pdf] def cached(fontDict: PDict, file: PdfFile): Option[FontSpec] =
+    fingerprint(fontDict, file).flatMap(key => Option(crossDocCache.get(key)))
+
+  private def loadOrFallback(fontDict: PDict, file: PdfFile): FontSpec =
+    try loadImpl(fontDict, file) catch { case NonFatal(_) => FontMetrics.Helvetica }
 
   /** Canonical MD5 of the resolved font-dict subtree: refs chased once
     * (cycle-guarded), dict keys sorted, stream bytes hashed in full (they are

@@ -21,7 +21,7 @@ final class ObjParser(bytes: Array[Byte], start: Int) {
   seek(start)
 
   private def seek(at: Int): Unit = {
-    lexer = new ContentLexer(bytes, Set.empty, at)
+    lexer = new ContentLexer(bytes, ContentLexer.Commands.none, at)
     buf1 = lexer.getObj()
     buf2 = lexer.getObj()
   }

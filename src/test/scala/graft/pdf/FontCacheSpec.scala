@@ -44,6 +44,26 @@ class FontCacheSpec extends AnyFunSuite {
     assert(fa.widths(33) == 600.0 && fc.widths(33) == 700.0)
   }
 
+  test("a font whose load fails is loaded once across documents") {
+    // BaseFont /, maps to "-", whose style-less name does not exist: the
+    // loader throws and `load` falls back to the Helvetica metrics
+    def doc(): PdfFile = new PdfFile(PdfWriter(Seq(
+      "<< /Type /Catalog /Pages 2 0 R >>",
+      "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+      "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
+        "/Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>",
+      PdfWriter.stream("", "BT /F1 10 Tf 10 700 Td (hi) Tj ET".getBytes(ISO_8859_1)),
+      "<< /Type /Font /Subtype /Type1 /BaseFont /, /FirstChar 32 /LastChar 32 /Widths [417] >>")))
+    val (a, b) = (doc(), doc())
+    val da = a.resolve(PObj.PRef(5, 0)).asInstanceOf[PObj.PDict]
+    val db = b.resolve(PObj.PRef(5, 0)).asInstanceOf[PObj.PDict]
+    assert(FontLoader.cached(db, b).isEmpty)
+    assert(FontLoader.load(da, a) eq graft.eval.FontMetrics.Helvetica)
+    // the second document finds the failure's fallback under its content key
+    assert(FontLoader.cached(db, b).exists(_ eq graft.eval.FontMetrics.Helvetica))
+    assert(FontLoader.load(db, b) eq graft.eval.FontMetrics.Helvetica)
+  }
+
   test("reference corpus: second open re-uses every font (skips when absent)") {
     val p = Paths.get("/root/reference/src/test/resources/input/test24.pdf")
     if (!Files.exists(p)) cancel("reference inputs not present")
