@@ -118,7 +118,24 @@ object Extractor {
           val res = ContentEvaluator.evaluate(payload.getBytes(StandardCharsets.ISO_8859_1))
           val asm = LineAssembler.assemble(res.runs)
           Result(asm.text, asm.spans, TurnMetrics(res.runs.length, asm.text.length, res.errors))
-        case Dialect.PdfFile => pdfFile(payload.getBytes(StandardCharsets.ISO_8859_1))
+        case Dialect.PdfFile =>
+          // a whole PDF file as the turn payload (latin-1-preserved bytes):
+          // each page's reading-order text, pages joined by a newline; the
+          // pages' evaluator errors count as dropped nodes
+          val doc = graft.pdf.PdfDocument.open(payload.getBytes(StandardCharsets.ISO_8859_1))
+          val sb = new StringBuilder
+          val spans = Seq.newBuilder[Span]
+          var runs, errors = 0
+          doc.pages.indices.foreach { p =>
+            val page = doc.pageText(p)
+            if (p > 0 && sb.nonEmpty) sb.append('\n')
+            val start = sb.length
+            sb.append(page.text)
+            spans += Span(start, sb.length, s"pdf>page${p + 1}")
+            runs += page.runs
+            errors += page.errors
+          }
+          Result(sb.toString, spans.result(), TurnMetrics(runs, sb.length, errors))
         case Dialect.Markdown =>
           val ex = MarkdownLite.strip(payload)
           Result(ex.text, Seq(Span(0, ex.text.length, "markdown")),
@@ -127,40 +144,12 @@ object Extractor {
           Result(payload, Seq(Span(0, payload.length, "text")), TurnMetrics(0, payload.length, 0))
       }
     } catch {
-      // quarantine path: never fail the row (SURVEY.md §2.1 S6); a null
-      // payload lands here too and quarantines as the empty turn
-      case scala.util.control.NonFatal(_) => quarantine(if (payload == null) "" else payload)
+      case scala.util.control.NonFatal(_) =>
+        // quarantine path: never fail the row (SURVEY.md §2.1 S6); a null
+        // payload lands here too and quarantines as the empty turn
+        val p = if (payload == null) "" else payload
+        Result(p, Seq(Span(0, p.length, "error")), TurnMetrics(0, p.length, 1))
     }
-
-  /** A whole-PDF payload given as its latin-1 bytes (starting with `%PDF-`):
-    * the same result as `extract(new String(bytes, ISO_8859_1))`, without
-    * building that string unless the file is quarantined. */
-  def extractPdfFile(bytes: Array[Byte]): Result =
-    try pdfFile(bytes)
-    catch { case scala.util.control.NonFatal(_) => quarantine(new String(bytes, StandardCharsets.ISO_8859_1)) }
-
-  /** A whole PDF file as the turn payload (latin-1-preserved bytes): each
-    * page's reading-order text, pages joined by a newline; the pages'
-    * evaluator errors count as dropped nodes. */
-  private def pdfFile(bytes: Array[Byte]): Result = {
-    val doc = graft.pdf.PdfDocument.open(bytes)
-    val sb = new StringBuilder
-    val spans = Seq.newBuilder[Span]
-    var runs, errors = 0
-    doc.pages.indices.foreach { p =>
-      val page = doc.pageText(p)
-      if (p > 0 && sb.nonEmpty) sb.append('\n')
-      val start = sb.length
-      sb.append(page.text)
-      spans += Span(start, sb.length, s"pdf>page${p + 1}")
-      runs += page.runs
-      errors += page.errors
-    }
-    Result(sb.toString, spans.result(), TurnMetrics(runs, sb.length, errors))
-  }
-
-  private def quarantine(payload: String): Result =
-    Result(payload, Seq(Span(0, payload.length, "error")), TurnMetrics(0, payload.length, 1))
 
   def extractTurn(t: Turn): ExtractedTurn = {
     val r = extract(t.text)

@@ -62,7 +62,7 @@ object LineAssembler {
     val pages = new Array[Int](n)
     i = 0
     while (i < n) { pages(i) = rs(i).page; i += 1 }
-    val byY = Array.range(0, n)
+    val byY = Array.tabulate[Integer](n)(Integer.valueOf)
     stableSort(byY, 0, n, pages, ys)
     val lineStart = new Array[Int](n + 1)
     var lineCount = 0
@@ -70,7 +70,7 @@ object LineAssembler {
     var curPage = -1
     i = 0
     while (i < n) {
-      val p = byY(i)
+      val p: Int = byY(i)
       if (lineCount == 0 || rs(p).page != curPage || math.abs(ys(p) - curY) > tol) {
         curPage = rs(p).page
         lineStart(lineCount) = i
@@ -105,7 +105,7 @@ object LineAssembler {
       stableSort(byY, lineStart(k), lineStart(k + 1), pages, x0s) // one page per line
       k += 1
     }
-    val ordered = Array.range(0, lineCount)
+    val ordered = Array.tabulate[Integer](lineCount)(Integer.valueOf)
     stableSort(ordered, 0, lineCount, linePage, lineNegTop)
 
     val out = new StringBuilder
@@ -115,7 +115,7 @@ object LineAssembler {
       var prevEnd = Double.NaN
       var j = lineStart(line)
       while (j < lineStart(line + 1)) {
-        val p = byY(j)
+        val p: Int = byY(j)
         val r = rs(p)
         if (!prevEnd.isNaN) {
           val gap = x0s(p) - prevEnd
@@ -147,63 +147,14 @@ object LineAssembler {
 
   /** Sorts `idx(from until until)` by `(major(i), minor(i))`, ints and
     * doubles compared like `Integer.compare` and `java.lang.Double.compare`,
-    * keeping equal keys in their order: the order of Scala's `sortBy` on an
-    * `(Int, Double)` key. Content order is usually sorted or strictly
-    * reversed already, which takes one pass. */
-  private def stableSort(idx: Array[Int], from: Int, until: Int,
-      major: Array[Int], minor: Array[Double]): Unit = {
-    def cmp(a: Int, b: Int): Int = {
+    * keeping equal keys in their order (`Arrays.sort` on objects is stable):
+    * the order of Scala's `sortBy` on an `(Int, Double)` key. */
+  private def stableSort(idx: Array[Integer], from: Int, until: Int,
+      major: Array[Int], minor: Array[Double]): Unit =
+    java.util.Arrays.sort(idx, from, until, (a: Integer, b: Integer) => {
       val c = Integer.compare(major(a), major(b))
       if (c != 0) c else java.lang.Double.compare(minor(a), minor(b))
-    }
-    var ascending, descending = true
-    var i = from + 1
-    while (i < until && (ascending || descending)) {
-      val c = cmp(idx(i - 1), idx(i))
-      if (c > 0) ascending = false
-      if (c <= 0) descending = false
-      i += 1
-    }
-    if (ascending) return
-    if (descending) { // strictly: reversing keeps no equal pair apart
-      var lo = from
-      var hi = until - 1
-      while (lo < hi) { val t = idx(lo); idx(lo) = idx(hi); idx(hi) = t; lo += 1; hi -= 1 }
-      return
-    }
-    mergeSort(idx, from, until, new Array[Int]((until - from + 1) / 2), cmp)
-  }
-
-  private def mergeSort(idx: Array[Int], from: Int, until: Int, buf: Array[Int],
-      cmp: (Int, Int) => Int): Unit =
-    if (until - from <= 16) {
-      var i = from + 1
-      while (i < until) {
-        val v = idx(i)
-        var j = i - 1
-        while (j >= from && cmp(idx(j), v) > 0) { idx(j + 1) = idx(j); j -= 1 }
-        idx(j + 1) = v
-        i += 1
-      }
-    } else {
-      val mid = (from + until) >>> 1
-      mergeSort(idx, from, mid, buf, cmp)
-      mergeSort(idx, mid, until, buf, cmp)
-      if (cmp(idx(mid - 1), idx(mid)) > 0) {
-        val left = mid - from
-        System.arraycopy(idx, from, buf, 0, left)
-        var a = 0
-        var b = mid
-        var o = from
-        while (a < left && b < until) {
-          // ties take the left element first: the sort is stable
-          if (cmp(idx(b), buf(a)) < 0) { idx(o) = idx(b); b += 1 }
-          else { idx(o) = buf(a); a += 1 }
-          o += 1
-        }
-        System.arraycopy(buf, a, idx, o, left - a)
-      }
-    }
+    })
 
   /** Glyph advance in 1/1000 em: Courier-family fonts are monospaced 600; all
     * others use the Helvetica core-metrics table (metrics-only model, §2.5 F2). */

@@ -6,66 +6,18 @@ import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static kernel so generated code calls a monomorphic method: one
-  * `Extractor.extract` per row, as a Catalyst struct row. A whole-PDF
-  * payload goes from its UTF-8 bytes straight to the latin-1 bytes the PDF
-  * reader takes ([[pdfLatin1]]), without building the payload's `String`. */
+  * `Extractor.extract` per row, as a Catalyst struct row. */
 object ExtractTurnKernel {
   def extract(payload: UTF8String): InternalRow = {
-    val latin1 = if (payload == null) null else pdfLatin1(payload)
-    val r =
-      if (latin1 != null) Extractor.extractPdfFile(latin1)
-      else Extractor.extract(if (payload == null) null else payload.toString)
+    val r = Extractor.extract(if (payload == null) null else payload.toString)
     InternalRow(
       UTF8String.fromString(r.text),
       new GenericArrayData(r.spans.map(s =>
         InternalRow(s.start, s.end, UTF8String.fromString(s.label))).toArray[Any]),
       InternalRow(r.metrics.runs, r.metrics.chars, r.metrics.dropped_nodes))
-  }
-
-  private val PdfMagic = UTF8String.fromString("%PDF-")
-
-  /** The latin-1 bytes of a payload that starts with `%PDF-` and whose every
-    * UTF-8 sequence is ASCII or a two-byte code U+0080–U+00FF; null for any
-    * other payload. For the payloads it accepts, the result equals
-    * `payload.toString.getBytes(ISO_8859_1)`. The others take the `String`
-    * path, where a malformed sequence decodes to U+FFFD and a char above
-    * U+00FF encodes as `?`. */
-  private[graft] def pdfLatin1(payload: UTF8String): Array[Byte] = {
-    if (!payload.startsWith(PdfMagic)) return null
-    val (src, from) = payload.getBaseObject match {
-      case a: Array[Byte] => (a, (payload.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt)
-      case _ => (payload.getBytes, 0) // off-heap
-    }
-    val until = from + payload.numBytes
-    // one branch-free pass: a continuation byte folds into the char its lead
-    // byte started; `bad` collects any sequence outside ASCII and C2/C3 xx
-    val out = new Array[Byte](until - from)
-    var o = 0
-    var prev = 0
-    var prevLead = 0
-    var bad = 0
-    var i = from
-    while (i < until) {
-      val b = src(i) & 0xff
-      val top = b >>> 6
-      val cont = (top >>> 1) & ~top & 1 // 10xxxxxx
-      val lead = (((b | 1) ^ 0xC3) - 1) >>> 31 // C2 or C3
-      bad |= ((b >>> 7) & ~cont & ~lead) | (cont ^ prevLead)
-      // `o - cont` stays in range: the payload starts with 5 ASCII bytes
-      o -= cont
-      out(o) = (b ^ (-cont & (b ^ (((prev & 0x03) << 6) | (b & 0x3F))))).toByte
-      o += 1
-      prev = b
-      prevLead = lead
-      i += 1
-    }
-    if ((bad | prevLead) != 0) null
-    else if (o == out.length) out
-    else java.util.Arrays.copyOf(out, o)
   }
 }
 
